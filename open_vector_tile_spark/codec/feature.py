@@ -274,14 +274,13 @@ def read_feature(
     if ftype in (1, 4):
         if single:
             word = pbf.read_varint()
+            zagzig = K.zagzig_scalar
             if ftype == 1:
-                a, b = K.unweave2d(word)
-                geometry = [(int(K.zagzig(int(a))), int(K.zagzig(int(b))))]
+                a, b = K.unweave2d_scalar(word)
+                geometry = [(zagzig(a), zagzig(b))]
             else:
-                a, b, c = K.unweave3d(word)
-                geometry = [
-                    (int(K.zagzig(int(a))), int(K.zagzig(int(b))), int(K.zagzig(int(c))))
-                ]
+                a, b, c = K.unweave3d_scalar(word)
+                geometry = [(zagzig(a), zagzig(b), zagzig(c))]
             mvals = None
         else:
             prog = cache.get_column(OColumn.indices, pbf.read_varint())

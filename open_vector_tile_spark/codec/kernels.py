@@ -119,7 +119,8 @@ def unweave3d(num):
 
 
 # scalar (pure python int) fast paths — numpy scalar ops cost ~2-5us each,
-# which dominates per-feature encode; these are ~50ns
+# which dominates per-feature encode and decode; these are ~50ns.  The
+# unweave twins serve the single-point branch of feature decode
 def zigzag_scalar(n: int) -> int:
     return ((n << 1) ^ (n >> 31)) & 0xFFFFFFFF
 
@@ -153,6 +154,33 @@ def _part1by2_scalar(x: int) -> int:
 
 def weave3d_scalar(a: int, b: int, c: int) -> int:
     return _part1by2_scalar(a) | (_part1by2_scalar(b) << 1) | (_part1by2_scalar(c) << 2)
+
+
+def _compact1by1_scalar(x: int) -> int:
+    x &= 0x55555555
+    x = (x | (x >> 1)) & 0x33333333
+    x = (x | (x >> 2)) & 0x0F0F0F0F
+    x = (x | (x >> 4)) & 0x00FF00FF
+    x = (x | (x >> 8)) & 0x0000FFFF
+    return x
+
+
+def unweave2d_scalar(num: int) -> tuple[int, int]:
+    return _compact1by1_scalar(num), _compact1by1_scalar(num >> 1)
+
+
+def _compact1by2_scalar(x: int) -> int:
+    x &= 0x1249249249249249
+    x = (x | (x >> 2)) & 0x10C30C30C30C30C3
+    x = (x | (x >> 4)) & 0x100F00F00F00F00F
+    x = (x | (x >> 8)) & 0x1F0000FF0000FF
+    x = (x | (x >> 16)) & 0x1F00000000FFFF
+    x = (x | (x >> 32)) & 0x1FFFFF
+    return x
+
+
+def unweave3d_scalar(num: int) -> tuple[int, int, int]:
+    return _compact1by2_scalar(num), _compact1by2_scalar(num >> 1), _compact1by2_scalar(num >> 2)
 
 
 # ---------------------------------------------------------------------------

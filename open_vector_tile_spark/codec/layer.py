@@ -72,6 +72,8 @@ class OVLayer:
         self.extent = 4096
         self._shape_index = -1
         self._mshape_index = -1
+        self._shape: Optional[dict] = None
+        self._mshape: Optional[dict] = None
         self._features_pos: list[int] = []
         self._features: dict[int, OVFeature] = {}
         self._pbf = pbf
@@ -98,13 +100,19 @@ class OVLayer:
 
     @property
     def shape(self) -> dict:
-        return decode_shape(self._shape_index, self._cache)
+        """The layer's property shape, decoded once and shared by every
+        feature decode (treat as read-only)."""
+        if self._shape is None:
+            self._shape = decode_shape(self._shape_index, self._cache)
+        return self._shape
 
     @property
     def mshape(self) -> Optional[dict]:
         if self._mshape_index == -1:
             return None
-        return decode_shape(self._mshape_index, self._cache)
+        if self._mshape is None:
+            self._mshape = decode_shape(self._mshape_index, self._cache)
+        return self._mshape
 
     def feature(self, i: int) -> OVFeature:
         if not 0 <= i < len(self._features_pos):

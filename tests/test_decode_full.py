@@ -164,16 +164,78 @@ def test_decode_grids_and_images(spark):
     assert decode_grids(tiles, names=["nope"]).count() == 0
 
 
+def _staircase(n, y=0):
+    """``n`` vertices one unit apart along x: every delta packs into a
+    1-byte varint, so the ring's points-column body is exactly ``n`` bytes
+    (the first vertex too while ``y`` is at most 3)."""
+    return [(i, y) for i in range(n)]
+
+
+def _random_walk(n, seed):
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    xs = (2000 + np.cumsum(rng.randint(-300, 300, n))).tolist()
+    ys = (2000 + np.cumsum(rng.randint(-300, 300, n))).tolist()
+    return list(zip(xs, ys))
+
+
+def _codec_layer():
+    """One layer of every geometry family, built with the codec writer:
+    single and multi points, lines and polygons with offsets, M-values and
+    bbox, with rings of 1, 8, 9, crossover-straddling and 200+ vertices so
+    the column cache holds packed bodies on both sides of the scalar/numpy
+    crossover (``pbf.SCALAR_VARINT_MAX_BYTES``)."""
+    from open_vector_tile_spark.codec import BaseFeature, BaseLayer, BaseLine
+    from open_vector_tile_spark.codec.pbf import SCALAR_VARINT_MAX_BYTES as cross
+
+    def line(pts, offset=0.0):
+        return BaseLine(pts, offset=offset, mvalues=[{"w": i % 7} for i in range(len(pts))])
+
+    def props(i):
+        return {"name": f"f{i}", "rank": i}
+
+    feats = [
+        BaseFeature(1, [(5, 7)], props(1), id=1),
+        BaseFeature(1, _staircase(8, 1), props(2), id=2,
+                    mvalues=[{"w": i} for i in range(8)]),
+        BaseFeature(2, [line(_staircase(9, 2), 1.5), line(_staircase(cross - 1, 3), 0.25)],
+                    props(3), id=3, bbox=[1.0, 2.0, 3.0, 4.0]),
+        BaseFeature(2, [line(_staircase(cross, 1), 2.0), line(_random_walk(240, 0))],
+                    props(4), id=4, bbox=[-10.0, -5.0, 10.0, 5.0]),
+        BaseFeature(3, [[line(_staircase(9, 3), 0.5), line(_random_walk(200, 1))],
+                        [line(_random_walk(8, 2), 3.0)]],
+                    props(5), id=5, bbox=[0.5, 0.5, 1.5, 1.5]),
+    ]
+    layer = BaseLayer(name="mix", extent=4096)
+    for f in feats:
+        layer.add_feature(f)
+    return layer
+
+
 def test_truncated_buffer_raises_typed_error():
-    """Corrupt/truncated buffers raise TileDecodeError, not bare IndexError."""
+    """Corrupt/truncated buffers raise TileDecodeError, not bare IndexError.
+
+    Every cut of engine-built OVT (single points, multi-points, lines and
+    polygons through the column cache) and MVT tiles is caught at parse
+    time; the reference's OMT tile is an extra case when it is present."""
     import pytest
 
-    from open_vector_tile_spark.codec import TileDecodeError, VectorTile
+    from open_vector_tile_spark.codec import TileDecodeError, VectorTile, write_mvt
 
-    raw = open("/root/reference/tests/fixtures/14-8801-5371.vector.pbf", "rb").read()
-    for cut in (1, 7, 100, len(raw) // 2, len(raw) - 3):
-        with pytest.raises(TileDecodeError):
-            VectorTile(raw[:cut])
+    ovt = write_ov_tile([_codec_layer()])
+    mvt = write_mvt([_codec_layer()])
+    assert len(VectorTile(ovt).layers["mix"]) == len(VectorTile(mvt).layers["mix"]) == 5
+    for raw in (ovt, mvt):
+        for cut in range(1, len(raw)):
+            with pytest.raises(TileDecodeError):
+                VectorTile(raw[:cut])
+    reference = os.path.join(FIXTURES, "14-8801-5371.vector.pbf")
+    if os.path.exists(reference):
+        raw = open(reference, "rb").read()
+        for cut in (1, 7, 100, len(raw) // 2, len(raw) - 3):
+            with pytest.raises(TileDecodeError):
+                VectorTile(raw[:cut])
     with pytest.raises(TileDecodeError):
         VectorTile(b"\xff\xff\xff\xff\xff\xff\xff\xff\xff\xff\xff")
 
@@ -216,25 +278,11 @@ def test_decode_tiles_on_error_skip(spark):
 
 
 def test_ovt_to_base_reencode_byte_equal(spark):
-    """ovt_tile_to_base_layers round-trip guarantees:
-
-    (1) byte-identical re-encode for shape-homogeneous tiles (every feature
-        carries the same property keys — all engine-built tiles qualify);
-    (2) byte-identical re-encode for the reference's heterogeneous OMT tile
-        too — the converter carries the decoded layer's exact shape instead
-        of re-running last-write-wins inference over the type-sorted decode
-        order (which can flip a float key to u64 and truncate values).
-    """
-    from open_vector_tile_spark.codec import (
-        VectorTile,
-        mvt_tile_to_base_layers,
-        ovt_tile_to_base_layers,
-        write_ov_tile,
-    )
-
-    # (1) homogeneous: engine-built point tile with ids
+    """ovt_tile_to_base_layers round-trip guarantees byte-identical re-encode
+    for shape-homogeneous tiles (every feature carries the same property
+    keys — all engine-built tiles qualify)."""
+    from open_vector_tile_spark.codec import VectorTile, ovt_tile_to_base_layers, write_ov_tile
     from open_vector_tile_spark.operators import encode_tiles, points_to_features
-    from pyspark.sql import functions as F
 
     pts = spark.createDataFrame(
         [(i, i * 1.7 - 90.0, i * 0.9 - 40.0) for i in range(50)],
@@ -249,8 +297,55 @@ def test_ovt_to_base_reencode_byte_equal(spark):
         again = write_ov_tile(ovt_tile_to_base_layers(VectorTile(blob)))
         assert again == blob
 
-    # (2) heterogeneous: the reference's OMT tile
-    raw = open("/root/reference/tests/fixtures/14-8801-5371.vector.pbf", "rb").read()
+
+def test_ovt_reencode_byte_equal_across_scalar_crossover():
+    """decode -> re-encode is byte-identical for lines and polygons with
+    offsets, M-values and bbox whose packed columns sit below, at and above
+    the scalar/numpy decode crossover, and the decoded vertices are exact."""
+    from open_vector_tile_spark.codec import (
+        VectorTile,
+        kernels as K,
+        ovt_tile_to_base_layers,
+        write_ov_tile,
+    )
+    from open_vector_tile_spark.codec.pbf import SCALAR_VARINT_MAX_BYTES as cross
+    from open_vector_tile_spark.codec.pbf import pack_varints
+
+    layer = _codec_layer()
+    rings = [ln.points for f in layer.features if f.ftype == 2 for ln in f.geometry]
+    rings += [ln.points for f in layer.features if f.ftype == 3 for p in f.geometry for ln in p]
+    sizes = {len(pack_varints(K.weave_and_delta_encode(*zip(*r)))) for r in rings}
+    assert {cross - 1, cross} <= sizes
+    assert min(sizes) < cross < max(sizes)
+    want = [list(r) for r in rings]
+
+    blob = write_ov_tile([layer])
+    tile = VectorTile(blob)
+    assert write_ov_tile(ovt_tile_to_base_layers(tile)) == blob
+    got_layer = tile.layers["mix"]
+    got = [ln.points for f in got_layer.features() if f.ftype == 2 for ln in f.geometry]
+    got += [
+        ln.points for f in got_layer.features() if f.ftype == 3 for p in f.geometry for ln in p
+    ]
+    assert got == want
+    assert got_layer.feature(1).geometry == _staircase(8, 1)
+    assert [m["w"] for m in got_layer.feature(1).mvalues] == list(range(8))
+
+
+@pytest.mark.skipif(not os.path.isdir(FIXTURES), reason="reference fixtures absent")
+def test_ovt_to_base_reencode_byte_equal_reference():
+    """Byte-identical re-encode for the reference's heterogeneous OMT tile
+    too — the converter carries the decoded layer's exact shape instead of
+    re-running last-write-wins inference over the type-sorted decode order
+    (which can flip a float key to u64 and truncate values)."""
+    from open_vector_tile_spark.codec import (
+        VectorTile,
+        mvt_tile_to_base_layers,
+        ovt_tile_to_base_layers,
+        write_ov_tile,
+    )
+
+    raw = open(os.path.join(FIXTURES, "14-8801-5371.vector.pbf"), "rb").read()
     ovt_bytes = write_ov_tile(mvt_tile_to_base_layers(VectorTile(raw)))
     once = write_ov_tile(ovt_tile_to_base_layers(VectorTile(ovt_bytes)))
     assert once == ovt_bytes

@@ -74,18 +74,29 @@ def test_zigzag_roundtrip():
 def test_weave2d_exhaustive_edges():
     a = np.array([0, 1, 0xFFFF, 0x8000, 12345])
     b = np.array([0, 0xFFFF, 1, 0x8000, 54321])
-    ra, rb = K.unweave2d(K.weave2d(a, b))
+    words = K.weave2d(a, b)
+    ra, rb = K.unweave2d(words)
     assert ra.tolist() == a.tolist() and rb.tolist() == b.tolist()
+    # scalar twins (single-point decode) match the kernels
+    assert [K.unweave2d_scalar(w) for w in words.tolist()] == list(zip(ra.tolist(), rb.tolist()))
+    for comp in (ra, rb):
+        assert [K.zagzig_scalar(v) for v in comp.tolist()] == K.zagzig(comp).tolist()
 
 
 def test_weave3d_edges():
     a = np.array([0, 0xFFFF, 1, 777])
     b = np.array([0xFFFF, 0, 2, 888])
     c = np.array([1, 0xFFFF, 3, 999])
-    ra, rb, rc = K.unweave3d(K.weave3d(a, b, c))
+    words = K.weave3d(a, b, c)
+    ra, rb, rc = K.unweave3d(words)
     assert ra.tolist() == a.tolist()
     assert rb.tolist() == b.tolist()
     assert rc.tolist() == c.tolist()
+    assert [K.unweave3d_scalar(w) for w in words.tolist()] == list(
+        zip(ra.tolist(), rb.tolist(), rc.tolist())
+    )
+    for comp in (ra, rb, rc):
+        assert [K.zagzig_scalar(v) for v in comp.tolist()] == K.zagzig(comp).tolist()
 
 
 def test_delta_encodings():
@@ -129,6 +140,35 @@ def test_varint_pack_roundtrip():
         ]
     ).astype(np.uint64)
     assert pbf.unpack_varints(pbf.pack_varints(vals)).tolist() == vals.tolist()
+    # bodies on both sides of the scalar/numpy crossover, and right at it
+    cross = pbf.SCALAR_VARINT_MAX_BYTES
+    for nbytes in (0, 1, 3, cross - 1, cross, cross + 1, 4 * cross):
+        wide = [2**40, 300] * (nbytes // 16)  # 6 + 2 bytes per pair
+        vals = wide + [5] * (nbytes - 8 * (nbytes // 16))  # 1-byte tail
+        body = pbf.pack_varints(vals)
+        assert len(body) == nbytes
+        assert pbf.unpack_varints(body).tolist() == vals
+        assert pbf.unpack_varints_scalar(body) == vals
+    # corrupt bodies stay loud on both paths: a trailing partial varint, a
+    # varint longer than 10 bytes and a 10-byte varint of 2**64 or more
+    # raise the typed decode error
+    for pad in (b"", b"\x01" * 4 * cross):
+        for body in (
+            b"\x05\x81",
+            b"\x80",
+            b"\xff" * 10 + b"\x01",
+            b"\x81" * 11 + b"\x00",
+            b"\xff" * 9 + b"\x7f",
+            b"\x80" * 9 + b"\x02",
+        ):
+            with pytest.raises(pbf.TileDecodeError):
+                pbf.unpack_varints(pad + body)
+            with pytest.raises(pbf.TileDecodeError):
+                pbf.unpack_varints_scalar(pad + body)
+        # ten bytes is the longest legal varint (2**64 - 1)
+        body = pad + b"\xff" * 9 + b"\x01"
+        assert pbf.unpack_varints(body).tolist()[-1] == 2**64 - 1
+        assert pbf.unpack_varints_scalar(body)[-1] == 2**64 - 1
 
 
 def test_pbf_fields_roundtrip():

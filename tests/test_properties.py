@@ -11,7 +11,11 @@ from hypothesis import strategies as st
 
 from open_vector_tile_spark.codec import kernels as K
 from open_vector_tile_spark.codec.pbf import (
+    _unpack_varints_numpy,
+    pack_varints,
     read_varint,
+    unpack_varints,
+    unpack_varints_scalar,
     write_varint,
     zagzig64,
     zigzag64,
@@ -80,6 +84,17 @@ def test_weave_delta_roundtrip(xs, ys):
     xs, ys = xs[:n], ys[:n]
     gx, gy = K.unweave_and_delta_decode(K.weave_and_delta_encode(xs, ys))
     assert [int(v) for v in gx] == xs and [int(v) for v in gy] == ys
+
+
+@settings(max_examples=200)
+@given(st.lists(st.one_of(st.integers(0, 127), u64), min_size=1, max_size=120))
+def test_packed_varint_scalar_equals_numpy(vals):
+    """For any well-formed packed stream, on either side of the crossover,
+    the scalar and numpy unpackers agree with each other and the input."""
+    body = pack_varints(vals)
+    assert unpack_varints_scalar(body) == vals
+    assert _unpack_varints_numpy(body).tolist() == vals
+    assert unpack_varints(body).tolist() == vals
 
 
 @given(i64)
