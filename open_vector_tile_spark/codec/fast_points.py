@@ -30,14 +30,6 @@ from .pbf import PbfWriter, pack_varints
 from .shape import _PRIM_TO_COL  # shared primitive->column mapping
 from .column_cache import OColumn
 
-_FLAT_PRIMS = {"string", "u64", "i64", "f64", "f32", "bool"}
-
-
-def eligible_shape(shape: Optional[dict]) -> bool:
-    return shape is not None and all(
-        isinstance(t, str) and t in _FLAT_PRIMS for t in shape.values()
-    )
-
 
 def _varint_sizes(vals: np.ndarray) -> np.ndarray:
     """LEB128 byte length per uint64 value (vectorized)."""
@@ -240,7 +232,6 @@ def encode_point_layer_tile(
     out.write_message(4, layer_body)
     out.write_message(5, cache_body)
     return out.commit()
-
 
 
 # ---------------------------------------------------------------------------

@@ -22,8 +22,10 @@ Scale shape:
   O(N · levels));
 - the overfull tile list is tiny (it is bounded by N/cap) and
   broadcast-semi-joins against the survivors;
-- survivors are localCheckpoint-ed per round and previous copies freed —
-  flat lineage, bounded pinned state (the bfs_hops discipline);
+- survivors are localCheckpoint-ed per round and each previous copy is
+  freed once the next exists — flat lineage, bounded pinned state (the
+  bfs_hops discipline); the small per-zoom count tables stay pinned
+  because the returned leaves read them;
 - everything is integer tile arithmetic: no float determinism concerns,
   and the driver oracle replays the whole recursion CLOSED-FORM (tile at
   z is the z_max tile right-shifted, so each level's counts and the
@@ -34,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._pins import Pins
 
 __all__ = ["adaptive_tiling"]
 
@@ -52,49 +56,51 @@ def adaptive_tiling(
     leaf; tiles at ``z_max`` may exceed the cap (subdivision exhausted —
     the no-silent-caps ledger row for a skew cell)."""
     from open_vector_tile_spark.functions.geo import tile_x_col, tile_y_col
-    from open_vector_tile_spark.operators.graph import _free_checkpoint
 
     if not (0 <= z_min <= z_max <= 30):
         raise ValueError(f"need 0 <= z_min <= z_max <= 30, got {z_min}, {z_max}")
     if max_per_tile < 1:
         raise ValueError(f"max_per_tile must be >= 1, got {max_per_tile}")
 
-    cur = points.select(F.col(lon_col).alias("_lon"), F.col(lat_col).alias("_lat"))
-    leaves: list[DataFrame] = []
-    prev = None
-    for z in range(int(z_min), int(z_max) + 1):
-        # checkpoint the TILED projection (not the bare points): the
-        # counts aggregate and the survivor semi-join both read it, so
-        # the mercator/floor math runs once per survivor per round
-        tz = cur.select(
-            tile_x_col(F.col("_lon"), z).alias("tile_x"),
-            tile_y_col(F.col("_lat"), z).alias("tile_y"),
-            "_lon",
-            "_lat",
-        ).localCheckpoint(eager=True)
-        if prev is not None:
-            _free_checkpoint(prev)
-        prev = tz
-        counts = (
-            tz.groupBy("tile_x", "tile_y")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_points"))
-            .localCheckpoint(eager=True)
-        )
-        if z == z_max:
-            leaves.append(counts.withColumn("zoom", F.lit(z).cast("int")))
-            break
-        ok = counts.where(F.col("n_points") <= max_per_tile)
-        leaves.append(ok.withColumn("zoom", F.lit(z).cast("int")))
-        over = counts.where(F.col("n_points") > max_per_tile).select(
-            "tile_x", "tile_y"
-        )
-        if over.isEmpty():
-            break
-        cur = tz.join(F.broadcast(over), ["tile_x", "tile_y"], "left_semi").select(
-            "_lon", "_lat"
-        )
-    if prev is not None:
-        _free_checkpoint(prev)
+    with Pins() as pins:
+        cur = points.select(F.col(lon_col).alias("_lon"), F.col(lat_col).alias("_lat"))
+        leaves: list[DataFrame] = []
+        prev = None
+        for z in range(int(z_min), int(z_max) + 1):
+            # checkpoint the TILED projection (not the bare points): the
+            # counts aggregate and the survivor semi-join both read it, so
+            # the mercator/floor math runs once per survivor per round
+            tz = pins.pin(
+                cur.select(
+                    tile_x_col(F.col("_lon"), z).alias("tile_x"),
+                    tile_y_col(F.col("_lat"), z).alias("tile_y"),
+                    "_lon",
+                    "_lat",
+                )
+            )
+            if prev is not None:
+                pins.free(prev)
+            prev = tz
+            counts = pins.keep(
+                pins.pin(
+                    tz.groupBy("tile_x", "tile_y").agg(
+                        F.count(F.lit(1)).cast("long").alias("n_points")
+                    )
+                )
+            )
+            if z == z_max:
+                leaves.append(counts.withColumn("zoom", F.lit(z).cast("int")))
+                break
+            ok = counts.where(F.col("n_points") <= max_per_tile)
+            leaves.append(ok.withColumn("zoom", F.lit(z).cast("int")))
+            over = counts.where(F.col("n_points") > max_per_tile).select(
+                "tile_x", "tile_y"
+            )
+            if over.isEmpty():
+                break
+            cur = tz.join(F.broadcast(over), ["tile_x", "tile_y"], "left_semi").select(
+                "_lon", "_lat"
+            )
     out = leaves[0]
     for lf in leaves[1:]:
         out = out.unionByName(lf)

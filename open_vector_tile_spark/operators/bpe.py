@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._pins import Pins
+
 __all__ = ["bpe_train", "bpe_apply_merges", "bpe_subword_counts"]
 
 _SENT = "\x1f"
@@ -142,12 +144,10 @@ def bpe_train(
     """
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
-    from .graph import _free_checkpoint
-
     spark = docs.sparkSession
-    words = _word_freqs(docs, text_col).localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, str, int]] = []
-    try:
+    with Pins() as pins:
+        words = pins.pin(_word_freqs(docs, text_col))
         for r in range(1, num_merges + 1):
             best = (
                 _pair_counts(words)
@@ -160,16 +160,13 @@ def bpe_train(
             lhs, rhs, cnt = best[0]["lhs"], best[0]["rhs"], best[0]["pair_count"]
             merged = lhs + rhs
             merges.append((r, lhs, rhs, merged, cnt))
-            nxt = words.withColumn(
-                "syms", _apply_merge(F.col("syms"), lhs, rhs, merged)
-            ).localCheckpoint(eager=True)
-            # release the superseded round's pinned blocks (plain
-            # unpersist is a no-op on localCheckpoint data) — peak state
+            nxt = pins.pin(
+                words.withColumn("syms", _apply_merge(F.col("syms"), lhs, rhs, merged))
+            )
+            # release the superseded round's pinned blocks — peak state
             # is 2 vocabulary-table copies regardless of num_merges
-            _free_checkpoint(words)
+            pins.free(words)
             words = nxt
-    finally:
-        _free_checkpoint(words)
     return spark.createDataFrame(merges, schema=MERGES_SCHEMA)
 
 

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from open_vector_tile_spark.operators.graph import _free_checkpoint, connected_components
+from open_vector_tile_spark.operators._pins import Pins
+from open_vector_tile_spark.operators.graph import connected_components
 
 # bijective (cx, cy) -> long packing; |cell index| < 2^20 covers any
 # cell_deg >= 1e-3 over the lon/lat domain with huge margin
@@ -88,48 +89,45 @@ def grid_cluster(
         F.lit("noise").alias("role"),
     )
 
-    counts = pts.groupBy("cell_x", "cell_y").agg(F.count("*").alias("_n"))
-    core = (
-        counts.filter(F.col("_n") >= min_pts)
-        .select(
-            "cell_x",
-            "cell_y",
-            _cell_key(F.col("cell_x"), F.col("cell_y")).alias("_key"),
-        )
-        .localCheckpoint(eager=True)  # read 3x below (edges both sides, labels)
-    )
-
-    # 8-neighbor adjacency between core cells: explode offsets map-side,
-    # one equi-join on the shifted key — never a distance predicate
-    probes = core.select(
-        F.col("_key").alias("src"),
-        F.explode(
-            F.array(
-                *[
-                    _cell_key(F.col("cell_x") + F.lit(dx), F.col("cell_y") + F.lit(dy))
-                    for dx, dy in _NEIGHBORS
-                    if (dx, dy) != (0, 0)
-                ]
+    with Pins() as pins:
+        counts = pts.groupBy("cell_x", "cell_y").agg(F.count("*").alias("_n"))
+        core = pins.pin(  # read 3x below (edges both sides, labels)
+            counts.filter(F.col("_n") >= min_pts).select(
+                "cell_x",
+                "cell_y",
+                _cell_key(F.col("cell_x"), F.col("cell_y")).alias("_key"),
             )
-        ).alias("dst"),
-    )
-    edges = probes.join(
-        core.select(F.col("_key").alias("dst")), on="dst"
-    )
-
-    comp = connected_components(edges, src="src", dst="dst")
-    labels = (
-        core.join(comp, core["_key"] == comp["id"], "left")
-        .select(
-            "cell_x",
-            "cell_y",
-            F.coalesce(comp["comp"], core["_key"]).alias("cluster"),
         )
-        .localCheckpoint(eager=True)  # read twice (core join + border probe)
-    )
-    # core and the CC label table are dead once `labels` is materialized
-    _free_checkpoint(core)
-    _free_checkpoint(comp)
+
+        # 8-neighbor adjacency between core cells: explode offsets map-side,
+        # one equi-join on the shifted key — never a distance predicate
+        probes = core.select(
+            F.col("_key").alias("src"),
+            F.explode(
+                F.array(
+                    *[
+                        _cell_key(F.col("cell_x") + F.lit(dx), F.col("cell_y") + F.lit(dy))
+                        for dx, dy in _NEIGHBORS
+                        if (dx, dy) != (0, 0)
+                    ]
+                )
+            ).alias("dst"),
+        )
+        edges = probes.join(
+            core.select(F.col("_key").alias("dst")), on="dst"
+        )
+
+        comp = pins.adopt(connected_components(edges, src="src", dst="dst"))
+        labels = pins.pin(  # read twice (core join + border probe)
+            core.join(comp, core["_key"] == comp["id"], "left").select(
+                "cell_x",
+                "cell_y",
+                F.coalesce(comp["comp"], core["_key"]).alias("cluster"),
+            )
+        )
+        # the result reads only `labels`: core and the CC label table are
+        # dead once it is materialized, and go when the block exits
+        pins.keep(labels)
 
     labeled = pts.join(labels, on=["cell_x", "cell_y"], how="left")
     core_pts = labeled.filter(F.col("cluster").isNotNull()).select(

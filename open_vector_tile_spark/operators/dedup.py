@@ -134,17 +134,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """-> (text_hash, n_dups, keeper_id) for groups with >1 member."""
-    h = F.xxhash64(normalized_text(F.col(text_col))).alias("text_hash")
-    return (
-        df.select(F.col(id_col), h)
-        .groupBy("text_hash")
-        .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("keeper_id"))
-        .filter(F.col("n_dups") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # benchmark decontamination (train/eval n-gram overlap)
 # ---------------------------------------------------------------------------
@@ -397,32 +386,6 @@ def _let(expr: Column, body) -> Column:
     Prevents Catalyst from re-evaluating an expensive subexpression inside
     per-element lambdas."""
     return F.element_at(F.transform(F.array(expr), body), 1)
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """num_hashes minhashes: min over shingles of (a_i*h + b_i) mod 2^31-1
-    with seeded random a_i, b_i < 2^31 (the product spans 2^62, wrapping the
-    modulus many times — a small a_i would never wrap and every "permutation"
-    would be monotonic in h).
-
-    Expression-tree variant (kept for SQL-only deployments); the operators
-    use the ~25x faster Arrow UDF in :func:`_band_hash_udf`.  The per-shingle
-    xxhash64 array is let-bound so it is computed once per document."""
-    m31 = 2**31 - 1
-    rng = np.random.RandomState(1_234_567)
-    a_arr = F.array(*[F.lit(int(x) | 1) for x in rng.randint(1, m31, num_hashes)])
-    b_arr = F.array(*[F.lit(int(x)) for x in rng.randint(0, m31, num_hashes)])
-    base = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(m31)))
-
-    def build(hs: Column) -> Column:
-        def sig_i(i: Column) -> Column:
-            a = F.element_at(a_arr, i + 1)
-            b = F.element_at(b_arr, i + 1)
-            return F.array_min(F.transform(hs, lambda h: F.pmod(a * h + b, F.lit(m31))))
-
-        return F.transform(F.sequence(F.lit(0), F.lit(num_hashes - 1)), sig_i)
-
-    return _let(base, build)
 
 
 _FNV = np.uint64(1099511628211)

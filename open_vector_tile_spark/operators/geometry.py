@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._pins import Pins
+
 
 def dissolve_boundary(
     df: DataFrame,
@@ -559,8 +561,6 @@ def line_merge(
         raise ValueError(f"max_chain_len must be >= 1, got {max_chain_len}")
     import math
 
-    from .graph import _free_checkpoint
-
     seg = F.col(seg_col).cast("long")
     node0 = F.concat_ws(",", F.col(ax), F.col(ay))
     node1 = F.concat_ws(",", F.col(bx), F.col(by))
@@ -593,47 +593,46 @@ def line_merge(
             (F.col("lo.seg") * 2 + F.col("lo.e")).alias("succ"),
         )
     )
-    states = (
-        segments.select(F.explode(F.array(seg * 2, seg * 2 + 1)).alias("st"))
-        .join(succ, on="st", how="left")
-        .select(
-            "st",
-            F.col("succ").alias("nxt"),
-            F.when(F.col("succ").isNull(), F.col("st")).alias("term"),
-            F.when(F.col("succ").isNull(), F.lit(0))
-            .otherwise(F.lit(1))
-            .cast("long")
-            .alias("d"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    rounds = max(1, math.ceil(math.log2(max(2, max_chain_len)))) + 1
-    for _ in range(rounds):
-        hop = states.select(
-            F.col("st").alias("nxt"),
-            F.col("nxt").alias("_n2"),
-            F.col("term").alias("_t2"),
-            F.col("d").alias("_d2"),
-        )
-        stepped = (
-            states.join(hop, on="nxt", how="left")
+    with Pins() as pins:
+        states = pins.pin(
+            segments.select(F.explode(F.array(seg * 2, seg * 2 + 1)).alias("st"))
+            .join(succ, on="st", how="left")
             .select(
                 "st",
-                F.when(F.col("term").isNotNull(), F.lit(None).cast("long"))
-                .otherwise(F.col("_n2"))
-                .alias("nxt"),
-                F.coalesce(F.col("term"), F.col("_t2")).alias("term"),
-                F.when(F.col("term").isNotNull(), F.col("d"))
-                .otherwise(F.col("d") + F.coalesce(F.col("_d2"), F.lit(0)))
+                F.col("succ").alias("nxt"),
+                F.when(F.col("succ").isNull(), F.col("st")).alias("term"),
+                F.when(F.col("succ").isNull(), F.lit(0))
+                .otherwise(F.lit(1))
+                .cast("long")
                 .alias("d"),
             )
-            .localCheckpoint(eager=True)
         )
-        pending = stepped.filter(F.col("term").isNull()).count()
-        _free_checkpoint(states)
-        states = stepped
-        if pending == 0:
-            break
+        rounds = max(1, math.ceil(math.log2(max(2, max_chain_len)))) + 1
+        for _ in range(rounds):
+            hop = states.select(
+                F.col("st").alias("nxt"),
+                F.col("nxt").alias("_n2"),
+                F.col("term").alias("_t2"),
+                F.col("d").alias("_d2"),
+            )
+            stepped = pins.pin(
+                states.join(hop, on="nxt", how="left").select(
+                    "st",
+                    F.when(F.col("term").isNotNull(), F.lit(None).cast("long"))
+                    .otherwise(F.col("_n2"))
+                    .alias("nxt"),
+                    F.coalesce(F.col("term"), F.col("_t2")).alias("term"),
+                    F.when(F.col("term").isNotNull(), F.col("d"))
+                    .otherwise(F.col("d") + F.coalesce(F.col("_d2"), F.lit(0)))
+                    .alias("d"),
+                )
+            )
+            pending = stepped.filter(F.col("term").isNull()).count()
+            pins.free(states)
+            states = stepped
+            if pending == 0:
+                break
+        pins.keep(states)  # the seg assembly below reads it
     # ring states never resolve within the budget: term stays null.  Seg
     # assembly: pivot the two states onto one row, then pure column math.
     per_seg = (

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._pins import Pins
+
 
 def _fold_sum(c: F.Column) -> F.Column:
     """Order-deterministic double sum: collect, sort by value, left-fold.
@@ -50,24 +52,6 @@ def _fold_sum(c: F.Column) -> F.Column:
     return F.aggregate(
         F.sort_array(F.collect_list(c)), F.lit(0.0), lambda a, x: a + x
     )
-
-
-def _free_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a localCheckpoint's backing blocks.
-
-    ``localCheckpoint`` pins its RDD at MEMORY_AND_DISK for the application
-    lifetime; an iterative caller that checkpoints every round would
-    otherwise hold O(rounds) dead copies of the label table (25 rounds x
-    10^10 (id, comp) rows = terabytes of executor storage).  The pinned RDD
-    is the one wrapped by the LogicalRDD plan node; ``toRdd()`` returns a
-    metrics-wrapping derivative whose unpersist is a no-op, so go through
-    the analyzed plan.  Only call on frames that are never read again —
-    a locally-checkpointed RDD cannot be recomputed.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # Connect / API drift: leak rather than fail the job
 
 
 def connected_components(
@@ -87,55 +71,51 @@ def connected_components(
     (pointer jumping converges in O(log diameter); 25 rounds covers
     diameters beyond 2^20).
     """
-    e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=True)
+    with Pins() as pins:
+        e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
+        sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        sym = pins.pin(sym.filter(F.col("a") != F.col("b")).distinct())
 
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
+        labels = pins.pin(
+            sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
+        )
 
-    for _ in range(max_rounds):
-        # neighbor-min: smallest label among each node's neighbors
-        nbr = (
-            sym.join(labels.withColumnRenamed("id", "a"), on="a")
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        stepped = (
-            labels.join(nbr, on="id", how="left")
-            .select("id", F.least("comp", "nbr_comp").alias("comp"))
-        )
-        # pointer jump x2: follow comp two hops (comp is always an existing
-        # id).  The second jump is a pure plan extension — one more join in
-        # the same job, no extra action — and roughly halves the number of
-        # rounds (each round composes 2 levels of the label forest).
-        jumped = stepped
-        for _jump in range(2):
-            parent = jumped.select(
-                F.col("id").alias("comp"), F.col("comp").alias("jump")
+        for _ in range(max_rounds):
+            # neighbor-min: smallest label among each node's neighbors
+            nbr = (
+                sym.join(labels.withColumnRenamed("id", "a"), on="a")
+                .groupBy(F.col("b").alias("id"))
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-            jumped = jumped.join(parent, on="comp", how="left").select(
-                "id", F.least("comp", "jump").alias("comp")
+            stepped = (
+                labels.join(nbr, on="id", how="left")
+                .select("id", F.least("comp", "nbr_comp").alias("comp"))
             )
-        jumped = jumped.localCheckpoint(eager=True)
-        changed = (
-            jumped.join(labels.withColumnRenamed("comp", "old"), on="id")
-            .filter(F.col("comp") != F.col("old"))
-            .count()
-        )
-        # the old label table is dead once the changed-count action ran:
-        # free its pinned blocks NOW instead of holding rounds x |nodes|
-        _free_checkpoint(labels)
-        labels = jumped
-        if changed == 0:
-            _free_checkpoint(sym)
-            return labels
-    _free_checkpoint(sym)
-    raise RuntimeError(f"connected_components: no fixpoint in {max_rounds} rounds")
+            # pointer jump x2: follow comp two hops (comp is always an existing
+            # id).  The second jump is a pure plan extension — one more join in
+            # the same job, no extra action — and roughly halves the number of
+            # rounds (each round composes 2 levels of the label forest).
+            jumped = stepped
+            for _jump in range(2):
+                parent = jumped.select(
+                    F.col("id").alias("comp"), F.col("comp").alias("jump")
+                )
+                jumped = jumped.join(parent, on="comp", how="left").select(
+                    "id", F.least("comp", "jump").alias("comp")
+                )
+            jumped = pins.pin(jumped)
+            changed = (
+                jumped.join(labels.withColumnRenamed("comp", "old"), on="id")
+                .filter(F.col("comp") != F.col("old"))
+                .count()
+            )
+            # the old label table is dead once the changed-count action ran:
+            # free its pinned blocks NOW instead of holding rounds x |nodes|
+            pins.free(labels)
+            labels = jumped
+            if changed == 0:
+                return pins.keep(labels)
+        raise RuntimeError(f"connected_components: no fixpoint in {max_rounds} rounds")
 
 
 def pagerank(
@@ -170,10 +150,10 @@ def pagerank(
       - inflow = groupBy(dst).sum: partial-aggregated map-side, so
         celebrity pages (10^8 in-links) combine before the shuffle;
       - dangling mass is a 1-row aggregate cross-joined back (broadcast);
-      - the label table is ``localCheckpoint``-ed per round and the
-        previous round's blocks are freed immediately (same discipline as
-        connected_components / redirects) — peak pinned state is two
-        copies of (id, outdeg, rank), not O(rounds).
+      - the rank table is ``localCheckpoint``-ed every other round and the
+        previous checkpoint is freed as soon as the next one exists (same
+        discipline as connected_components / redirects) — peak pinned
+        state is two copies of (id, outdeg, rank), not O(rounds).
 
     ``deterministic=True`` switches the two float sums (inflow, dangling)
     to the repo's sorted-fold so a DuckDB oracle replays every iteration
@@ -188,86 +168,89 @@ def pagerank(
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    e = edges.select(
-        F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("t")
-    )
-    e = e.filter(F.col("s") != F.col("t")).distinct().localCheckpoint(eager=True)
-    ids = e.select(F.col("s").alias("id")).union(e.select(F.col("t").alias("id")))
-    if nodes is not None:
-        # extra isolated ids join the surfer model; endpoints always count.
-        # Demand exactly one integral column — silently casting the first
-        # column of a wider frame would union NULL/garbage ids and distort
-        # every rank without an error.
-        if len(nodes.columns) != 1:
-            raise ValueError(
-                f"pagerank nodes must have exactly one id column, got "
-                f"{nodes.columns}"
+    with Pins() as pins:
+        e = edges.select(
+            F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("t")
+        )
+        e = pins.pin(e.filter(F.col("s") != F.col("t")).distinct())
+        ids = e.select(F.col("s").alias("id")).union(e.select(F.col("t").alias("id")))
+        if nodes is not None:
+            # extra isolated ids join the surfer model; endpoints always count.
+            # Demand exactly one integral column — silently casting the first
+            # column of a wider frame would union NULL/garbage ids and distort
+            # every rank without an error.
+            if len(nodes.columns) != 1:
+                raise ValueError(
+                    f"pagerank nodes must have exactly one id column, got "
+                    f"{nodes.columns}"
+                )
+            dt = nodes.schema[nodes.columns[0]].dataType.simpleString()
+            if dt not in ("tinyint", "smallint", "int", "bigint"):
+                raise TypeError(
+                    f"pagerank nodes id column must be integral, got {dt} "
+                    "(hash string ids to int64 first, e.g. xxhash64)"
+                )
+            ids = ids.union(
+                nodes.select(F.col(nodes.columns[0]).cast("long").alias("id"))
             )
-        dt = nodes.schema[nodes.columns[0]].dataType.simpleString()
-        if dt not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"pagerank nodes id column must be integral, got {dt} "
-                "(hash string ids to int64 first, e.g. xxhash64)"
+        ids = ids.distinct()
+        deg = e.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("outdeg"))
+        n = ids.count()
+        if n == 0:
+            pins.keep(e)  # the empty result still reads the edge table
+            return ids.select(
+                "id", F.lit(0).cast("long").alias("outdeg"), F.lit(0.0).alias("rank")
             )
-        ids = ids.union(
-            nodes.select(F.col(nodes.columns[0]).cast("long").alias("id"))
-        )
-    ids = ids.distinct()
-    deg = e.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("outdeg"))
-    n = ids.count()
-    if n == 0:
-        return ids.select(
-            "id", F.lit(0).cast("long").alias("outdeg"), F.lit(0.0).alias("rank")
-        )
-    nd = float(n)
-    state = (
-        ids.join(deg, on="id", how="left")
-        .select(
-            "id",
-            F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
-            (F.lit(1.0) / F.lit(nd)).alias("rank"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    fold = _fold_sum if deterministic else F.sum
-    base = (1.0 - damping) / nd  # same IEEE op order as the SQL twin
-    for _i in range(n_iter):
-        contrib = e.join(
-            state.select(F.col("id").alias("s"), "rank", "outdeg"), on="s"
-        ).select(F.col("t").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
-        inflow = contrib.groupBy("id").agg(fold(F.col("c")).alias("inflow"))
-        dang = state.filter(F.col("outdeg") == 0).agg(
-            fold(F.col("rank")).alias("dm")
-        )
-        new_state = (
-            state.crossJoin(F.broadcast(dang))
-            .join(inflow, on="id", how="left")
-            .select(
+        nd = float(n)
+        state = pins.pin(
+            ids.join(deg, on="id", how="left").select(
                 "id",
-                "outdeg",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.coalesce("dm", F.lit(0.0)) / F.lit(nd)
-                    )
-                ).alias("rank"),
+                F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
+                (F.lit(1.0) / F.lit(nd)).alias("rank"),
             )
         )
-        # checkpoint every OTHER round (and the last): each eager
-        # checkpoint is a driver-synchronous materialization, and two
-        # unrolled rounds (state referenced 3x per round -> <=9 subtree
-        # copies, collapsed by runtime stage reuse) plan and run faster
-        # than two barriers — measured 3.5 -> 2.7 s at sf0.1,
-        # bit-identical ranks.  Deep n_iter still truncates lineage every
-        # two rounds, keeping peak state bounded as before.
-        if _i % 2 == 1 or _i == n_iter - 1:
-            new_state = new_state.localCheckpoint(eager=True)
-            _free_checkpoint(state)
-        state = new_state
-    _free_checkpoint(e)
-    return state
+        pinned = state
+        fold = _fold_sum if deterministic else F.sum
+        base = (1.0 - damping) / nd  # same IEEE op order as the SQL twin
+        for _i in range(n_iter):
+            contrib = e.join(
+                state.select(F.col("id").alias("s"), "rank", "outdeg"), on="s"
+            ).select(F.col("t").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
+            inflow = contrib.groupBy("id").agg(fold(F.col("c")).alias("inflow"))
+            dang = state.filter(F.col("outdeg") == 0).agg(
+                fold(F.col("rank")).alias("dm")
+            )
+            new_state = (
+                state.crossJoin(F.broadcast(dang))
+                .join(inflow, on="id", how="left")
+                .select(
+                    "id",
+                    "outdeg",
+                    (
+                        F.lit(base)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce("inflow", F.lit(0.0))
+                            + F.coalesce("dm", F.lit(0.0)) / F.lit(nd)
+                        )
+                    ).alias("rank"),
+                )
+            )
+            # checkpoint every OTHER round (and the last): each eager
+            # checkpoint is a driver-synchronous materialization, and two
+            # unrolled rounds (state referenced 3x per round -> <=9 subtree
+            # copies, collapsed by runtime stage reuse) plan and run faster
+            # than two barriers — measured 3.5 -> 2.7 s at sf0.1,
+            # bit-identical ranks.  Deep n_iter still truncates lineage every
+            # two rounds.  The odd round's state is lazy, so the checkpoint
+            # freed here is the one from two rounds back: peak pinned state
+            # is the edge table plus two rank tables.
+            if _i % 2 == 1 or _i == n_iter - 1:
+                new_state = pins.pin(new_state)
+                pins.free(pinned)
+                pinned = new_state
+            state = new_state
+        return pins.keep(state)
 
 
 def dedup_components(
@@ -351,73 +334,72 @@ def hits(
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    e = edges.select(
-        F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("t")
-    )
-    e = e.filter(F.col("s") != F.col("t")).distinct().localCheckpoint(eager=True)
-    ids = e.select(F.col("s").alias("id")).union(e.select(F.col("t").alias("id")))
-    if nodes is not None:
-        if len(nodes.columns) != 1:
-            raise ValueError(
-                f"hits nodes must have exactly one id column, got {nodes.columns}"
-            )
-        dt = nodes.schema[nodes.columns[0]].dataType.simpleString()
-        if dt not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"hits nodes id column must be integral, got {dt} "
-                "(hash string ids to int64 first, e.g. xxhash64)"
-            )
-        ids = ids.union(nodes.select(F.col(nodes.columns[0]).cast("long").alias("id")))
-    ids = ids.distinct().localCheckpoint(eager=True)
-    fold = _fold_sum if deterministic else F.sum
-
-    def _half_step(state: DataFrame, score: str, join_key: str, out_key: str, out: str):
-        """One normalized propagation: sum `score` across edges grouped by
-        the far endpoint, L2-normalize, left-join back onto all ids."""
-        raw = (
-            e.join(state.select(F.col("id").alias(join_key), score), on=join_key)
-            .select(F.col(out_key).alias("id"), F.col(score).alias("c"))
-            .groupBy("id")
-            .agg(fold(F.col("c")).alias("raw"))
+    with Pins() as pins:
+        e = edges.select(
+            F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("t")
         )
-        norm = raw.agg(
-            F.sqrt(
-                F.coalesce(fold(F.col("raw") * F.col("raw")), F.lit(0.0))
-            ).alias("nrm")
-        )
-        return (
-            state.join(raw, on="id", how="left")
-            .crossJoin(F.broadcast(norm))
-            .select(
-                *[c for c in state.columns if c != out],
-                F.when(
-                    F.col("nrm") > 0.0,
-                    F.coalesce("raw", F.lit(0.0)) / F.col("nrm"),
+        e = pins.pin(e.filter(F.col("s") != F.col("t")).distinct())
+        ids = e.select(F.col("s").alias("id")).union(e.select(F.col("t").alias("id")))
+        if nodes is not None:
+            if len(nodes.columns) != 1:
+                raise ValueError(
+                    f"hits nodes must have exactly one id column, got {nodes.columns}"
                 )
-                .otherwise(F.lit(0.0))
-                .alias(out),
-            )
-        )
+            dt = nodes.schema[nodes.columns[0]].dataType.simpleString()
+            if dt not in ("tinyint", "smallint", "int", "bigint"):
+                raise TypeError(
+                    f"hits nodes id column must be integral, got {dt} "
+                    "(hash string ids to int64 first, e.g. xxhash64)"
+                )
+            ids = ids.union(nodes.select(F.col(nodes.columns[0]).cast("long").alias("id")))
+        ids = pins.pin(ids.distinct())
+        fold = _fold_sum if deterministic else F.sum
 
-    state = ids.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth")
-    ).localCheckpoint(eager=True)
-    for _ in range(n_iter):
-        # auth from hubs (in-edges), then hubs from the NEW auth (out-edges)
-        mid = _half_step(state, "hub", "s", "t", "auth")
-        # checkpoint EVERY round, unlike pagerank's cadence-2: a round here
-        # is two half-steps each re-referencing state plus a broadcast
-        # norm, and the unrolled two-round diamond was measured WORSE
-        # (3.5 -> 5.2 s at sf0.1, alternating A/B) — the recomputed
-        # aggregate branches cost more than the barrier saves.
-        new_state = _half_step(mid, "auth", "t", "s", "hub").select(
-            "id", "hub", "auth"
-        ).localCheckpoint(eager=True)
-        _free_checkpoint(state)
-        state = new_state
-    _free_checkpoint(e)
-    _free_checkpoint(ids)
-    return state
+        def _half_step(state: DataFrame, score: str, join_key: str, out_key: str, out: str):
+            """One normalized propagation: sum `score` across edges grouped by
+            the far endpoint, L2-normalize, left-join back onto all ids."""
+            raw = (
+                e.join(state.select(F.col("id").alias(join_key), score), on=join_key)
+                .select(F.col(out_key).alias("id"), F.col(score).alias("c"))
+                .groupBy("id")
+                .agg(fold(F.col("c")).alias("raw"))
+            )
+            norm = raw.agg(
+                F.sqrt(
+                    F.coalesce(fold(F.col("raw") * F.col("raw")), F.lit(0.0))
+                ).alias("nrm")
+            )
+            return (
+                state.join(raw, on="id", how="left")
+                .crossJoin(F.broadcast(norm))
+                .select(
+                    *[c for c in state.columns if c != out],
+                    F.when(
+                        F.col("nrm") > 0.0,
+                        F.coalesce("raw", F.lit(0.0)) / F.col("nrm"),
+                    )
+                    .otherwise(F.lit(0.0))
+                    .alias(out),
+                )
+            )
+
+        state = pins.pin(
+            ids.select("id", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth"))
+        )
+        for _ in range(n_iter):
+            # auth from hubs (in-edges), then hubs from the NEW auth (out-edges)
+            mid = _half_step(state, "hub", "s", "t", "auth")
+            # checkpoint EVERY round, unlike pagerank's cadence-2: a round here
+            # is two half-steps each re-referencing state plus a broadcast
+            # norm, and the unrolled two-round diamond was measured WORSE
+            # (3.5 -> 5.2 s at sf0.1, alternating A/B) — the recomputed
+            # aggregate branches cost more than the barrier saves.
+            new_state = pins.pin(
+                _half_step(mid, "auth", "t", "s", "hub").select("id", "hub", "auth")
+            )
+            pins.free(state)
+            state = new_state
+        return pins.keep(state)
 
 
 def bfs_hops(
@@ -450,42 +432,37 @@ def bfs_hops(
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = (
-        edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_t"))
-        .filter(F.col("_s").isNotNull() & F.col("_t").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = (
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    visited = frontier
-    for h in range(1, int(max_hops) + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select(F.col("_t").alias("node"))
+    with Pins() as pins:
+        e = pins.pin(
+            edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_t"))
+            .filter(F.col("_s").isNotNull() & F.col("_t").isNotNull())
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(h))
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            _free_checkpoint(nxt)
-            break
-        new_visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        _free_checkpoint(visited)
-        if frontier is not visited:
-            _free_checkpoint(frontier)
-        visited, frontier = new_visited, nxt
-    _free_checkpoint(e)
-    # the last frontier is already folded into visited (materialized), so
-    # its backing blocks can go too
-    if frontier is not visited:
-        _free_checkpoint(frontier)
-    return visited
+        frontier = pins.pin(
+            sources.select(F.col(node_col).alias("node"))
+            .distinct()
+            .withColumn("hops", F.lit(0))
+        )
+        visited = frontier
+        for h in range(1, int(max_hops) + 1):
+            nxt = (
+                frontier.join(e, frontier["node"] == e["_s"])
+                .select(F.col("_t").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("hops", F.lit(h))
+            )
+            nxt = pins.pin(nxt)
+            if nxt.isEmpty():
+                break
+            new_visited = pins.pin(visited.unionByName(nxt))
+            pins.free(visited)
+            if frontier is not visited:
+                pins.free(frontier)
+            visited, frontier = new_visited, nxt
+        # the last frontier is already folded into the materialized visited
+        # table, so leaving the block frees it with the edges
+        return pins.keep(visited)
 
 
 def shortest_paths(
@@ -522,57 +499,51 @@ def shortest_paths(
     """
     if max_rounds < 0:
         raise ValueError(f"max_rounds must be >= 0, got {max_rounds}")
-    e = (
-        edges.select(
-            F.col(src_col).alias("_s"),
-            F.col(dst_col).alias("_t"),
-            F.col(weight_col).cast("long").alias("_w"),
+    with Pins() as pins:
+        e = pins.pin(
+            edges.select(
+                F.col(src_col).alias("_s"),
+                F.col(dst_col).alias("_t"),
+                F.col(weight_col).cast("long").alias("_w"),
+            )
+            .filter(
+                F.col("_s").isNotNull()
+                & F.col("_t").isNotNull()
+                & (F.col("_w") >= 0)
+            )
+            .groupBy("_s", "_t")
+            .agg(F.min("_w").alias("_w"))
         )
-        .filter(
-            F.col("_s").isNotNull()
-            & F.col("_t").isNotNull()
-            & (F.col("_w") >= 0)
+        dist = pins.pin(
+            sources.select(F.col(node_col).alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(0).cast("long"))
         )
-        .groupBy("_s", "_t")
-        .agg(F.min("_w").alias("_w"))
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    for _ in range(int(max_rounds)):
-        cand = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select(F.col("_t").alias("node"), (F.col("dist") + F.col("_w")).alias("_cand"))
-            .groupBy("node")
-            .agg(F.min("_cand").alias("_cand"))
-        )
-        improved = (
-            cand.join(dist, "node", "left")
-            .where(F.col("dist").isNull() | (F.col("_cand") < F.col("dist")))
-            .select("node", F.col("_cand").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            _free_checkpoint(improved)
-            break
-        new_dist = (
-            dist.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=True)
-        )
-        _free_checkpoint(dist)
-        if frontier is not dist:
-            _free_checkpoint(frontier)
-        dist, frontier = new_dist, improved
-    _free_checkpoint(e)
-    if frontier is not dist:
-        _free_checkpoint(frontier)
-    return dist
+        frontier = dist
+        for _ in range(int(max_rounds)):
+            cand = (
+                frontier.join(e, frontier["node"] == e["_s"])
+                .select(F.col("_t").alias("node"), (F.col("dist") + F.col("_w")).alias("_cand"))
+                .groupBy("node")
+                .agg(F.min("_cand").alias("_cand"))
+            )
+            improved = pins.pin(
+                cand.join(dist, "node", "left")
+                .where(F.col("dist").isNull() | (F.col("_cand") < F.col("dist")))
+                .select("node", F.col("_cand").alias("dist"))
+            )
+            if improved.isEmpty():
+                break
+            new_dist = pins.pin(
+                dist.join(improved.select("node"), "node", "left_anti").unionByName(
+                    improved
+                )
+            )
+            pins.free(dist)
+            if frontier is not dist:
+                pins.free(frontier)
+            dist, frontier = new_dist, improved
+        return pins.keep(dist)
 
 
 def personalized_pagerank(
@@ -619,71 +590,69 @@ def personalized_pagerank(
             f"seeds id column must be integral, got {sdt} "
             "(hash string ids to int64 first, e.g. xxhash64)"
         )
-    e = edges.select(
-        F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("t")
-    )
-    e = e.filter(F.col("s") != F.col("t")).distinct().localCheckpoint(eager=True)
-    sd = seeds.select(F.col(seeds.columns[0]).cast("long").alias("id")).distinct()
-    n_seeds = sd.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: empty seed set")
-    ids = e.select(F.col("s").alias("id")).union(e.select(F.col("t").alias("id")))
-    ids = ids.union(sd.select("id"))
-    if nodes is not None:
-        if len(nodes.columns) != 1:
-            raise ValueError(
-                f"nodes must have exactly one id column, got {nodes.columns}"
+    with Pins() as pins:
+        e = edges.select(
+            F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("t")
+        )
+        e = pins.pin(e.filter(F.col("s") != F.col("t")).distinct())
+        sd = seeds.select(F.col(seeds.columns[0]).cast("long").alias("id")).distinct()
+        n_seeds = sd.count()
+        if n_seeds == 0:
+            raise ValueError("personalized_pagerank: empty seed set")
+        ids = e.select(F.col("s").alias("id")).union(e.select(F.col("t").alias("id")))
+        ids = ids.union(sd.select("id"))
+        if nodes is not None:
+            if len(nodes.columns) != 1:
+                raise ValueError(
+                    f"nodes must have exactly one id column, got {nodes.columns}"
+                )
+            ids = ids.union(
+                nodes.select(F.col(nodes.columns[0]).cast("long").alias("id"))
             )
-        ids = ids.union(
-            nodes.select(F.col(nodes.columns[0]).cast("long").alias("id"))
-        )
-    ids = ids.distinct()
-    deg = e.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("outdeg"))
-    sv = 1.0 / float(n_seeds)
-    state = (
-        ids.join(deg, on="id", how="left")
-        .join(sd.withColumn("_isseed", F.lit(True)), on="id", how="left")
-        .select(
-            "id",
-            F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
-            F.coalesce("_isseed", F.lit(False)).alias("is_seed"),
-            F.when(F.col("_isseed"), F.lit(sv)).otherwise(F.lit(0.0)).alias("rank"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    fold = _fold_sum if deterministic else F.sum
-    base = 1.0 - damping
-    for _ in range(n_iter):
-        contrib = e.join(
-            state.select(F.col("id").alias("s"), "rank", "outdeg"), on="s"
-        ).select(F.col("t").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
-        inflow = contrib.groupBy("id").agg(fold(F.col("c")).alias("inflow"))
-        dang = state.filter(F.col("outdeg") == 0).agg(
-            fold(F.col("rank")).alias("dm")
-        )
-        seed_mass = F.when(F.col("is_seed"), F.lit(sv)).otherwise(F.lit(0.0))
-        new_state = (
-            state.crossJoin(F.broadcast(dang))
-            .join(inflow, on="id", how="left")
+        ids = ids.distinct()
+        deg = e.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("outdeg"))
+        sv = 1.0 / float(n_seeds)
+        state = pins.pin(
+            ids.join(deg, on="id", how="left")
+            .join(sd.withColumn("_isseed", F.lit(True)), on="id", how="left")
             .select(
                 "id",
-                "outdeg",
-                "is_seed",
-                (
-                    F.lit(base) * seed_mass
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.coalesce("dm", F.lit(0.0)) * seed_mass
-                    )
-                ).alias("rank"),
+                F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
+                F.coalesce("_isseed", F.lit(False)).alias("is_seed"),
+                F.when(F.col("_isseed"), F.lit(sv)).otherwise(F.lit(0.0)).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
-        _free_checkpoint(state)
-        state = new_state
-    _free_checkpoint(e)
-    return state.select("id", "outdeg", "rank", "is_seed")
+        fold = _fold_sum if deterministic else F.sum
+        base = 1.0 - damping
+        for _ in range(n_iter):
+            contrib = e.join(
+                state.select(F.col("id").alias("s"), "rank", "outdeg"), on="s"
+            ).select(F.col("t").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
+            inflow = contrib.groupBy("id").agg(fold(F.col("c")).alias("inflow"))
+            dang = state.filter(F.col("outdeg") == 0).agg(
+                fold(F.col("rank")).alias("dm")
+            )
+            seed_mass = F.when(F.col("is_seed"), F.lit(sv)).otherwise(F.lit(0.0))
+            new_state = pins.pin(
+                state.crossJoin(F.broadcast(dang))
+                .join(inflow, on="id", how="left")
+                .select(
+                    "id",
+                    "outdeg",
+                    "is_seed",
+                    (
+                        F.lit(base) * seed_mass
+                        + F.lit(damping)
+                        * (
+                            F.coalesce("inflow", F.lit(0.0))
+                            + F.coalesce("dm", F.lit(0.0)) * seed_mass
+                        )
+                    ).alias("rank"),
+                )
+            )
+            pins.free(state)
+            state = new_state
+        return pins.keep(state).select("id", "outdeg", "rank", "is_seed")
 
 
 
@@ -718,38 +687,37 @@ def label_propagation(
     """
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ids = sym.select(F.col("a").alias("id")).distinct()
-    if nodes is not None:
-        ids = ids.unionByName(
-            nodes.select(F.col("id").cast("long").alias("id"))
-        ).distinct()
-    labels = ids.withColumn("comm", F.col("id")).localCheckpoint(eager=True)
-    for _ in range(int(n_rounds)):
-        counts = (
-            sym.join(labels.withColumnRenamed("id", "a"), on="a")
-            .groupBy(F.col("b").alias("id"), F.col("comm"))
-            .agg(F.count(F.lit(1)).alias("c"))
+    with Pins() as pins:
+        e = edges.select(
+            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
         )
-        winners = counts.groupBy("id").agg(
-            F.min(F.struct((-F.col("c")).alias("nc"), F.col("comm").alias("comm")))[
-                "comm"
-            ].alias("w")
+        sym = pins.pin(
+            e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-        stepped = (
-            labels.join(winners, on="id", how="left")
-            .select("id", F.coalesce("w", "comm").alias("comm"))
-            .localCheckpoint(eager=True)
-        )
-        _free_checkpoint(labels)
-        labels = stepped
-    _free_checkpoint(sym)
-    return labels
+        ids = sym.select(F.col("a").alias("id")).distinct()
+        if nodes is not None:
+            ids = ids.unionByName(
+                nodes.select(F.col("id").cast("long").alias("id"))
+            ).distinct()
+        labels = pins.pin(ids.withColumn("comm", F.col("id")))
+        for _ in range(int(n_rounds)):
+            counts = (
+                sym.join(labels.withColumnRenamed("id", "a"), on="a")
+                .groupBy(F.col("b").alias("id"), F.col("comm"))
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            winners = counts.groupBy("id").agg(
+                F.min(F.struct((-F.col("c")).alias("nc"), F.col("comm").alias("comm")))[
+                    "comm"
+                ].alias("w")
+            )
+            stepped = pins.pin(
+                labels.join(winners, on="id", how="left").select(
+                    "id", F.coalesce("w", "comm").alias("comm")
+                )
+            )
+            pins.free(labels)
+            labels = stepped
+        return pins.keep(labels)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.geo import cell_col, haversine_np, pack_cell_np, tile_xy_np
+from ._pins import Pins
 
 
 def knn_broadcast(
@@ -215,49 +216,55 @@ def knn_cell_ring(
     pcells = poi_cells(spark, pois_pdf, zoom).cache()
     n = 1 << zoom
 
-    pending = points.select(key, lon, lat).withColumn(
-        "cell", cell_col(F.col(lon), F.col(lat), zoom)
-    ).localCheckpoint(eager=True)
-    resolved: list[DataFrame] = []
-    w = Window.partitionBy(key).orderBy(F.col("dist_m").asc(), F.col("poi_id").asc())
+    with Pins() as pins:
+        pending = pins.pin(
+            points.select(key, lon, lat).withColumn(
+                "cell", cell_col(F.col(lon), F.col(lat), zoom)
+            )
+        )
+        resolved: list[DataFrame] = []
+        w = Window.partitionBy(key).orderBy(F.col("dist_m").asc(), F.col("poi_id").asc())
 
-    schedule = [0]
-    while schedule[-1] < max_rings:
-        schedule.append(min(max(schedule[-1] * 2, 1), max_rings))
+        schedule = [0]
+        while schedule[-1] < max_rings:
+            schedule.append(min(max(schedule[-1] * 2, 1), max_rings))
 
-    for r in schedule:
-        disk = _disk_cells_df(pending, zoom, r)
-        cand = disk.join(F.broadcast(pcells), on="cell", how="inner")
-        scored = cand.withColumn(
-            "dist_m", _haversine_col(F.col(lon), F.col(lat), F.col("poi_lon"), F.col("poi_lat"))
-        ).withColumn("rank", F.row_number().over(w))
-        kth = (
-            scored.filter(F.col("rank") <= k)
-            .groupBy(key, lon, lat, "home_tx", "home_ty")
-            .agg(F.max("dist_m").alias("kth_dist"), F.count("*").alias("n_cand"))
-        )
-        bound = _disk_boundary_bound_col(
-            F.col(lon), F.col(lat), F.col("home_tx"), F.col("home_ty"), r, zoom, n
-        )
-        done_keys = (
-            kth.filter((F.col("n_cand") >= k) & (F.col("kth_dist") <= bound)).select(key)
-        )
-        done = (
-            scored.join(F.broadcast(done_keys), on=key, how="leftsemi")
-            .filter(F.col("rank") <= k)
-            .select(key, "poi_id", "dist_m", "rank")
-        ).localCheckpoint(eager=True)
-        resolved.append(done)
-        # one anti-join step on top of MATERIALIZED partitions, then cut
-        # the lineage again — round cost is O(|pending|), never O(history)
-        pending = pending.join(done_keys, on=key, how="left_anti").localCheckpoint(
-            eager=True
-        )
-        if pending.isEmpty():  # cheap: scans checkpointed partitions
-            break
+        for r in schedule:
+            disk = _disk_cells_df(pending, zoom, r)
+            cand = disk.join(F.broadcast(pcells), on="cell", how="inner")
+            scored = cand.withColumn(
+                "dist_m", _haversine_col(F.col(lon), F.col(lat), F.col("poi_lon"), F.col("poi_lat"))
+            ).withColumn("rank", F.row_number().over(w))
+            kth = (
+                scored.filter(F.col("rank") <= k)
+                .groupBy(key, lon, lat, "home_tx", "home_ty")
+                .agg(F.max("dist_m").alias("kth_dist"), F.count("*").alias("n_cand"))
+            )
+            bound = _disk_boundary_bound_col(
+                F.col(lon), F.col(lat), F.col("home_tx"), F.col("home_ty"), r, zoom, n
+            )
+            done_keys = (
+                kth.filter((F.col("n_cand") >= k) & (F.col("kth_dist") <= bound)).select(key)
+            )
+            done = pins.pin(
+                scored.join(F.broadcast(done_keys), on=key, how="leftsemi")
+                .filter(F.col("rank") <= k)
+                .select(key, "poi_id", "dist_m", "rank")
+            )
+            resolved.append(pins.keep(done))
+            # one anti-join step on top of MATERIALIZED partitions, then cut
+            # the lineage again — round cost is O(|pending|), never O(history)
+            nxt = pins.pin(pending.join(done_keys, on=key, how="left_anti"))
+            pins.free(pending)
+            pending = nxt
+            if pending.isEmpty():  # cheap: scans checkpointed partitions
+                break
 
-    if not pending.isEmpty():
-        resolved.append(knn_broadcast(pending, pois_pdf, k=k, lon=lon, lat=lat, key=key))
+        if not pending.isEmpty():
+            pins.keep(pending)  # the fallback kernel reads it lazily
+            resolved.append(knn_broadcast(pending, pois_pdf, k=k, lon=lon, lat=lat, key=key))
+        # every round's candidates are materialized in `done`
+        pcells.unpersist()
 
     out = resolved[0]
     for df in resolved[1:]:

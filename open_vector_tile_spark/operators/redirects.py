@@ -24,9 +24,9 @@ Scale shape (10^12-URL graph):
 - state is only (url, ptr, hops) — page payloads never travel;
 - each round is ONE self-join shuffle on ``ptr``; O(log max_hops) rounds
   total (7 for the default 64);
-- per-round ``localCheckpoint`` keeps lineage flat, and superseded
-  checkpoints are freed immediately (graph._free_checkpoint), so peak
-  pinned storage is 2 copies of the label table, not O(rounds);
+- per-round ``localCheckpoint`` keeps lineage flat, and each superseded
+  checkpoint is freed as soon as the next one exists (``_pins.Pins``), so
+  peak pinned storage is 2 copies of the label table, not O(rounds);
 - early exit when every row is resolved (one cheap count per round on an
   already-materialized frame).
 
@@ -43,7 +43,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import _free_checkpoint
+from ._pins import Pins
 
 __all__ = ["resolve_redirects"]
 
@@ -65,45 +65,44 @@ def resolve_redirects(
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e = edges.select(F.col(src).alias("url"), F.col(dst).alias("ptr"))
-    labels = (
-        e.groupBy("url")
-        .agg(F.min("ptr").alias("ptr"))
-        .withColumn("hops", F.lit(1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    # after r rounds every chain of length <= 2^r is resolved; one extra
-    # round so hops can EXCEED max_hops for the cycle test below
-    rounds = max(1, math.ceil(math.log2(max_hops))) + 1
-    for _ in range(rounds):
-        p = labels.select(
-            F.col("url").alias("ptr"),
-            F.col("ptr").alias("_jump"),
-            F.col("hops").alias("_jhops"),
+    with Pins() as pins:
+        e = edges.select(F.col(src).alias("url"), F.col(dst).alias("ptr"))
+        labels = pins.pin(
+            e.groupBy("url")
+            .agg(F.min("ptr").alias("ptr"))
+            .withColumn("hops", F.lit(1).cast("long"))
         )
-        jumped = (
-            labels.join(p, on="ptr", how="left")
-            .select(
-                "url",
-                F.coalesce("_jump", "ptr").alias("ptr"),
-                (F.col("hops") + F.coalesce("_jhops", F.lit(0))).alias("hops"),
+        # after r rounds every chain of length <= 2^r is resolved; one extra
+        # round so hops can EXCEED max_hops for the cycle test below
+        rounds = max(1, math.ceil(math.log2(max_hops))) + 1
+        for _ in range(rounds):
+            p = labels.select(
+                F.col("url").alias("ptr"),
+                F.col("ptr").alias("_jump"),
+                F.col("hops").alias("_jhops"),
             )
-            .localCheckpoint(eager=True)
-        )
-        # resolved rows (ptr terminal) miss the join and ride unchanged, so
-        # "nothing moved" == "every chain hit a terminal or exceeded the
-        # hop budget" — both are final states
-        moved = (
-            jumped.join(
-                labels.select("url", F.col("hops").alias("_old")), on="url"
+            jumped = pins.pin(
+                labels.join(p, on="ptr", how="left").select(
+                    "url",
+                    F.coalesce("_jump", "ptr").alias("ptr"),
+                    (F.col("hops") + F.coalesce("_jhops", F.lit(0))).alias("hops"),
+                )
             )
-            .filter(F.col("hops") != F.col("_old"))
-            .count()
-        )
-        _free_checkpoint(labels)
-        labels = jumped
-        if moved == 0:
-            break
+            # resolved rows (ptr terminal) miss the join and ride unchanged, so
+            # "nothing moved" == "every chain hit a terminal or exceeded the
+            # hop budget" — both are final states
+            moved = (
+                jumped.join(
+                    labels.select("url", F.col("hops").alias("_old")), on="url"
+                )
+                .filter(F.col("hops") != F.col("_old"))
+                .count()
+            )
+            pins.free(labels)
+            labels = jumped
+            if moved == 0:
+                break
+        pins.keep(labels)  # the output below reads it
     # terminal test WITHOUT another distinct/shuffle over the edge table:
     # a ptr is a source iff it has a label row
     is_src = labels.select(F.col("url").alias("ptr")).withColumn(

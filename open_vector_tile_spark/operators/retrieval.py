@@ -38,6 +38,8 @@ import re as _re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._pins import Pins
+
 TOKEN_SPLIT = r"\s+"
 
 
@@ -465,7 +467,7 @@ def textrank_keywords(
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if n_iter < 1 or k < 1:
         raise ValueError(f"n_iter and k must be >= 1, got {n_iter}, {k}")
-    from .graph import _fold_sum, _free_checkpoint
+    from .graph import _fold_sum
 
     toks = docs.select(
         F.col(id_col).alias("_id"),
@@ -481,61 +483,64 @@ def textrank_keywords(
         .filter(F.col("_term") != F.col("_nxt"))
         .select("_id", F.col("_term").alias("_src"), F.col("_nxt").alias("_dst"))
     )
-    edges = (
-        directed.union(
-            directed.select("_id", F.col("_dst").alias("_src"), F.col("_src").alias("_dst"))
+    with Pins() as pins:
+        edges = pins.pin(
+            directed.union(
+                directed.select("_id", F.col("_dst").alias("_src"), F.col("_src").alias("_dst"))
+            ).distinct()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = edges.groupBy("_id", "_src").agg(F.count(F.lit(1)).cast("long").alias("_deg"))
-    nodes = toks.select("_id", "_term").distinct()
-    state = (
-        nodes.join(
-            deg.select("_id", F.col("_src").alias("_term"), "_deg"),
-            ["_id", "_term"],
-            "left",
-        )
-        .select(
-            "_id",
-            "_term",
-            F.coalesce("_deg", F.lit(0)).cast("long").alias("_deg"),
-            F.lit(1.0).alias("_score"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    fold = _fold_sum if deterministic else F.sum
-    base = 1.0 - damping
-    per_round_checkpoint = n_iter > 6
-    for _ in range(n_iter):
-        contrib = edges.join(
-            state.select(
-                "_id", F.col("_term").alias("_src"), "_deg", "_score"
-            ).filter(F.col("_deg") > 0),
-            ["_id", "_src"],
-        ).select(
-            "_id",
-            F.col("_dst").alias("_term"),
-            (F.col("_score") / F.col("_deg").cast("double")).alias("_c"),
-        )
-        inflow = contrib.groupBy("_id", "_term").agg(fold(F.col("_c")).alias("_in"))
-        prev = state
-        state = (
-            state.select("_id", "_term", "_deg")
-            .join(inflow, ["_id", "_term"], "left")
-            .select(
+        deg = edges.groupBy("_id", "_src").agg(F.count(F.lit(1)).cast("long").alias("_deg"))
+        nodes = toks.select("_id", "_term").distinct()
+        state = pins.pin(
+            nodes.join(
+                deg.select("_id", F.col("_src").alias("_term"), "_deg"),
+                ["_id", "_term"],
+                "left",
+            ).select(
                 "_id",
                 "_term",
-                "_deg",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
-                ).alias("_score"),
+                F.coalesce("_deg", F.lit(0)).cast("long").alias("_deg"),
+                F.lit(1.0).alias("_score"),
             )
         )
+        fold = _fold_sum if deterministic else F.sum
+        base = 1.0 - damping
+        per_round_checkpoint = n_iter > 6
+        if not per_round_checkpoint:
+            # the unrolled rounds read the edges and the initial state
+            pins.keep(edges)
+            pins.keep(state)
+        for _ in range(n_iter):
+            contrib = edges.join(
+                state.select(
+                    "_id", F.col("_term").alias("_src"), "_deg", "_score"
+                ).filter(F.col("_deg") > 0),
+                ["_id", "_src"],
+            ).select(
+                "_id",
+                F.col("_dst").alias("_term"),
+                (F.col("_score") / F.col("_deg").cast("double")).alias("_c"),
+            )
+            inflow = contrib.groupBy("_id", "_term").agg(fold(F.col("_c")).alias("_in"))
+            prev = state
+            state = (
+                state.select("_id", "_term", "_deg")
+                .join(inflow, ["_id", "_term"], "left")
+                .select(
+                    "_id",
+                    "_term",
+                    "_deg",
+                    (
+                        F.lit(base)
+                        + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
+                    ).alias("_score"),
+                )
+            )
+            if per_round_checkpoint:
+                state = pins.pin(state)
+                pins.free(prev)
         if per_round_checkpoint:
-            state = state.localCheckpoint(eager=True)
-            _free_checkpoint(prev)
+            pins.keep(state)
     w = Window.partitionBy("_id").orderBy(F.col("_score").desc(), F.col("_term"))
     return (
         state.withColumn("rank", F.row_number().over(w))

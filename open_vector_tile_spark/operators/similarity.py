@@ -185,16 +185,6 @@ def _bucket_keys(V: np.ndarray, P: np.ndarray, n_tables: int, n_planes: int) -> 
     return (np.arange(n_tables, dtype=np.int64) << np.int64(n_planes)) | b
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Column-expression sign-bit sketch (SQL-only twin of _bucket_keys)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec, arr) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
-
-
 def cosine_topk_lsh(
     vectors: DataFrame,
     queries: DataFrame,

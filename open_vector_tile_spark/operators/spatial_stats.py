@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._pins import Pins
+
 __all__ = ["spatial_autocorrelation", "getis_ord_gi"]
 
 _OFFSETS = ((1, 0), (-1, 0), (0, 1), (0, -1))
@@ -58,55 +60,55 @@ def spatial_autocorrelation(
     exist or the variance is zero (constant surface) — both undefined.
     """
     spark = cells.sparkSession
-    # pin the (possibly expensive) upstream cell aggregation: two moment
-    # jobs read it, and the pairs plan probes it twice more
-    c = cells.select(
-        F.col(x_col).cast("long").alias("gx"),
-        F.col(y_col).cast("long").alias("gy"),
-        F.col(val_col).cast("long").alias("v"),
-    ).localCheckpoint(eager=True)
-    # product sums accumulate in DECIMAL so the exactness contract holds
-    # to web-scale magnitudes (int64 sums of int64 products would wrap
-    # before Python's bigints ever saw them; the oracle sums in HUGEINT)
-    vd = F.col("v").cast("decimal(18,0)")
-    base = c.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(vd).alias("sx"),
-        F.sum(vd * F.col("v")).alias("sxx"),
-    ).collect()[0]
-    nbrs = c.select(
-        "gx",
-        "gy",
-        F.col("v").alias("vi"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.col("gx") + dx).alias("nx"),
-                        (F.col("gy") + dy).alias("ny"),
-                    )
-                    for dx, dy in _OFFSETS
-                ]
+    with Pins() as pins:
+        # pin the (possibly expensive) upstream cell aggregation: two moment
+        # jobs read it, and the pairs plan probes it twice more
+        c = pins.pin(
+            cells.select(
+                F.col(x_col).cast("long").alias("gx"),
+                F.col(y_col).cast("long").alias("gy"),
+                F.col(val_col).cast("long").alias("v"),
             )
-        ).alias("nb"),
-    ).select("vi", F.col("nb.nx").alias("nx"), F.col("nb.ny").alias("ny"))
-    pairs = nbrs.join(
-        c.select(
-            F.col("gx").alias("nx"), F.col("gy").alias("ny"), F.col("v").alias("vj")
-        ),
-        ["nx", "ny"],
-    )
-    vid = F.col("vi").cast("decimal(18,0)")
-    dd = (F.col("vi") - F.col("vj")).cast("decimal(18,0)")
-    pm = pairs.agg(
-        F.count("*").cast("long").alias("w"),
-        F.sum(vid).alias("s1"),
-        F.sum(vid * F.col("vj")).alias("sxy"),
-        F.sum(dd * dd).alias("sdd"),
-    ).collect()[0]
-    from .graph import _free_checkpoint
-
-    _free_checkpoint(c)
+        )
+        # product sums accumulate in DECIMAL so the exactness contract holds
+        # to web-scale magnitudes (int64 sums of int64 products would wrap
+        # before Python's bigints ever saw them; the oracle sums in HUGEINT)
+        vd = F.col("v").cast("decimal(18,0)")
+        base = c.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(vd).alias("sx"),
+            F.sum(vd * F.col("v")).alias("sxx"),
+        ).collect()[0]
+        nbrs = c.select(
+            "gx",
+            "gy",
+            F.col("v").alias("vi"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            (F.col("gx") + dx).alias("nx"),
+                            (F.col("gy") + dy).alias("ny"),
+                        )
+                        for dx, dy in _OFFSETS
+                    ]
+                )
+            ).alias("nb"),
+        ).select("vi", F.col("nb.nx").alias("nx"), F.col("nb.ny").alias("ny"))
+        pairs = nbrs.join(
+            c.select(
+                F.col("gx").alias("nx"), F.col("gy").alias("ny"), F.col("v").alias("vj")
+            ),
+            ["nx", "ny"],
+        )
+        vid = F.col("vi").cast("decimal(18,0)")
+        dd = (F.col("vi") - F.col("vj")).cast("decimal(18,0)")
+        pm = pairs.agg(
+            F.count("*").cast("long").alias("w"),
+            F.sum(vid).alias("s1"),
+            F.sum(vid * F.col("vj")).alias("sxy"),
+            F.sum(dd * dd).alias("sdd"),
+        ).collect()[0]
     n, sx, sxx = int(base["n"]), int(base["sx"] or 0), int(base["sxx"] or 0)
     w = int(pm["w"])
     s1, sxy, sdd = int(pm["s1"] or 0), int(pm["sxy"] or 0), int(pm["sdd"] or 0)

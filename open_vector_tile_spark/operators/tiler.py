@@ -165,25 +165,6 @@ def _encode_rows(
     return tile_bytes, len(rows)
 
 
-def encode_tile_group(pdf: pd.DataFrame, specs: Optional[dict] = None) -> pd.DataFrame:
-    """All feature rows of one (zoom, tile_x, tile_y) -> one tile row."""
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            columns=["zoom", "tile_x", "tile_y", "tile", "n_features", "n_bytes"]
-        )
-    tile_bytes, n = _encode_rows(pdf.to_dict("records"), specs)
-    return pd.DataFrame(
-        {
-            "zoom": [int(pdf["zoom"].iloc[0])],
-            "tile_x": [int(pdf["tile_x"].iloc[0])],
-            "tile_y": [int(pdf["tile_y"].iloc[0])],
-            "tile": [tile_bytes],
-            "n_features": [n],
-            "n_bytes": [len(tile_bytes)],
-        }
-    )
-
-
 def _arrange_for_encode(features, partitions, key, sort_cols):
     """Shuffle features onto the tile key with a width that keeps the
     (Python-heavy) encode stage parallel.

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import geoparse
+from ..operators._pins import Pins
 from ..operators.resume import TileStore
 from ..operators.tiler import encode_tiles, points_to_features
 
@@ -53,23 +54,26 @@ def incremental_tile_run(
         id_col="_fid",
     )
     # materialize ONCE: isEmpty, the log append, and the affected-keys scan
-    # would otherwise each re-run the geoparse stage
-    feats = feats.localCheckpoint(eager=True)
-    if feats.isEmpty():
-        return None
-    store.append_features(feats, batch_id=batch_id)
-    spark = pages.sparkSession
-    affected = feats.select("zoom", "tile_x", "tile_y").distinct()
-    # prune the log read to the hash buckets the affected tiles live in —
-    # per-batch cost scales with the touched slice of history, not the
-    # whole append-only log
-    buckets = [
-        r[0] for r in affected.select(tile_bucket_col().alias("tb")).distinct().collect()
-    ]
-    all_feats = store.read_features(spark, buckets=buckets)
-    to_encode = all_feats.join(F.broadcast(affected), on=["zoom", "tile_x", "tile_y"], how="leftsemi")
-    tiles = encode_tiles(to_encode)
-    return store.commit(tiles)
+    # would otherwise each re-run the geoparse stage.  The commit writes
+    # every tile, so nothing reads the checkpoint after it: a long-running
+    # stream holds one batch's features, not O(batches)
+    with Pins() as pins:
+        feats = pins.pin(feats)
+        if feats.isEmpty():
+            return None
+        store.append_features(feats, batch_id=batch_id)
+        spark = pages.sparkSession
+        affected = feats.select("zoom", "tile_x", "tile_y").distinct()
+        # prune the log read to the hash buckets the affected tiles live in —
+        # per-batch cost scales with the touched slice of history, not the
+        # whole append-only log
+        buckets = [
+            r[0] for r in affected.select(tile_bucket_col().alias("tb")).distinct().collect()
+        ]
+        all_feats = store.read_features(spark, buckets=buckets)
+        to_encode = all_feats.join(F.broadcast(affected), on=["zoom", "tile_x", "tile_y"], how="leftsemi")
+        tiles = encode_tiles(to_encode)
+        return store.commit(tiles)
 
 
 def stream_pages_to_tiles(

@@ -145,16 +145,3 @@ def test_param_validation(spark):
         grid_cluster(df, "pid", cell_deg=0.0)
     with pytest.raises(ValueError, match="min_pts"):
         grid_cluster(df, "pid", min_pts=0)
-
-
-def test_releases_checkpoints(spark):
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    pts = [(i, 0.1 + (i % 9) * 0.1, 0.1) for i in range(30)]
-    df = spark.createDataFrame(pts, "pid long, lon double, lat double")
-    out = grid_cluster(df, "pid")
-    assert out.count() == 30
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    # labels (+ CC's internal return before coalesce) may stay pinned while
-    # the result is alive, but core/comp/per-round tables must be freed
-    assert after - before <= 2, f"leaked {after - before} pinned RDDs"

@@ -5,7 +5,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from open_vector_tile_spark.operators.graph import connected_components, dedup_components
 
@@ -124,22 +123,6 @@ def test_dedup_components_rejects_string_ids(spark):
         dedup_components(docs_i, pairs_s)
 
 
-def test_cc_releases_per_round_checkpoints(spark):
-    """A long chain runs several rounds; superseded per-round label
-    checkpoints must be unpersisted or executor storage grows O(rounds)."""
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 200)], "src long, dst long"
-    )
-    labels = connected_components(df)
-    assert labels.filter(F.col("comp") != 0).count() == 0
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    # only the RETURNED label table may remain pinned (plus whatever was
-    # pinned before the call) — no per-round accumulation, no edge table
-    assert after - before <= 1, f"leaked {after - before} pinned RDDs"
-
-
 # ---------------------------------------------------------------- pagerank
 
 
@@ -233,20 +216,6 @@ def test_pagerank_deterministic_mode_bit_stable(spark):
     c = {r["id"]: r["rank"] for r in pagerank(df).collect()}
     for x in a:
         assert a[x] == pytest.approx(c[x], abs=1e-12)
-
-
-def test_pagerank_releases_per_round_checkpoints(spark):
-    from open_vector_tile_spark.operators.graph import pagerank
-
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    df = spark.createDataFrame(
-        [(i, (i + 1) % 50) for i in range(50)], "src long, dst long"
-    )
-    out = pagerank(df, n_iter=6)
-    assert out.count() == 50
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    assert after - before <= 1, f"leaked {after - before} pinned RDDs"
 
 
 def test_pagerank_param_validation(spark):

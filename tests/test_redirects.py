@@ -5,7 +5,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from open_vector_tile_spark.operators.redirects import resolve_redirects
 
@@ -82,16 +81,6 @@ def test_randomized_vs_python_walk_and_determinism(spark):
     a = _got(resolve_redirects(df))
     b = _got(resolve_redirects(df.repartition(7)))
     assert a == b == _walk(mapping)
-
-
-def test_releases_per_round_checkpoints(spark):
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    chain = [(f"u{i}", f"u{i+1}") for i in range(60)]
-    out = resolve_redirects(_edges(spark, chain))
-    assert out.filter(F.col("is_cycle")).count() == 0
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    assert after - before <= 1, f"leaked {after - before} pinned RDDs"
 
 
 def test_max_hops_validation(spark):
