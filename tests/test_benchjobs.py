@@ -58,6 +58,28 @@ def test_pipeline_chain_stage_cutoffs(spark, pages):
     assert tiles.count() > 0
 
 
+def test_pipeline_chain_encodes_and_writes_one_wave(spark, pages, tmp_path):
+    """The flagship chain encodes one wave wide (total_cores tasks, not a
+    multiple), and its sink writes one shard per encode task at most."""
+    import os
+
+    from open_vector_tile_spark.benchjobs import (
+        build_pipeline_chain,
+        read_back_tile_count,
+        write_pipeline_tiles,
+    )
+    from open_vector_tile_spark.sources.tileset import OvtTilesetDataSource
+
+    spark.dataSource.register(OvtTilesetDataSource)
+    tiles = build_pipeline_chain(spark, pages, 4)
+    assert tiles.rdd.getNumPartitions() == 4
+    out = str(tmp_path / "tiles")
+    n = write_pipeline_tiles(tiles, out)
+    shards = [f for f in os.listdir(out) if f.endswith(".ovtshard")]
+    assert 1 <= len(shards) <= 4
+    assert read_back_tile_count(spark, out) == tiles.count() == n
+
+
 def test_pipeline_chain_unknown_stage_raises(spark, pages):
     from open_vector_tile_spark.benchjobs import build_pipeline_chain
 

@@ -1,16 +1,26 @@
 """DataSourceV2 tileset-directory source/sink (sources/tileset.py).
 
-Reads the reference's committed benchmark tile directories
-(/root/reference/benchmarks/data/*/mvt — z_x_y.{mvt,pbf} files), asserting
+Reads tile directories (z_x_y.{mvt,ovt,pbf} files), asserting
 filename-level filter pushdown, partition-parallel reads, blob fidelity,
-and the write->read round trip."""
+and the write->read round trip.  Every reader test runs on a loose tileset
+the engine writes itself (MVT and OVT tiles, z0-3); the reference's
+committed benchmark tiles (/root/reference/benchmarks/data/*/mvt) are an
+extra tier that skips only when that directory is absent.  The writer
+semantics run on both entry points of the one writer:
+``.write.format("ovt_tileset")`` and ``write_tileset``."""
 
 import os
+from typing import NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
 
 REF_MVT = "/root/reference/benchmarks/data/omt/mvt"
+
+
+class Tileset(NamedTuple):
+    path: str
+    n_tiles: int  # tiles the directory lists
 
 
 @pytest.fixture(scope="module")
@@ -19,6 +29,52 @@ def registered(spark):
 
     spark.dataSource.register(OvtTilesetDataSource)
     return spark
+
+
+@pytest.fixture(scope="module")
+def engine_tileset(registered, tmp_path_factory):
+    """A loose tileset written through the ``files`` layout: the same 300
+    points encoded at z0-3, MVT for the western half of each zoom's tile
+    columns (z0's single tile included) and OVT for the eastern half, so
+    every tile key appears once and zoom 2 holds both formats."""
+    from functools import reduce
+
+    from open_vector_tile_spark.operators import encode_tiles, points_to_features
+    from open_vector_tile_spark.sources.tileset import write_tileset
+
+    pts = registered.range(300).select(
+        F.col("id").alias("doc_id"),
+        ((F.col("id") * 37 % 3600) / 10.0 - 180.0).alias("lon"),
+        ((F.col("id") * 53 % 1600) / 10.0 - 80.0).alias("lat"),
+        F.concat(F.lit("p"), F.col("id").cast("string")).alias("name"),
+    )
+    feats = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            points_to_features(
+                pts, zoom=z, layer="pois", extent=4096, id_col="doc_id", props_cols=["name"]
+            )
+            for z in range(4)
+        ],
+    )
+    west = F.col("tile_x") * 2 < F.pow(F.lit(2), F.col("zoom"))
+    root = str(tmp_path_factory.mktemp("engine_tileset"))
+    n = 0
+    for fmt, half in (("mvt", west), ("ovt", ~west)):
+        tiles = encode_tiles(feats, tile_format=fmt).filter(half)
+        n += write_tileset(tiles, root, layout="files", suffix=fmt)
+    assert len(_expected_files(root)) == n > 0
+    assert {fn.rsplit(".", 1)[1] for fn in os.listdir(root)} == {"mvt", "ovt"}
+    return Tileset(root, n)
+
+
+@pytest.fixture(params=["engine", "reference"])
+def tileset(request):
+    if request.param == "reference":
+        if not os.path.isdir(REF_MVT):
+            pytest.skip(f"reference tileset {REF_MVT} is absent")
+        return Tileset(REF_MVT, 429)
+    return request.getfixturevalue("engine_tileset")
 
 
 def _expected_files(root):
@@ -33,19 +89,19 @@ def _expected_files(root):
     return out
 
 
-def test_tileset_scan_lists_all_tiles(registered):
-    df = registered.read.format("ovt_tileset").option("path", REF_MVT).load()
+def test_tileset_scan_lists_all_tiles(registered, tileset):
+    df = registered.read.format("ovt_tileset").option("path", tileset.path).load()
     got = {
         (r["zoom"], r["tile_x"], r["tile_y"]): r["n_bytes"]
         for r in df.select("zoom", "tile_x", "tile_y", "n_bytes").collect()
     }
-    assert got == _expected_files(REF_MVT)
+    assert got == _expected_files(tileset.path)
 
 
-def test_tileset_blob_bytes_match_disk(registered):
+def test_tileset_blob_bytes_match_disk(registered, tileset):
     df = (
         registered.read.format("ovt_tileset")
-        .option("path", REF_MVT)
+        .option("path", tileset.path)
         .load()
         .filter(F.col("zoom") == 2)
     )
@@ -56,16 +112,16 @@ def test_tileset_blob_bytes_match_disk(registered):
             assert bytes(r["tile"]) == fh.read()
 
 
-def test_tileset_filter_pushdown_prunes_files(registered):
+def test_tileset_filter_pushdown_prunes_files(registered, tileset):
     """The pushed zoom filter must shrink the PARTITION file lists (pruning
     happens in partitions(), before any read), not just the output rows."""
     from open_vector_tile_spark.sources.tileset import OvtTilesetReader
     from pyspark.sql.datasource import EqualTo
 
-    reader = OvtTilesetReader({"path": REF_MVT, "num_partitions": "4"})
+    reader = OvtTilesetReader({"path": tileset.path, "num_partitions": "4"})
     all_files = sum(len(p.files) for p in reader.partitions())
 
-    reader2 = OvtTilesetReader({"path": REF_MVT, "num_partitions": "4"})
+    reader2 = OvtTilesetReader({"path": tileset.path, "num_partitions": "4"})
     rest = list(reader2.pushFilters([EqualTo(("zoom",), 2)]))
     assert rest == []  # fully absorbed
     pruned = sum(len(p.files) for p in reader2.partitions())
@@ -75,7 +131,7 @@ def test_tileset_filter_pushdown_prunes_files(registered):
     # end-to-end: the DataFrame filter produces exactly the pruned files
     df = (
         registered.read.format("ovt_tileset")
-        .option("path", REF_MVT)
+        .option("path", tileset.path)
         .load()
         .filter(F.col("zoom") == 2)
     )
@@ -94,10 +150,10 @@ def test_tileset_unsupported_filter_returned(registered):
     assert len(reader.pushed) == 1
 
 
-def test_tileset_skip_blob_stats_only(registered):
+def test_tileset_skip_blob_stats_only(registered, tileset):
     df = (
         registered.read.format("ovt_tileset")
-        .option("path", REF_MVT)
+        .option("path", tileset.path)
         .option("skip_blob", "true")
         .load()
     )
@@ -105,14 +161,14 @@ def test_tileset_skip_blob_stats_only(registered):
     assert r["n_bytes"] > 0 and r["tile"] is None
 
 
-def test_read_tileset_decodes_reference_tiles(registered):
+def test_read_tileset_decodes_tiles(registered, tileset):
     """read_tileset: scan + pre-decode pushdown filter + blob decode in one
-    call, against the reference's own committed MVT tiles."""
+    call, over MVT and OVT tile files."""
     from pyspark.sql import functions as F
 
     from open_vector_tile_spark.operators import read_tileset
 
-    feats = read_tileset(registered, REF_MVT, where=F.col("zoom") == 2)
+    feats = read_tileset(registered, tileset.path, where=F.col("zoom") == 2)
     pdf = feats.select("zoom", "tile_x", "tile_y", "layer", "ftype").toPandas()
     assert len(pdf) > 0
     assert (pdf["zoom"] == 2).all()
@@ -146,17 +202,17 @@ def test_tileset_write_read_roundtrip(registered, tmp_path):
     assert decode_tiles(back.select("zoom", "tile_x", "tile_y", "tile")).count() == 200
 
 
-def test_shard_layout_roundtrip_and_pushdown(registered, tmp_path):
-    """Shard container: compact the reference tileset (445 loose files) into a
-    few packed shards, read back byte-identical rows, and verify pushdown
-    prunes at the ENTRY level inside shards."""
+def test_shard_layout_roundtrip_and_pushdown(registered, tileset, tmp_path):
+    """Shard container: compact a loose tileset into a few packed shards,
+    read back byte-identical rows, and verify pushdown prunes at the ENTRY
+    level inside shards."""
     from open_vector_tile_spark.sources.tileset import (
         OvtTilesetReader,
         read_shard_index,
     )
     from pyspark.sql.datasource import EqualTo
 
-    loose = registered.read.format("ovt_tileset").option("path", REF_MVT).load()
+    loose = registered.read.format("ovt_tileset").option("path", tileset.path).load()
     want = {
         (r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"])
         for r in loose.collect()
@@ -203,12 +259,12 @@ def test_shard_bytes_deterministic(tmp_path):
     assert open(p1, "rb").read() == open(p2, "rb").read()
 
 
-def test_compact_tileset_one_liner(registered, tmp_path):
+def test_compact_tileset_one_liner(registered, tileset, tmp_path):
     from open_vector_tile_spark.sources.tileset import compact_tileset
 
     dst = str(tmp_path / "compacted")
-    n = compact_tileset(registered, REF_MVT, dst, shards=2)
-    assert n == 429
+    n = compact_tileset(registered, tileset.path, dst, shards=2)
+    assert n == tileset.n_tiles
     back = registered.read.format("ovt_tileset").option("path", dst).load()
     assert back.count() == n
     shard_files = [f for f in os.listdir(dst) if f.endswith(".ovtshard")]
@@ -227,19 +283,38 @@ def _tiny_tiles(spark, n, start=0):
     return encode_tiles(feats).select("zoom", "tile_x", "tile_y", "tile")
 
 
-def test_writer_overwrite_clears_previous_and_leaves_no_temps(registered, tmp_path):
-    """mode('overwrite') must replace the tileset, not silently append, and
-    the two-phase commit must leave zero temp files behind."""
+def _datasource_write(tiles, path, layout="files", overwrite=False):
+    (
+        tiles.write.format("ovt_tileset")
+        .option("path", path)
+        .option("layout", layout)
+        .mode("overwrite" if overwrite else "append")
+        .save()
+    )
+
+
+def _function_write(tiles, path, layout="files", overwrite=False):
+    from open_vector_tile_spark.sources.tileset import write_tileset
+
+    write_tileset(tiles, path, layout=layout, overwrite=overwrite)
+
+
+# the writer's semantics hold for both of its drivers
+both_entry_points = pytest.mark.parametrize(
+    "write", [_datasource_write, _function_write], ids=["datasource", "write_tileset"]
+)
+
+
+@both_entry_points
+def test_writer_overwrite_clears_previous_and_leaves_no_temps(registered, tmp_path, write):
+    """Overwrite must replace the tileset, not silently append, and the
+    two-phase commit must leave zero temp files behind."""
     out = str(tmp_path / "ow")
-    _tiny_tiles(registered, 200).write.format("ovt_tileset").option("path", out).mode(
-        "append"
-    ).save()
+    write(_tiny_tiles(registered, 200), out)
     first = set(os.listdir(out))
     assert first
     # second job: different (smaller) tile set, overwrite
-    _tiny_tiles(registered, 30).write.format("ovt_tileset").option("path", out).mode(
-        "overwrite"
-    ).save()
+    write(_tiny_tiles(registered, 30), out, overwrite=True)
     back = registered.read.format("ovt_tileset").option("path", out).load()
     want = {
         (r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"])
@@ -252,16 +327,15 @@ def test_writer_overwrite_clears_previous_and_leaves_no_temps(registered, tmp_pa
     assert not [f for f in os.listdir(out) if f.startswith(".tmp-")]
 
 
-def test_writer_shard_append_jobs_do_not_clobber(registered, tmp_path):
+@both_entry_points
+def test_writer_shard_append_jobs_do_not_clobber(registered, tmp_path, write):
     """Two append jobs keep both jobs' shards (job-tagged final names), and
     shard names are deterministic per partition within a job."""
     from open_vector_tile_spark.sources.tileset import read_shard_index
 
     out = str(tmp_path / "sh")
     for start in (0, 1000):
-        _tiny_tiles(registered, 50, start=start).repartition(2).write.format(
-            "ovt_tileset"
-        ).option("path", out).option("layout", "shard").mode("append").save()
+        write(_tiny_tiles(registered, 50, start=start).repartition(2), out, layout="shard")
     shards = [f for f in os.listdir(out) if f.endswith(".ovtshard")]
     assert len(shards) in (3, 4)  # 2 jobs x <=2 non-empty partitions, no clobber
     assert not [f for f in os.listdir(out) if f.startswith(".tmp-")]
@@ -270,7 +344,8 @@ def test_writer_shard_append_jobs_do_not_clobber(registered, tmp_path):
     assert back.count() == n
 
 
-def test_writer_abort_leaves_no_partial_output(registered, tmp_path):
+@both_entry_points
+def test_writer_abort_leaves_no_partial_output(registered, tmp_path, write):
     """A failing write job must leave the destination with no final tile
     files and no temps: succeeding tasks' temps are swept by abort(), and
     nothing is ever renamed to a final name."""
@@ -290,18 +365,19 @@ def test_writer_abort_leaves_no_partial_output(registered, tmp_path):
         .alias("tile"),
     )
     with pytest.raises(Exception):
-        bad.write.format("ovt_tileset").option("path", out).mode("append").save()
+        write(bad, out)
     leftovers = os.listdir(out) if os.path.isdir(out) else []
     assert leftovers == [], leftovers
 
 
-def test_reader_ignores_orphaned_temps(registered, tmp_path):
+@both_entry_points
+def test_reader_ignores_orphaned_temps(registered, tmp_path, write):
     """A torn/orphaned '.tmp-*' file (driver killed before abort could
     sweep) must be invisible to readers — both a garbage temp shard and a
     temp loose tile."""
     out = str(tmp_path / "ts")
     tiles = _tiny_tiles(registered, 10)
-    tiles.write.format("ovt_tileset").option("path", out).mode("append").save()
+    write(tiles, out)
     n = spark_read_count(registered, out)
     # drop garbage temps that would crash read_shard_index / duplicate tiles
     with open(os.path.join(out, ".tmp-deadbeef-3-99.ovtshard"), "wb") as fh:
@@ -315,3 +391,34 @@ def spark_read_count(spark, path):
     return (
         spark.read.format("ovt_tileset").option("path", path).load().count()
     )
+
+
+@pytest.mark.parametrize("layout", ["shard", "files"])
+def test_write_tileset_bytes_match_datasource(registered, tmp_path, layout):
+    """The same tiles frame with the same partitioning gives the same files,
+    byte for byte, through either driver of the writer (shard names differ
+    only in the per-job tag)."""
+    tiles = _tiny_tiles(registered, 200).repartition(3, "tile_x")
+
+    def written(write):
+        out = str(tmp_path / write.__name__)
+        write(tiles, out, layout=layout)
+        files = {}
+        for fn in os.listdir(out):
+            # part-{job}-{partition}.ovtshard: key shards by partition id
+            key = fn.rsplit("-", 1)[-1] if fn.startswith("part-") else fn
+            with open(os.path.join(out, fn), "rb") as fh:
+                files[key] = fh.read()
+        back = registered.read.format("ovt_tileset").option("path", out).load()
+        entries = sorted(
+            (r["zoom"], r["tile_x"], r["tile_y"], bytes(r["tile"])) for r in back.collect()
+        )
+        return files, entries
+
+    ds_files, ds_entries = written(_datasource_write)
+    fn_files, fn_entries = written(_function_write)
+    assert ds_files and ds_files == fn_files
+    if layout == "shard":
+        assert 1 <= len(fn_files) <= 3
+    assert ds_entries == fn_entries
+    assert len(fn_entries) == tiles.count()
