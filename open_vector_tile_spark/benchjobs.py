@@ -93,11 +93,8 @@ def build_pipeline_chain(
     default is the full tiles frame (callers add the tileset write, which
     is a sink choice, not chain logic).
 
-    The encode runs one wave wide (``total_cores`` tasks), the default rule
-    of ``tiler._arrange_for_encode``: each task pays a Python runner start
-    (~0.14 s of CPU on a 4-core VM), while the ~5k features that 160k
-    pages yield take ~0.05 s of encoder work in total, so more tasks than
-    cores only add start-ups.
+    The encode runs one wave wide (``total_cores`` tasks); see
+    ``tiler._arrange_for_encode`` for why widths follow rows.
 
     nearest-POI is a map-only pandas-UDF column by design: the earlier
     knn_broadcast + url equi-join formulation was a DAG diamond (the
@@ -136,18 +133,23 @@ def build_pipeline_chain(
     return encode_point_tiles(feats, meta, partitions=total_cores)
 
 
-def write_pipeline_tiles(tiles: DataFrame, out_dir: str) -> int:
-    """The flagship sink discipline, single-sourced with the chain: an
-    appending shard-layout tileset write of the tile columns, one shard per
-    encode task, committed on the driver by ``sources.tileset.write_tileset``
-    (the data source's own writer, without its planner round trips).
-    Returns the tile count.  bench.py's pipeline scaling path and
-    tools/submit_scaling.py's pipeline measure both call THIS (their numbers
-    are compared in BENCH.md, so the sink half must not drift any more than
-    the chain half)."""
-    from .sources.tileset import write_tileset
+PIPELINE_SINK_COLS = ("zoom", "tile_x", "tile_y", "tile")
 
-    return write_tileset(tiles, out_dir)
+
+def write_pipeline_tiles(tiles: DataFrame, out_dir: str) -> None:
+    """The flagship sink discipline, single-sourced with the chain:
+    shard-layout tileset write of exactly the tile columns.  bench.py's
+    pipeline scaling path and tools/submit_scaling.py's pipeline measure
+    both call THIS (their numbers are compared in BENCH.md, so the sink
+    half must not drift any more than the chain half)."""
+    (
+        tiles.select(*PIPELINE_SINK_COLS)
+        .write.format("ovt_tileset")
+        .option("path", out_dir)
+        .option("layout", "shard")
+        .mode("append")
+        .save()
+    )
 
 
 def read_back_tile_count(spark: SparkSession, out_dir: str) -> int:

@@ -28,14 +28,6 @@ problem at web scale.  Shards read back through the same source with
 entry-level pushdown (matching blobs are seek-read; non-matching shards
 cost one header read).  Compaction is just read-loose → write-shard.
 
-One writer, two drivers: :class:`OvtTilesetWriter` owns the task-side
-write and the driver-side commit/abort.  ``.write.format("ovt_tileset")``
-drives it through Spark's data-source write; :func:`write_tileset` drives
-it from a ``mapInPandas`` plus a driver-side commit, which skips the
-data-source planner's Python round trips (the flagship chain's sink and
-:func:`compact_tileset` use it).  Both give the same files, byte for byte,
-for the same partitioning.
-
 Register per session::
 
     from open_vector_tile_spark.sources.tileset import OvtTilesetDataSource
@@ -388,50 +380,6 @@ class OvtTilesetWriter(DataSourceWriter):
         self._sweep_temps(settle_secs=10.0)
 
 
-def write_tileset(
-    tiles, path: str, layout: str = "shard", overwrite: bool = False, suffix: str = "ovt"
-) -> int:
-    """Write (zoom, tile_x, tile_y, tile) rows with :class:`OvtTilesetWriter`,
-    committed by this driver; returns the number of tiles written.
-
-    The same writer object ``.write.format("ovt_tileset")`` builds: each
-    task runs ``writer.write`` inside one ``mapInPandas`` and returns its
-    ``_WroteFiles`` message as a row, and the driver calls ``commit`` on the
-    collected messages, or ``abort`` (then re-raises) on any failure.  Temp
-    and attempt tags, the overwrite clear and both sweeps are therefore the
-    writer's own.  What this skips is the data-source planner's Python
-    round trips for create, writer and commit: ~0.4 s of a flagship chain
-    pass writing 4,433 tiles on a 4-core VM.  One task writes one shard, so
-    the frame's partitioning chooses the shard count, as it does for the
-    data source.
-    """
-    import pandas as pd
-
-    writer = OvtTilesetWriter(
-        {"path": path, "layout": layout, "suffix": suffix}, overwrite=overwrite
-    )
-
-    def write_partition(batches):
-        msg = writer.write(r for pdf in batches for r in pdf.to_dict("records"))
-        yield pd.DataFrame(
-            {"n_tiles": [msg.count], "renames": [[list(p) for p in msg.renames]]}
-        )
-
-    messages = []
-    try:
-        rows = (
-            tiles.select("zoom", "tile_x", "tile_y", "tile")
-            .mapInPandas(write_partition, "n_tiles long, renames array<array<string>>")
-            .collect()
-        )
-        messages = [_WroteFiles(r["n_tiles"], r["renames"]) for r in rows]
-        writer.commit(messages)
-    except BaseException:
-        writer.abort(messages)
-        raise
-    return sum(m.count for m in messages)
-
-
 def compact_tileset(spark, src: str, dst: str, shards: int = 16) -> int:
     """Loose tileset directory -> ``shards`` packed ``.ovtshard`` files.
     Returns the tile count.  (Read side registered per session; requires
@@ -439,7 +387,24 @@ def compact_tileset(spark, src: str, dst: str, shards: int = 16) -> int:
     it.)"""
     spark.dataSource.register(OvtTilesetDataSource)
     df = spark.read.format("ovt_tileset").option("path", src).load()
-    return write_tileset(df.repartition(shards), dst)
+    (
+        df.select("zoom", "tile_x", "tile_y", "tile")
+        .repartition(shards)
+        .write.format("ovt_tileset")
+        .option("path", dst)
+        .option("layout", "shard")
+        .mode("append")
+        .save()
+    )
+    # count via a skip_blob scan: re-running the full reader would re-read
+    # every tile's BYTES a second time just to count rows
+    meta = (
+        spark.read.format("ovt_tileset")
+        .option("path", src)
+        .option("skip_blob", "true")
+        .load()
+    )
+    return meta.count()
 
 
 class OvtTilesetDataSource(DataSource):

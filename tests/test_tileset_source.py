@@ -4,10 +4,8 @@ Reads tile directories (z_x_y.{mvt,ovt,pbf} files), asserting
 filename-level filter pushdown, partition-parallel reads, blob fidelity,
 and the write->read round trip.  Every reader test runs on a loose tileset
 the engine writes itself (MVT and OVT tiles, z0-3); the reference's
-committed benchmark tiles (/root/reference/benchmarks/data/*/mvt) are an
-extra tier that skips only when that directory is absent.  The writer
-semantics run on both entry points of the one writer:
-``.write.format("ovt_tileset")`` and ``write_tileset``."""
+committed benchmark tiles (``REF_MVT``) are an extra tier that skips only
+when that directory is absent."""
 
 import os
 from typing import NamedTuple
@@ -40,7 +38,6 @@ def engine_tileset(registered, tmp_path_factory):
     from functools import reduce
 
     from open_vector_tile_spark.operators import encode_tiles, points_to_features
-    from open_vector_tile_spark.sources.tileset import write_tileset
 
     pts = registered.range(300).select(
         F.col("id").alias("doc_id"),
@@ -59,11 +56,19 @@ def engine_tileset(registered, tmp_path_factory):
     )
     west = F.col("tile_x") * 2 < F.pow(F.lit(2), F.col("zoom"))
     root = str(tmp_path_factory.mktemp("engine_tileset"))
-    n = 0
     for fmt, half in (("mvt", west), ("ovt", ~west)):
-        tiles = encode_tiles(feats, tile_format=fmt).filter(half)
-        n += write_tileset(tiles, root, layout="files", suffix=fmt)
-    assert len(_expected_files(root)) == n > 0
+        (
+            encode_tiles(feats, tile_format=fmt)
+            .filter(half)
+            .select("zoom", "tile_x", "tile_y", "tile")
+            .write.format("ovt_tileset")
+            .option("path", root)
+            .option("suffix", fmt)
+            .mode("append")
+            .save()
+        )
+    n = len(_expected_files(root))
+    assert n > 0 and len(os.listdir(root)) == n
     assert {fn.rsplit(".", 1)[1] for fn in os.listdir(root)} == {"mvt", "ovt"}
     return Tileset(root, n)
 
@@ -283,38 +288,19 @@ def _tiny_tiles(spark, n, start=0):
     return encode_tiles(feats).select("zoom", "tile_x", "tile_y", "tile")
 
 
-def _datasource_write(tiles, path, layout="files", overwrite=False):
-    (
-        tiles.write.format("ovt_tileset")
-        .option("path", path)
-        .option("layout", layout)
-        .mode("overwrite" if overwrite else "append")
-        .save()
-    )
-
-
-def _function_write(tiles, path, layout="files", overwrite=False):
-    from open_vector_tile_spark.sources.tileset import write_tileset
-
-    write_tileset(tiles, path, layout=layout, overwrite=overwrite)
-
-
-# the writer's semantics hold for both of its drivers
-both_entry_points = pytest.mark.parametrize(
-    "write", [_datasource_write, _function_write], ids=["datasource", "write_tileset"]
-)
-
-
-@both_entry_points
-def test_writer_overwrite_clears_previous_and_leaves_no_temps(registered, tmp_path, write):
-    """Overwrite must replace the tileset, not silently append, and the
-    two-phase commit must leave zero temp files behind."""
+def test_writer_overwrite_clears_previous_and_leaves_no_temps(registered, tmp_path):
+    """mode('overwrite') must replace the tileset, not silently append, and
+    the two-phase commit must leave zero temp files behind."""
     out = str(tmp_path / "ow")
-    write(_tiny_tiles(registered, 200), out)
+    _tiny_tiles(registered, 200).write.format("ovt_tileset").option("path", out).mode(
+        "append"
+    ).save()
     first = set(os.listdir(out))
     assert first
     # second job: different (smaller) tile set, overwrite
-    write(_tiny_tiles(registered, 30), out, overwrite=True)
+    _tiny_tiles(registered, 30).write.format("ovt_tileset").option("path", out).mode(
+        "overwrite"
+    ).save()
     back = registered.read.format("ovt_tileset").option("path", out).load()
     want = {
         (r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"])
@@ -327,15 +313,16 @@ def test_writer_overwrite_clears_previous_and_leaves_no_temps(registered, tmp_pa
     assert not [f for f in os.listdir(out) if f.startswith(".tmp-")]
 
 
-@both_entry_points
-def test_writer_shard_append_jobs_do_not_clobber(registered, tmp_path, write):
+def test_writer_shard_append_jobs_do_not_clobber(registered, tmp_path):
     """Two append jobs keep both jobs' shards (job-tagged final names), and
     shard names are deterministic per partition within a job."""
     from open_vector_tile_spark.sources.tileset import read_shard_index
 
     out = str(tmp_path / "sh")
     for start in (0, 1000):
-        write(_tiny_tiles(registered, 50, start=start).repartition(2), out, layout="shard")
+        _tiny_tiles(registered, 50, start=start).repartition(2).write.format(
+            "ovt_tileset"
+        ).option("path", out).option("layout", "shard").mode("append").save()
     shards = [f for f in os.listdir(out) if f.endswith(".ovtshard")]
     assert len(shards) in (3, 4)  # 2 jobs x <=2 non-empty partitions, no clobber
     assert not [f for f in os.listdir(out) if f.startswith(".tmp-")]
@@ -344,8 +331,7 @@ def test_writer_shard_append_jobs_do_not_clobber(registered, tmp_path, write):
     assert back.count() == n
 
 
-@both_entry_points
-def test_writer_abort_leaves_no_partial_output(registered, tmp_path, write):
+def test_writer_abort_leaves_no_partial_output(registered, tmp_path):
     """A failing write job must leave the destination with no final tile
     files and no temps: succeeding tasks' temps are swept by abort(), and
     nothing is ever renamed to a final name."""
@@ -365,19 +351,18 @@ def test_writer_abort_leaves_no_partial_output(registered, tmp_path, write):
         .alias("tile"),
     )
     with pytest.raises(Exception):
-        write(bad, out)
+        bad.write.format("ovt_tileset").option("path", out).mode("append").save()
     leftovers = os.listdir(out) if os.path.isdir(out) else []
     assert leftovers == [], leftovers
 
 
-@both_entry_points
-def test_reader_ignores_orphaned_temps(registered, tmp_path, write):
+def test_reader_ignores_orphaned_temps(registered, tmp_path):
     """A torn/orphaned '.tmp-*' file (driver killed before abort could
     sweep) must be invisible to readers — both a garbage temp shard and a
     temp loose tile."""
     out = str(tmp_path / "ts")
     tiles = _tiny_tiles(registered, 10)
-    write(tiles, out)
+    tiles.write.format("ovt_tileset").option("path", out).mode("append").save()
     n = spark_read_count(registered, out)
     # drop garbage temps that would crash read_shard_index / duplicate tiles
     with open(os.path.join(out, ".tmp-deadbeef-3-99.ovtshard"), "wb") as fh:
@@ -391,34 +376,3 @@ def spark_read_count(spark, path):
     return (
         spark.read.format("ovt_tileset").option("path", path).load().count()
     )
-
-
-@pytest.mark.parametrize("layout", ["shard", "files"])
-def test_write_tileset_bytes_match_datasource(registered, tmp_path, layout):
-    """The same tiles frame with the same partitioning gives the same files,
-    byte for byte, through either driver of the writer (shard names differ
-    only in the per-job tag)."""
-    tiles = _tiny_tiles(registered, 200).repartition(3, "tile_x")
-
-    def written(write):
-        out = str(tmp_path / write.__name__)
-        write(tiles, out, layout=layout)
-        files = {}
-        for fn in os.listdir(out):
-            # part-{job}-{partition}.ovtshard: key shards by partition id
-            key = fn.rsplit("-", 1)[-1] if fn.startswith("part-") else fn
-            with open(os.path.join(out, fn), "rb") as fh:
-                files[key] = fh.read()
-        back = registered.read.format("ovt_tileset").option("path", out).load()
-        entries = sorted(
-            (r["zoom"], r["tile_x"], r["tile_y"], bytes(r["tile"])) for r in back.collect()
-        )
-        return files, entries
-
-    ds_files, ds_entries = written(_datasource_write)
-    fn_files, fn_entries = written(_function_write)
-    assert ds_files and ds_files == fn_files
-    if layout == "shard":
-        assert 1 <= len(fn_files) <= 3
-    assert ds_entries == fn_entries
-    assert len(fn_entries) == tiles.count()
