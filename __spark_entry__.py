@@ -20,6 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_vector_tile_spark.operators._parallel import fan_out
+
 ZOOM = 4
 N_TILES = 1 << ZOOM
 
@@ -437,14 +439,12 @@ def _supplier_anchors(sup: DataFrame) -> DataFrame:
 def _q_knn_haversine(spark: SparkSession, sf: str) -> DataFrame:
     """J3/O4: k=3 nearest suppliers (as anchors) per derived doc point by
     exact haversine + rank window."""
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
-
     # the crossJoin fan-out (docs x anchors) and the partial rank-window
     # prune both run in the docs scan stage, so a 1-task single-row-group
     # scan serialized the whole 5M-row build (measured 3.98 -> 1.16 s at
     # sf0.1).  Per-row haversine + (dist, poi_id)-tie-broken rank +
     # unique-key orderBy: partitioning-proof.
-    docs = _ensure_parallelism(
+    docs = fan_out(
         _doc_points(_load(spark, sf, "documents")).select("doc_id", "lon", "lat")
     )
     anchors = _supplier_anchors(_load(spark, sf, "supplier"))
@@ -738,13 +738,12 @@ def _q_knn_cell_ring(spark: SparkSession, sf: str) -> DataFrame:
     """J3 scale path: iterative cell-ring expansion with the exact
     termination bound — must bit-match the brute-force kNN oracle (same SQL
     as knn_haversine), proving the ring search is exact, not approximate."""
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
     from open_vector_tile_spark.operators.knn import knn_cell_ring
 
     # ring expansion rounds all re-derive from the docs scan: fan the
     # 1-task single-row-group scan out first (measured 4.66 -> 3.59 s at
     # sf0.1; the exact ring algorithm is per-doc, partitioning-proof)
-    docs = _ensure_parallelism(
+    docs = fan_out(
         _doc_points(_load(spark, sf, "documents")).select("doc_id", "lon", "lat")
     )
     sup = _load(spark, sf, "supplier")
@@ -945,13 +944,12 @@ def _q_corpus_filter(spark: SparkSession, sf: str) -> DataFrame:
     oracle-checked primitives composed in one plan (single scan, no shuffle
     until the sort)."""
     from open_vector_tile_spark.functions.text import lang_id
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # the quality/lang derivations are per-row JVM regex over full text in
     # the scan stage: fan the single-row-group scan out first (measured
     # 1.97 -> 1.29 s at sf0.1; per-row derivation + unique-key orderBy,
     # partitioning-proof)
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     t = F.col("text")
     n = F.length(t)
     alpha = F.length(F.regexp_replace(t, "[^a-zA-Z0-9]", ""))
@@ -1753,12 +1751,11 @@ def _q_gopher_filter(spark: SparkSession, sf: str) -> DataFrame:
     every metric with DuckDB list functions.  Thresholds (30..80 words,
     >=1 stopword) chosen so the synthetic corpus splits non-trivially."""
     from open_vector_tile_spark.functions.text import gopher_metrics
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # per-row JVM HOF metrics in the scan stage: fan the single-row-group
     # scan out first (measured 1.97 -> 0.74 s at sf0.1; per-row derivation
     # + unique-key orderBy, partitioning-proof)
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     m = gopher_metrics(F.col("text"), min_words=30, max_words=80, min_stop_hits=1)
     return docs.select(
         "doc_id",
@@ -1778,12 +1775,11 @@ def _q_pii_redact(spark: SparkSession, sf: str) -> DataFrame:
     oracle replays the identical pattern chain in DuckDB RE2 — replacement
     AND counts must match byte-for-byte."""
     from open_vector_tile_spark.functions.text import pii_counts, redact_pii
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # the redact regexp chain is per-row JVM work in the scan stage: fan
     # out first (measured 1.28 -> 0.70 s at sf0.1; per-row + unique-key
     # orderBy, partitioning-proof)
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     d = F.col("doc_id")
     synth = F.concat(
         F.col("text"),
@@ -2084,13 +2080,12 @@ def _q_kmv_distinct(spark: SparkSession, sf: str) -> DataFrame:
     48-bit hashes.  Two-level min-k plan (no unbounded per-group state);
     all-integer estimator, so the DuckDB twin matches to the bit."""
     from open_vector_tile_spark.functions.sketch import kmv_distinct
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # the md5-per-token hashing runs in the scan stage: fan the 1-task
     # single-row-group scan out first (measured 1.11 -> 0.59 s at sf0.1;
     # the min-k sketch is order-insensitive by construction, so
     # partitioning cannot change the estimate)
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     tokens = docs.select(
         "lang",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
@@ -2277,12 +2272,11 @@ def _q_clip_polygon_rect(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # per-row Python clip kernel in the scan stage: fan the 1-task
     # single-row-group scan out first (measured 1.80 -> 0.75 s at sf0.1;
     # per-row kernel, partitioning-proof)
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     src = docs.select(
         "doc_id",
         ((F.col("doc_id") * 13 % 50) / 10.0).alias("x_lo"),
@@ -2504,14 +2498,13 @@ def _q_tfidf_vectors(spark: SparkSession, sf: str) -> DataFrame:
     bucketing + smooth idf + sorted-fold L2 norm — every weight
     reproduces bit-for-bit in the DuckDB twin (rounded to 6)."""
     from open_vector_tile_spark.operators.retrieval import tfidf_hashed
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # fan the narrow scan before the tokenize+explode (measured 2.35 ->
     # ~1.7 s at sf0.1; int tf counts + sorted-fold norm sums make every
     # weight partitioning-proof).  The fan lives HERE, not in
     # build_postings: the other postings consumers measured WORSE with a
     # pre-shuffle (see build_postings docstring).
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     return tfidf_hashed(docs, dim=64).orderBy("doc_id", "bucket")
 
 
@@ -3662,14 +3655,13 @@ def _q_link_extract(spark: SparkSession, sf: str) -> DataFrame:
     protocol-relative on d%4==0, skipped fragment/javascript), so the
     oracle exercises tag inventory, each CASE arm, and the full
     normalize_url chain (RE2-replayable by construction)."""
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
     from open_vector_tile_spark.operators.links import extract_links
 
     # the tag-inventory regexp chain is per-row JVM work in the scan
     # stage: fan out first (measured 1.06 -> 0.59 s at sf0.1; per-row
     # derivations, partitioning-proof)
     pages = _synth_pages(
-        _ensure_parallelism(_load(spark, sf, "documents"))
+        fan_out(_load(spark, sf, "documents"))
     )
     out = extract_links(pages)
     return out.select("doc_id", "href", "dst_url", "anchor").orderBy(
@@ -4166,7 +4158,6 @@ def _q_warc_extract(spark: SparkSession, sf: str) -> DataFrame:
         warc_record_bytes,
         warc_response_pages,
     )
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # record framing (header concat + http payload bytes) runs in the scan
     # stage before the blob shuffle: fan the 1-task single-row-group scan
@@ -4174,7 +4165,7 @@ def _q_warc_extract(spark: SparkSession, sf: str) -> DataFrame:
     # partitioning-proof: pack_warc_blobs sorts within partitions by
     # (blob_id, url) with unique urls, so member order — and therefore
     # every gzip byte — is independent of upstream row order.
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     d = F.col("doc_id")
     pages = docs.select(
         "doc_id",
@@ -4797,12 +4788,11 @@ def _q_viewport_cover(spark: SparkSession, sf: str) -> DataFrame:
     (one flagged row, n_tiles auditable).  The oracle replays the
     mercator floor/clamp and the range explosion in SQL."""
     from open_vector_tile_spark.functions.geo import viewport_tiles
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # the mercator floor/clamp + range explode runs in the scan stage: fan
     # the 1-task single-row-group scan out first (measured 2.83 -> 1.09 s
     # at sf0.1; pure per-row column exprs, partitioning-proof)
-    docs = _ensure_parallelism(_doc_points(_load(spark, sf, "documents")))
+    docs = fan_out(_doc_points(_load(spark, sf, "documents")))
     d = F.col("doc_id")
     clon, clat = F.col("lon"), F.col("lat")
     am = d % 11 == 0
@@ -5892,12 +5882,11 @@ def _q_sentences(spark: SparkSession, sf: str) -> DataFrame:
     construction, so the oracle replays the WHOLE operator verbatim in
     DuckDB (replace chain, extract, restore, trim, filter)."""
     from open_vector_tile_spark.functions.text import split_sentences
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # the protect/split/restore regexp chain is per-row JVM work in the
     # scan stage: fan out first (measured 1.57 -> 0.75 s at sf0.1; per-row
     # + unique-key orderBy on (doc_id, sent_idx), partitioning-proof)
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     ts = F.split(F.col("text"), " ")
 
     def j(a, b):
@@ -6018,14 +6007,13 @@ def _q_main_content(spark: SparkSession, sf: str) -> DataFrame:
     operator is one map-side F.aggregate fold; the oracle replays it with
     an INDEPENDENT algorithm (SQL gaps-and-islands windows)."""
     from open_vector_tile_spark.functions.text import main_content
-    from open_vector_tile_spark.operators.dedup import _ensure_parallelism
 
     # the per-row extractor fold is the scan stage's cost: fan the
     # single-row-group scan to data-sized width first (64 KB/task — JVM
     # HOF folds, heavier per byte than the shingle kernels; measured
     # 1.70 -> 0.81 s at sf0.1).  Per-row derivation + unique-key orderBy:
     # partitioning-proof.
-    docs = _ensure_parallelism(_load(spark, sf, "documents"))
+    docs = fan_out(_load(spark, sf, "documents"))
     ts = F.split(F.col("text"), " ")
     html = F.concat(
         F.lit(_MC_NAV),

@@ -86,12 +86,12 @@ def build_pipeline_chain(
     columnar featurize -> bulk OVT point encode.
 
     bench.py's ``pipeline`` scaling path, tools/submit_pipeline.py, and
-    tools/probe_pipeline_stages.py all time THIS chain — the definition
-    lives here so the probe's stage deltas can never drift from the job
-    bench.py publishes.  ``upto`` truncates the chain at a stage boundary
-    (PIPELINE_STAGES) so the probe can time cumulative sub-chains; the
-    default is the full tiles frame (callers add the tileset write, which
-    is a sink choice, not chain logic).
+    ``python3 perfbench/run.py --trace 1`` all time THIS chain — the
+    definition lives here so the traced stage deltas can never drift from
+    the job bench.py publishes.  ``upto`` truncates the chain at a stage
+    boundary (PIPELINE_STAGES) so the trace can time cumulative
+    sub-chains; the default is the full tiles frame (callers add the
+    tileset write, which is a sink choice, not chain logic).
 
     The encode runs one wave wide (``total_cores`` tasks); see
     ``tiler._arrange_for_encode`` for why widths follow rows.

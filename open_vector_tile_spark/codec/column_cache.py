@@ -54,11 +54,6 @@ class NumberChunk:
     count: int = 0
 
 
-def _point_key(pts) -> tuple:
-    """Injective dedup key for a point run: ((x,y[,z]), m_json, ...)."""
-    return tuple(pts)
-
-
 class ColumnCacheWriter:
     """(src/open/columnCache.ts:263-420)."""
 

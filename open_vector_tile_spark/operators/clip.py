@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ._parallel import fan_out
+
 _BIG = 1e300  # stand-in for ±inf that survives SQL translation verbatim
 
 
@@ -303,8 +305,6 @@ def areal_interpolate(
     import pandas as pd
     from pyspark.sql import Window
 
-    from .dedup import _ensure_parallelism
-
     # Fan the scan out BEFORE the bbox explode + clip UDF: the kernel is a
     # per-row Python Sutherland-Hodgman (~0.1 ms/row after the ~6x cell
     # fan-out), so a single-row-group parquet input would otherwise run the
@@ -312,7 +312,7 @@ def areal_interpolate(
     # sf0.1; same disease and same 16 KB/task density as the tiler's line/
     # polygon featurizers).  Row-order bit-safety: see the docstring's
     # exactness precondition on the per-polygon window SUM.
-    polys = _ensure_parallelism(polys, chunk=16 * 1024)
+    polys = fan_out(polys, chunk=16 * 1024)
 
     cs = int(cell_size)
 

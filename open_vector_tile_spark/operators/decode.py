@@ -19,7 +19,7 @@ companion scans ``decode_grids`` / ``decode_images``.
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,12 +35,6 @@ DECODED_SCHEMA = (
     "offsets array<double>, bbox array<double>, indices array<int>, "
     "tess_xy array<int>, props_json string, mvals_json string"
 )
-
-_DECODED_COLS = [
-    "zoom", "tile_x", "tile_y", "layer", "source", "extent", "feature_index",
-    "id", "ftype", "n_vertices", "geom_xy", "ring_lens", "poly_lens",
-    "offsets", "bbox", "indices", "tess_xy", "props_json", "mvals_json",
-]
 
 GRID_SCHEMA = (
     "zoom int, tile_x long, tile_y long, name string, extent int, size int, "
@@ -126,6 +120,51 @@ def _feature_row(zoom, tx, ty, lname, source, extent, i, f) -> tuple:
     )
 
 
+def _scan_tiles(
+    tiles: DataFrame,
+    on_error: str,
+    rows_of: Callable[[int, int, int, VectorTile], list[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The tile scan the decoders share: tiles(zoom, tile_x, tile_y, tile)
+    -> the rows ``rows_of(zoom, tx, ty, parsed_tile)`` returns per tile, as
+    ``schema``.
+
+    ``rows_of`` returns a list, so a tile that fails mid-decode adds no row:
+    "skip" drops the offending tile atomically, "fail" raises
+    :class:`TileDecodeError`."""
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
+    columns = [field.split()[0] for field in schema.split(", ")]
+    # lazy feature decode means truncation can surface as raw IndexError etc.
+    # after the header parse; the codec owns the canonical class list
+    from ..codec.tile import DECODE_ERROR_CLASSES as _DECODE_ERRORS
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            for zoom, tx, ty, blob in zip(
+                pdf["zoom"].tolist(),
+                pdf["tile_x"].tolist(),
+                pdf["tile_y"].tolist(),
+                pdf["tile"].tolist(),
+            ):
+                zoom, tx, ty = int(zoom), int(tx), int(ty)
+                try:
+                    out.extend(rows_of(zoom, tx, ty, VectorTile(bytes(blob))))
+                except _DECODE_ERRORS as e:
+                    if on_error == "skip":
+                        continue
+                    if isinstance(e, TileDecodeError):
+                        raise
+                    raise TileDecodeError(
+                        f"tile ({zoom},{tx},{ty}): {type(e).__name__}: {e}"
+                    ) from e
+            yield pd.DataFrame(out, columns=columns)
+
+    return tiles.mapInPandas(run, schema)
+
+
 def decode_tiles(
     tiles: DataFrame,
     layers: Optional[list[str]] = None,
@@ -144,66 +183,40 @@ def decode_tiles(
     feature output from a tile that fails mid-decode) and keeps the job
     alive — the operational choice at fleet scale where torn writes happen.
     """
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
     want = set(layers) if layers else None
     want_ovt = "ovt" in sources
     want_mvt = "mvt" in sources
-    # lazy feature decode means truncation can surface as raw IndexError etc.
-    # after the header parse; the codec owns the canonical class list
-    from ..codec.tile import DECODE_ERROR_CLASSES as _DECODE_ERRORS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for zoom, tx, ty, blob in zip(
-                pdf["zoom"].tolist(),
-                pdf["tile_x"].tolist(),
-                pdf["tile_y"].tolist(),
-                pdf["tile"].tolist(),
-            ):
-                zoom, tx, ty = int(zoom), int(tx), int(ty)
-                tile_rows: list[tuple] = []
-                try:
-                    parsed = VectorTile(bytes(blob))
-                    for lname, layer in parsed.layers.items():
-                        if want is not None and lname not in want:
-                            continue
-                        if isinstance(layer, OVLayer):
-                            if not want_ovt:
-                                continue
-                            extent = layer.extent
-                            for i in range(len(layer)):
-                                tile_rows.append(
-                                    _feature_row(
-                                        zoom, tx, ty, lname, "ovt", extent, i,
-                                        layer.feature(i),
-                                    )
-                                )
-                        elif isinstance(layer, MvtLayer):
-                            if not want_mvt:
-                                continue
-                            extent = layer.extent
-                            src = "s2" if layer.is_s2 else "mvt"
-                            for i in range(len(layer)):
-                                tile_rows.append(
-                                    _feature_row(
-                                        zoom, tx, ty, lname, src, extent, i,
-                                        layer.feature(i).to_base(),
-                                    )
-                                )
-                except _DECODE_ERRORS as e:
-                    if on_error == "skip":
-                        continue
-                    if isinstance(e, TileDecodeError):
-                        raise
-                    raise TileDecodeError(
-                        f"tile ({zoom},{tx},{ty}): {type(e).__name__}: {e}"
-                    ) from e
-                out.extend(tile_rows)
-            yield pd.DataFrame(out, columns=_DECODED_COLS)
+    def rows_of(zoom: int, tx: int, ty: int, parsed: VectorTile) -> list[tuple]:
+        rows: list[tuple] = []
+        for lname, layer in parsed.layers.items():
+            if want is not None and lname not in want:
+                continue
+            if isinstance(layer, OVLayer):
+                if not want_ovt:
+                    continue
+                extent = layer.extent
+                for i in range(len(layer)):
+                    rows.append(
+                        _feature_row(
+                            zoom, tx, ty, lname, "ovt", extent, i, layer.feature(i)
+                        )
+                    )
+            elif isinstance(layer, MvtLayer):
+                if not want_mvt:
+                    continue
+                extent = layer.extent
+                src = "s2" if layer.is_s2 else "mvt"
+                for i in range(len(layer)):
+                    rows.append(
+                        _feature_row(
+                            zoom, tx, ty, lname, src, extent, i,
+                            layer.feature(i).to_base(),
+                        )
+                    )
+        return rows
 
-    return tiles.mapInPandas(run, DECODED_SCHEMA)
+    return _scan_tiles(tiles, on_error, rows_of, DECODED_SCHEMA)
 
 
 def decode_grids(
@@ -214,49 +227,19 @@ def decode_grids(
 
     ``on_error`` mirrors :func:`decode_tiles`: "skip" drops a corrupt tile
     atomically instead of failing the scan."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
     want = set(names) if names else None
-    from ..codec.tile import DECODE_ERROR_CLASSES as _DECODE_ERRORS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for zoom, tx, ty, blob in zip(
-                pdf["zoom"].tolist(), pdf["tile_x"].tolist(),
-                pdf["tile_y"].tolist(), pdf["tile"].tolist(),
-            ):
-                tile_rows: list[tuple] = []
-                try:
-                    parsed = VectorTile(bytes(blob))
-                    for name, g in parsed.grids.items():
-                        if want is not None and name not in want:
-                            continue
-                        tile_rows.append(
-                            (
-                                int(zoom), int(tx), int(ty), name, int(g.extent),
-                                int(g.size), float(g.min), float(g.max),
-                                [float(v) for v in g.data()],
-                            )
-                        )
-                except _DECODE_ERRORS as e:
-                    if on_error == "skip":
-                        continue
-                    if isinstance(e, TileDecodeError):
-                        raise
-                    raise TileDecodeError(
-                        f"tile ({zoom},{tx},{ty}): {type(e).__name__}: {e}"
-                    ) from e
-                out.extend(tile_rows)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "zoom", "tile_x", "tile_y", "name", "extent", "size",
-                    "grid_min", "grid_max", "data",
-                ],
+    def rows_of(zoom: int, tx: int, ty: int, parsed: VectorTile) -> list[tuple]:
+        return [
+            (
+                zoom, tx, ty, name, int(g.extent), int(g.size),
+                float(g.min), float(g.max), [float(v) for v in g.data()],
             )
+            for name, g in parsed.grids.items()
+            if want is None or name in want
+        ]
 
-    return tiles.mapInPandas(run, GRID_SCHEMA)
+    return _scan_tiles(tiles, on_error, rows_of, GRID_SCHEMA)
 
 
 def decode_images(
@@ -267,48 +250,19 @@ def decode_images(
 
     ``on_error`` mirrors :func:`decode_tiles`: "skip" drops a corrupt tile
     atomically instead of failing the scan."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
     want = set(names) if names else None
-    from ..codec.tile import DECODE_ERROR_CLASSES as _DECODE_ERRORS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for zoom, tx, ty, blob in zip(
-                pdf["zoom"].tolist(), pdf["tile_x"].tolist(),
-                pdf["tile_y"].tolist(), pdf["tile"].tolist(),
-            ):
-                tile_rows: list[tuple] = []
-                try:
-                    parsed = VectorTile(bytes(blob))
-                    for name, img in parsed.images.items():
-                        if want is not None and name not in want:
-                            continue
-                        tile_rows.append(
-                            (
-                                int(zoom), int(tx), int(ty), name, img.type,
-                                int(img.width), int(img.height), img.image(),
-                            )
-                        )
-                except _DECODE_ERRORS as e:
-                    if on_error == "skip":
-                        continue
-                    if isinstance(e, TileDecodeError):
-                        raise
-                    raise TileDecodeError(
-                        f"tile ({zoom},{tx},{ty}): {type(e).__name__}: {e}"
-                    ) from e
-                out.extend(tile_rows)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "zoom", "tile_x", "tile_y", "name", "type",
-                    "width", "height", "image",
-                ],
+    def rows_of(zoom: int, tx: int, ty: int, parsed: VectorTile) -> list[tuple]:
+        return [
+            (
+                zoom, tx, ty, name, img.type, int(img.width), int(img.height),
+                img.image(),
             )
+            for name, img in parsed.images.items()
+            if want is None or name in want
+        ]
 
-    return tiles.mapInPandas(run, IMAGE_SCHEMA)
+    return _scan_tiles(tiles, on_error, rows_of, IMAGE_SCHEMA)
 
 
 def read_tileset(

@@ -23,94 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-def _ensure_parallelism(df: DataFrame, chunk: int = 64 * 1024) -> DataFrame:
-    """Small single-file inputs arrive as 1 partition; per-row-heavy ops
-    (shingling, hashing) must fan out to the cluster first.  No-op when the
-    input is already parallel.
-
-    ``chunk`` is the bytes-of-parquet-per-task density the width heuristic
-    assumes; the 64 KB default is calibrated to the shingle/minhash
-    kernels (round-6 alternating A/B over every default caller: 64 KB
-    beat the earlier 256 KB on minhash/simhash/span/containment at BOTH
-    sf0.1 and sf1.0 — −11..−18% — and was flat on cdc/line; ~250 KB of
-    text per task keeps the kernel ≥10 ms/task, well above task-launch
-    cost).  Kernels whose per-row cost is orders of magnitude heavier
-    (e.g. the per-tile line clipper: ~ms/row, not us) pass a smaller
-    chunk so the same data fans wider.
-
-    Two-step check: ``inputFiles()`` (free — a cached driver-side listing)
-    short-circuits the common file-scan case; only when the file count
-    looks sufficient do we confirm with ``df.rdd.getNumPartitions()``,
-    which is authoritative (it sees a downstream ``coalesce(1)`` that the
-    file count cannot) at the cost of one driver-side plan->RDD conversion
-    — planning only, nothing executes.  A file-less DataFrame (createDataFrame,
-    checkpoint) goes straight to the authoritative count instead of being
-    unconditionally reshuffled."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    threshold = max(2, target // 2)
-    try:
-        files = list(df.inputFiles())
-    except Exception:
-        files = []
-    if 0 < len(files) < threshold:
-        # few files does NOT imply few partitions — FileSourceScan splits
-        # big files by maxPartitionBytes, and force-shuffling a 10 GB
-        # single-file scan would be pure waste; estimate the split count
-        # from local file sizes when possible, else fall through to the
-        # authoritative check
-        import os as _os
-        from urllib.parse import urlparse as _urlparse
-
-        try:
-            max_bytes = int(
-                df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-                .lower().removesuffix("b")
-            )
-        except ValueError:
-            max_bytes = 128 * 1024 * 1024
-        total = 0
-        local = True
-        for f in files:
-            u = _urlparse(f)
-            if u.scheme not in ("", "file"):
-                local = False
-                break
-            try:
-                total += _os.path.getsize(u.path or f)
-            except OSError:
-                local = False
-                break
-        if not local:
-            # remote input with unknown size (s3/hdfs): the old conservative
-            # behaviour — a small remote file is EXACTLY the case this
-            # function exists for, so fan out to the cluster (r5 advisor
-            # finding: the size-estimate rewrite silently dropped this arm)
-            return df.repartition(target)
-        if (total + max_bytes - 1) // max_bytes < threshold:
-            # width follows the DATA, not the cluster: a sub-chunk input
-            # fanned to defaultParallelism pays 32 task launches + python
-            # worker roundtrips for microseconds of numpy each (measured
-            # ~1s of the sf0.1 dedup_minhash headline).  The default chunk
-            # keeps each task's kernel work in the tens of ms — the
-            # shingle/minhash kernels run ~5M words/s/core, so the r5
-            # 2 MB/task chunk left 10x parallelism unused at the 6 MB
-            # scale (measured: dedup_minhash 2.6 s at width 3 vs 0.9 s at
-            # width 24 on local[32]); large inputs still reach full width
-            width = min(target, total // chunk + 1)
-            if width <= 1:
-                # sub-chunk input: the kernel does the whole batch in one
-                # vectorized pass faster than a shuffle round-trip costs
-                return df
-            if df.rdd.getNumPartitions() >= width:
-                # already at least as wide (e.g. an upstream repartition on
-                # top of the file scan) — don't shuffle it back DOWN
-                return df
-            return df.repartition(width)
-        return df
-    if df.rdd.getNumPartitions() < threshold:
-        return df.repartition(target)
-    return df
+from ._parallel import fan_out
 
 
 # ---------------------------------------------------------------------------
@@ -288,7 +201,7 @@ def span_dedup(
     # (id, text) columns and the serial-kernel savings dominate
     # (2.35 -> 1.92 s at sf0.1 net of all three); a localCheckpoint would
     # share one scan at the cost of an eager materialization barrier.
-    df = _ensure_parallelism(df)
+    df = fan_out(df)
     empty_i = F.array().cast("array<int>")
     words_of = lambda: F.filter(  # noqa: E731 — built fresh per use site
         F.split(F.col(text_col), r"\s+"), lambda w: w != F.lit("")
@@ -544,30 +457,6 @@ def _batch_band_keys(
     return (key & np.uint64(0x7FFFFFFFFFFFFFFF)).astype(np.int64).T
 
 
-def _band_hash_udf(num_hashes: int, bands: int, shingle_n: int, text_col: str):
-    """pandas_udf: text -> array of band hashes, fully Arrow-side and
-    batch-vectorized: tokenization, shingle hashing, the minhash matrix,
-    and the band folds are all whole-batch numpy — even word splitting is
-    the byte-level segmented kernel (:func:`_batch_word_hashes`), so no
-    per-doc Python remains.  Replaces the round-2 per-document loop that
-    made dedup_minhash the slowest headline query (VERDICT r2 'What's
-    wrong' #2)."""
-    from pyspark.sql.functions import pandas_udf
-
-    rows_per_band = num_hashes // bands
-    A = _minhash_A(num_hashes)
-
-    @pandas_udf("array<long>")
-    def band_hashes(texts: pd.Series) -> pd.Series:
-        grams, offs, _wc = _batch_gram_hashes(texts.tolist(), shingle_n)
-        if len(offs) == 0:
-            return pd.Series([], dtype=object)
-        keys = _batch_band_keys(grams, offs, A, bands, rows_per_band)
-        return pd.Series(list(keys.tolist()))
-
-    return band_hashes
-
-
 def _cap_buckets(band_rows: DataFrame, id_col: str, keys: list[str], max_bucket: int) -> DataFrame:
     """Hot-bucket guard for LSH self-joins: keep the ``max_bucket``
     smallest-id members per bucket (deterministic truncation).
@@ -632,7 +521,7 @@ def minhash_lsh_candidates(
     (band, band_hash) — shuffles only ids + band keys, never text.  Buckets
     larger than ``max_bucket`` are truncated (see :func:`_cap_buckets`).
     """
-    df = _ensure_parallelism(df)
+    df = fan_out(df)
     A = _minhash_A(num_hashes)
     rpb = num_hashes // bands
 
@@ -810,7 +699,7 @@ def simhash_near_dups(
     any one band).  Band buckets larger than ``max_bucket`` are truncated
     (:func:`_cap_buckets`).  ``token_hash``/``bits`` select the hash family
     (see :func:`simhash64`)."""
-    df = _ensure_parallelism(df)
+    df = fan_out(df)
     sh = df.select(
         F.col(id_col), simhash64(F.col(text_col), token_hash, bits).alias("simhash")
     )
@@ -893,7 +782,7 @@ def duplicate_spans(
     # data-sized width before it (no-op when already parallel; every
     # downstream op is keyed — counts, joins, per-id windows — so
     # partitioning cannot change any span)
-    docs = _ensure_parallelism(docs)
+    docs = fan_out(docs)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<n_tokens: long, grams: array<long>>")
@@ -988,7 +877,7 @@ def cdc_chunks(
     # the per-word md5 boundary test runs in the scan stage: fan a narrow
     # scan out first (boundaries, chunk ids, and chunk texts are all
     # derived per doc in document order — partitioning-proof)
-    docs = _ensure_parallelism(docs)
+    docs = fan_out(docs)
     thr = format(boundary_hex, "02x")
     from ..functions.text import WS_SPLIT  # Java/RE2-identical whitespace class
 
@@ -1072,7 +961,7 @@ def containment_pairs(
     # narrow exchange twice in the executed plan; measured net win
     # (2.95 -> 2.61 s at sf0.1) because both branches' per-row shingle
     # work parallelizes while each exchange ships only (id, text).
-    docs = _ensure_parallelism(docs)
+    docs = fan_out(docs)
     sh = docs.select(
         F.col(id_col).alias("_cid"),
         F.filter(shingles(F.col(text_col), n), lambda g: g != F.lit("")).alias(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.geo import cell_col, haversine_np, pack_cell_np, tile_xy_np
+from ._parallel import fan_out
 from ._pins import Pins
 
 
@@ -40,13 +41,11 @@ def knn_broadcast(
     Vectorized: one (batch × n_poi) distance matrix per Arrow batch, argpartition
     top-k — no per-row Python.
     """
-    from .dedup import _ensure_parallelism
-
     # a narrow (single-file / single-row-group) source would run the whole
     # distance kernel in one task; fan out to data-sized width first (no-op
     # when the input is already parallel).  Output is a per-row top-k SET —
     # partitioning cannot change any pick.
-    points = _ensure_parallelism(points.select(key, lon, lat))
+    points = fan_out(points.select(key, lon, lat))
     plon = pois_pdf["lon"].to_numpy(dtype=np.float64)
     plat = pois_pdf["lat"].to_numpy(dtype=np.float64)
     pids = pois_pdf["poi_id"].to_numpy(dtype=np.int64)

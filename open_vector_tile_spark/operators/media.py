@@ -51,6 +51,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._parallel import fan_out
+
 __all__ = [
     "synth_media",
     "media_metadata",
@@ -155,9 +157,7 @@ def synth_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ]
             yield pd.DataFrame({"media_id": mid, "blob": blobs})
 
-    from .dedup import _ensure_parallelism
-
-    src = _ensure_parallelism(docs.select(id_col), chunk=64 * 1024)
+    src = fan_out(docs.select(id_col))
     return src.mapInPandas(gen, "media_id long, blob binary")
 
 

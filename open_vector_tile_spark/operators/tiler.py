@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codec import BaseFeature, BaseLayer, BaseLine, write_ov_tile
+from ._parallel import fan_out
 
 FEATURE_SCHEMA = (
     "zoom int, tile_x long, tile_y long, layer string, extent int, "
@@ -1067,9 +1068,7 @@ def _lines_dist_impl(
     # so the width heuristic gets a 16 KB/task chunk — a single-file scan
     # otherwise runs the whole clip serially (measured 12.7 s -> one wave
     # at sf0.1 clip_pyramid); already-wide inputs are untouched
-    from .dedup import _ensure_parallelism
-
-    src = _ensure_parallelism(src, chunk=16 * 1024)
+    src = fan_out(src, chunk=16 * 1024)
 
     def run(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
@@ -1299,9 +1298,7 @@ def _polygons_dist_impl(
     # same narrow-scan fan-out as _lines_dist_impl: per-ring python
     # area/clip work is ~ms/row, so a single-file scan must not run the
     # kernel serially; no-op for already-wide inputs
-    from .dedup import _ensure_parallelism
-
-    src = _ensure_parallelism(src, chunk=16 * 1024)
+    src = fan_out(src, chunk=16 * 1024)
 
     def run(batches: Iterable[pd.DataFrame]):
         from ..codec.mvt import signed_area
@@ -1474,9 +1471,8 @@ def s2json_tiles_to_ovt(
 
     from ..codec import write_ov_tile
     from ..codec.s2json import s2json_to_base_layers
-    from .dedup import _ensure_parallelism
 
-    tiles = _ensure_parallelism(tiles, chunk=16 * 1024)
+    tiles = fan_out(tiles, chunk=16 * 1024)
 
     def run(batches: Iterable[pd.DataFrame]):
         for pdf in batches:

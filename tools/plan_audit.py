@@ -23,7 +23,12 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 def audit_plan(plan: str) -> dict:
     return {
-        "exchanges": len(re.findall(r"Exchange (?:hash|range|SinglePartition)", plan)),
+        "exchanges": len(
+            re.findall(r"Exchange (?:hash|range|SinglePartition|RoundRobin)", plan)
+        ),
+        # widths of the repartition(n) fan-outs (operators/_parallel.fan_out
+        # and explicit repartitions), in plan order
+        "fan_outs": [int(n) for n in re.findall(r"Exchange RoundRobinPartitioning\((\d+)\)", plan)],
         "bcast_joins": plan.count("BroadcastHashJoin"),
         "smj": plan.count("SortMergeJoin"),
         "codegen": len(set(re.findall(r"\*\((\d+)\)", plan))),
@@ -58,7 +63,8 @@ def main() -> int:
         "# PLANS — executed physical-plan audit (sf0.01, AQE final plans)",
         "",
         "Generated by `python tools/plan_audit.py`; rerun after operator",
-        "changes.  Columns: shuffles (Exchange hash/range/single), broadcast",
+        "changes.  Columns: shuffles (Exchange hash/range/single/round-robin),",
+        "the widths of the round-robin fan-outs among them, broadcast",
         "hash joins, sort-merge joins, distinct whole-stage-codegen stages,",
         "Python/Arrow stages, TakeOrderedAndProject top-k heaps, and",
         "broadcast-nested-loop/cartesian joins.  BNL > 0 is reviewed, not",
@@ -70,17 +76,18 @@ def main() -> int:
         "gate joins the exact-L2 top-50 of 5 query vectors); an UNBOUNDED",
         "nested loop would be a bug.",
         "",
-        "| query | rows | shuffles | bcast | smj | codegen | python | topk | BNL |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | rows | shuffles | fan-outs | bcast | smj | codegen | python | topk | BNL |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     bad = 0
     for name, n, facts, err in rows:
         if err:
-            lines.append(f"| {name} | ERROR: {err} | | | | | | | |")
+            lines.append(f"| {name} | ERROR: {err} | | | | | | | | |")
             bad += 1
             continue
         lines.append(
-            f"| {name} | {n} | {facts['exchanges']} | {facts['bcast_joins']} "
+            f"| {name} | {n} | {facts['exchanges']} "
+            f"| {' '.join(map(str, facts['fan_outs'])) or '-'} | {facts['bcast_joins']} "
             f"| {facts['smj']} | {facts['codegen']} | {facts['python']} "
             f"| {facts['topk_heap']} | {facts['bnl']} |"
         )
