@@ -2011,10 +2011,9 @@ def _q_tileset_scan(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.sources.tileset import OvtTilesetDataSource
 
     spark.dataSource.register(OvtTilesetDataSource)
-    try:  # enables file/entry pruning; correct (just slower) without it
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
+    # the source implements pushFilters, which Spark refuses to plan unless
+    # Python data-source filter pushdown is on
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     docs = _doc_points(_load(spark, sf, "documents"))
     feats = points_to_features(docs, zoom=ZOOM, layer="docs", extent=4096, id_col="doc_id")
     tiles = encode_tiles(feats)

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..codec import TileDecodeError, VectorTile
+from ..codec.tile import DECODE_ERROR_CLASSES
 from ..codec.layer import OVLayer
 from ..codec.mvt import MvtLayer
 
@@ -120,6 +121,28 @@ def _feature_row(zoom, tx, ty, lname, source, extent, i, f) -> tuple:
     )
 
 
+def _tile_rows(rows_of, zoom: int, tx: int, ty: int, blob, on_error: str) -> list[tuple]:
+    """``rows_of(zoom, tx, ty, parsed_tile)`` over one blob.
+
+    ``rows_of`` returns a list, so a tile that fails mid-decode adds no row:
+    "skip" drops the offending tile atomically (returns []), "fail" raises
+    :class:`TileDecodeError`.  Lazy feature decode means truncation can
+    surface as a raw IndexError etc. after the header parse; the codec owns
+    the canonical class list."""
+    try:
+        return rows_of(zoom, tx, ty, VectorTile(bytes(blob)))
+    except DECODE_ERROR_CLASSES as e:
+        if on_error == "skip":
+            return []
+        if isinstance(e, TileDecodeError):
+            raise
+        raise TileDecodeError(f"tile ({zoom},{tx},{ty}): {type(e).__name__}: {e}") from e
+
+
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(", ")]
+
+
 def _scan_tiles(
     tiles: DataFrame,
     on_error: str,
@@ -128,17 +151,10 @@ def _scan_tiles(
 ) -> DataFrame:
     """The tile scan the decoders share: tiles(zoom, tile_x, tile_y, tile)
     -> the rows ``rows_of(zoom, tx, ty, parsed_tile)`` returns per tile, as
-    ``schema``.
-
-    ``rows_of`` returns a list, so a tile that fails mid-decode adds no row:
-    "skip" drops the offending tile atomically, "fail" raises
-    :class:`TileDecodeError`."""
+    ``schema``; ``on_error`` as in :func:`_tile_rows`."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
-    columns = [field.split()[0] for field in schema.split(", ")]
-    # lazy feature decode means truncation can surface as raw IndexError etc.
-    # after the header parse; the codec owns the canonical class list
-    from ..codec.tile import DECODE_ERROR_CLASSES as _DECODE_ERRORS
+    columns = _columns(schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -149,40 +165,18 @@ def _scan_tiles(
                 pdf["tile_y"].tolist(),
                 pdf["tile"].tolist(),
             ):
-                zoom, tx, ty = int(zoom), int(tx), int(ty)
-                try:
-                    out.extend(rows_of(zoom, tx, ty, VectorTile(bytes(blob))))
-                except _DECODE_ERRORS as e:
-                    if on_error == "skip":
-                        continue
-                    if isinstance(e, TileDecodeError):
-                        raise
-                    raise TileDecodeError(
-                        f"tile ({zoom},{tx},{ty}): {type(e).__name__}: {e}"
-                    ) from e
+                out.extend(_tile_rows(rows_of, int(zoom), int(tx), int(ty), blob, on_error))
             yield pd.DataFrame(out, columns=columns)
 
     return tiles.mapInPandas(run, schema)
 
 
-def decode_tiles(
-    tiles: DataFrame,
-    layers: Optional[list[str]] = None,
-    sources: tuple = ("ovt", "mvt"),
-    on_error: str = "fail",
-) -> DataFrame:
-    """tiles(zoom, tile_x, tile_y, tile) -> exploded feature rows.
-
-    ``layers`` prunes decoding to the requested layer names: other layers'
-    features are never parsed (the codec's lazy position references mean
-    skipping a layer costs only its header scan).  ``sources`` selects wire
-    families: "ovt" (tag 4) and/or "mvt" (tags 1/3 incl. legacy S2).
-
-    ``on_error``: "fail" (default) raises :class:`TileDecodeError` on a
-    corrupt blob; "skip" drops the offending TILE atomically (no partial
-    feature output from a tile that fails mid-decode) and keeps the job
-    alive — the operational choice at fleet scale where torn writes happen.
-    """
+def _feature_rows(
+    layers: Optional[list[str]], sources: tuple
+) -> Callable[[int, int, int, VectorTile], list[tuple]]:
+    """The per-tile feature decode of :func:`decode_tiles` and
+    :func:`read_tileset`: a parsed tile -> its DECODED_SCHEMA rows, for the
+    requested layer names and wire families."""
     want = set(layers) if layers else None
     want_ovt = "ovt" in sources
     want_mvt = "mvt" in sources
@@ -216,7 +210,28 @@ def decode_tiles(
                     )
         return rows
 
-    return _scan_tiles(tiles, on_error, rows_of, DECODED_SCHEMA)
+    return rows_of
+
+
+def decode_tiles(
+    tiles: DataFrame,
+    layers: Optional[list[str]] = None,
+    sources: tuple = ("ovt", "mvt"),
+    on_error: str = "fail",
+) -> DataFrame:
+    """tiles(zoom, tile_x, tile_y, tile) -> exploded feature rows.
+
+    ``layers`` prunes decoding to the requested layer names: other layers'
+    features are never parsed (the codec's lazy position references mean
+    skipping a layer costs only its header scan).  ``sources`` selects wire
+    families: "ovt" (tag 4) and/or "mvt" (tags 1/3 incl. legacy S2).
+
+    ``on_error``: "fail" (default) raises :class:`TileDecodeError` on a
+    corrupt blob; "skip" drops the offending TILE atomically (no partial
+    feature output from a tile that fails mid-decode) and keeps the job
+    alive — the operational choice at fleet scale where torn writes happen.
+    """
+    return _scan_tiles(tiles, on_error, _feature_rows(layers, sources), DECODED_SCHEMA)
 
 
 def decode_grids(
@@ -265,35 +280,76 @@ def decode_images(
     return _scan_tiles(tiles, on_error, rows_of, IMAGE_SCHEMA)
 
 
+# the listing frame a read_tileset ``where`` filters: the source's columns
+# less the blob, plus each entry's position in the listing
+_LISTING_SCHEMA = (
+    "zoom int, tile_x bigint, tile_y bigint, path string, n_bytes bigint, entry bigint"
+)
+
+
+def _matching(spark, entries: list, where) -> list:
+    """The listing entries ``where`` keeps, in listing order.  The filter
+    runs on a local relation built from pandas over Arrow, which Spark's
+    optimizer evaluates on the driver, so ``collect`` starts no job (an
+    Arrow ``toPandas`` would start one: ~0.1 s against ~0.01 s for a
+    window's few rows)."""
+    listing = pd.DataFrame(
+        [(z, x, y, p, n, i) for i, (z, x, y, p, n, _off) in enumerate(entries)],
+        columns=_columns(_LISTING_SCHEMA),
+    )
+    kept = spark.createDataFrame(listing, _LISTING_SCHEMA).filter(where).select("entry")
+    return [entries[i] for i in sorted(r.entry for r in kept.collect())]
+
+
 def read_tileset(
     spark,
     path: str,
     layers: Optional[list[str]] = None,
     sources: tuple = ("ovt", "mvt"),
-    num_partitions: int = 8,
+    num_partitions: Optional[int] = None,
     where=None,
 ) -> DataFrame:
-    """One-liner tileset scan: directory of ``z_x_y.{mvt,pbf,ovt}`` files ->
-    decoded feature rows (FEATURE_SCHEMA).
+    """One-liner tileset scan: directory of ``z_x_y.{mvt,pbf,ovt}`` files
+    and ``.ovtshard`` containers -> decoded feature rows (DECODED_SCHEMA).
 
-    Composes the DataSourceV2 tileset source (partition-parallel file reads)
-    with the pruning decoder.  ``where`` is a Column predicate over
-    zoom/tile_x/tile_y applied BEFORE the decode — Catalyst pushes it into
-    the source's ``pushFilters``, so pruned files are never opened; a filter
-    applied by the caller on the returned frame runs after decode (the
-    mapInPandas is a planning barrier).  ``layers`` prunes inside the blob.
+    The driver lists the tileset once (``sources.tileset._list_tiles``).
+    ``where`` is any Column predicate over zoom/tile_x/tile_y/path/n_bytes;
+    it filters that listing before a task starts, so unmatched blobs are
+    never opened.  A filter the caller applies to the returned frame runs
+    after decode (the mapInPandas is a planning barrier).  ``layers`` and
+    ``sources`` prune inside the blob, as in :func:`decode_tiles`.
+
+    The matched entries are split into ``num_partitions`` contiguous,
+    path-sorted runs, by default ``sources.tileset.read_width`` of their
+    bytes.  Each run is one task that reads its blobs and decodes them in
+    one ``mapInPandas``, yielding at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows at a time.  A
+    corrupt blob raises :class:`TileDecodeError`.
     """
-    from ..sources.tileset import OvtTilesetDataSource
+    from ..sources.tileset import _list_tiles, read_blobs, read_width
 
-    spark.dataSource.register(OvtTilesetDataSource)
-    tiles = (
-        spark.read.format("ovt_tileset")
-        .option("path", path)
-        .option("num_partitions", str(num_partitions))
-        .load()
-    )
+    entries = _list_tiles(path)
     if where is not None:
-        tiles = tiles.filter(where)
-    return decode_tiles(
-        tiles.select("zoom", "tile_x", "tile_y", "tile"), layers=layers, sources=sources
-    )
+        entries = _matching(spark, entries, where)
+    if not entries:
+        return spark.createDataFrame([], DECODED_SCHEMA)
+    width = min(num_partitions or read_width(sum(e[4] for e in entries)), len(entries))
+    size = -(-len(entries) // width)
+    runs = [entries[i : i + size] for i in range(0, len(entries), size)]
+    rows_of = _feature_rows(layers, sources)
+    columns = _columns(DECODED_SCHEMA)
+    max_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for part in pdf["id"].tolist():
+                out: list[tuple] = []
+                for (zoom, tx, ty, *_), blob in zip(runs[part], read_blobs(runs[part])):
+                    out.extend(_tile_rows(rows_of, zoom, tx, ty, blob, "fail"))
+                    if len(out) >= max_rows:
+                        yield pd.DataFrame(out, columns=columns)
+                        out = []
+                if out:
+                    yield pd.DataFrame(out, columns=columns)
+
+    return spark.range(len(runs), numPartitions=len(runs)).mapInPandas(run, DECODED_SCHEMA)

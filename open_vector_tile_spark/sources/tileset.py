@@ -16,9 +16,13 @@ as DataFrames with real predicate pushdown:
   ``option("skip_blob", "true")`` and the reader stats files instead of
   reading them (the Python DS API has no pruneColumns hook yet; the option
   is the explicit spelling).
-- **Parallel scan.**  Files are split into ``num_partitions`` balanced
-  partitions (task granularity at 100 TB: one partition per worker slot;
-  a million-tile tileset lists on the driver but reads on executors).
+- **Payload-sized scan.**  The listing is split into contiguous, path-sorted
+  runs, so a task opens each file once.  :func:`read_width` sizes the run
+  count from the matched bytes (one task for a window, at most one wave
+  for a full scan); ``option("num_partitions", n)`` overrides it.  The
+  engine's own decoded read, ``operators/decode.read_tileset``, lists with
+  the same :func:`_list_tiles`, sizes with the same :func:`read_width` and
+  reads with the same :func:`read_blobs`, but plans no Python data source.
 
 The write side materializes (zoom, tile_x, tile_y, tile) rows as
 ``{z}_{x}_{y}.{suffix}`` files — the inverse layout, executor-parallel —
@@ -166,9 +170,57 @@ def _match(filt, z: int, x: int, y: int) -> bool:
     return True  # unreachable: only pushable types are kept
 
 
+# tile bytes one read task must hold before a second task pays for itself
+_TASK_BYTES = 512 * 1024
+
+
+def read_width(n_bytes: int) -> int:
+    """Read tasks for ``n_bytes`` of matched tiles: ``min(cluster width,
+    ceil(n_bytes / _TASK_BYTES))``, at least 1.
+
+    Every task starts a Python runner, ~0.14 s of CPU on a 4-core VM
+    (``tiler._arrange_for_encode`` records why).  Reading and decoding
+    512 KB of one-point OVT tiles (~5.7k tiles, the shape perfbench's
+    ``tile_read`` scans) takes ~0.29 s there, twice a runner start, so a
+    task holds at least that much: a 16x16-tile window gets one task and
+    the 3.5 MB ``tile_read`` scan one wave of 4.
+
+    The cluster width is ``defaultParallelism`` where a SparkContext lives
+    in this process (the driver).  A data source's ``partitions()`` runs in
+    a Python planning worker that sees no SparkContext; there the planning
+    host's cores stand in, which on ``local[N]`` are the cluster's."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    cores = sc.defaultParallelism if sc is not None else os.cpu_count() or 1
+    return max(1, min(cores, -(-n_bytes // _TASK_BYTES)))
+
+
+def read_blobs(entries) -> Iterator[bytes]:
+    """The blob of each :func:`_list_tiles` entry, in order.  Entries come
+    sorted by path, so a run from one file shares one open handle."""
+    cur_path, fh = None, None
+    try:
+        for _z, _x, _y, path, size, off in entries:
+            if path != cur_path:
+                if fh is not None:
+                    fh.close()
+                fh = open(path, "rb")
+                cur_path = path
+            if off < 0:
+                fh.seek(0)
+                yield fh.read()
+            else:
+                fh.seek(off)
+                yield fh.read(size)
+    finally:
+        if fh is not None:
+            fh.close()
+
+
 @dataclass
 class _FilesPartition(InputPartition):
-    files: list  # [(zoom, x, y, path, size)]
+    files: list  # _list_tiles entries
 
 
 class OvtTilesetReader(DataSourceReader):
@@ -176,7 +228,7 @@ class OvtTilesetReader(DataSourceReader):
         self.root = options.get("path")
         if not self.root:
             raise ValueError("ovt_tileset requires .option('path', <dir>)")
-        self.n_parts = int(options.get("num_partitions", "8"))
+        self.n_parts = int(options.get("num_partitions", "0"))  # 0: read_width
         self.skip_blob = options.get("skip_blob", "false").lower() == "true"
         self.pushed = []
 
@@ -206,36 +258,21 @@ class OvtTilesetReader(DataSourceReader):
         ]
         if not files:
             return [_FilesPartition([])]
-        n = max(1, min(self.n_parts, len(files)))
+        n = max(1, min(self.n_parts or read_width(sum(t[4] for t in files)), len(files)))
         # contiguous chunks, not striding: the listing is sorted by (path,
         # offset) so a shard's entries stay in as few partitions as possible
         # (sequential reads, one open per shard per task)
         size = (len(files) + n - 1) // n
-        parts = [_FilesPartition(files[i : i + size]) for i in range(0, len(files), size)]
-        return parts or [_FilesPartition([])]
+        return [_FilesPartition(files[i : i + size]) for i in range(0, len(files), size)]
 
     def read(self, partition: _FilesPartition) -> Iterator[tuple]:
-        cur_path, fh = None, None
-        try:
-            for z, x, y, path, size, off in partition.files:
-                if self.skip_blob:
-                    yield (z, x, y, path, size, None)
-                    continue
-                if path != cur_path:
-                    if fh is not None:
-                        fh.close()
-                    fh = open(path, "rb")
-                    cur_path = path
-                if off < 0:
-                    fh.seek(0)
-                    blob = fh.read()
-                else:
-                    fh.seek(off)
-                    blob = fh.read(size)
-                yield (z, x, y, path, len(blob), blob)
-        finally:
-            if fh is not None:
-                fh.close()
+        files = partition.files
+        if self.skip_blob:
+            for z, x, y, path, size, _off in files:
+                yield (z, x, y, path, size, None)
+            return
+        for (z, x, y, path, _size, _off), blob in zip(files, read_blobs(files)):
+            yield (z, x, y, path, len(blob), blob)
 
 
 @dataclass

@@ -167,8 +167,8 @@ def test_tileset_skip_blob_stats_only(registered, tileset):
 
 
 def test_read_tileset_decodes_tiles(registered, tileset):
-    """read_tileset: scan + pre-decode pushdown filter + blob decode in one
-    call, over MVT and OVT tile files."""
+    """read_tileset: listing + pre-decode filter + blob decode in one call,
+    over MVT and OVT tile files."""
     from pyspark.sql import functions as F
 
     from open_vector_tile_spark.operators import read_tileset
@@ -178,6 +178,84 @@ def test_read_tileset_decodes_tiles(registered, tileset):
     assert len(pdf) > 0
     assert (pdf["zoom"] == 2).all()
     assert pdf["layer"].nunique() >= 1
+
+
+def _sorted_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.mark.parametrize("zoom", [None, 2], ids=["all", "zoom2"])
+def test_read_tileset_matches_source_then_decode(registered, tileset, zoom):
+    """The one-pass read returns exactly the rows of the source scan fed to
+    decode_tiles, with and without a filter."""
+    from open_vector_tile_spark.operators import decode_tiles, read_tileset
+
+    tiles = registered.read.format("ovt_tileset").option("path", tileset.path).load()
+    where = None if zoom is None else F.col("zoom") == zoom
+    if where is not None:
+        tiles = tiles.filter(where)
+    want = _sorted_rows(decode_tiles(tiles.select("zoom", "tile_x", "tile_y", "tile")))
+    assert want
+    assert _sorted_rows(read_tileset(registered, tileset.path, where=where)) == want
+
+
+def test_read_tileset_any_predicate(registered, tileset):
+    """A predicate the source's pushFilters cannot absorb (arithmetic, OR)
+    still selects exactly the matching tiles before decode."""
+    from open_vector_tile_spark.operators import read_tileset
+
+    pred = (F.col("tile_x") % 2 == 0) | (F.col("zoom") == 0)
+    got = read_tileset(registered, tileset.path, where=pred)
+    want = read_tileset(registered, tileset.path).filter(pred)
+    rows = _sorted_rows(got)
+    assert rows and rows == _sorted_rows(want)
+    assert len(rows) < read_tileset(registered, tileset.path).count()
+
+
+def test_read_tileset_prunes_before_reading(registered, tileset, tmp_path):
+    """An entry the filter drops is never opened: a garbage z9 tile fails the
+    unfiltered read but not a zoom < 9 read."""
+    import shutil
+
+    from open_vector_tile_spark.operators import read_tileset
+
+    copy = str(tmp_path / "with_garbage")
+    shutil.copytree(tileset.path, copy)
+    with open(os.path.join(copy, "9_0_0.ovt"), "wb") as fh:
+        fh.write(b"not a tile")
+    want = read_tileset(registered, tileset.path).count()
+    assert read_tileset(registered, copy, where=F.col("zoom") < 9).count() == want
+    with pytest.raises(Exception, match="TileDecodeError"):
+        read_tileset(registered, copy).count()
+
+
+def test_read_tileset_width_follows_payload(registered, tileset):
+    """One task for a one-tile read, at most one wave for the full scan; the
+    source's default width is the same read_width of its matched bytes."""
+    from open_vector_tile_spark.operators import read_tileset
+    from open_vector_tile_spark.sources.tileset import (
+        OvtTilesetReader,
+        _list_tiles,
+        read_width,
+    )
+
+    entries = _list_tiles(tileset.path)
+    z, x, y = entries[0][:3]
+    one = (F.col("zoom") == z) & (F.col("tile_x") == x) & (F.col("tile_y") == y)
+    assert read_tileset(registered, tileset.path, where=one).rdd.getNumPartitions() == 1
+    full = read_tileset(registered, tileset.path).rdd.getNumPartitions()
+    assert 1 <= full <= registered.sparkContext.defaultParallelism
+    reader = OvtTilesetReader({"path": tileset.path})
+    want = min(read_width(sum(e[4] for e in entries)), len(entries))
+    assert len(reader.partitions()) == want
+
+
+def test_read_tileset_no_match_is_empty(registered, tileset):
+    from open_vector_tile_spark.operators import read_tileset
+
+    empty = read_tileset(registered, tileset.path, where=F.col("zoom") > 99)
+    assert empty.count() == 0
+    assert empty.schema == read_tileset(registered, tileset.path).schema
 
 
 def test_tileset_write_read_roundtrip(registered, tmp_path):

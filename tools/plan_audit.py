@@ -16,8 +16,6 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
@@ -42,6 +40,9 @@ def audit_plan(plan: str) -> dict:
 
 
 def main() -> int:
+    # audit the checkout this script lives in; done here, not at import, so
+    # a caller importing audit_plan keeps its own open_vector_tile_spark
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from open_vector_tile_spark.plans import get_spark
 
