@@ -1,10 +1,13 @@
 """Vectorized bulk encoder for the dominant tile shape: ONE layer of 2D
-single-point features with a flat pinned Shape.
+single-point features with a flat pinned Shape, for EVERY tile of a
+tile-sorted batch in one numpy pass.
 
 Byte-for-byte identical to the generic writer path (tile.write_ov_tile over
 BaseLayer/BaseFeature) — asserted by randomized equivalence tests — but
-assembled with numpy/pandas column operations instead of per-feature Python:
-~10-30x faster per tile at web scale where pages-as-points is the payload.
+assembled with numpy/pandas column operations instead of per-feature Python,
+so a tile costs a byte-slice join rather than ~25us per feature: the z10+
+regime, where millions of tiles hold a handful of features each, pays no
+per-tile numpy fixed cost.
 
 Replicated ordering contracts (reference: src/open/vectorLayer.ts:128-143,
 src/open/vectorFeature.ts:697-742, src/open/columnCache.ts:369-436):
@@ -19,7 +22,6 @@ src/open/vectorFeature.ts:697-742, src/open/columnCache.ts:369-436):
 
 from __future__ import annotations
 
-import struct
 from typing import Optional
 
 import numpy as np
@@ -42,213 +44,12 @@ def _varint_sizes(vals: np.ndarray) -> np.ndarray:
     return sizes
 
 
-def encode_point_layer_tile(
-    layer_name: str,
-    extent: int,
-    shape: dict,
-    prop_arrays: dict,
-    qx: np.ndarray,
-    qy: np.ndarray,
-    ids: Optional[np.ndarray] = None,
-) -> bytes:
-    """-> full tile bytes (layer message + column cache message)."""
-    n = len(qx)
-    keys = list(shape)
-
-    # ---- string column (insertion order) --------------------------------
-    # call order: layer name, shape keys, then per-feature string values in
-    # shape-key order; factorize over the exact sequence keeps first-occur order
-    string_parts: list[np.ndarray] = [np.array([layer_name] + keys, dtype=object)]
-    string_cols = [k for k in keys if shape[k] == "string"]
-    if string_cols:
-        # per-feature interleaved in shape order: stack columns then ravel rows
-        mat = np.empty((n, len(string_cols)), dtype=object)
-        for j, k in enumerate(string_cols):
-            col = prop_arrays[k]
-            mat[:, j] = np.where(pd.isna(col), "", col.astype(object))
-        string_parts.append(mat.ravel())
-    all_strings = np.concatenate(string_parts)
-    str_codes, str_uniques = pd.factorize(all_strings)
-    # indices for per-feature string values
-    pos = len(string_parts[0])
-    str_value_idx: dict[str, np.ndarray] = {}
-    if string_cols:
-        codes = str_codes[pos:].reshape(n, len(string_cols))
-        for j, k in enumerate(string_cols):
-            str_value_idx[k] = codes[:, j]
-    name_idx = int(str_codes[0])
-    key_idx = {k: int(str_codes[1 + i]) for i, k in enumerate(keys)}
-
-    # ---- number columns (two-phase index assignment) ---------------------
-    # insertion-order first-occurrence + reuse counts, then sort by
-    # (count desc, value asc) and remap to final indices
-    num_final_idx: dict[str, np.ndarray] = {}
-    num_sorted_values: dict[int, np.ndarray] = {}
-    by_col: dict[int, list[str]] = {}
-    for k in keys:
-        t = shape[k]
-        if t == "string":
-            continue
-        col_id = OColumn.unsigned if t in ("u64", "bool") else _PRIM_TO_COL[t]
-        by_col.setdefault(col_id, []).append(k)
-    for col_id, knames in by_col.items():
-        seq_parts = []
-        for k in knames:
-            arr = prop_arrays[k]
-            if shape[k] == "bool":
-                vals = np.where(pd.isna(arr), 0, arr.astype(object)).astype(np.int64)
-                vals = (vals != 0).astype(np.int64)
-            elif shape[k] in ("u64", "i64"):
-                vals = np.where(pd.isna(arr), 0, arr).astype(np.int64)
-            else:
-                # NOTE: f32 dedups on the raw double (generic add_number keys
-                # pre-truncation); truncation happens only at write time
-                vals = np.where(pd.isna(arr), 0.0, arr).astype(np.float64)
-            seq_parts.append(vals)
-        # interleave per feature in key order to match the generic call order
-        seq = np.stack(seq_parts, axis=1).ravel()
-        codes, uniques = pd.factorize(seq)  # first-occurrence order (= insertion)
-        counts = np.bincount(codes)
-        order = np.lexsort((uniques, -counts))  # count desc, value asc
-        final_of_insert = np.empty(len(uniques), dtype=np.int64)
-        final_of_insert[order] = np.arange(len(uniques))
-        codes2 = codes.reshape(n, len(knames))
-        for j, k in enumerate(knames):
-            num_final_idx[k] = final_of_insert[codes2[:, j]]
-        num_sorted_values[col_id] = uniques[order]
-
-    # ---- shapes column ----------------------------------------------------
-    # entry 0: shape program; entry 1: mShape {} program; then value stores
-    shape_prog = [(len(keys) << 2) | 1]
-    for k in keys:
-        shape_prog.append(key_idx[k])
-        shape_prog.append((_PRIM_TO_COL[shape[k]] << 2) | 2)
-    mshape_prog = [1]  # empty object: (0<<2)|1
-    # identical programs dedup to ONE shapes entry (generic add_column_data
-    # keys by content) — happens exactly when shape == {}
-    progs_dedup = shape_prog == mshape_prog
-    mshape_idx = 0 if progs_dedup else 1
-    store_base = 1 if progs_dedup else 2
-
-    # per-feature value store = tuple of per-key indices; dedup keyed on
-    # (col-identity, value-identity) per slot — distinct column spaces can
-    # share an int index without colliding, so fold col id into the key
-    slot_key_cols = []
-    slot_written_cols = []
-    for k in keys:
-        if shape[k] == "string":
-            kk = str_value_idx[k].astype(np.int64)
-            slot_key_cols.append(kk)  # string idx is identity AND written val
-            slot_written_cols.append(kk)
-        else:
-            written = num_final_idx[k]
-            # identity pre-sort is the value itself; (col,val) pairs are what
-            # the generic path keys on — use written idx + col tag (bijective
-            # with (col,value) after sorting)
-            col_id = OColumn.unsigned if shape[k] in ("u64", "bool") else _PRIM_TO_COL[shape[k]]
-            slot_key_cols.append(written.astype(np.int64) | (np.int64(col_id) << 56))
-            slot_written_cols.append(written.astype(np.int64))
-    if slot_key_cols:
-        key_mat = np.stack(slot_key_cols, axis=1)
-        # row-wise exact dedup, first-occurrence order (np.unique sorts, so
-        # re-rank unique ids by their first appearance)
-        _, first, inverse = np.unique(key_mat, axis=0, return_index=True, return_inverse=True)
-        occ_order = np.argsort(first, kind="stable")
-        rank = np.empty(len(first), dtype=np.int64)
-        rank[occ_order] = np.arange(len(first))
-        feature_value_idx = rank[inverse] + store_base  # after the shape program entries
-        written_mat = np.stack(slot_written_cols, axis=1)
-        unique_stores = list(written_mat[first[occ_order]])
-    else:
-        feature_value_idx = np.zeros(n, dtype=np.int64) + store_base
-        unique_stores = [np.empty(0, dtype=np.int64)]
-
-    # ---- feature blobs ----------------------------------------------------
-    geom_words = K.weave2d(K.zigzag(qx.astype(np.int64)), K.zigzag(qy.astype(np.int64)))
-    has_id = ids is not None
-    flags = np.int64((1 if has_id else 0) | (1 << 6))
-    field_cols = [np.full(n, 1, dtype=np.uint64), np.full(n, np.uint64(flags))]
-    if has_id:
-        field_cols.append(ids.astype(np.uint64))
-    field_cols.append(feature_value_idx.astype(np.uint64))
-    field_cols.append(geom_words.astype(np.uint64))
-    fields = np.stack(field_cols, axis=1)  # (n, 4|5)
-    sizes = _varint_sizes(fields)
-    blob_lens = sizes.sum(axis=1)
-    # header per feature: tag byte 0x22 (field 4, wire 2) + varint(blob_len)
-    header_lens = 1 + _varint_sizes(blob_lens)
-    # serialize: interleave [tag, len, fields...] per feature via one packed
-    # varint stream with the tag handled as a 1-byte varint (0x22 < 0x80)
-    stream = np.concatenate(
-        [
-            np.full((n, 1), 0x22, dtype=np.uint64),
-            blob_lens.astype(np.uint64)[:, None],
-            fields,
-        ],
-        axis=1,
-    ).ravel()
-    features_bytes = pack_varints(stream)
-
-    # ---- layer message ----------------------------------------------------
-    layer = PbfWriter()
-    layer.write_varint_field(1, 1)  # version
-    layer.write_varint_field(2, name_idx)
-    layer.write_varint_field(3, K.encode_extent(extent))
-    layer.write_varint_field(5, 0)  # shape program index
-    layer.write_varint_field(6, mshape_idx)
-    layer.buf += features_bytes
-    layer_body = layer.commit()
-
-    # ---- column cache message ---------------------------------------------
-    cache = PbfWriter()
-    for s in str_uniques:
-        cache.write_string_field(OColumn.string, str(s))
-    for col_id in (OColumn.unsigned, OColumn.signed, OColumn.float, OColumn.double):
-        vals = num_sorted_values.get(col_id)
-        if vals is None:
-            continue
-        if col_id == OColumn.unsigned:
-            for v in vals.tolist():
-                cache.write_varint_field(col_id, int(v))
-        elif col_id == OColumn.signed:
-            for v in vals.tolist():
-                cache.write_svarint_field(col_id, int(v))
-        elif col_id == OColumn.float:
-            for v in vals.tolist():
-                cache._tag(col_id, 5)
-                cache.buf += struct.pack("<f", v)
-        else:
-            for v in vals.tolist():
-                cache._tag(col_id, 1)
-                cache.buf += struct.pack("<d", v)
-    cache.write_packed_varint(OColumn.shapes, shape_prog)
-    if not progs_dedup:
-        cache.write_packed_varint(OColumn.shapes, mshape_prog)
-    for store in unique_stores:
-        cache.write_packed_varint(OColumn.shapes, store)
-    cache_body = cache.commit()
-
-    out = PbfWriter()
-    out.write_message(4, layer_body)
-    out.write_message(5, cache_body)
-    return out.commit()
-
-
-# ---------------------------------------------------------------------------
-# cross-tile bulk encoder
-# ---------------------------------------------------------------------------
-#
-# The single-tile encoder above pays ~90us of numpy fixed cost per tile —
-# ruinous in the z10+ regime where millions of tiles hold a handful of
-# features each.  This variant encodes EVERY tile of a tile-sorted batch in
-# one vectorized pass.  Core device: with rows sorted by tile, factorizing
-# the pair (tile_id, value) assigns group ids in first-occurrence order, and
-# because tiles are contiguous each tile's group ids occupy a contiguous
-# range — so the WITHIN-tile insertion index is `pair_code - base[tile]`
-# where base[t] = cumulative unique count of earlier tiles.  No per-row
-# Python anywhere; the only per-tile loop does byte-slice concatenation.
-# Byte-identity with the single-tile path (and hence the generic writer) is
-# asserted by randomized equivalence tests.
+# Core device: with rows sorted by tile, factorizing the pair (tile_id,
+# value) assigns group ids in first-occurrence order, and because tiles are
+# contiguous each tile's group ids occupy a contiguous range — so the
+# WITHIN-tile insertion index is `pair_code - base[tile]` where base[t] =
+# cumulative unique count of earlier tiles.  No per-row Python anywhere; the
+# only per-tile loop does byte-slice concatenation.
 
 
 def _tile_base(tid_of_unique: np.ndarray, n_tiles: int) -> np.ndarray:
@@ -294,7 +95,7 @@ def encode_point_layer_tiles_bulk(
 
     ``counts[t]`` = rows of tile t (rows contiguous per tile, t ascending in
     row order).  Returns a list of tile byte strings, each byte-identical to
-    :func:`encode_point_layer_tile` / the generic writer on the same rows.
+    the generic writer (``operators.tiler._encode_rows``) on the same rows.
     """
     n = len(qx)
     keys = list(shape)
@@ -380,8 +181,9 @@ def encode_point_layer_tiles_bulk(
             elif shape[k] in ("u64", "i64"):
                 v = np.where(pd.isna(arr), 0, arr).astype(np.int64)
             else:
-                # f32 dedups on the raw double; truncation only at write time
-                v = np.where(pd.isna(arr), 0.0, arr).astype(np.float64)
+                # f32 dedups on the raw double; truncation only at write time.
+                # + 0.0 turns -0.0 into +0.0, as the generic float(value or 0)
+                v = np.where(pd.isna(arr), 0.0, arr).astype(np.float64) + 0.0
             seq_parts.append(v)
         seq = np.stack(seq_parts, axis=1).ravel()
         stid = np.repeat(row_tid, len(knames))

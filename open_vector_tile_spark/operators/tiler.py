@@ -1,9 +1,9 @@
 """Tile materialization: normalized feature rows -> OVT tile bytes.
 
 Spark tracing (SURVEY §3.2): feature DataFrame -> ``repartition(zoom, tile_x,
-tile_y)`` (the rule-pinned shuffle key) -> ``groupBy(...).applyInPandas
-(encode_tile)`` (JVM->Python Arrow boundary) -> ``(zoom, x, y, tile, n_features,
-n_bytes)`` rows for the tiles table sink.
+tile_y)`` (the rule-pinned shuffle key) -> one ``mapInPandas`` walk over the
+sorted runs of that key (JVM->Python Arrow boundary, ``_encode_sorted_runs``)
+-> ``(zoom, x, y, tile, n_features, n_bytes)`` rows for the tiles table sink.
 
 The per-tile encoder builds the write-side IR (codec.BaseLayer/BaseFeature)
 and emits bytes with the byte-exact codec — all reference ordering rules
@@ -166,11 +166,14 @@ def _encode_rows(
     return tile_bytes, len(rows)
 
 
-def _arrange_for_encode(features, partitions, key, sort_cols):
+_TILE_KEY = ["zoom", "tile_x", "tile_y"]
+
+
+def _arrange_for_encode(features, partitions, sort_cols):
     """Shuffle features onto the tile key with a width that keeps the
     (Python-heavy) encode stage parallel.
 
-    ``partitions=None`` used to fall through to ``repartition(*key)`` —
+    ``partitions=None`` used to fall through to ``repartition(*_TILE_KEY)`` —
     spark.sql.shuffle.partitions wide, which AQE then coalesces BY BYTES
     (parallelismFirst's 1 MB floor).  Encoded features are a few hundred
     bytes each but cost ~25 us of Python per feature, so byte-based
@@ -190,7 +193,59 @@ def _arrange_for_encode(features, partitions, key, sort_cols):
     nothing from more tasks."""
     if not partitions:
         partitions = features.sparkSession.sparkContext.defaultParallelism
-    return features.repartition(partitions, *key).sortWithinPartitions(*sort_cols)
+    return features.repartition(partitions, *_TILE_KEY).sortWithinPartitions(*sort_cols)
+
+
+def _encode_sorted_runs(arranged: DataFrame, encode_runs) -> DataFrame:
+    """Tile-sorted rows (:func:`_arrange_for_encode`) -> tiles (TILE_SCHEMA),
+    with ONE Python call per Arrow batch (``mapInPandas``).
+
+    ``encode_runs(batch, starts, ends)`` returns the bytes of the tiles whose
+    rows are ``batch[starts[i]:ends[i]]``, one per run of the tile key.  A
+    batch's last run may continue into the next batch, so it is carried over
+    and encoded with the batch that closes it (or at the end of the
+    partition).  This beats ``groupBy().applyInPandas`` by ~8x when tiles
+    are small (64k tiny groups = 64k pandas DataFrame constructions vs one
+    per 10k-row batch)."""
+
+    def emit(done: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
+        starts, ends = bounds[:-1], bounds[1:]
+        tiles = encode_runs(done, starts, ends)
+        out = {k: done[k].to_numpy()[starts] for k in _TILE_KEY}
+        return pd.DataFrame(
+            {**out, "tile": tiles, "n_features": ends - starts, "n_bytes": [len(t) for t in tiles]}
+        )
+
+    def run_starts(pdf: pd.DataFrame) -> np.ndarray:
+        zs, xs, ys = (pdf[k].to_numpy() for k in _TILE_KEY)
+        change = np.flatnonzero((zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1]))
+        return np.concatenate([[0], change + 1])
+
+    def joined(frames: list) -> pd.DataFrame:
+        # an int64 column meeting a float64 one (a batch with nulls) would
+        # round longs past 2**53: join those columns as objects
+        mixed = {c: object for c in frames[0].columns if len({f[c].dtype for f in frames}) > 1}
+        return pd.concat([f.astype(mixed) for f in frames] if mixed else frames, ignore_index=True)
+
+    def run(batches: Iterable[pd.DataFrame]):
+        # rows not yet encoded; a batch of one tile key is only appended, so
+        # a tile spanning many batches is joined once, when its run closes
+        pending: list = []
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            pending.append(pdf)
+            if len(run_starts(pdf)) == 1:
+                continue
+            pdf = joined(pending)
+            bounds = run_starts(pdf)
+            yield emit(pdf.iloc[: bounds[-1]], bounds)
+            pending = [pdf.iloc[bounds[-1] :]]  # the last run may go on
+        if pending:
+            pdf = joined(pending)
+            yield emit(pdf, np.append(run_starts(pdf), len(pdf)))
+
+    return arranged.mapInPandas(run, TILE_SCHEMA)
 
 
 def encode_tiles(
@@ -203,85 +258,30 @@ def encode_tiles(
     """features (FEATURE_SCHEMA) -> tiles (TILE_SCHEMA).
 
     One shuffle keyed on (zoom, tile_x, tile_y) via repartition +
-    sortWithinPartitions, then ONE Python call per Arrow batch
-    (``mapInPandas``) that walks sorted runs of the tile key — groups that
-    span batch boundaries are carried over.  This beats
-    ``groupBy().applyInPandas`` by ~8x when tiles are small (64k tiny groups
-    = 64k pandas DataFrame constructions vs one per 10k-row batch).
+    sortWithinPartitions, then the generic writer (:func:`_encode_rows`) on
+    each sorted run of the tile key (:func:`_encode_sorted_runs`).
     """
-    key = ["zoom", "tile_x", "tile_y"]
     # stable within-tile order: shuffle arrival order is not guaranteed, and
     # tile bytes depend on feature order — sort by id when the caller ships
     # one (byte-deterministic output across runs/cluster sizes)
-    sort_cols = key + (["id"] if "id" in features.columns else [])
+    sort_cols = _TILE_KEY + (["id"] if "id" in features.columns else [])
+    arranged = _arrange_for_encode(features, partitions, sort_cols)
+    optional = [
+        "id", "ring_lens", "poly_lens", "offsets", "bbox",
+        "indices", "tess_xy", "props_json", "mvals_json",
+    ]
 
-    arranged = _arrange_for_encode(features, partitions, key, sort_cols)
-
-    def encode_partition(batches: Iterable[pd.DataFrame]):
-        pending_key: Optional[tuple] = None
-        pending_rows: list[dict] = []
-        out_keys: list[tuple] = []
-        out_tiles: list[bytes] = []
-        out_counts: list[int] = []
-
-        def flush():
-            if pending_rows:
-                tile_bytes, n = _encode_rows(pending_rows, specs, tile_format, mapbox_support)
-                out_keys.append(pending_key)
-                out_tiles.append(tile_bytes)
-                out_counts.append(n)
-
-        def emit() -> pd.DataFrame:
-            pdf = pd.DataFrame(
-                {
-                    "zoom": [k[0] for k in out_keys],
-                    "tile_x": [k[1] for k in out_keys],
-                    "tile_y": [k[2] for k in out_keys],
-                    "tile": out_tiles,
-                    "n_features": out_counts,
-                    "n_bytes": [len(t) for t in out_tiles],
-                }
-            )
-            out_keys.clear()
-            out_tiles.clear()
-            out_counts.clear()
-            return pdf
-
-        optional = [
-            "id", "ring_lens", "poly_lens", "offsets", "bbox",
-            "indices", "tess_xy", "props_json", "mvals_json",
+    def encode_runs(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray) -> list:
+        # drop all-null optional columns before row conversion (halves
+        # the Arrow->PyObject cost for the common point-layer case)
+        dead = [c for c in optional if c in pdf.columns and pdf[c].isna().all()]
+        records = (pdf.drop(columns=dead) if dead else pdf).to_dict("records")
+        return [
+            _encode_rows(records[s:e], specs, tile_format, mapbox_support)[0]
+            for s, e in zip(starts.tolist(), ends.tolist())
         ]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # drop all-null optional columns before row conversion (halves
-            # the Arrow->PyObject cost for the common point-layer case)
-            dead = [c for c in optional if c in pdf.columns and pdf[c].isna().all()]
-            records = (pdf.drop(columns=dead) if dead else pdf).to_dict("records")
-            zs = pdf["zoom"].to_numpy()
-            xs = pdf["tile_x"].to_numpy()
-            ys = pdf["tile_y"].to_numpy()
-            # run boundaries within the sorted batch
-            change = np.flatnonzero(
-                (zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
-            )
-            starts = np.concatenate([[0], change + 1])
-            ends = np.concatenate([change + 1, [len(records)]])
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                k = (int(zs[s]), int(xs[s]), int(ys[s]))
-                if k != pending_key:
-                    flush()
-                    pending_key = k
-                    pending_rows = records[s:e]
-                else:
-                    pending_rows.extend(records[s:e])
-            if out_keys:
-                yield emit()
-        flush()
-        if out_keys:
-            yield emit()
 
-    return arranged.mapInPandas(encode_partition, TILE_SCHEMA)
+    return _encode_sorted_runs(arranged, encode_runs)
 
 
 def encode_point_tiles(
@@ -291,95 +291,52 @@ def encode_point_tiles(
 ) -> DataFrame:
     """Bulk path for uniform single-point layers (the 100 TB pages payload):
     consumes the fully-columnar output of :func:`points_to_features_columnar`
-    and encodes ALL tiles of each Arrow batch in ONE numpy pass with the
-    cross-tile byte-exact writer (codec.fast_points.
-    encode_point_layer_tiles_bulk) — the per-tile fixed cost that dominated
-    the z10+ tiny-tile regime (~90us/tile single-tile numpy, ~25us/feature
-    generic) collapses to a byte-slice join per tile.  No per-row pandas
-    access anywhere.
+    and encodes ALL complete tiles of each Arrow batch in ONE numpy call of
+    the cross-tile byte-exact writer (codec.fast_points.
+    encode_point_layer_tiles_bulk), whose per-tile work is a byte-slice join
+    — against ~25us/feature for the generic writer in :func:`encode_tiles`.
+    No per-row pandas access anywhere.
     """
     from ..codec.fast_points import encode_point_layer_tiles_bulk
 
     layer = meta["layer"]
     extent = meta["extent"]
-    spec = meta["specs"][layer]
-    shape = dict(spec.shape or {})
-    specs = meta["specs"]
-    key = ["zoom", "tile_x", "tile_y"]
-    sort_cols = key + (["id"] if "id" in features.columns else [])
-    arranged = _arrange_for_encode(features, partitions, key, sort_cols)
-    prop_keys = list(shape)
+    shape = dict(meta["specs"][layer].shape or {})
+    sort_cols = _TILE_KEY + (["id"] if "id" in features.columns else [])
+    arranged = _arrange_for_encode(features, partitions, sort_cols)
 
-    def encode_partition(batches: Iterable[pd.DataFrame]):
-        pending: Optional[dict] = None  # dict of numpy arrays
+    def encode_runs(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray) -> list:
+        tiles = encode_point_layer_tiles_bulk(
+            layer,
+            extent,
+            shape,
+            {k: pdf[f"p_{k}"].to_numpy() for k in shape},
+            pdf["qx"].to_numpy(),
+            pdf["qy"].to_numpy(),
+            ends - starts,
+            ids=pdf["id"].to_numpy() if "id" in pdf.columns else None,
+        )
+        return [bytes(t) for t in tiles]
 
-        def batch_arrays(pdf: pd.DataFrame) -> dict:
-            out = {
-                "zoom": pdf["zoom"].to_numpy(),
-                "tile_x": pdf["tile_x"].to_numpy(),
-                "tile_y": pdf["tile_y"].to_numpy(),
-                "qx": pdf["qx"].to_numpy(),
-                "qy": pdf["qy"].to_numpy(),
-            }
-            if "id" in pdf.columns:
-                out["id"] = pdf["id"].to_numpy()
-            for k in prop_keys:
-                out[k] = pdf[f"p_{k}"].to_numpy()
-            return out
+    return _encode_sorted_runs(arranged, encode_runs)
 
-        def concat(a: dict, b: dict) -> dict:
-            return {k: np.concatenate([a[k], b[k]]) for k in a}
 
-        def encode_runs(arrs: dict, starts: np.ndarray, ends: np.ndarray) -> pd.DataFrame:
-            counts = ends - starts
-            hi = int(ends[-1])
-            tiles = encode_point_layer_tiles_bulk(
-                layer,
-                extent,
-                shape,
-                {k: arrs[k][:hi] for k in prop_keys},
-                arrs["qx"][:hi],
-                arrs["qy"][:hi],
-                counts,
-                ids=arrs["id"][:hi] if "id" in arrs else None,
-            )
-            return pd.DataFrame(
-                {
-                    "zoom": arrs["zoom"][starts],
-                    "tile_x": arrs["tile_x"][starts],
-                    "tile_y": arrs["tile_y"][starts],
-                    "tile": [bytes(t) for t in tiles],
-                    "n_features": counts,
-                    "n_bytes": [len(t) for t in tiles],
-                }
-            )
+def _project_points(lon: str, lat: str, zoom: int, extent: int) -> tuple:
+    """(tile_x, tile_y, qx, qy) columns of lon/lat points at a literal zoom.
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            arrs = batch_arrays(pdf)
-            if pending is not None:
-                arrs = concat(pending, arrs)
-                pending = None
-            zs, xs, ys = arrs["zoom"], arrs["tile_x"], arrs["tile_y"]
-            change = np.flatnonzero(
-                (zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
-            )
-            if len(change) == 0:
-                pending = arrs  # whole batch is one (possibly continuing) tile
-                continue
-            starts = np.concatenate([[0], change + 1])
-            ends = np.concatenate([change + 1, [len(zs)]])
-            # last run may continue into the next batch: carry it over
-            pending = {k: v[starts[-1] :] for k, v in arrs.items()}
-            yield encode_runs(arrs, starts[:-1], ends[:-1])
-        if pending is not None and len(pending["zoom"]):
-            n_last = len(pending["zoom"])
-            yield encode_runs(
-                pending, np.array([0], dtype=np.int64), np.array([n_last], dtype=np.int64)
-            )
+    All math is column-expression (JVM): mercator projection, tile
+    assignment, extent quantization (P13: round(p*extent), JS half-up
+    rounding)."""
+    from ..functions.geo import merc_x_col, merc_y_col
 
-    return arranged.mapInPandas(encode_partition, TILE_SCHEMA)
+    n = float(1 << zoom)
+    mx = merc_x_col(F.col(lon)) * F.lit(n)
+    my = merc_y_col(F.col(lat)) * F.lit(n)
+    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(mx))).cast("long")
+    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(my))).cast("long")
+    qx = F.floor((mx - tx) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
+    qy = F.floor((my - ty) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
+    return tx, ty, qx, qy
 
 
 def points_to_features(
@@ -392,20 +349,9 @@ def points_to_features(
     id_col: Optional[str] = None,
     props_cols: Optional[Iterable[str]] = None,
 ) -> DataFrame:
-    """Point rows -> feature rows for ``encode_tiles``.
-
-    All math is column-expression (JVM): mercator projection, tile assignment,
-    extent quantization (P13: round(p*extent), JS half-up rounding).
-    """
-    from ..functions.geo import merc_x_col, merc_y_col
-
-    n = float(1 << zoom)
-    mx = merc_x_col(F.col(lon)) * F.lit(n)
-    my = merc_y_col(F.col(lat)) * F.lit(n)
-    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(mx))).cast("long")
-    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(my))).cast("long")
-    qx = F.floor((mx - tx) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    qy = F.floor((my - ty) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
+    """Point rows -> feature rows for ``encode_tiles`` (JVM-side projection:
+    :func:`_project_points`)."""
+    tx, ty, qx, qy = _project_points(lon, lat, zoom, extent)
     cols = [
         F.lit(zoom).alias("zoom"),
         tx.alias("tile_x"),
@@ -493,15 +439,7 @@ def points3d_to_features(
     """3D point rows -> type-4 feature rows (z quantized by ``z_scale`` with
     the same JS half-up rounding as x/y; reference 3D types
     src/vectorTile.spec.ts:29-35)."""
-    from ..functions.geo import merc_x_col, merc_y_col
-
-    n = float(1 << zoom)
-    mx = merc_x_col(F.col(lon)) * F.lit(n)
-    my = merc_y_col(F.col(lat)) * F.lit(n)
-    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(mx))).cast("long")
-    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(my))).cast("long")
-    qx = F.floor((mx - tx) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    qy = F.floor((my - ty) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
+    tx, ty, qx, qy = _project_points(lon, lat, zoom, extent)
     qz = F.floor(F.col(z) * F.lit(z_scale) + F.lit(0.5)).cast("int")
     cols = [
         F.lit(zoom).alias("zoom"),
@@ -544,16 +482,8 @@ def points_to_features_columnar(
     """Fully-columnar point featurization for the bulk encoder: emits
     (qx, qy[, id][, p_<prop>...]) typed columns instead of geom arrays /
     props JSON, plus the derived LayerSpec dict to pass to
-    ``encode_tiles(fast=True)``.  Shape is pinned from the Spark schema."""
-    from ..functions.geo import merc_x_col, merc_y_col
-
-    n = float(1 << zoom)
-    mx = merc_x_col(F.col(lon)) * F.lit(n)
-    my = merc_y_col(F.col(lat)) * F.lit(n)
-    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(mx))).cast("long")
-    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(my))).cast("long")
-    qx = F.floor((mx - tx) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    qy = F.floor((my - ty) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
+    :func:`encode_point_tiles`.  Shape is pinned from the Spark schema."""
+    tx, ty, qx, qy = _project_points(lon, lat, zoom, extent)
     cols = [
         F.lit(zoom).alias("zoom"),
         tx.alias("tile_x"),
@@ -1469,7 +1399,6 @@ def s2json_tiles_to_ovt(
     measured 2.9 s -> 1.4 s on the sf0.1 s2json_roundtrip chain."""
     import json as _json
 
-    from ..codec import write_ov_tile
     from ..codec.s2json import s2json_to_base_layers
 
     tiles = fan_out(tiles, chunk=16 * 1024)
@@ -1498,66 +1427,23 @@ def images_to_tiles(images: DataFrame) -> DataFrame:
     -> one OVT tile per key carrying the image layer(s) (S10 passthrough,
     src/open/imageLayer.ts:94-104).
 
-    Same sorted-run ``mapInPandas`` shape as :func:`encode_tiles` (one
-    Python call per Arrow batch walking key runs, groups spanning batches
-    carried over) instead of per-tiny-group ``applyInPandas`` — the ledger
-    measured that anti-pattern at 3.6x for small groups.  Sorting by
-    (key, name, image) makes tile bytes order-independent of shuffle
-    arrival: the image bytes break ties between same-named rows within one
-    tile (binary sorts lexicographically JVM-side), so identical input
-    always packs in one order."""
-    from ..codec import write_ov_tile as _write
+    The same shuffle width (:func:`_arrange_for_encode`) and sorted-run walk
+    (:func:`_encode_sorted_runs`) as :func:`encode_tiles`, with
+    ``write_ov_tile(None, images=...)`` per run.  Sorting by (key, name,
+    image) makes tile bytes order-independent of shuffle arrival: the image
+    bytes break ties between same-named rows within one tile (binary sorts
+    lexicographically JVM-side), so identical input always packs in one
+    order."""
+    arranged = _arrange_for_encode(images, None, _TILE_KEY + ["name", "image"])
 
-    arranged = images.repartition("zoom", "tile_x", "tile_y").sortWithinPartitions(
-        "zoom", "tile_x", "tile_y", "name", "image"
-    )
-
-    def encode_partition(batches: Iterable[pd.DataFrame]):
-        pending_key: Optional[tuple] = None
-        pending: list[dict] = []
-        out: list[tuple] = []
-
-        def flush():
-            if pending:
-                tile = _write(None, images=pending)
-                out.append((*pending_key, tile, len(pending), len(tile)))
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            zs = pdf["zoom"].to_numpy()
-            xs = pdf["tile_x"].to_numpy()
-            ys = pdf["tile_y"].to_numpy()
-            imgs = [
-                {"name": nm, "type": tp, "width": int(w), "height": int(hh),
-                 "image": bytes(im)}
-                for nm, tp, w, hh, im in zip(
-                    pdf["name"].tolist(), pdf["type"].tolist(), pdf["width"].tolist(),
-                    pdf["height"].tolist(), pdf["image"].tolist(),
-                )
-            ]
-            change = np.flatnonzero(
-                (zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
+    def encode_runs(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray) -> list:
+        imgs = [
+            {"name": nm, "type": tp, "width": int(w), "height": int(hh), "image": bytes(im)}
+            for nm, tp, w, hh, im in zip(
+                pdf["name"].tolist(), pdf["type"].tolist(), pdf["width"].tolist(),
+                pdf["height"].tolist(), pdf["image"].tolist(),
             )
-            starts = np.concatenate([[0], change + 1])
-            ends = np.concatenate([change + 1, [len(imgs)]])
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                k = (int(zs[s]), int(xs[s]), int(ys[s]))
-                if k != pending_key:
-                    flush()
-                    pending_key = k
-                    pending = imgs[s:e]
-                else:
-                    pending.extend(imgs[s:e])
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["zoom", "tile_x", "tile_y", "tile", "n_features", "n_bytes"]
-                )
-                out = []
-        flush()
-        if out:
-            yield pd.DataFrame(
-                out, columns=["zoom", "tile_x", "tile_y", "tile", "n_features", "n_bytes"]
-            )
+        ]
+        return [write_ov_tile(None, images=imgs[s:e]) for s, e in zip(starts.tolist(), ends.tolist())]
 
-    return arranged.mapInPandas(encode_partition, TILE_SCHEMA)
+    return _encode_sorted_runs(arranged, encode_runs)

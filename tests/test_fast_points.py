@@ -1,5 +1,6 @@
 """Byte-equivalence of the vectorized bulk point encoder vs the generic
-writer path, on randomized inputs (the contract is byte-for-byte identity)."""
+writer path, on randomized inputs (the contract is byte-for-byte identity),
+and the tile sink's sorted-run walk across Arrow batches."""
 
 import json
 
@@ -8,7 +9,7 @@ import pandas as pd
 import pytest
 
 from open_vector_tile_spark.codec import VectorTile
-from open_vector_tile_spark.codec.fast_points import encode_point_layer_tile
+from open_vector_tile_spark.codec.fast_points import encode_point_layer_tiles_bulk
 from open_vector_tile_spark.operators.tiler import LayerSpec, _encode_rows
 
 
@@ -52,10 +53,10 @@ def test_fast_equals_generic_random(seed, with_ids):
         for i in range(n)
     ]
     want = generic_bytes("pages", 4096, shape, props_rows, qx, qy, ids)
-    got = encode_point_layer_tile(
+    (got,) = encode_point_layer_tiles_bulk(
         "pages", 4096, shape,
         {"url": urls, "lang": langs, "rank": ranks, "score": scores, "ok": oks},
-        qx, qy, ids=ids,
+        qx, qy, [n], ids=ids,
     )
     assert got == want, f"n={n} first diff at {next((i for i,(a,b) in enumerate(zip(got,want)) if a!=b), 'len')}"
 
@@ -65,8 +66,8 @@ def test_fast_decodes_correctly():
     qx = np.arange(n) * 10 % 4096
     qy = np.arange(n) * 17 % 4096
     urls = np.array([f"u{i%7}" for i in range(n)], dtype=object)
-    tile = encode_point_layer_tile(
-        "pages", 4096, {"url": "string"}, {"url": urls}, qx, qy
+    (tile,) = encode_point_layer_tiles_bulk(
+        "pages", 4096, {"url": "string"}, {"url": urls}, qx, qy, [n]
     )
     parsed = VectorTile(tile)
     layer = parsed.layers["pages"]
@@ -80,7 +81,7 @@ def test_fast_decodes_correctly():
 def test_fast_empty_shape():
     n = 10
     qx = np.arange(n); qy = np.arange(n)
-    got = encode_point_layer_tile("l", 512, {}, {}, qx, qy)
+    (got,) = encode_point_layer_tiles_bulk("l", 512, {}, {}, qx, qy, [n])
     want = generic_bytes("l", 512, {}, [{} for _ in range(n)], qx, qy)
     assert got == want
 
@@ -120,10 +121,9 @@ def test_encode_point_tiles_spark_equals_generic(spark):
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_bulk_cross_tile_equals_single_tile(seed):
-    """Cross-tile bulk encoder: every tile byte-identical to the single-tile
-    encoder (itself byte-identical to the generic writer, above)."""
-    from open_vector_tile_spark.codec.fast_points import encode_point_layer_tiles_bulk
-
+    """Cross-tile bulk encoder: every tile byte-identical to the generic
+    writer on that tile's rows alone, -0.0 floats included (the generic
+    writer stores them as +0.0)."""
     rng = np.random.RandomState(seed)
     shape = {"name": "string", "rank": "u64", "score": "f64", "delta": "i64",
              "ok": "bool", "temp": "f32"}
@@ -139,6 +139,8 @@ def test_bulk_cross_tile_equals_single_tile(seed):
             "ok": rng.randint(0, 2, n).astype(np.int64),
             "temp": np.round(rng.randn(n).astype(np.float64), 1),
         }
+        props["score"][::7] = -0.0
+        props["temp"][3::7] = -0.0
         qx = rng.randint(0, 4096, n)
         qy = rng.randint(0, 4096, n)
         ids = np.arange(n, dtype=np.int64) if trial % 2 else None
@@ -148,9 +150,12 @@ def test_bulk_cross_tile_equals_single_tile(seed):
         s = 0
         for t, c in enumerate(counts):
             e = s + int(c)
-            single = encode_point_layer_tile(
-                "pages", 4096, shape,
-                {k: v[s:e] for k, v in props.items()}, qx[s:e], qy[s:e],
+            rows = [
+                {k: v[i].item() if k != "name" else v[i] for k, v in props.items()}
+                for i in range(s, e)
+            ]
+            single = generic_bytes(
+                "pages", 4096, shape, rows, qx[s:e], qy[s:e],
                 ids=ids[s:e] if ids is not None else None,
             )
             assert bulk[t] == single, f"trial {trial} tile {t}"
@@ -187,3 +192,106 @@ def test_encode_point_tiles_tiny_tile_regime(spark):
     }
     assert set(fast) == set(generic) and len(fast) > 500
     assert all(fast[k] == generic[k] for k in fast)
+
+
+def _carry_inputs(spark, encoder):
+    """A builder of one encoder's tiles frame, over inputs whose tiles hold
+    more than 3 rows."""
+    from open_vector_tile_spark.functions.text import geoparse
+    from open_vector_tile_spark.operators import (
+        encode_point_tiles,
+        encode_tiles,
+        images_to_tiles,
+        points_to_features,
+        points_to_features_columnar,
+    )
+    from open_vector_tile_spark.sources import pages_pdf
+
+    if encoder == "images_to_tiles":
+        rows = [
+            (4, k % 3, k // 3, f"band{b}", "raw", 4, 4, bytes([k, b]) * 8)
+            for k in range(6)
+            for b in range(5)
+        ]
+        images = spark.createDataFrame(
+            rows, "zoom int, tile_x long, tile_y long, name string, type string, "
+            "width int, height int, image binary",
+        )
+        return lambda: images_to_tiles(images)
+    # warc_ts is distinct per page: an id pins the order within each tile
+    pts = geoparse(spark.createDataFrame(pages_pdf(300)))
+    if encoder == "encode_tiles":
+        feats = points_to_features(pts, zoom=3, layer="pages", id_col="warc_ts", props_cols=["url"])
+        return lambda: encode_tiles(feats)
+    feats, meta = points_to_features_columnar(
+        pts, zoom=3, layer="pages", id_col="warc_ts", props_cols=["url", "lang"]
+    )
+    return lambda: encode_point_tiles(feats, meta)
+
+
+@pytest.mark.parametrize("encoder", ["encode_tiles", "encode_point_tiles", "images_to_tiles"])
+def test_tile_runs_carry_over_arrow_batches(spark, encoder):
+    """Tiles whose rows span Arrow batches (3 rows per batch) encode once,
+    with the bytes and feature count of a run at the session default."""
+    build = _carry_inputs(spark, encoder)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def tiles() -> dict:
+        got = build().collect()
+        keys = [(r["zoom"], r["tile_x"], r["tile_y"]) for r in got]
+        assert len(keys) == len(set(keys))
+        return {k: (bytes(r["tile"]), r["n_features"]) for k, r in zip(keys, got)}
+
+    want = tiles()
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = tiles()
+    finally:
+        spark.conf.set(conf, old)
+    assert sum(n > 3 for _, n in want.values()) >= 3
+    assert got == want
+
+
+def test_encode_point_tiles_negative_zero_equals_generic(spark):
+    """A Spark double -0.0 reaches the bulk path through Arrow and the
+    generic path through to_json; both store +0.0."""
+    from open_vector_tile_spark.operators import (
+        encode_point_tiles,
+        encode_tiles,
+        points_to_features,
+        points_to_features_columnar,
+    )
+
+    pts = spark.createDataFrame(
+        [(float(i), float(i) / 2, -0.0 if i % 2 else 1.5) for i in range(12)],
+        "lon double, lat double, score double",
+    )
+    feats, meta = points_to_features_columnar(pts, zoom=0, layer="p", props_cols=["score"])
+    fast = [bytes(r["tile"]) for r in encode_point_tiles(feats, meta).collect()]
+    generic_feats = points_to_features(pts, zoom=0, layer="p", props_cols=["score"])
+    generic = [bytes(r["tile"]) for r in encode_tiles(generic_feats, meta["specs"]).collect()]
+    assert len(fast) == 1 and fast == generic
+
+
+def test_carry_over_keeps_long_ids_next_to_null_ids(spark):
+    """Arrow hands a batch with a null long to pandas as float64: a run
+    carried from such a batch must not round the next batch's ids."""
+    from open_vector_tile_spark.operators import encode_tiles, points_to_features
+
+    big = [(1 << 60) + 2 * i + 1 for i in range(4)]  # not exact in float64
+    pts = spark.createDataFrame(
+        [(None, 1.0, 1.0), (None, 2.0, 2.0)] + [(b, 3.0, 3.0) for b in big],
+        "doc_id long, lon double, lat double",
+    )
+    feats = points_to_features(pts, zoom=0, layer="p", id_col="doc_id")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")  # [null, null, big0] then [big1, big2, big3]
+    try:
+        (row,) = encode_tiles(feats).collect()
+    finally:
+        spark.conf.set(conf, old)
+    layer = VectorTile(bytes(row["tile"])).layers["p"]
+    ids = {layer.feature(i).id for i in range(len(layer))}
+    assert set(big[1:]) <= ids

@@ -5,16 +5,14 @@ count, column names, and order-insensitive value hash."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as entry  # noqa: E402
-
-SF = __import__("os").environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -37,6 +35,9 @@ def _norm(v) -> str:
 
 
 def main() -> int:
+    # check the checkout this script lives in, wherever it was exported to
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
     from open_vector_tile_spark.plans import get_spark
 
     spark = get_spark("oracle-check", cores=8, shuffle_partitions=16)
