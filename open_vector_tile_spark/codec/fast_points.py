@@ -94,8 +94,10 @@ def encode_point_layer_tiles_bulk(
     """Encode ALL tiles of a tile-sorted batch in one numpy pass.
 
     ``counts[t]`` = rows of tile t (rows contiguous per tile, t ascending in
-    row order).  Returns a list of tile byte strings, each byte-identical to
-    the generic writer (``operators.tiler._encode_rows``) on the same rows.
+    row order).  ``ids`` are per-row feature ids (or None for none); a null
+    one writes no id.  Returns a list of tile byte strings, each
+    byte-identical to the generic writer (``operators.tiler._encode_rows``)
+    on the same rows.
     """
     n = len(qx)
     keys = list(shape)
@@ -293,14 +295,22 @@ def encode_point_layer_tiles_bulk(
     # ---- feature blobs ------------------------------------------------------
     geom_words = K.weave2d(K.zigzag(qx.astype(np.int64)), K.zigzag(qy.astype(np.int64)))
     has_id = ids is not None
-    flags = np.int64((1 if has_id else 0) | (1 << 6))
-    field_cols = [np.full(n, 1, dtype=np.uint64), np.full(n, np.uint64(flags))]
+    flags = np.full(n, np.uint64(1 << 6))
     if has_id:
-        field_cols.append(ids.astype(np.uint64))
+        # a null id (None/NaN) writes no id and clears flag bit 0, as the
+        # generic writer does; negative longs carry u64 ids (two's complement)
+        present = pd.notna(ids)
+        flags |= present.astype(np.uint64)
+        ids = np.where(present, ids, 0).astype(np.int64).astype(np.uint64)
+    field_cols = [np.full(n, 1, dtype=np.uint64), flags]
+    if has_id:
+        field_cols.append(ids)
     field_cols.append(feature_value_idx.astype(np.uint64))
     field_cols.append(geom_words.astype(np.uint64))
     fields = np.stack(field_cols, axis=1)
     sizes = _varint_sizes(fields)
+    if has_id:
+        sizes[:, 2] *= present
     blob_lens = sizes.sum(axis=1)
     feat_stream = np.concatenate(
         [
@@ -310,6 +320,10 @@ def encode_point_layer_tiles_bulk(
         ],
         axis=1,
     )
+    if has_id and not present.all():
+        keep = np.ones(feat_stream.shape, dtype=bool)
+        keep[:, 4] = present  # the id column: tag, length, type, flags, id
+        feat_stream = feat_stream[keep]
     feat_sizes = 1 + _varint_sizes(blob_lens) + blob_lens
     feat_packed = pack_varints(feat_stream.ravel())
     feat_bytes = _split_bytes(feat_packed, feat_sizes, row_tid, n_tiles)

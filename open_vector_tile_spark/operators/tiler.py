@@ -235,8 +235,8 @@ def _encode_sorted_runs(arranged: DataFrame, encode_runs) -> DataFrame:
             if len(pdf) == 0:
                 continue
             pending.append(pdf)
-            if len(run_starts(pdf)) == 1:
-                continue
+            if all(pdf[k].iat[0] == pdf[k].iat[-1] for k in _TILE_KEY):
+                continue  # sorted on the key, so one key: the run goes on
             pdf = joined(pending)
             bounds = run_starts(pdf)
             yield emit(pdf.iloc[: bounds[-1]], bounds)
@@ -1427,14 +1427,16 @@ def images_to_tiles(images: DataFrame) -> DataFrame:
     -> one OVT tile per key carrying the image layer(s) (S10 passthrough,
     src/open/imageLayer.ts:94-104).
 
-    The same shuffle width (:func:`_arrange_for_encode`) and sorted-run walk
-    (:func:`_encode_sorted_runs`) as :func:`encode_tiles`, with
-    ``write_ov_tile(None, images=...)`` per run.  Sorting by (key, name,
-    image) makes tile bytes order-independent of shuffle arrival: the image
-    bytes break ties between same-named rows within one tile (binary sorts
-    lexicographically JVM-side), so identical input always packs in one
-    order."""
-    arranged = _arrange_for_encode(images, None, _TILE_KEY + ["name", "image"])
+    The same sorted-run walk (:func:`_encode_sorted_runs`) as
+    :func:`encode_tiles`, with ``write_ov_tile(None, images=...)`` per run.
+    The shuffle is ``repartition(key)``, which AQE coalesces by bytes: image
+    rows are byte-heavy and cheap in Python, the opposite of the feature
+    rows :func:`_arrange_for_encode` sizes its one-wave width for.  Sorting
+    by (key, name, image) makes tile bytes order-independent of shuffle
+    arrival: the image bytes break ties between same-named rows within one
+    tile (binary sorts lexicographically JVM-side), so identical input
+    always packs in one order."""
+    arranged = images.repartition(*_TILE_KEY).sortWithinPartitions(*_TILE_KEY, "name", "image")
 
     def encode_runs(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray) -> list:
         imgs = [

@@ -274,24 +274,38 @@ def test_encode_point_tiles_negative_zero_equals_generic(spark):
     assert len(fast) == 1 and fast == generic
 
 
-def test_carry_over_keeps_long_ids_next_to_null_ids(spark):
-    """Arrow hands a batch with a null long to pandas as float64: a run
-    carried from such a batch must not round the next batch's ids."""
-    from open_vector_tile_spark.operators import encode_tiles, points_to_features
+@pytest.mark.parametrize("batch", ["3", "default"])
+def test_null_ids_next_to_long_ids_equal_generic(spark, batch):
+    """A null id writes no id in the bulk encoder as in the generic writer.
+    Arrow hands a batch with a null long to pandas as float64 (NaN); a run
+    carried from such a batch is joined with the next batch's int64 ids as
+    objects, so those ids are not rounded past 2**53."""
+    from open_vector_tile_spark.operators import (
+        encode_point_tiles,
+        encode_tiles,
+        points_to_features,
+        points_to_features_columnar,
+    )
 
     big = [(1 << 60) + 2 * i + 1 for i in range(4)]  # not exact in float64
     pts = spark.createDataFrame(
         [(None, 1.0, 1.0), (None, 2.0, 2.0)] + [(b, 3.0, 3.0) for b in big],
         "doc_id long, lon double, lat double",
     )
-    feats = points_to_features(pts, zoom=0, layer="p", id_col="doc_id")
+    feats, meta = points_to_features_columnar(pts, zoom=0, layer="p", id_col="doc_id")
+    generic_feats = points_to_features(pts, zoom=0, layer="p", id_col="doc_id")
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
-    spark.conf.set(conf, "3")  # [null, null, big0] then [big1, big2, big3]
+    if batch != "default":
+        spark.conf.set(conf, batch)  # [null, null, big0] then [big1, big2, big3]
     try:
-        (row,) = encode_tiles(feats).collect()
+        (fast,) = [bytes(r["tile"]) for r in encode_point_tiles(feats, meta).collect()]
+        (generic,) = [bytes(r["tile"]) for r in encode_tiles(generic_feats, meta["specs"]).collect()]
     finally:
         spark.conf.set(conf, old)
-    layer = VectorTile(bytes(row["tile"])).layers["p"]
-    ids = {layer.feature(i).id for i in range(len(layer))}
-    assert set(big[1:]) <= ids
+    assert fast == generic
+    layer = VectorTile(fast).layers["p"]
+    ids = [layer.feature(i).id for i in range(len(layer))]
+    assert ids[:2] == [None, None]
+    if batch != "default":
+        assert set(big[1:]) <= set(ids)
