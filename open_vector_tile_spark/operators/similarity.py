@@ -1,24 +1,46 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_topk_bruteforce` — exact top-k neighbors for a query set:
-  queries are collected (dim-sized) and broadcast; each Arrow batch scores
-  (batch x queries) with numpy and emits only its LOCAL top-k per query, so
-  the shuffle is k*Q*partitions rows instead of N*Q.  The baseline and the
-  oracle.
-- :func:`cosine_topk_lsh` — scale path: multi-table random-hyperplane
-  sign-LSH.  Bucketing and candidate matching happen inside the same Arrow
-  batch pass (queries broadcast), so the whole query is shuffle-free up to
-  the final k*Q*partitions-row ranking window.
-- :func:`embedding_near_dups` — near-duplicate pairs by cosine >= threshold
-  within LSH buckets (dedup by embedding), with a hot-bucket cap.
+Exact and approximate top-k — each collects its queries on the driver and
+runs ONE scan, :func:`_broadcast_topk`: the query-side state rides the
+Arrow UDF to every task, each batch is scored by the operator's callback,
+each partition keeps its k best rows per query by (score, id) and one rank
+window orders the k*Q*partitions candidates.  The scan is shuffle-free up
+to that window:
+
+- :func:`cosine_topk_bruteforce` — exact cosine against every row; the
+  baseline and the oracle.
+- :func:`cosine_topk_lsh` — multi-table random-hyperplane sign-LSH:
+  candidates share a bucket with the query, exact cosine re-ranks them.
+- :func:`ivf_topk` — inverted file: rows whose nearest centroid is one of
+  the query's ``n_probe`` nearest are re-ranked by exact cosine.
+- :func:`pq_topk` — product quantization: rows are encoded against
+  per-subspace codebooks and ranked by ADC squared-L2 distance (ascending).
+- :func:`sq8_topk` — scalar quantization: integer code dot product, or
+  dequantized cosine.
+
+Training and encoding:
+
+- :func:`ivf_train_centroids` / :func:`pq_train_codebooks` — one
+  distributed Lloyd trainer (:func:`_lloyd`), cosine assignment over the
+  whole vector for IVF and L2 assignment per subspace for PQ;
+  :func:`ivf_assign` and :func:`pq_encode` tag rows with the same
+  assigners.  :func:`pq_exact_codebooks` builds lossless codebooks for
+  grid-quantized columns.
+- :func:`sq8_train` / :func:`sq8_encode` — per-dimension min-max int8
+  codes as column expressions.
+- :func:`bq_code_cols` / :func:`bq_topk` — sign-bit codes, a popcount
+  Hamming prefilter and an exact-cosine re-rank, all JVM windows.
+
+Pairs: :func:`embedding_near_dups` (cosine >= threshold within LSH buckets,
+with a hot-bucket cap, or exact all-pairs) and :func:`sparse_cosine_pairs`
+(tf/df cosine through an inverted index).  :func:`cosine` is the column
+expression of the cosine.
 
 Numerics: dot products accumulate SEQUENTIALLY over the dim axis (a dim-long
 loop of vectorized adds) — bit-identical to the scalar order
 ``((x0*y0)+x1*y1)+...`` that DuckDB's list_dot_product and Catalyst's
 ``aggregate()`` use, so oracle value hashes match while the work stays
-numpy-vectorized across rows.  The previous per-row ``F.aggregate(zip_with)``
-construction is interpreted (not codegen'd) and costs ~0.4 ms/element; the
-Arrow path replaces n_tables*n_planes of those per row with one batch pass.
+numpy-vectorized across rows.  Every cosine is :func:`_cos`.
 """
 
 from __future__ import annotations
@@ -66,6 +88,31 @@ def _seq_norm(V: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+def _cos(V: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(n,d) x (q,d) -> (n,q) cosine: sequential dot / (|v| * |q|)."""
+    return _seq_dot(V, Q) / (_seq_norm(V)[:, None] * _seq_norm(Q)[None, :])
+
+
+def _nearest_centroid(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of each row's highest-cosine centroid (IVF assignment)."""
+    return np.argmax(_cos(V, C), axis=1)
+
+
+def _nearest_code(Vs: np.ndarray, Cs: np.ndarray) -> np.ndarray:
+    """Index of each subvector's nearest code by squared L2."""
+    # ||v - c||^2 argmin == argmax(2 v.c - ||c||^2)
+    return np.argmax(2.0 * (Vs @ Cs.T) - (Cs**2).sum(axis=1)[None, :], axis=1)
+
+
+def _pq_codes(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, d) rows x (m, n_codes, d/m) codebooks -> (n, m) code ids;
+    subspace s takes columns [s*d/m, (s+1)*d/m)."""
+    m, _, sub = C.shape
+    return np.stack(
+        [_nearest_code(V[:, s * sub : (s + 1) * sub], C[s]) for s in range(m)], axis=1
+    )
+
+
 def _topk_order(sims: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     """Indices of the k best rows by (sim desc, id asc) — the exact total
     order of the ranking window, so local-then-global top-k is lossless."""
@@ -96,13 +143,78 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# exact brute force (broadcast queries, local top-k per Arrow batch)
+# the shared top-k scan (broadcast queries, local top-k per partition)
 # ---------------------------------------------------------------------------
 
 
-def _collect_queries(queries: DataFrame, qid_col: str, qvec_col: str):
+def _broadcast_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    qid_col: str,
+    qvec_col: str,
+    score_col: str,
+    score_type: str,
+    prepare,
+    descending: bool = True,
+) -> DataFrame:
+    """Top-k rows of ``corpus`` per query -> (qid_col, id_col, score_col, rank).
+
+    The queries are collected (dim-sized) and sorted by id; ``prepare(Q)``
+    turns their (q, dim) matrix into the operator's batch scorer
+    ``score_batch(batch) -> [(query index, ids, scores)]``, which travels
+    to the tasks inside the Arrow UDF (pyspark broadcasts a UDF past its
+    1 MB command threshold).  Each partition keeps only its k best rows per
+    query by (score, id), so the shuffle is k*Q*partitions rows instead of
+    N*Q, and one window ranks them by (score, id): score descending, or
+    ascending for a distance (``descending=False``).  An empty query set
+    returns an empty frame without scanning the corpus."""
+    qid_t = queries.schema[qid_col].dataType.simpleString()
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    schema = f"{qid_col} {qid_t}, {id_col} {id_t}, {score_col} {score_type}"
     qp = queries.select(qid_col, qvec_col).toPandas().sort_values(qid_col)
-    return qp[qid_col].tolist(), _to_matrix(qp[qvec_col])
+    if qp.empty:
+        return corpus.sparkSession.createDataFrame([], f"{schema}, rank int")
+    qids = qp[qid_col].tolist()
+    score_batch = prepare(_to_matrix(qp[qvec_col]))
+    sign = 1 if descending else -1
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cands: list[list] = [[] for _ in qids]  # per query: (ids, scores) parts
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            for qi, ids, scores in score_batch(pdf):
+                sel = _topk_order(sign * scores, ids, k)
+                cands[qi].append((ids[sel], scores[sel]))
+        rows = []
+        for qid, parts in zip(qids, cands):
+            if not parts:
+                continue
+            ids_all = np.concatenate([p[0] for p in parts])
+            s_all = np.concatenate([p[1] for p in parts])
+            for j in _topk_order(sign * s_all, ids_all, k):
+                rows.append((qid, ids_all[j], s_all[j]))
+        yield pd.DataFrame(rows, columns=[qid_col, id_col, score_col])
+
+    order = F.desc(score_col) if descending else F.asc(score_col)
+    w = Window.partitionBy(qid_col).orderBy(order, F.asc(id_col))
+    local = corpus.mapInPandas(scan, schema)
+    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _rerank(V: np.ndarray, ids: np.ndarray, Q: np.ndarray, masks) -> list:
+    """Exact cosine of each query's candidate rows (``masks[qi]`` over the
+    batch) -> the scan's [(query index, ids, scores)]."""
+    return [
+        (qi, ids[m], _cos(V[m], Q[qi : qi + 1])[:, 0]) for qi, m in enumerate(masks) if m.any()
+    ]
+
+
+# ---------------------------------------------------------------------------
+# exact brute force
+# ---------------------------------------------------------------------------
 
 
 def cosine_topk_bruteforce(
@@ -116,41 +228,18 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """Exact top-k: numpy-scored partitions, k*Q rows per partition shuffled.
     -> (query_id, vec_id, cos_sim, rank)."""
-    spark = vectors.sparkSession
-    qids, Q = _collect_queries(queries, qid_col, qvec_col)
-    bq = spark.sparkContext.broadcast((qids, Q))
-    qid_t = queries.schema[qid_col].dataType.simpleString()
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"{qid_col} {qid_t}, {id_col} {id_t}, cos_sim double"
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Q = bq.value
-        qn = _seq_norm(Q)
-        cand_ids: list[list] = [[] for _ in qids]
-        cand_sims: list[list] = [[] for _ in qids]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _to_matrix(pdf[vec_col])
+    def prepare(Q: np.ndarray):
+        def score_batch(pdf: pd.DataFrame) -> list:
             ids = pdf[id_col].to_numpy()
-            sims = _seq_dot(V, Q) / (_seq_norm(V)[:, None] * qn[None, :])
-            for qi in range(len(qids)):
-                sel = _topk_order(sims[:, qi], ids, k)
-                cand_ids[qi].append(ids[sel])
-                cand_sims[qi].append(sims[sel, qi])
-        rows = []
-        for qi, qid in enumerate(qids):
-            if not cand_ids[qi]:
-                continue
-            ids_all = np.concatenate(cand_ids[qi])
-            sims_all = np.concatenate(cand_sims[qi])
-            for j in _topk_order(sims_all, ids_all, k):
-                rows.append((qid, ids_all[j], sims_all[j]))
-        yield pd.DataFrame(rows, columns=[qid_col, id_col, "cos_sim"])
+            sims = _cos(_to_matrix(pdf[vec_col]), Q)
+            return [(qi, ids, sims[:, qi]) for qi in range(len(Q))]
 
-    local = vectors.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return score_batch
+
+    return _broadcast_topk(
+        vectors, queries, k, id_col, qid_col, qvec_col, "cos_sim", "double", prepare
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -202,54 +291,100 @@ def cosine_topk_lsh(
     query; exact cosine re-rank on candidates only.  No shuffle until the
     final (k*Q*partitions)-row window.  Recall grows with tables, candidate
     cost shrinks with 2^planes."""
-    spark = vectors.sparkSession
-    qids, Q = _collect_queries(queries, qid_col, qvec_col)
-    if dim is None:
-        dim = Q.shape[1]
-    P = _plane_matrix(dim, n_planes, n_tables)
-    qkeys = _bucket_keys(Q, P, n_tables, n_planes)  # (q, T)
-    bq = spark.sparkContext.broadcast((qids, Q, P, qkeys))
-    qid_t = queries.schema[qid_col].dataType.simpleString()
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"{qid_col} {qid_t}, {id_col} {id_t}, cos_sim double"
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Q, P, qkeys = bq.value
-        qn = _seq_norm(Q)
-        cand_ids: list[list] = [[] for _ in qids]
-        cand_sims: list[list] = [[] for _ in qids]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+    def prepare(Q: np.ndarray):
+        P = _plane_matrix(Q.shape[1] if dim is None else dim, n_planes, n_tables)
+        qkeys = _bucket_keys(Q, P, n_tables, n_planes)  # (q, T)
+
+        def score_batch(pdf: pd.DataFrame) -> list:
             V = _to_matrix(pdf[vec_col])
-            ids = pdf[id_col].to_numpy()
             vkeys = _bucket_keys(V, P, n_tables, n_planes)  # (n, T)
-            for qi in range(len(qids)):
-                mask = (vkeys == qkeys[qi][None, :]).any(axis=1)
-                if not mask.any():
-                    continue
-                Vc = V[mask]
-                idc = ids[mask]
-                sims = (
-                    _seq_dot(Vc, Q[qi : qi + 1])[:, 0]
-                    / (_seq_norm(Vc) * qn[qi])
-                )
-                sel = _topk_order(sims, idc, k)
-                cand_ids[qi].append(idc[sel])
-                cand_sims[qi].append(sims[sel])
-        rows = []
-        for qi, qid in enumerate(qids):
-            if not cand_ids[qi]:
-                continue
-            ids_all = np.concatenate(cand_ids[qi])
-            sims_all = np.concatenate(cand_sims[qi])
-            for j in _topk_order(sims_all, ids_all, k):
-                rows.append((qid, ids_all[j], sims_all[j]))
-        yield pd.DataFrame(rows, columns=[qid_col, id_col, "cos_sim"])
+            masks = ((vkeys == qk[None, :]).any(axis=1) for qk in qkeys)
+            return _rerank(V, pdf[id_col].to_numpy(), Q, masks)
 
-    local = vectors.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return score_batch
+
+    return _broadcast_topk(
+        vectors, queries, k, id_col, qid_col, qvec_col, "cos_sim", "double", prepare
+    )
+
+
+# ---------------------------------------------------------------------------
+# distributed Lloyd k-means (IVF centroids, PQ codebooks)
+# ---------------------------------------------------------------------------
+
+
+def _seed_rows(vectors: DataFrame, n: int, id_col: str, vec_col: str) -> np.ndarray:
+    """The ``n`` rows with the smallest ``xxhash64(id)`` -> (n, dim): a
+    total order on unique ids, so the same seeds at any parallelism."""
+    rows = (
+        vectors.select(id_col, vec_col)
+        .orderBy(F.abs(F.xxhash64(F.col(id_col))).asc(), F.col(id_col).asc())
+        .limit(n)
+        .toPandas()
+    )
+    return _to_matrix(rows[vec_col])
+
+
+def _lloyd(
+    vectors: DataFrame, C: np.ndarray, n_iters: int, vec_col: str, nearest
+) -> np.ndarray:
+    """Deterministic distributed Lloyd iterations of per-subspace codebooks
+    ``C`` (m, n_codes, d/m); ``nearest(Vs, C[s])`` assigns subvectors.
+
+    Each iteration is one map pass: Arrow batches assign their rows via
+    numpy and emit per-partition partial (sub, code, pos, sum, cnt) rows; a
+    partial-aggregating groupBy reduces them to m*n_codes*(d/m) rows before
+    they reach the driver — scale-safe at any partition count.  A code
+    that no row chose keeps its vector."""
+    spark = vectors.sparkSession
+    for _ in range(n_iters):
+        bc = spark.sparkContext.broadcast(C)
+
+        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            Cm = bc.value
+            mm, kk, ss = Cm.shape
+            sums = np.zeros((mm, kk, ss), dtype=np.float64)
+            cnts = np.zeros((mm, kk), dtype=np.int64)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                V = _to_matrix(pdf[vec_col])
+                for s in range(mm):
+                    Vs = V[:, s * ss : (s + 1) * ss]
+                    assign = nearest(Vs, Cm[s])
+                    np.add.at(sums[s], assign, Vs)
+                    cnts[s] += np.bincount(assign, minlength=kk)
+            sidx, cidx, pidx = np.meshgrid(
+                np.arange(mm), np.arange(kk), np.arange(ss), indexing="ij"
+            )
+            yield pd.DataFrame(
+                {
+                    "sub": sidx.ravel(),
+                    "code": cidx.ravel(),
+                    "pos": pidx.ravel(),
+                    "vsum": sums.ravel(),
+                    "cnt": np.repeat(cnts.ravel(), ss),
+                }
+            )
+
+        agg = (
+            vectors.select(vec_col)
+            .mapInPandas(partials, "sub int, code int, pos int, vsum double, cnt long")
+            .groupBy("sub", "code", "pos")
+            .agg(F.sum("vsum").alias("vsum"), F.sum("cnt").alias("cnt"))
+            .toPandas()
+        )
+        new_C = C.copy()
+        for (s, code), grp in agg.groupby(["sub", "code"]):
+            # each (sub, code, pos) row already carries the full per-partition
+            # count; the groupBy sum makes it the TOTAL count — no rescaling
+            cnt = int(grp["cnt"].iloc[0])
+            if cnt > 0:
+                new_C[int(s), int(code)] = grp.sort_values("pos")["vsum"].to_numpy() / cnt
+        C = new_C
+        bc.destroy()
+    return C
 
 
 # ---------------------------------------------------------------------------
@@ -267,68 +402,11 @@ def ivf_train_centroids(
     """Deterministic distributed Lloyd iterations -> (n_centroids, dim).
 
     Init picks the ``n_centroids`` rows with the smallest ``xxhash64(id)``
-    (total order on unique ids -> same centroids at any parallelism).  Each
-    iteration is one map pass: Arrow batches score (batch x centroids) via
-    numpy, emit per-partition partial (centroid, pos, sum, cnt) rows; a
-    partial-aggregating groupBy reduces them to n_centroids*dim rows before
-    they reach the driver — scale-safe at any partition count."""
-    seed_rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.abs(F.xxhash64(F.col(id_col))).asc(), F.col(id_col).asc())
-        .limit(n_centroids)
-        .toPandas()
-    )
-    C = _to_matrix(seed_rows[vec_col])
-    spark = vectors.sparkSession
-
-    for _ in range(n_iters):
-        bc = spark.sparkContext.broadcast(C)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cm = bc.value
-            k, d = Cm.shape
-            sums = np.zeros((k, d), dtype=np.float64)
-            cnts = np.zeros(k, dtype=np.int64)
-            cn = _seq_norm(Cm)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = _to_matrix(pdf[vec_col])
-                sims = _seq_dot(V, Cm) / (_seq_norm(V)[:, None] * cn[None, :])
-                assign = np.argmax(sims, axis=1)
-                np.add.at(sums, assign, V)
-                cnts += np.bincount(assign, minlength=k)
-            cid, pos = np.meshgrid(np.arange(k), np.arange(d), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "centroid": cid.ravel(),
-                    "pos": pos.ravel(),
-                    "vsum": sums.ravel(),
-                    "cnt": np.repeat(cnts, d),
-                }
-            )
-
-        agg = (
-            vectors.select(vec_col)
-            .mapInPandas(partials, "centroid int, pos int, vsum double, cnt long")
-            .groupBy("centroid", "pos")
-            .agg(F.sum("vsum").alias("vsum"), F.sum("cnt").alias("cnt"))
-            .toPandas()
-        )
-        new_C = C.copy()  # empty lists keep their centroid
-        for cid, grp in agg.groupby("centroid"):
-            # each (centroid, pos) row carries the full per-partition count;
-            # the groupBy sum makes iloc[0] the TOTAL count.  (An earlier
-            # version divided by dim here — harmless for the cosine argmax,
-            # which is scale-invariant, but wrong for any metric where
-            # centroid magnitude matters.)
-            cnt = int(grp["cnt"].iloc[0])
-            if cnt > 0:
-                vec = grp.sort_values("pos")["vsum"].to_numpy() / cnt
-                new_C[int(cid)] = vec
-        C = new_C
-        bc.destroy()
-    return C
+    (total order on unique ids -> same centroids at any parallelism); each
+    iteration assigns rows by cosine and is one map pass plus a
+    partial-aggregating groupBy (:func:`_lloyd` with one subspace)."""
+    seeds = _seed_rows(vectors, n_centroids, id_col, vec_col)
+    return _lloyd(vectors, seeds[None], n_iters, vec_col, _nearest_centroid)[0]
 
 
 def ivf_assign(
@@ -342,13 +420,10 @@ def ivf_assign(
     from pyspark.sql.functions import pandas_udf
 
     Cm = np.asarray(centroids, dtype=np.float64)
-    cn = _seq_norm(Cm)
 
     @pandas_udf("int")
     def nearest(vecs: pd.Series) -> pd.Series:
-        V = _to_matrix(vecs)
-        sims = _seq_dot(V, Cm) / (_seq_norm(V)[:, None] * cn[None, :])
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
+        return pd.Series(_nearest_centroid(_to_matrix(vecs), Cm).astype(np.int32))
 
     return vectors.withColumn(out_col, nearest(F.col(vec_col)))
 
@@ -375,58 +450,25 @@ def ivf_topk(
     exact brute force (the driver-oracle mode).  At deployment scale,
     materialize :func:`ivf_assign` once and partition by list id so probes
     touch only matching partitions."""
-    spark = vectors.sparkSession
-    if centroids is None:
-        centroids = ivf_train_centroids(
-            vectors, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    Cm = np.asarray(centroids, dtype=np.float64)
-    n_probe = min(n_probe, Cm.shape[0])
-    qids, Q = _collect_queries(queries, qid_col, qvec_col)
-    qsims = _seq_dot(Q, Cm) / (_seq_norm(Q)[:, None] * _seq_norm(Cm)[None, :])
-    # per query: the n_probe nearest lists (ties broken by list id via stable argsort)
-    probes = np.argsort(-qsims, axis=1, kind="stable")[:, :n_probe]  # (q, n_probe)
-    bq = spark.sparkContext.broadcast((qids, Q, Cm, probes))
-    qid_t = queries.schema[qid_col].dataType.simpleString()
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"{qid_col} {qid_t}, {id_col} {id_t}, cos_sim double"
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Q, Cm, probes = bq.value
-        qn = _seq_norm(Q)
-        cn = _seq_norm(Cm)
-        cand_ids: list[list] = [[] for _ in qids]
-        cand_sims: list[list] = [[] for _ in qids]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+    def prepare(Q: np.ndarray):
+        C = centroids
+        if C is None:
+            C = ivf_train_centroids(vectors, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col)
+        Cm = np.asarray(C, dtype=np.float64)
+        # per query: the n_probe nearest lists (ties broken by list id via stable argsort)
+        probes = np.argsort(-_cos(Q, Cm), axis=1, kind="stable")[:, : min(n_probe, len(Cm))]
+
+        def score_batch(pdf: pd.DataFrame) -> list:
             V = _to_matrix(pdf[vec_col])
-            ids = pdf[id_col].to_numpy()
-            vn = _seq_norm(V)
-            assign = np.argmax(_seq_dot(V, Cm) / (vn[:, None] * cn[None, :]), axis=1)
-            for qi in range(len(qids)):
-                mask = np.isin(assign, probes[qi])
-                if not mask.any():
-                    continue
-                Vc = V[mask]
-                idc = ids[mask]
-                sims = _seq_dot(Vc, Q[qi : qi + 1])[:, 0] / (vn[mask] * qn[qi])
-                sel = _topk_order(sims, idc, k)
-                cand_ids[qi].append(idc[sel])
-                cand_sims[qi].append(sims[sel])
-        rows = []
-        for qi, qid in enumerate(qids):
-            if not cand_ids[qi]:
-                continue
-            ids_all = np.concatenate(cand_ids[qi])
-            sims_all = np.concatenate(cand_sims[qi])
-            for j in _topk_order(sims_all, ids_all, k):
-                rows.append((qid, ids_all[j], sims_all[j]))
-        yield pd.DataFrame(rows, columns=[qid_col, id_col, "cos_sim"])
+            assign = _nearest_centroid(V, Cm)
+            return _rerank(V, pdf[id_col].to_numpy(), Q, (np.isin(assign, p) for p in probes))
 
-    local = vectors.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return score_batch
+
+    return _broadcast_topk(
+        vectors, queries, k, id_col, qid_col, qvec_col, "cos_sim", "double", prepare
+    )
 
 
 def embedding_near_dups(
@@ -468,23 +510,19 @@ def embedding_near_dups(
             if bi == bj:
                 sub = pdf[pdf["_side"] == 0]
                 ids = sub[id_col].to_numpy()
-                V = _to_matrix(sub[vec_col])
                 n = len(ids)
                 if n < 2:
                     return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-                S = _seq_dot(V, V)
-                nr = _seq_norm(V)
+                V = _to_matrix(sub[vec_col])
                 iu, ku = np.triu_indices(n, 1)
-                cos = S[iu, ku] / (nr[iu] * nr[ku])
+                cos = _cos(V, V)[iu, ku]
                 ia, ib = ids[iu], ids[ku]
             else:
                 lh = pdf[pdf["_side"] == 0]
                 rh = pdf[pdf["_side"] == 1]
                 if len(lh) == 0 or len(rh) == 0:
                     return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-                VL, VR = _to_matrix(lh[vec_col]), _to_matrix(rh[vec_col])
-                S = _seq_dot(VL, VR)
-                cos = (S / (_seq_norm(VL)[:, None] * _seq_norm(VR)[None, :])).ravel()
+                cos = _cos(_to_matrix(lh[vec_col]), _to_matrix(rh[vec_col])).ravel()
                 il = np.repeat(lh[id_col].to_numpy(), len(rh))
                 ir = np.tile(rh[id_col].to_numpy(), len(lh))
                 ia, ib = np.minimum(il, ir), np.maximum(il, ir)
@@ -576,74 +614,19 @@ def pq_train_codebooks(
 ) -> np.ndarray:
     """Deterministic distributed k-means per subspace -> (m, n_codes, d/m).
 
-    Same reduction shape as :func:`ivf_train_centroids`: init = subvectors of
-    the ``n_codes`` smallest-xxhash ids (parallelism-invariant), each Lloyd
+    Same trainer as :func:`ivf_train_centroids` (:func:`_lloyd`), with
+    squared-L2 assignment per subspace: init = subvectors of the
+    ``n_codes`` smallest-xxhash ids (parallelism-invariant), each Lloyd
     iteration one map pass emitting (subspace, code, pos) partial sums that a
     groupBy reduces to m*n_codes*(d/m) rows before the driver sees them."""
-    seed_rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.abs(F.xxhash64(F.col(id_col))).asc(), F.col(id_col).asc())
-        .limit(n_codes)
-        .toPandas()
-    )
-    S = _to_matrix(seed_rows[vec_col])
+    S = _seed_rows(vectors, n_codes, id_col, vec_col)
     d = S.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
     sub = d // m
     # (m, n_codes, sub): subspace s takes columns [s*sub, (s+1)*sub)
-    C = np.stack([S[:, s * sub : (s + 1) * sub].copy() for s in range(m)])
-    spark = vectors.sparkSession
-
-    for _ in range(n_iters):
-        bc = spark.sparkContext.broadcast(C)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cm = bc.value  # (m, n_codes, sub)
-            mm, kk, ss = Cm.shape
-            sums = np.zeros((mm, kk, ss), dtype=np.float64)
-            cnts = np.zeros((mm, kk), dtype=np.int64)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = _to_matrix(pdf[vec_col])
-                for s in range(mm):
-                    Vs = V[:, s * ss : (s + 1) * ss]
-                    # ||v - c||^2 argmin == argmax(2 v.c - ||c||^2)
-                    score = 2.0 * (Vs @ Cm[s].T) - (Cm[s] ** 2).sum(axis=1)[None, :]
-                    assign = np.argmax(score, axis=1)
-                    np.add.at(sums[s], assign, Vs)
-                    cnts[s] += np.bincount(assign, minlength=kk)
-            sidx, cidx, pidx = np.meshgrid(
-                np.arange(mm), np.arange(kk), np.arange(ss), indexing="ij"
-            )
-            yield pd.DataFrame(
-                {
-                    "sub": sidx.ravel(),
-                    "code": cidx.ravel(),
-                    "pos": pidx.ravel(),
-                    "vsum": sums.ravel(),
-                    "cnt": np.repeat(cnts.ravel(), ss),
-                }
-            )
-
-        agg = (
-            vectors.select(vec_col)
-            .mapInPandas(partials, "sub int, code int, pos int, vsum double, cnt long")
-            .groupBy("sub", "code", "pos")
-            .agg(F.sum("vsum").alias("vsum"), F.sum("cnt").alias("cnt"))
-            .toPandas()
-        )
-        new_C = C.copy()
-        for (s, code), grp in agg.groupby(["sub", "code"]):
-            # each (sub, code, pos) row already carries the full per-partition
-            # count; the groupBy sum makes it the TOTAL count — no rescaling
-            cnt = int(grp["cnt"].iloc[0])
-            if cnt > 0:
-                new_C[int(s), int(code)] = grp.sort_values("pos")["vsum"].to_numpy() / cnt
-        C = new_C
-        bc.destroy()
-    return C
+    C = np.stack([S[:, s * sub : (s + 1) * sub] for s in range(m)])
+    return _lloyd(vectors, C, n_iters, vec_col, _nearest_code)
 
 
 def pq_exact_codebooks(
@@ -701,17 +684,10 @@ def pq_encode(
     from pyspark.sql.functions import pandas_udf
 
     Cm = np.asarray(codebooks, dtype=np.float64)
-    mm, _kk, ss = Cm.shape
 
     @pandas_udf("array<int>")
     def encode(vecs: pd.Series) -> pd.Series:
-        V = _to_matrix(vecs)
-        codes = np.empty((len(V), mm), dtype=np.int32)
-        for s in range(mm):
-            Vs = V[:, s * ss : (s + 1) * ss]
-            score = 2.0 * (Vs @ Cm[s].T) - (Cm[s] ** 2).sum(axis=1)[None, :]
-            codes[:, s] = np.argmax(score, axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_pq_codes(_to_matrix(vecs), Cm).astype(np.int32)))
 
     return vectors.withColumn(out_col, encode(F.col(vec_col)))
 
@@ -732,55 +708,32 @@ def pq_topk(
     full-dimension arithmetic in the scan.  Local top-k per partition, then
     the usual k*Q*partitions-row ranking window.  Returns
     (query_id, vec_id, adc_dist, rank), rank 1 = nearest."""
-    spark = vectors.sparkSession
     Cm = np.asarray(codebooks, dtype=np.float64)
     mm, kk, ss = Cm.shape
-    qids, Q = _collect_queries(queries, qid_col, qvec_col)
-    # LUT[q, s, c] = ||q_s - C[s, c]||^2
-    lut = np.empty((len(qids), mm, kk), dtype=np.float64)
-    for s in range(mm):
-        Qs = Q[:, s * ss : (s + 1) * ss]
-        diff = Qs[:, None, :] - Cm[s][None, :, :]
-        lut[:, s, :] = (diff**2).sum(axis=2)
-    bq = spark.sparkContext.broadcast((qids, lut, Cm))
-    qid_t = queries.schema[qid_col].dataType.simpleString()
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"{qid_col} {qid_t}, {id_col} {id_t}, adc_dist double"
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, lut, Cm = bq.value
-        mm, kk, ss = Cm.shape[0], Cm.shape[1], Cm.shape[2]
-        best_ids: list[list] = [[] for _ in qids]
-        best_d: list[list] = [[] for _ in qids]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _to_matrix(pdf[vec_col])
+    def prepare(Q: np.ndarray):
+        # LUT[q, s, c] = ||q_s - C[s, c]||^2
+        lut = np.empty((len(Q), mm, kk), dtype=np.float64)
+        for s in range(mm):
+            Qs = Q[:, s * ss : (s + 1) * ss]
+            diff = Qs[:, None, :] - Cm[s][None, :, :]
+            lut[:, s, :] = (diff**2).sum(axis=2)
+
+        def score_batch(pdf: pd.DataFrame) -> list:
             ids = pdf[id_col].to_numpy()
-            codes = np.empty((len(V), mm), dtype=np.int64)
-            for s in range(mm):
-                Vs = V[:, s * ss : (s + 1) * ss]
-                score = 2.0 * (Vs @ Cm[s].T) - (Cm[s] ** 2).sum(axis=1)[None, :]
-                codes[:, s] = np.argmax(score, axis=1)
+            codes = _pq_codes(_to_matrix(pdf[vec_col]), Cm)
             # ADC: dist[q, row] = sum_s lut[q, s, codes[row, s]]
-            for qi in range(len(qids)):
-                dist = lut[qi, np.arange(mm)[None, :], codes].sum(axis=1)
-                sel = _topk_order(-dist, ids, k)  # smallest distance first
-                best_ids[qi].append(ids[sel])
-                best_d[qi].append(dist[sel])
-        rows = []
-        for qi, qid in enumerate(qids):
-            if not best_ids[qi]:
-                continue
-            ids_all = np.concatenate(best_ids[qi])
-            d_all = np.concatenate(best_d[qi])
-            for j in _topk_order(-d_all, ids_all, k):
-                rows.append((qid, ids_all[j], d_all[j]))
-        yield pd.DataFrame(rows, columns=[qid_col, id_col, "adc_dist"])
+            return [
+                (qi, ids, lut[qi, np.arange(mm)[None, :], codes].sum(axis=1))
+                for qi in range(len(Q))
+            ]
 
-    local = vectors.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return score_batch
+
+    return _broadcast_topk(
+        vectors, queries, k, id_col, qid_col, qvec_col, "adc_dist", "double", prepare,
+        descending=False,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -877,56 +830,30 @@ def sq8_topk(
     Same distributed shape as cosine_topk_bruteforce: queries broadcast,
     numpy-scored partitions, k*Q candidate rows shuffle to one rank
     window."""
-    spark = codes.sparkSession
-    qids, Q = _collect_queries(query_codes, qid_col, "codes")
     dq = stats is not None
-    if dq:
-        vmins, vmaxs = _sq8_stats_arrays(stats)
-        lo = np.asarray(vmins, dtype=np.float64)
-        step = (np.asarray(vmaxs, dtype=np.float64) - lo) / 255.0
-        bq = spark.sparkContext.broadcast((qids, lo + Q * step, lo, step))
-    else:
-        bq = spark.sparkContext.broadcast((qids, Q.astype(np.int64)))
-    qid_t = query_codes.schema[qid_col].dataType.simpleString()
-    id_t = codes.schema[id_col].dataType.simpleString()
-    score_t = "double" if dq else "bigint"
-    out_schema = f"{qid_col} {qid_t}, {id_col} {id_t}, score {score_t}"
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def prepare(Q: np.ndarray):
         if dq:
-            qids_b, Qd, lo_b, step_b = bq.value
-            qn = _seq_norm(Qd)
+            vmins, vmaxs = _sq8_stats_arrays(stats)
+            lo = np.asarray(vmins, dtype=np.float64)
+            step = (np.asarray(vmaxs, dtype=np.float64) - lo) / 255.0
+            Qd = lo + Q * step
         else:
-            qids_b, Qi = bq.value
-        cand_ids: list[list] = [[] for _ in qids_b]
-        cand_s: list[list] = [[] for _ in qids_b]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+            Qi = Q.astype(np.int64)
+
+        def score_batch(pdf: pd.DataFrame) -> list:
             C = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["codes"]])
             ids = pdf[id_col].to_numpy()
-            if dq:
-                V = lo_b + C.astype(np.float64) * step_b
-                sims = _seq_dot(V, Qd) / (_seq_norm(V)[:, None] * qn[None, :])
-            else:
-                sims = C @ Qi.T  # exact int64
-            for qi in range(len(qids_b)):
-                sel = _topk_order(sims[:, qi].astype(np.float64), ids, k)
-                cand_ids[qi].append(ids[sel])
-                cand_s[qi].append(sims[sel, qi])
-        rows = []
-        for qi, qid in enumerate(qids_b):
-            if not cand_ids[qi]:
-                continue
-            ids_all = np.concatenate(cand_ids[qi])
-            s_all = np.concatenate(cand_s[qi])
-            for j in _topk_order(s_all.astype(np.float64), ids_all, k):
-                rows.append((qid, ids_all[j], s_all[j]))
-        yield pd.DataFrame(rows, columns=[qid_col, id_col, "score"])
+            # dequantized cosine, or the exact int64 code dot product
+            sims = _cos(lo + C.astype(np.float64) * step, Qd) if dq else C @ Qi.T
+            return [(qi, ids, sims[:, qi]) for qi in range(len(Q))]
 
-    local = codes.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return score_batch
+
+    return _broadcast_topk(
+        codes, query_codes, k, id_col, qid_col, "codes", "score",
+        "double" if dq else "bigint", prepare,
+    )
 
 
 # ---------------------------------------------------------------------------

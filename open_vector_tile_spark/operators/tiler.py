@@ -1,7 +1,7 @@
 """Tile materialization: normalized feature rows -> OVT tile bytes.
 
 Spark tracing (SURVEY §3.2): feature DataFrame -> ``repartition(zoom, tile_x,
-tile_y)`` (the rule-pinned shuffle key) -> one ``mapInPandas`` walk over the
+tile_y)`` (the rule-pinned shuffle key) -> one ``mapInArrow`` walk over the
 sorted runs of that key (JVM->Python Arrow boundary, ``_encode_sorted_runs``)
 -> ``(zoom, x, y, tile, n_features, n_bytes)`` rows for the tiles table sink.
 
@@ -30,6 +30,7 @@ from typing import Iterable, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,6 +45,10 @@ FEATURE_SCHEMA = (
 )
 
 TILE_SCHEMA = "zoom int, tile_x long, tile_y long, tile binary, n_features long, n_bytes long"
+_TILE_ARROW_SCHEMA = pa.schema(
+    [("zoom", pa.int32()), ("tile_x", pa.int64()), ("tile_y", pa.int64()),
+     ("tile", pa.binary()), ("n_features", pa.int64()), ("n_bytes", pa.int64())]
+)  # TILE_SCHEMA in Arrow types
 
 
 @dataclass
@@ -198,7 +203,10 @@ def _arrange_for_encode(features, partitions, sort_cols):
 
 def _encode_sorted_runs(arranged: DataFrame, encode_runs) -> DataFrame:
     """Tile-sorted rows (:func:`_arrange_for_encode`) -> tiles (TILE_SCHEMA),
-    with ONE Python call per Arrow batch (``mapInPandas``).
+    with ONE Python call per Arrow batch (``mapInArrow``).  Batches reach
+    pandas with ``integer_object_nulls``: a long column holding a null
+    becomes Python ints and None, not float64, so ids past 2**53 stay
+    exact.
 
     ``encode_runs(batch, starts, ends)`` returns the bytes of the tiles whose
     rows are ``batch[starts[i]:ends[i]]``, one per run of the tile key.  A
@@ -208,12 +216,16 @@ def _encode_sorted_runs(arranged: DataFrame, encode_runs) -> DataFrame:
     are small (64k tiny groups = 64k pandas DataFrame constructions vs one
     per 10k-row batch)."""
 
-    def emit(done: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
+    def emit(done: pd.DataFrame, bounds: np.ndarray) -> pa.RecordBatch:
         starts, ends = bounds[:-1], bounds[1:]
         tiles = encode_runs(done, starts, ends)
         out = {k: done[k].to_numpy()[starts] for k in _TILE_KEY}
-        return pd.DataFrame(
-            {**out, "tile": tiles, "n_features": ends - starts, "n_bytes": [len(t) for t in tiles]}
+        return pa.RecordBatch.from_pandas(
+            pd.DataFrame(
+                {**out, "tile": tiles, "n_features": ends - starts, "n_bytes": [len(t) for t in tiles]}
+            ),
+            schema=_TILE_ARROW_SCHEMA,
+            preserve_index=False,
         )
 
     def run_starts(pdf: pd.DataFrame) -> np.ndarray:
@@ -221,31 +233,26 @@ def _encode_sorted_runs(arranged: DataFrame, encode_runs) -> DataFrame:
         change = np.flatnonzero((zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1]))
         return np.concatenate([[0], change + 1])
 
-    def joined(frames: list) -> pd.DataFrame:
-        # an int64 column meeting a float64 one (a batch with nulls) would
-        # round longs past 2**53: join those columns as objects
-        mixed = {c: object for c in frames[0].columns if len({f[c].dtype for f in frames}) > 1}
-        return pd.concat([f.astype(mixed) for f in frames] if mixed else frames, ignore_index=True)
-
-    def run(batches: Iterable[pd.DataFrame]):
+    def run(batches: Iterable[pa.RecordBatch]):
         # rows not yet encoded; a batch of one tile key is only appended, so
         # a tile spanning many batches is joined once, when its run closes
         pending: list = []
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
+            pdf = batch.to_pandas(integer_object_nulls=True)
             pending.append(pdf)
             if all(pdf[k].iat[0] == pdf[k].iat[-1] for k in _TILE_KEY):
                 continue  # sorted on the key, so one key: the run goes on
-            pdf = joined(pending)
+            pdf = pd.concat(pending, ignore_index=True)
             bounds = run_starts(pdf)
             yield emit(pdf.iloc[: bounds[-1]], bounds)
             pending = [pdf.iloc[bounds[-1] :]]  # the last run may go on
         if pending:
-            pdf = joined(pending)
+            pdf = pd.concat(pending, ignore_index=True)
             yield emit(pdf, np.append(run_starts(pdf), len(pdf)))
 
-    return arranged.mapInPandas(run, TILE_SCHEMA)
+    return arranged.mapInArrow(run, TILE_SCHEMA)
 
 
 def encode_tiles(

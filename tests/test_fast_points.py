@@ -276,10 +276,9 @@ def test_encode_point_tiles_negative_zero_equals_generic(spark):
 
 @pytest.mark.parametrize("batch", ["3", "default"])
 def test_null_ids_next_to_long_ids_equal_generic(spark, batch):
-    """A null id writes no id in the bulk encoder as in the generic writer.
-    Arrow hands a batch with a null long to pandas as float64 (NaN); a run
-    carried from such a batch is joined with the next batch's int64 ids as
-    objects, so those ids are not rounded past 2**53."""
+    """A null id writes no id in the bulk encoder as in the generic writer,
+    also when a run carried from a batch holding the nulls is joined with
+    the next batch's ids."""
     from open_vector_tile_spark.operators import (
         encode_point_tiles,
         encode_tiles,
@@ -309,3 +308,32 @@ def test_null_ids_next_to_long_ids_equal_generic(spark, batch):
     assert ids[:2] == [None, None]
     if batch != "default":
         assert set(big[1:]) <= set(ids)
+
+
+@pytest.mark.parametrize("encoder", ["bulk", "generic"])
+def test_null_id_keeps_long_ids_exact(spark, encoder):
+    """One null id next to ids past 2**53 in one Arrow batch: the tile
+    decodes the input ids exactly (pandas would turn a long column holding
+    a null into float64 and round them)."""
+    from open_vector_tile_spark.operators import (
+        encode_point_tiles,
+        encode_tiles,
+        points_to_features,
+        points_to_features_columnar,
+    )
+
+    big = [(1 << 60) + 2 * i + 1 for i in range(4)]  # not exact in float64
+    pts = spark.createDataFrame(
+        [(None, 1.0, 1.0)] + [(b, 3.0, 3.0) for b in big],
+        "doc_id long, lon double, lat double",
+    )
+    if encoder == "bulk":
+        feats, meta = points_to_features_columnar(pts, zoom=0, layer="p", id_col="doc_id")
+        tiles = encode_point_tiles(feats, meta)
+    else:
+        tiles = encode_tiles(points_to_features(pts, zoom=0, layer="p", id_col="doc_id"))
+    (tile,) = [bytes(r["tile"]) for r in tiles.collect()]
+    layer = VectorTile(tile).layers["p"]
+    ids = [layer.feature(i).id for i in range(len(layer))]
+    assert ids.count(None) == 1
+    assert sorted(i for i in ids if i is not None) == big

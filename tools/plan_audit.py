@@ -33,6 +33,7 @@ def audit_plan(plan: str) -> dict:
         "python": plan.count("ArrowEvalPython")
         + plan.count("BatchEvalPython")
         + plan.count("MapInPandas")
+        + plan.count("MapInArrow")
         + plan.count("FlatMapGroupsInPandas"),
         "topk_heap": plan.count("TakeOrderedAndProject"),
         "bnl": plan.count("BroadcastNestedLoopJoin") + plan.count("CartesianProduct"),
