@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Exact and approximate top-k — each collects its queries on the driver and
+Exact and approximate top-k — each collects its (dim-sized) queries and
 runs ONE scan, :func:`_broadcast_topk`: the query-side state rides the
 Arrow UDF to every task, each batch is scored by the operator's callback,
 each partition keeps its k best rows per query by (score, id) and one rank
@@ -40,7 +40,10 @@ Numerics: dot products accumulate SEQUENTIALLY over the dim axis (a dim-long
 loop of vectorized adds) — bit-identical to the scalar order
 ``((x0*y0)+x1*y1)+...`` that DuckDB's list_dot_product and Catalyst's
 ``aggregate()`` use, so oracle value hashes match while the work stays
-numpy-vectorized across rows.  Every cosine is :func:`_cos`.
+numpy-vectorized across rows; every cosine matrix is :func:`_cos`.  The
+previous per-row ``F.aggregate(zip_with)`` construction is interpreted (not
+codegen'd) and costs ~0.4 ms/element; the Arrow path replaces
+n_tables*n_planes of those per row with one batch pass.
 """
 
 from __future__ import annotations
