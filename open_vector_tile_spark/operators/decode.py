@@ -1,11 +1,24 @@
 """Table-level tile scan: tiles table -> feature/grid/image rows (S1 at scale).
 
 The reference reads one tile lazily (position references, memoized columns —
-src/vectorTile.ts:92-132, src/open/columnCache.ts:104-177); at table scale
-the same economy comes from (a) Catalyst column pruning feeding the decoder
-a ``layers`` request so non-requested layers are never touched inside the
-blob (SURVEY §4 R1), and (b) Arrow-batched ``mapInPandas`` so tile bytes
-never become JVM row objects.
+src/vectorTile.ts:92-132, src/open/columnCache.ts:104-177).  At table scale
+each scan makes ONE Python call per Arrow batch (``mapInArrow``), so tile
+bytes never become JVM row objects, and the feature scans split the batch
+two ways:
+
+- tiles made only of OVT layers of 2D single-point features with flat
+  primitive shapes (what the bulk writer emits, and the generic writer for
+  such layers) decode together in
+  ``codec.fast_points.decode_point_layer_tiles_bulk``: Python walks only
+  the protobuf framing, and the geometry decodes in one numpy pass;
+- every other tile (MVT/S2, lines, polygons, multi-points, 3D, nested
+  shapes, grids, images) and any tile that fails to parse there goes
+  through the generic per-tile ``VectorTile`` decode, where ``on_error``
+  applies.
+
+Rows keep tile order, then feature order, whichever path a tile took.  A
+caller's ``layers`` request is read from the layer header, so a layer it
+does not name is never decoded (SURVEY §4 R1).
 
 Full fidelity: ``decode_tiles`` emits the tiler's FEATURE_SCHEMA —
 ring/poly structure, dash offsets, bbox, per-vertex M-values, earcut
@@ -19,12 +32,16 @@ companion scans ``decode_grids`` / ``decode_images``.
 from __future__ import annotations
 
 import json
+from itertools import islice
 from typing import Callable, Iterator, Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..codec import TileDecodeError, VectorTile
+from ..codec.fast_points import decode_point_layer_tiles_bulk
 from ..codec.tile import DECODE_ERROR_CLASSES
 from ..codec.layer import OVLayer
 from ..codec.mvt import MvtLayer
@@ -143,32 +160,72 @@ def _columns(schema: str) -> list[str]:
     return [field.split()[0] for field in schema.split(", ")]
 
 
+_ARROW_TYPES = {
+    "int": pa.int32(), "long": pa.int64(), "double": pa.float64(),
+    "string": pa.string(), "binary": pa.binary(),
+}
+
+
+def _arrow_schema(schema: str) -> pa.Schema:
+    """A scan's DDL schema in Arrow types (the types its DDL uses)."""
+    fields = []
+    for field in schema.split(", "):
+        name, ddl = field.split()
+        if ddl.startswith("array<"):
+            fields.append((name, pa.list_(_ARROW_TYPES[ddl[6:-1]])))
+        else:
+            fields.append((name, _ARROW_TYPES[ddl]))
+    return pa.schema(fields)
+
+
+_DECODED_ARROW = _arrow_schema(DECODED_SCHEMA)
+
+
+def _rows_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    """Row tuples -> one record batch.  Built column by column from the
+    Python values (a NaN float is null, as in a pandas conversion), so a
+    long column holding a null keeps its other values exact."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type, from_pandas=True) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
 def _scan_tiles(
     tiles: DataFrame,
     on_error: str,
-    rows_of: Callable[[int, int, int, VectorTile], list[tuple]],
+    decode: Callable[..., Iterator[pa.RecordBatch]],
     schema: str,
 ) -> DataFrame:
     """The tile scan the decoders share: tiles(zoom, tile_x, tile_y, tile)
-    -> the rows ``rows_of(zoom, tx, ty, parsed_tile)`` returns per tile, as
-    ``schema``; ``on_error`` as in :func:`_tile_rows`."""
+    -> ``decode(zoom, tile_x, tile_y, blobs, on_error)`` per Arrow batch,
+    whose record batches are ``schema``; ``on_error`` as in
+    :func:`_tile_rows`."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
-    columns = _columns(schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for zoom, tx, ty, blob in zip(
-                pdf["zoom"].tolist(),
-                pdf["tile_x"].tolist(),
-                pdf["tile_y"].tolist(),
-                pdf["tile"].tolist(),
-            ):
-                out.extend(_tile_rows(rows_of, int(zoom), int(tx), int(ty), blob, on_error))
-            yield pd.DataFrame(out, columns=columns)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield from decode(
+                *(batch.column(k).to_pylist() for k in ("zoom", "tile_x", "tile_y", "tile")),
+                on_error,
+            )
 
-    return tiles.mapInPandas(run, schema)
+    return tiles.mapInArrow(run, schema)
+
+
+def _generic_decoder(rows_of, schema: str) -> Callable[..., Iterator[pa.RecordBatch]]:
+    """The ``_scan_tiles`` decode that runs ``rows_of(zoom, tx, ty,
+    parsed_tile)`` over each tile (:func:`_tile_rows`)."""
+    arrow = _arrow_schema(schema)
+
+    def decode(zooms, xs, ys, blobs, on_error) -> Iterator[pa.RecordBatch]:
+        rows: list[tuple] = []
+        for zoom, tx, ty, blob in zip(zooms, xs, ys, blobs):
+            rows.extend(_tile_rows(rows_of, int(zoom), int(tx), int(ty), blob, on_error))
+        yield _rows_batch(rows, arrow)
+
+    return decode
 
 
 def _feature_rows(
@@ -213,6 +270,69 @@ def _feature_rows(
     return rows_of
 
 
+def _point_batch(zooms, xs, ys, counts: np.ndarray, columns: dict) -> pa.RecordBatch:
+    """The bulk decoder's feature columns -> DECODED_SCHEMA rows: the tile
+    key gathered per feature, constants for the one-point geometry, and
+    nulls for the columns a single point has no use for."""
+    n = len(columns["layer"])
+    tile = np.repeat(np.arange(len(counts)), counts)
+    fixed = {
+        "zoom": np.asarray(zooms, dtype=np.int64)[tile],
+        "tile_x": np.asarray(xs, dtype=np.int64)[tile],
+        "tile_y": np.asarray(ys, dtype=np.int64)[tile],
+        "source": pa.repeat(pa.scalar("ovt", pa.string()), n),
+        "ftype": np.ones(n, dtype=np.int32),
+        "n_vertices": np.ones(n, dtype=np.int32),
+        **columns,
+    }
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(fixed[f.name], f.type) if f.name in fixed else pa.nulls(n, f.type)
+            for f in _DECODED_ARROW
+        ],
+        schema=_DECODED_ARROW,
+    )
+
+
+def _feature_decoder(
+    layers: Optional[list[str]], sources: tuple
+) -> Callable[..., Iterator[pa.RecordBatch]]:
+    """The feature decode of :func:`decode_tiles` and :func:`read_tileset`
+    over one batch of tiles: ``decode(zooms, xs, ys, blobs, on_error)`` ->
+    DECODED_SCHEMA record batches, rows in tile order, then feature order.
+
+    Tiles made only of OVT single-point layers with flat shapes go through
+    ``fast_points.decode_point_layer_tiles_bulk`` all at once; every other
+    tile, and any tile that fails to parse there, through the generic
+    per-tile decode (:func:`_feature_rows`), with ``on_error`` as in
+    :func:`_tile_rows`."""
+    rows_of = _feature_rows(layers, sources)
+    ovt = "ovt" in sources
+
+    def decode(zooms, xs, ys, blobs, on_error) -> Iterator[pa.RecordBatch]:
+        ok, counts, columns = decode_point_layer_tiles_bulk(blobs, layers, ovt)
+        fast = _point_batch(zooms, xs, ys, counts, columns)
+        ends = np.cumsum(counts).tolist()
+        done = 0  # fast rows already yielded
+        rows: list[tuple] = []  # generic rows not yet yielded
+        for t in np.flatnonzero(~ok).tolist():
+            if ends[t] > done:
+                if rows:
+                    yield _rows_batch(rows, _DECODED_ARROW)
+                    rows = []
+                yield fast.slice(done, ends[t] - done)
+                done = ends[t]
+            rows.extend(
+                _tile_rows(rows_of, int(zooms[t]), int(xs[t]), int(ys[t]), blobs[t], on_error)
+            )
+        if rows:
+            yield _rows_batch(rows, _DECODED_ARROW)
+        if fast.num_rows > done:
+            yield fast.slice(done)
+
+    return decode
+
+
 def decode_tiles(
     tiles: DataFrame,
     layers: Optional[list[str]] = None,
@@ -231,7 +351,7 @@ def decode_tiles(
     feature output from a tile that fails mid-decode) and keeps the job
     alive — the operational choice at fleet scale where torn writes happen.
     """
-    return _scan_tiles(tiles, on_error, _feature_rows(layers, sources), DECODED_SCHEMA)
+    return _scan_tiles(tiles, on_error, _feature_decoder(layers, sources), DECODED_SCHEMA)
 
 
 def decode_grids(
@@ -254,7 +374,7 @@ def decode_grids(
             if want is None or name in want
         ]
 
-    return _scan_tiles(tiles, on_error, rows_of, GRID_SCHEMA)
+    return _scan_tiles(tiles, on_error, _generic_decoder(rows_of, GRID_SCHEMA), GRID_SCHEMA)
 
 
 def decode_images(
@@ -277,8 +397,11 @@ def decode_images(
             if want is None or name in want
         ]
 
-    return _scan_tiles(tiles, on_error, rows_of, IMAGE_SCHEMA)
+    return _scan_tiles(tiles, on_error, _generic_decoder(rows_of, IMAGE_SCHEMA), IMAGE_SCHEMA)
 
+
+# read_tileset decodes a run in pieces of about this many blob bytes
+_CHUNK_BYTES = 1 << 20
 
 # the listing frame a read_tileset ``where`` filters: the source's columns
 # less the blob, plus each entry's position in the listing
@@ -316,15 +439,16 @@ def read_tileset(
     ``where`` is any Column predicate over zoom/tile_x/tile_y/path/n_bytes;
     it filters that listing before a task starts, so unmatched blobs are
     never opened.  A filter the caller applies to the returned frame runs
-    after decode (the mapInPandas is a planning barrier).  ``layers`` and
+    after decode (the mapInArrow is a planning barrier).  ``layers`` and
     ``sources`` prune inside the blob, as in :func:`decode_tiles`.
 
     The matched entries are split into ``num_partitions`` contiguous,
     path-sorted runs, by default ``sources.tileset.read_width`` of their
     bytes.  Each run is one task that reads its blobs and decodes them in
-    one ``mapInPandas``, yielding at most
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows at a time.  A
-    corrupt blob raises :class:`TileDecodeError`.
+    one ``mapInArrow``, a piece of the run per decoder call (at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` tiles and about
+    ``_CHUNK_BYTES`` of blobs), yielding at most that many rows at a time.
+    A corrupt blob raises :class:`TileDecodeError`.
     """
     from ..sources.tileset import _list_tiles, read_blobs, read_width
 
@@ -336,20 +460,29 @@ def read_tileset(
     width = min(num_partitions or read_width(sum(e[4] for e in entries)), len(entries))
     size = -(-len(entries) // width)
     runs = [entries[i : i + size] for i in range(0, len(entries), size)]
-    rows_of = _feature_rows(layers, sources)
-    columns = _columns(DECODED_SCHEMA)
+    decode = _feature_decoder(layers, sources)
     max_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for part in pdf["id"].tolist():
-                out: list[tuple] = []
-                for (zoom, tx, ty, *_), blob in zip(runs[part], read_blobs(runs[part])):
-                    out.extend(_tile_rows(rows_of, zoom, tx, ty, blob, "fail"))
-                    if len(out) >= max_rows:
-                        yield pd.DataFrame(out, columns=columns)
-                        out = []
-                if out:
-                    yield pd.DataFrame(out, columns=columns)
+    def chunks(run: list) -> Iterator[list]:
+        """A run in pieces of at most ``max_rows`` tiles and about
+        ``_CHUNK_BYTES`` of blobs."""
+        start, nbytes = 0, 0
+        for i, entry in enumerate(run):
+            nbytes += entry[4]
+            if i + 1 - start == max_rows or nbytes >= _CHUNK_BYTES:
+                yield run[start : i + 1]
+                start, nbytes = i + 1, 0
+        if start < len(run):
+            yield run[start:]
 
-    return spark.range(len(runs), numPartitions=len(runs)).mapInPandas(run, DECODED_SCHEMA)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for part in batch.column("id").to_pylist():
+                blobs = read_blobs(runs[part])
+                for chunk in chunks(runs[part]):
+                    zooms, xs, ys = zip(*(e[:3] for e in chunk))
+                    for out in decode(zooms, xs, ys, list(islice(blobs, len(chunk))), "fail"):
+                        for off in range(0, out.num_rows, max_rows):
+                            yield out.slice(off, max_rows)
+
+    return spark.range(len(runs), numPartitions=len(runs)).mapInArrow(run, DECODED_SCHEMA)

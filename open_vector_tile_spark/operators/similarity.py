@@ -171,8 +171,11 @@ def _broadcast_topk(
     1 MB command threshold).  Each partition keeps only its k best rows per
     query by (score, id), so the shuffle is k*Q*partitions rows instead of
     N*Q, and one window ranks them by (score, id): score descending, or
-    ascending for a distance (``descending=False``).  An empty query set
-    returns an empty frame without scanning the corpus."""
+    ascending for a distance (``descending=False``).  Corpus rows whose
+    ``id_col`` is null are dropped before the scan: a row with no id cannot
+    be named in a result (and one null would turn a batch's id column into
+    float64, rounding ids past 2**53).  An empty query set returns an empty
+    frame without scanning the corpus."""
     qid_t = queries.schema[qid_col].dataType.simpleString()
     id_t = corpus.schema[id_col].dataType.simpleString()
     schema = f"{qid_col} {qid_t}, {id_col} {id_t}, {score_col} {score_type}"
@@ -203,7 +206,7 @@ def _broadcast_topk(
 
     order = F.desc(score_col) if descending else F.asc(score_col)
     w = Window.partitionBy(qid_col).orderBy(order, F.asc(id_col))
-    local = corpus.mapInPandas(scan, schema)
+    local = corpus.filter(F.col(id_col).isNotNull()).mapInPandas(scan, schema)
     return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 

@@ -18,9 +18,11 @@ from open_vector_tile_spark.operators.similarity import (
 MODES = ["bruteforce", "lsh", "ivf", "pq", "sq8"]
 
 
-def _topk(spark, mode, corpus, queries, k):
+def _topk(spark, mode, corpus, queries, k, partitions=7):
     """Run one operator in its exact mode -> (result frame, score column)."""
-    emb = spark.createDataFrame(corpus, "vec_id long, embedding array<double>").repartition(7)
+    emb = spark.createDataFrame(corpus, "vec_id long, embedding array<double>").repartition(
+        partitions
+    )
     qs = spark.createDataFrame(queries, "query_id long, embedding array<double>")
     if mode == "bruteforce":
         return cosine_topk_bruteforce(emb, qs, k=k), "cos_sim"
@@ -78,3 +80,27 @@ def test_empty_query_set_returns_empty_frame(spark, mode):
     got, score_col = _topk(spark, mode, corpus, [], k=3)
     assert got.columns == ["query_id", "vec_id", score_col, "rank"]
     assert got.collect() == []
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_null_corpus_id_keeps_long_ids_exact(spark, mode):
+    """One corpus row with a null id next to ids 2**60+1..2**60+7, all in
+    one partition: the null row is not scanned, and every other id comes
+    back exact (a null in a pandas batch would make the ids float64)."""
+    rng = np.random.RandomState(3)
+    V = rng.randint(1, 6, size=(8, 4)).astype(np.float64)
+    ids = [None] + [2**60 + j for j in range(1, 8)]
+    corpus = [(i, v.tolist()) for i, v in zip(ids, V)]
+    queries = [(100, [1.0, 2.0, 3.0, 4.0]), (101, V[3].tolist())]
+    k = 3
+    got, score_col = _topk(spark, mode, corpus, queries, k, partitions=1)
+    rows = sorted(
+        (r["query_id"], r["rank"], r["vec_id"], r[score_col]) for r in got.collect()
+    )
+    kept = np.array(ids[1:], dtype=np.int64)
+    want = []
+    for qid, qv in queries:
+        scores, higher = _reference(mode, V[1:], np.asarray(qv))
+        order = np.lexsort((kept, -scores if higher else scores))
+        want += [(qid, r + 1, int(kept[j]), scores[j]) for r, j in enumerate(order[:k])]
+    assert rows == sorted(want)
