@@ -93,34 +93,31 @@ def build_pipeline_chain(
     sub-chains; the default is the full tiles frame (callers add the
     tileset write, which is a sink choice, not chain logic).
 
+    The map side (geoparse, polygon join, nearest POI) is ONE
+    ``mapInArrow`` pass per page batch (``operators.pipeline._map_side``):
+    one Python runner per map task instead of three, no JVM broadcast join
+    between them and no lat/lon round trip of the whole corpus.  Its
+    ``geoparse``/``sjoin``/``nn_join`` cut-offs stop that pass after the
+    stage, so they time in-pass steps.  The nearest POI stays a map-side
+    column (an earlier knn_broadcast + url join-back was a DAG diamond that
+    ran the upstream twice per action).
+
     The encode runs one wave wide (``total_cores`` tasks); see
     ``tiler._arrange_for_encode`` for why widths follow rows.
-
-    nearest-POI is a map-only pandas-UDF column by design: the earlier
-    knn_broadcast + url equi-join formulation was a DAG diamond (the
-    joined frame fed BOTH the kNN input and the join-back left side) that
-    re-executed geoparse + spatial_join twice per action — measured 21 of
-    31 s at 8M rows / 8 cores — and duplicated features for urls inside
-    overlapping polygons.
     """
-    from .functions.text import geoparse
     from .operators import encode_point_tiles, points_to_features_columnar
-    from .operators.knn import nearest_poi_col
-    from .operators.spatial_join import spatial_join
+    from .operators.pipeline import _map_side
     from .sources import pois_pdf, polygons_pdf
 
     if upto not in PIPELINE_STAGES:
         raise ValueError(f"unknown stage {upto!r} (one of {PIPELINE_STAGES})")
-    pts = geoparse(pages)
-    if upto == "geoparse":
-        return pts
-    joined = spatial_join(pts, polygons_pdf(), zoom=6)
-    if upto == "sjoin":
-        return joined
-    enriched = joined.withColumn(
-        "near_poi",
-        nearest_poi_col(pois_pdf(200))(F.col("lon"), F.col("lat")).cast("string"),
+    mapped = _map_side(
+        pages, polygons_pdf(), pois_pdf(200), zoom=6,
+        upto="nn_join" if upto == "encode" else upto,
     )
+    if upto in ("geoparse", "sjoin"):
+        return mapped
+    enriched = mapped.withColumn("near_poi", F.col("near_poi").cast("string"))
     if upto == "nn_join":
         return enriched
     feats, meta = points_to_features_columnar(

@@ -136,7 +136,7 @@ def encode_point_layer_tiles_bulk(
     extras_gid = np.empty(0, dtype=np.int64)
     extras_tid = np.empty(0, dtype=np.int64)
     guniq = prefix_uniq
-    if string_cols and n:
+    if string_cols:
         mat = np.empty((n, len(string_cols)), dtype=object)
         for j, k in enumerate(string_cols):
             col = prop_arrays[k]
@@ -187,7 +187,7 @@ def encode_point_layer_tiles_bulk(
     by_col: dict[int, list[str]] = {}
     for k in keys:
         t = shape[k]
-        if t == "string":
+        if t in ("string", "null"):  # a null key has no column entry
             continue
         col_id = OColumn.unsigned if t in ("u64", "bool") else _PRIM_TO_COL[t]
         by_col.setdefault(col_id, []).append(k)
@@ -270,6 +270,8 @@ def encode_point_layer_tiles_bulk(
     slot_key_cols = []
     slot_written_cols = []
     for k in keys:
+        if shape[k] == "null":  # a null key writes no value slot
+            continue
         if shape[k] == "string":
             kk = str_value_idx[k].astype(np.int64)
             slot_key_cols.append(kk)

@@ -1,9 +1,9 @@
 """Text-side functions: geoparse + web-scale text analysis.
 
 Geoparse (SURVEY §2.2 P15, north_rule): extract geo-mentions from ``text``.
-The hot path is pure Spark SQL ``regexp_extract`` — JVM-side, codegen'd, no
-Python.  The ``text`` column itself is never rewritten anywhere in the engine
-(byte-identity invariant per url).
+The hot path is one whole-batch Arrow RE2 kernel (``geo_parse_arrow``);
+only the ``text`` column crosses into Python.  The ``text`` column itself is
+never rewritten anywhere in the engine (byte-identity invariant per url).
 
 Text-analysis ops for training-data pipelines (driver-graded first-class
 components): language-ID, quality scoring, token counting, fingerprinting.
@@ -49,27 +49,33 @@ def ws_tokens(col) -> Column:
     return F.filter(F.split(F.lower(c), WS_SPLIT), lambda t: t != "")
 
 
-def _geo_parse_batch(texts: pd.Series) -> pd.DataFrame:
-    """Whole-batch coordinate extraction: ONE vectorized RE2 pass
-    (``pyarrow.compute.extract_regex``) over the Arrow string column plus a
-    vectorized string->double cast.  No per-row Python, no JVM
-    Matcher/String garbage.  RE2 and Java regex agree on this pattern
-    (ASCII classes, no alternation: same leftmost-first match, same greedy
-    groups; both reject unicode digits) and both engines' string->double
-    casts are correctly rounded, so results are bit-identical to the old
-    ``regexp_extract`` formulation — and the DuckDB oracle twin is itself
-    RE2-based."""
+def geo_parse_arrow(texts):
+    """Arrow string array -> (lat, lon) float64 arrays, null where a text
+    has no coordinate mention: ONE vectorized RE2 pass
+    (``pyarrow.compute.extract_regex``) plus a vectorized string->double
+    cast.  No per-row Python, no JVM Matcher/String garbage.  RE2 and Java
+    regex agree on this pattern (ASCII classes, no alternation: same
+    leftmost-first match, same greedy groups; both reject unicode digits)
+    and both engines' string->double casts are correctly rounded, so
+    results are bit-identical to the old ``regexp_extract`` formulation —
+    and the DuckDB oracle twin is itself RE2-based.  geoparse's UDF and the
+    flagship chain's fused map pass (operators/pipeline.py) both call it."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    arr = pa.Array.from_pandas(texts, type=pa.string())
-    r = pc.extract_regex(arr, GEO_PATTERN_NAMED)
-    return pd.DataFrame(
-        {
-            "lat": pc.cast(pc.struct_field(r, "lat"), pa.float64()).to_pandas(),
-            "lon": pc.cast(pc.struct_field(r, "lon"), pa.float64()).to_pandas(),
-        }
+    r = pc.extract_regex(texts, GEO_PATTERN_NAMED)
+    return (
+        pc.cast(pc.struct_field(r, "lat"), pa.float64()),
+        pc.cast(pc.struct_field(r, "lon"), pa.float64()),
     )
+
+
+def _geo_parse_batch(texts: pd.Series) -> pd.DataFrame:
+    """geoparse's pandas-UDF body: :func:`geo_parse_arrow` over a batch."""
+    import pyarrow as pa
+
+    lat, lon = geo_parse_arrow(pa.Array.from_pandas(texts, type=pa.string()))
+    return pd.DataFrame({"lat": lat.to_pandas(), "lon": lon.to_pandas()})
 
 
 def _make_geo_struct_udf():

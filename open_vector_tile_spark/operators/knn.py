@@ -98,6 +98,49 @@ def knn_broadcast(
     return points.select(key, lon, lat).mapInPandas(topk, schema)
 
 
+def nearest_poi_np(lons, lats, plon, plat, pids) -> np.ndarray:
+    """The nearest anchor's ``poi_id`` per point: minimal (dist_m, poi_id)
+    lexicographically, ``knn_broadcast``'s rank 1.  Needs at least one
+    anchor.  The kernel of :func:`nearest_poi_col` and of the flagship
+    chain's fused map pass (operators/pipeline.py)."""
+    lons = np.asarray(lons, dtype=np.float64)
+    lats = np.asarray(lats, dtype=np.float64)
+    id_max = np.int64(np.iinfo(np.int64).max)
+    B = len(lons)
+    out = np.empty(B, dtype=np.int64)
+    # chunk the (batch x n_poi) distance matrix so every numpy temporary
+    # stays a few MB: a whole 50k-row Arrow batch makes ~12 temporaries
+    # of batch*n_poi*8 bytes per haversine call, and past glibc's mmap
+    # threshold every temporary is an mmap/munmap round-trip — kernel page
+    # allocation serializes ACROSS executor python workers, measured as
+    # the flagship nn stage scaling 2->8 execs at 0.29 while the box's
+    # same-window memstream control scaled 0.98.  Chunked, allocation
+    # stays in the malloc free-list and the stage scales with cores.
+    chunk = max(1, (4 << 20) // (8 * max(len(pids), 1)))
+    for s in range(0, B, chunk):
+        e = min(s + chunk, B)
+        d = haversine_np(
+            lons[s:e, None], lats[s:e, None], plon[None, :], plat[None, :]
+        )
+        # argmin on distance, then min poi_id among exact-distance ties
+        # (identical pick to knn_broadcast's lexsort rank 1, but three
+        # vector passes instead of a full 200-wide sort).  NaN distances
+        # (NaN POI or input coordinate) are skipped via nanmin — plain
+        # min would propagate NaN, making the tie mask all-False and the
+        # row collapse to int64 max; lexsort orders NaN last, so the
+        # matching pick is the nearest FINITE poi, and min poi_id when
+        # every distance is NaN (r5 advisor finding).  fmin skips NaN
+        # without the all-NaN-slice warning nanmin would raise.
+        dmin = np.fmin.reduce(d, axis=1)
+        tie = d == dmin[:, None]
+        pick = np.where(tie, pids[None, :], id_max).min(axis=1)
+        all_nan = np.isnan(dmin)
+        if all_nan.any():
+            pick[all_nan] = pids.min()
+        out[s:e] = pick
+    return out
+
+
 def nearest_poi_col(pois_pdf: pd.DataFrame):
     """k=1 kNN as a map-only enrichment COLUMN: `(lon, lat) -> poi_id`.
 
@@ -109,11 +152,11 @@ def nearest_poi_col(pois_pdf: pd.DataFrame):
     through exactly that diamond).  For nearest-neighbor *enrichment* the
     Spark-first shape is a scalar pandas UDF: one extra column, zero
     shuffle, zero recompute, same (n x m) vectorized distance matrix per
-    Arrow batch.
+    Arrow batch (:func:`nearest_poi_np`).
 
     Tie-break matches ``knn_broadcast`` rank 1 exactly: minimal
     (dist_m, poi_id) lexicographically.  POIs are a broadcast-sized dim
-    table by this module's contract.
+    table by this module's contract.  With no anchors the column is null.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -121,49 +164,11 @@ def nearest_poi_col(pois_pdf: pd.DataFrame):
     plat = pois_pdf["lat"].to_numpy(dtype=np.float64)
     pids = pois_pdf["poi_id"].to_numpy(dtype=np.int64)
 
-    id_max = np.int64(np.iinfo(np.int64).max)
-
     @pandas_udf("long")
     def nearest(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        if len(lon) == 0:
-            return pd.Series([], dtype="int64")
         if len(pids) == 0:  # no anchors: null enrichment, not a crash
             return pd.Series([pd.NA] * len(lon), dtype="Int64")
-        lons = lon.to_numpy(dtype=np.float64)
-        lats = lat.to_numpy(dtype=np.float64)
-        B = len(lons)
-        out = np.empty(B, dtype=np.int64)
-        # chunk the (batch x n_poi) distance matrix so every numpy temporary
-        # stays a few MB: a whole 50k-row Arrow batch makes ~12 temporaries
-        # of batch*n_poi*8 bytes per haversine call, and past glibc's mmap
-        # threshold every temporary is an mmap/munmap round-trip — kernel page
-        # allocation serializes ACROSS executor python workers, measured as
-        # the flagship nn stage scaling 2->8 execs at 0.29 while the box's
-        # same-window memstream control scaled 0.98.  Chunked, allocation
-        # stays in the malloc free-list and the stage scales with cores.
-        chunk = max(1, (4 << 20) // (8 * max(len(pids), 1)))
-        for s in range(0, B, chunk):
-            e = min(s + chunk, B)
-            d = haversine_np(
-                lons[s:e, None], lats[s:e, None], plon[None, :], plat[None, :]
-            )
-            # argmin on distance, then min poi_id among exact-distance ties
-            # (identical pick to knn_broadcast's lexsort rank 1, but three
-            # vector passes instead of a full 200-wide sort).  NaN distances
-            # (NaN POI or input coordinate) are skipped via nanmin — plain
-            # min would propagate NaN, making the tie mask all-False and the
-            # row collapse to int64 max; lexsort orders NaN last, so the
-            # matching pick is the nearest FINITE poi, and min poi_id when
-            # every distance is NaN (r5 advisor finding).  fmin skips NaN
-            # without the all-NaN-slice warning nanmin would raise.
-            dmin = np.fmin.reduce(d, axis=1)
-            tie = d == dmin[:, None]
-            pick = np.where(tie, pids[None, :], id_max).min(axis=1)
-            all_nan = np.isnan(dmin)
-            if all_nan.any():
-                pick[all_nan] = pids.min()
-            out[s:e] = pick
-        return pd.Series(out)
+        return pd.Series(nearest_poi_np(lon, lat, plon, plat, pids))
 
     return nearest
 

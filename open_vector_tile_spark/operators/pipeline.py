@@ -1,27 +1,129 @@
 """The flagship end-to-end pipeline (SURVEY §3.4, north_rule):
 
-pages -> geoparse (P15, text byte-identity preserved)
-      -> cell encode (F19, column-expr or Arrow)
-      -> two-phase spatial join to polygon layers (J1+J2, broadcast covering)
-      -> kNN to POI anchors (J3/O4)
+pages -> one fused map pass per Arrow batch (:func:`_map_side`):
+         geoparse (P15, text byte-identity preserved)
+         -> cell encode (F19)
+         -> two-phase spatial join to polygon layers (J1 cell probe + J2 refine)
+         -> nearest POI anchor (J3/O4)
       -> extent quantize (P13) per zoom
       -> shuffle on (zoom, tile_x, tile_y) -> OVT encode (S7)
       -> tiles table + lineage/metrics (A7), resumable (J5).
+
+``run_pipeline`` and ``benchjobs.build_pipeline_chain`` share the map pass.
+It calls the kernels the standalone operators use (``geoparse``'s Arrow
+regex, ``spatial_join``'s covering and refine, ``nearest_poi_col``'s
+haversine pick), so each step keeps one implementation.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import geoparse
-from .knn import nearest_poi_col
-from .spatial_join import spatial_join
+from ..functions.geo import cell_id_np
+from ..functions.text import geo_parse_arrow
+from .knn import nearest_poi_np
+from .spatial_join import covering_arrays, polygon_rings, refine_mask
 from .tiler import encode_tiles, points_to_features, polygons_to_features
 from .resume import TileStore
+
+_MAP_STAGES = ("geoparse", "sjoin", "nn_join")
+
+
+def _map_side(
+    pages: DataFrame,
+    polygons_pdf: pd.DataFrame,
+    pois_pdf: Optional[pd.DataFrame],
+    zoom: int,
+    upto: str = "nn_join",
+) -> DataFrame:
+    """The flagship chain's map side as ONE ``mapInArrow`` pass per page
+    batch: parse the first coordinate mention, compute the z``zoom`` cell,
+    probe the exact polygon covering, refine each candidate with the exact
+    point-in-polygon test and pick the nearest POI.  Only ``url``, ``lang``
+    and ``text`` go into Python; only matched rows come back, as
+    ``url, lang, lon, lat, poly_id, near_poi`` (``near_poi`` is a long,
+    null with no anchors; absent when ``pois_pdf`` is None).
+
+    It equals ``geoparse -> spatial_join(zoom) -> nearest_poi_col``
+    (tests/test_chain_map_side.py) with one Python runner per task instead
+    of three, no JVM broadcast join between them and no lat/lon round trip
+    of the whole corpus.  Matches keep page order within a batch (a page's
+    polygons in covering order), so a chain without an id sort key keeps
+    its within-tile feature order.
+
+    ``upto`` stops after a stage of _MAP_STAGES: ``geoparse`` gives every
+    parsed page with ``lon``/``lat``, ``sjoin`` adds the matches and
+    ``poly_id``, ``nn_join`` adds ``near_poi``.
+
+    The point's cell comes from numpy's mercator math.  The JVM's
+    ``cell_col`` may round a point within an ULP of a tile edge into the
+    neighbouring cell, but the match cannot differ: the exact covering
+    holds every cell a polygon touches."""
+    stop = _MAP_STAGES.index(upto)
+    cells, cell_pids = covering_arrays(polygons_pdf, zoom)
+    by_cell = np.argsort(cells, kind="stable")
+    cells, cell_pids = cells[by_cell], cell_pids[by_cell]
+    rings = polygon_rings(polygons_pdf)
+    nearest = stop >= 2 and pois_pdf is not None
+    if nearest:
+        plon = pois_pdf["lon"].to_numpy(dtype=np.float64)
+        plat = pois_pdf["lat"].to_numpy(dtype=np.float64)
+        pids = pois_pdf["poi_id"].to_numpy(dtype=np.int64)
+    types = dict(pages.select("url", "lang").dtypes)
+    schema = f"url {types['url']}, lang {types['lang']}, lon double, lat double"
+    if stop >= 1:
+        schema += ", poly_id long"
+    if nearest:
+        schema += ", near_poi long"
+
+    def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            lat, lon = geo_parse_arrow(batch.column("text"))
+            parsed = pc.and_(lat.is_valid(), lon.is_valid())
+            rows = np.flatnonzero(parsed.to_numpy(zero_copy_only=False))
+            px = lon.to_numpy(zero_copy_only=False)[rows]
+            py = lat.to_numpy(zero_copy_only=False)[rows]
+            out = {}
+            if stop >= 1:
+                # J1: each point's run of (cell, poly_id) covering rows
+                c = cell_id_np(px, py, zoom)
+                lo = np.searchsorted(cells, c, "left")
+                n = np.searchsorted(cells, c, "right") - lo
+                cand = np.repeat(np.arange(len(c)), n)
+                pos = np.arange(len(cand)) + np.repeat(lo - (np.cumsum(n) - n), n)
+                pid = cell_pids[pos]
+                # J2: exact refine of every candidate pair
+                keep = refine_mask(px[cand], py[cand], pid, rings)
+                hit = cand[keep]
+                rows, px, py = rows[hit], px[hit], py[hit]
+                out["poly_id"] = pid[keep]
+            if not len(rows):
+                continue
+            if nearest:
+                out["near_poi"] = (
+                    pa.array(nearest_poi_np(px, py, plon, plat, pids))
+                    if len(pids)
+                    else pa.nulls(len(rows), pa.int64())
+                )
+            take = pa.array(rows)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "url": batch.column("url").take(take),
+                    "lang": batch.column("lang").take(take),
+                    "lon": px,
+                    "lat": py,
+                    **out,
+                }
+            )
+
+    return pages.select("url", "lang", "text").mapInArrow(fused, schema)
 
 
 def run_pipeline(
@@ -53,8 +155,10 @@ def run_pipeline(
     polygon features are encoded under their own OVT layer names; without
     one they all land in a single ``admin`` layer.
     """
-    points = geoparse(pages)
-    joined = spatial_join(points, polygons_pdf, zoom=zoom)
+    # geoparse, the polygon join and the nearest-POI pick run in one map
+    # pass; the nearest POI is attached BEFORE featurization so props_json
+    # is serialized exactly once
+    joined = _map_side(pages, polygons_pdf, pois_pdf, zoom)
     # a stable numeric feature id gives encode_tiles a within-tile sort key
     # — without one, tile BYTES depend on shuffle arrival order and a
     # resumed run would mix old and fresh encodings of identical inputs
@@ -66,16 +170,7 @@ def run_pipeline(
     )
     props_cols = ["url", "lang", "poly_id"]
     if pois_pdf is not None:
-        # nearest-POI enrichment as a map-only pandas-UDF column, attached
-        # BEFORE featurization so props_json is serialized exactly once.
-        # The previous knn_broadcast(survivors) + join-back formulation was
-        # a DAG diamond — `joined` fed BOTH the kNN input and the join left
-        # side, so geoparse + spatial_join executed TWICE per action
-        # (measured 21 of 31 s at 8M rows / 8 cores in the bench twin of
-        # this chain).  Same rank-1 pick incl. (dist, poi_id) tie-break.
-        joined = joined.withColumn(
-            "nearest_poi", nearest_poi_col(pois_pdf)(F.col("lon"), F.col("lat"))
-        )
+        joined = joined.withColumnRenamed("near_poi", "nearest_poi")
         props_cols.append("nearest_poi")
     features = points_to_features(
         joined,

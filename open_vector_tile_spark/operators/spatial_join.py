@@ -43,32 +43,67 @@ def polygon_covering(
     superset; shrinks the candidate set vs bbox covering on non-rectangular
     polygons), else the bbox covering.  Computed on the driver (polygon
     layers are dim-table sized) and broadcast."""
-    rows = []
-    for _, row in polygons_pdf.iterrows():
-        rings = _rings_of(row)
-        if not rings:
-            continue
-        outer = rings[0]
-        if exact:
-            txs, tys = cover_polygon_np(rings, zoom)
-        else:
-            txs, tys = cover_bbox_np(
-                outer[:, 0].min(), outer[:, 1].min(), outer[:, 0].max(), outer[:, 1].max(), zoom
-            )
-        for c in pack_cell_np(zoom, txs, tys).tolist():
-            rows.append((int(c), int(row["poly_id"])))
+    cells, pids = covering_arrays(polygons_pdf, zoom, exact)
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "poly_id"]),
+        pd.DataFrame({"cell": cells, "poly_id": pids}),
         schema="cell long, poly_id long",
     )
 
 
-def _rings_of(row) -> list:
-    out = []
-    for flat in row["ring_xy"]:
-        arr = np.asarray(flat, dtype=np.float64).reshape(-1, 2)
-        out.append(arr)
-    return out
+def covering_arrays(
+    polygons_pdf: pd.DataFrame, zoom: int, exact: bool = True
+) -> tuple[np.ndarray, np.ndarray]:
+    """The (cell, poly_id) covering of :func:`polygon_covering` as two int64
+    arrays, in polygon order — the one covering kernel of the driver-side
+    join, the executor-side ``polygon_covering_df`` and the flagship
+    chain's fused map pass (operators/pipeline.py)."""
+    cells, pids = [], []
+    for pid, flat in zip(polygons_pdf["poly_id"], polygons_pdf["ring_xy"]):
+        rings = _parse_rings(flat)
+        if not rings:
+            continue
+        if exact:
+            txs, tys = cover_polygon_np(rings, zoom)
+        else:
+            outer = rings[0]
+            txs, tys = cover_bbox_np(
+                outer[:, 0].min(), outer[:, 1].min(), outer[:, 0].max(), outer[:, 1].max(), zoom
+            )
+        cs = pack_cell_np(zoom, txs, tys)
+        cells.append(cs)
+        pids.append(np.full(len(cs), int(pid), dtype=np.int64))
+    if not cells:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    return np.concatenate(cells), np.concatenate(pids)
+
+
+def _parse_rings(flat_rings) -> list:
+    return [np.asarray(f, dtype=np.float64).reshape(-1, 2) for f in flat_rings]
+
+
+def polygon_rings(polygons_pdf: pd.DataFrame) -> dict:
+    """poly_id -> parsed rings (ring 0 outer, then holes), for
+    :func:`refine_mask`."""
+    return {
+        int(pid): _parse_rings(flat)
+        for pid, flat in zip(polygons_pdf["poly_id"], polygons_pdf["ring_xy"])
+    }
+
+
+def refine_mask(px, py, poly_ids, rings_by_id: dict) -> np.ndarray:
+    """J2 exact refine: is point i inside polygon ``poly_ids[i]``?  One
+    vectorized ray-cast (``points_in_polygon_np``) per distinct polygon.
+    The refine kernel of ``spatial_join``, ``spatial_join_distributed`` and
+    the flagship chain's fused map pass."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    poly_ids = np.asarray(poly_ids, dtype=np.int64)
+    keep = np.zeros(len(poly_ids), dtype=bool)
+    order = np.argsort(poly_ids, kind="stable")
+    uniq, starts = np.unique(poly_ids[order], return_index=True)
+    for pid, idx in zip(uniq.tolist(), np.split(order, starts[1:])):
+        keep[idx] = points_in_polygon_np(px[idx], py[idx], rings_by_id[pid])
+    return keep
 
 
 def spatial_join(
@@ -108,28 +143,19 @@ def spatial_join(
     if not exact:
         return candidates
 
-    # phase 2: vectorized PIP per candidate batch.  Polygon rings ride to the
-    # executors as an explicit broadcast variable — one torrent transfer per
-    # executor instead of a copy inside every task closure (matters when the
-    # polygon side grows to many MB).
-    rings_by_id = {
-        int(r["poly_id"]): [a.tolist() for a in _rings_of(r)] for _, r in polygons_pdf.iterrows()
-    }
-    b_rings = spark.sparkContext.broadcast(rings_by_id)
+    # phase 2: vectorized PIP per candidate batch.  The parsed rings ride
+    # in the task closure (pyspark itself broadcasts a command past 1 MB),
+    # so no broadcast variable outlives the call.
+    rings_by_id = polygon_rings(polygons_pdf)
     schema = candidates.schema
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rings_by_id = b_rings.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon].to_numpy()
-            py = pdf[lat].to_numpy()
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                rings = [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings_by_id[int(pid)]]
-                keep[idx] = points_in_polygon_np(px[idx], py[idx], rings)
-            yield pdf[keep]
+            yield pdf[
+                refine_mask(pdf[lon], pdf[lat], pdf["poly_id"], rings_by_id)
+            ]
 
     return candidates.mapInPandas(refine, schema)
 
@@ -146,26 +172,9 @@ def polygon_covering_df(polygons: DataFrame, zoom: int, exact: bool = True) -> D
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cells, pids = [], []
-            for pid, rings_flat in zip(pdf["poly_id"], pdf["ring_xy"]):
-                rings = [np.asarray(f, dtype=np.float64).reshape(-1, 2) for f in rings_flat]
-                if not rings:
-                    continue
-                outer = rings[0]
-                if exact:
-                    txs, tys = cover_polygon_np(rings, zoom)
-                else:
-                    txs, tys = cover_bbox_np(
-                        outer[:, 0].min(), outer[:, 1].min(),
-                        outer[:, 0].max(), outer[:, 1].max(), zoom,
-                    )
-                cs = pack_cell_np(zoom, txs, tys)
-                cells.append(cs)
-                pids.append(np.full(len(cs), int(pid), dtype=np.int64))
-            if cells:
-                yield pd.DataFrame(
-                    {"cell": np.concatenate(cells), "poly_id": np.concatenate(pids)}
-                )
+            cells, pids = covering_arrays(pdf, zoom, exact)
+            if len(cells):
+                yield pd.DataFrame({"cell": cells, "poly_id": pids})
 
     return polygons.select("poly_id", "ring_xy").mapInPandas(cover, spec)
 
@@ -216,15 +225,12 @@ def spatial_join_distributed(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon].to_numpy()
-            py = pdf[lat].to_numpy()
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                rings = [
-                    np.asarray(f, dtype=np.float64).reshape(-1, 2)
-                    for f in pdf["ring_xy"].iloc[idx[0]]
-                ]
-                keep[idx] = points_in_polygon_np(px[idx], py[idx], rings)
+            first = pdf.drop_duplicates("poly_id")
+            rings_by_id = {
+                int(pid): _parse_rings(flat)
+                for pid, flat in zip(first["poly_id"], first["ring_xy"])
+            }
+            keep = refine_mask(pdf[lon], pdf[lat], pdf["poly_id"], rings_by_id)
             yield pdf[keep].drop(columns=["ring_xy"])
 
     return cand.mapInPandas(refine, out_schema)
@@ -237,7 +243,7 @@ def bbox_prejoin(points: DataFrame, polygons_pdf: pd.DataFrame, lon: str = "lon"
     spark = points.sparkSession
     rows = []
     for _, row in polygons_pdf.iterrows():
-        rings = _rings_of(row)
+        rings = _parse_rings(row["ring_xy"])
         if not rings:
             continue
         outer = rings[0]

@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from open_vector_tile_spark.codec import VectorTile
+from open_vector_tile_spark.codec import BaseFeature, BaseLayer, VectorTile, write_ov_tile
 from open_vector_tile_spark.codec.fast_points import encode_point_layer_tiles_bulk
 from open_vector_tile_spark.operators.tiler import LayerSpec, _encode_rows
 
@@ -84,6 +84,43 @@ def test_fast_empty_shape():
     (got,) = encode_point_layer_tiles_bulk("l", 512, {}, {}, qx, qy, [n])
     want = generic_bytes("l", 512, {}, [{} for _ in range(n)], qx, qy)
     assert got == want
+
+
+def _written(shape, props_rows, qx, qy) -> bytes:
+    """The generic writer's tile of one point layer (no ids)."""
+    feats = [BaseFeature(1, [(int(x), int(y))], p, None) for x, y, p in zip(qx, qy, props_rows)]
+    return write_ov_tile([BaseLayer(name="pages", extent=4096, shape=dict(shape), features=feats)])
+
+
+def test_null_key_gets_no_value_slot():
+    """A "null" shape key has no column entry and no value slot, as in the
+    generic writer; a slot for it shifted every later key (``b`` decoded
+    as the layer name)."""
+    shape = {"a": "null", "b": "string", "c": "f64", "d": "null"}
+    rows = [{"a": None, "b": "x", "c": 1.5, "d": None}, {"a": None, "b": "y", "c": 1.5, "d": None}]
+    qx, qy = np.array([1, 3]), np.array([2, 4])
+    props = {
+        "a": np.array([None, None], dtype=object),
+        "b": np.array(["x", "y"], dtype=object),
+        "c": np.array([1.5, 1.5]),
+        "d": np.array([None, None], dtype=object),
+    }
+    (got,) = encode_point_layer_tiles_bulk("pages", 4096, shape, props, qx, qy, [2])
+    assert got == _written(shape, rows, qx, qy)
+    layer = VectorTile(got).layers["pages"]
+    assert [layer.feature(i).properties for i in range(2)] == rows
+
+
+@pytest.mark.parametrize(
+    "shape", [{"s": "string"}, {"s": "string", "u": "u64", "f": "f32"}, {"n": "null"}, {}]
+)
+def test_empty_batch_equals_generic(shape):
+    """A zero-row batch encodes the generic writer's empty layer (a string
+    key used to raise ``KeyError``)."""
+    props = {k: np.array([], dtype=object) for k in shape}
+    empty = np.array([], dtype=np.int64)
+    (got,) = encode_point_layer_tiles_bulk("pages", 4096, shape, props, empty, empty, [0])
+    assert got == _written(shape, [], empty, empty)
 
 
 def test_encode_point_tiles_spark_equals_generic(spark):
