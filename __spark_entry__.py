@@ -1964,8 +1964,8 @@ def _q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_polygon_ingest_dist(spark: SparkSession, sf: str) -> DataFrame:
-    """Executor-side polygon featurizer end-to-end: a DataFrame of rectangle
-    rings (NO driver materialization, no createDataFrame(rows)) ->
+    """The polygon featurizer end-to-end: a DataFrame of rectangle rings
+    (NO driver materialization, no createDataFrame(rows)) ->
     polygons_to_features_dist (mapInPandas covering + quantization) ->
     encode_tiles -> decode_tiles -> every decoded quantized vertex.  The
     oracle recomputes tile cover AND every vertex's extent-quantized ints in
@@ -2595,14 +2595,12 @@ def _clip_pyramid_oracle_sql() -> str:
 
 
 def _q_clip_pyramid(spark: SparkSession, sf: str) -> DataFrame:
-    """Multi-zoom clipped line ingest through the REAL pyramid featurizer
-    (tiler.lines_to_features_pyramid_dist: one scan, mercator projected
-    once, per-zoom Liang–Barsky clip inside the Arrow kernel).  Every
+    """Multi-zoom clipped line ingest through the REAL line featurizer
+    given a zoom list (tiler.lines_to_features_dist: one scan, mercator
+    projected once, per-zoom Liang–Barsky clip inside the Arrow kernel).  Every
     quantized endpoint at both zooms is recomputed closed-form by the
     DuckDB twin — numpy kernel vs SQL arithmetic, bit-for-bit."""
-    from open_vector_tile_spark.operators.tiler import (
-        lines_to_features_pyramid_dist,
-    )
+    from open_vector_tile_spark.operators.tiler import lines_to_features_dist
 
     docs = _load(spark, sf, "documents")
     lon1 = ((F.col("doc_id") * 37) % 3600) / 10.0 - 180.0
@@ -2613,7 +2611,7 @@ def _q_clip_pyramid(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("line_id"),
         F.array(lon1, lat1, lon2, lat2).alias("xy"),
     )
-    feats = lines_to_features_pyramid_dist(
+    feats = lines_to_features_dist(
         lines, [2, 3], layer="seg", extent=4096, props_cols=[], clip_buffer=16
     )
     return feats.select(

@@ -52,17 +52,11 @@ from .tiler import (  # noqa: F401
     encode_point_tiles,
     encode_tiles,
     images_to_tiles,
-    lines3d_to_features,
-    lines_to_features,
     lines_to_features_dist,
-    lines_to_features_pyramid_dist,
     points3d_to_features,
     points_to_features,
     points_to_features_pyramid,
-    polygons3d_to_features,
     points_to_features_columnar,
-    polygons_to_features,
     polygons_to_features_dist,
-    polygons_to_features_pyramid_dist,
     s2json_tiles_to_ovt,
 )

@@ -4,11 +4,12 @@ every covered tile" and "quantize into the tile extent".
 The reference library is a codec: it encodes whatever geometry it is given
 and RELIES on the producer having clipped features to the tile + buffer
 (vector-tile-spec README.md:411-413 — geometries may extend past the tile
-edge only as far as the buffer).  `lines/polygons_to_features_dist` so far
-emitted the WHOLE geometry into every covered tile, which is correct for
-round-trips but wrong at scale: a coastline polyline spanning 40 tiles would
-carry all its vertices into each of the 40 tiles (O(tiles × vertices) bytes
-instead of O(vertices)).  This module supplies the clip:
+edge only as far as the buffer).  Without ``clip_buffer``,
+`lines/polygons_to_features_dist` emit the WHOLE geometry into every covered
+tile, which is correct for round-trips but wrong at scale: a coastline
+polyline spanning 40 tiles would carry all its vertices into each of the 40
+tiles (O(tiles × vertices) bytes instead of O(vertices)).  This module
+supplies the clip:
 
 * :func:`segment_clip_cols` — Liang–Barsky parametric segment clipping as
   PURE COLUMN EXPRESSIONS (closed form: the enter/exit parameters are

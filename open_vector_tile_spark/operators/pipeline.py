@@ -30,7 +30,7 @@ from ..functions.geo import cell_id_np
 from ..functions.text import geo_parse_arrow
 from .knn import nearest_poi_np
 from .spatial_join import covering_arrays, polygon_rings, refine_mask
-from .tiler import encode_tiles, points_to_features, polygons_to_features
+from .tiler import encode_tiles, points_to_features, polygons_to_features_dist
 from .resume import TileStore
 
 _MAP_STAGES = ("geoparse", "sjoin", "nn_join")
@@ -132,16 +132,13 @@ def run_pipeline(
     pois_pdf: Optional[pd.DataFrame],
     zoom: int,
     extent: int = 4096,
-    k: int = 3,
     store: Optional[TileStore] = None,
 ) -> DataFrame:
     """-> tiles DataFrame (TILE_SCHEMA). When ``store`` is given, commits a
     snapshot and skips already-materialized tiles (resume).
 
-    ``k`` is accepted for backward compatibility but only the NEAREST
-    anchor is ever attached to the page features (it always was: the old
-    formulation computed k neighbors and kept rank 1).  Callers that need
-    the full top-k result set should run :func:`knn_broadcast` /
+    Only the NEAREST POI is attached to the page features; callers that
+    need the full top-k result set should run :func:`knn_broadcast` /
     :func:`knn_cell_ring` directly.
 
     Corpus semantics: the spatial join is INNER — a geoparsed page whose
@@ -153,7 +150,8 @@ def run_pipeline(
 
     Multi-layer polygons: when ``polygons_pdf`` has a ``layer`` column the
     polygon features are encoded under their own OVT layer names; without
-    one they all land in a single ``admin`` layer.
+    one they all land in a single ``admin`` layer.  Their properties are
+    whichever of ``name``, ``kind`` and ``rank`` the table has.
     """
     # geoparse, the polygon join and the nearest-POI pick run in one map
     # pass; the nearest POI is attached BEFORE featurization so props_json
@@ -190,9 +188,11 @@ def run_pipeline(
         ]
     else:
         groups = [("admin", polygons_pdf)]
+    props = [c for c in ("name", "kind", "rank") if c in polygons_pdf.columns]
     for name, grp in groups:
-        poly_features = polygons_to_features(
-            spark, grp, zoom=zoom, layer=name, extent=extent
+        poly_features = polygons_to_features_dist(
+            spark.createDataFrame(grp), zoom=zoom, layer=name, extent=extent,
+            props_cols=props,
         )
         features = features.unionByName(poly_features, allowMissingColumns=True)
     if store is not None:

@@ -106,6 +106,33 @@ def refine_mask(px, py, poly_ids, rings_by_id: dict) -> np.ndarray:
     return keep
 
 
+def _candidates(
+    points: DataFrame,
+    covering: DataFrame,
+    zoom: int,
+    lon: str,
+    lat: str,
+    salt: Optional[int],
+) -> DataFrame:
+    """J1: points ⋈ (cell, poly_id) covering on the points' packed cell id
+    -> candidate rows + ``cell`` + ``poly_id``.  The covering is broadcast;
+    with ``salt`` (J4, covering too big to broadcast) it is replicated xN
+    and hot cells on the big side are split so one mega-cell (dense urban
+    tile) spreads over N reducers.  The shuffle_hash hint forces the
+    shuffle path — auto-broadcast of a small covering would silently
+    bypass the salting under test."""
+    pts = points.withColumn("cell", cell_col(F.col(lon), F.col(lat), zoom))
+    if not salt:
+        return pts.join(F.broadcast(covering), on="cell", how="inner")
+    pts = pts.withColumn("salt", F.pmod(F.xxhash64(F.col(lon), F.col(lat)), F.lit(salt)))
+    covering = covering.crossJoin(
+        points.sparkSession.range(salt).select(F.col("id").cast("long").alias("salt"))
+    )
+    return pts.join(
+        covering.hint("shuffle_hash"), on=["cell", "salt"], how="inner"
+    ).drop("salt")
+
+
 def spatial_join(
     points: DataFrame,
     polygons_pdf: pd.DataFrame,
@@ -117,29 +144,13 @@ def spatial_join(
 ) -> DataFrame:
     """points(lon,lat,...) ⋈ polygons -> rows + ``poly_id`` (+ per-row cell).
 
-    J1: equi-join on packed cell id against the broadcast covering.
+    J1: equi-join on packed cell id against the broadcast exact covering.
     J2: exact PIP refinement via Arrow-vectorized ray-cast (skipped when
-    ``exact=False`` for covering-only semantics).
+    ``exact=False``: the J1 candidates are returned).
     J4: optional salting for the non-broadcast path.
     """
-    spark = points.sparkSession
-    covering = polygon_covering(spark, polygons_pdf, zoom)
-    pts = points.withColumn("cell", cell_col(F.col(lon), F.col(lat), zoom))
-    if salt:
-        # shuffle-join variant (covering too big to broadcast): replicate the
-        # covering side xN and split hot cells on the big side so one
-        # mega-cell (dense urban tile) spreads over N reducers.  The
-        # shuffle_hash hint forces the shuffle path — auto-broadcast of a
-        # small covering would silently bypass the salting under test.
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(F.col(lon), F.col(lat)), F.lit(salt)))
-        covering = covering.crossJoin(
-            spark.range(salt).select(F.col("id").cast("long").alias("salt"))
-        )
-        candidates = pts.join(
-            covering.hint("shuffle_hash"), on=["cell", "salt"], how="inner"
-        ).drop("salt")
-    else:
-        candidates = pts.join(F.broadcast(covering), on="cell", how="inner")
+    covering = polygon_covering(points.sparkSession, polygons_pdf, zoom)
+    candidates = _candidates(points, covering, zoom, lon, lat, salt)
     if not exact:
         return candidates
 
@@ -160,19 +171,19 @@ def spatial_join(
     return candidates.mapInPandas(refine, schema)
 
 
-def polygon_covering_df(polygons: DataFrame, zoom: int, exact: bool = True) -> DataFrame:
+def polygon_covering_df(polygons: DataFrame, zoom: int) -> DataFrame:
     """Executor-side covering: (cell, poly_id) computed inside mapInPandas.
 
     The driver-side ``polygon_covering`` assumes a dim-table-sized polygon
     layer; this variant removes that cap — each partition covers its own
     polygons, so the layer can be arbitrarily large (country-scale admin sets,
-    parcel data).  Same cell semantics as the driver path (asserted equal in
-    tests)."""
+    parcel data).  Same cells as the driver path's exact covering (asserted
+    equal in tests)."""
     spec = "cell long, poly_id long"
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cells, pids = covering_arrays(pdf, zoom, exact)
+            cells, pids = covering_arrays(pdf, zoom)
             if len(cells):
                 yield pd.DataFrame({"cell": cells, "poly_id": pids})
 
@@ -192,26 +203,17 @@ def spatial_join_distributed(
     """Fully-distributed two-phase spatial join — no driver materialization of
     the polygon layer anywhere in the plan.
 
-    Same semantics as ``spatial_join`` but ``polygons`` is a DataFrame with
-    ``(poly_id long, ring_xy array<array<double>>)``.  Phase 1 equi-joins the
-    executor-computed covering; phase 2 joins candidates back to the polygon
-    rings on ``poly_id`` (broadcast when ``broadcast_polygons``, else a keyed
-    shuffle join — the 100 TB path when the polygon side itself is huge) and
-    ray-casts with rings carried in-row, parsed once per distinct polygon per
-    Arrow batch."""
-    spark = points.sparkSession
-    covering = polygon_covering_df(polygons, zoom, exact=exact)
-    pts = points.withColumn("cell", cell_col(F.col(lon), F.col(lat), zoom))
-    if salt:
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(F.col(lon), F.col(lat)), F.lit(salt)))
-        covering = covering.crossJoin(
-            spark.range(salt).select(F.col("id").cast("long").alias("salt"))
-        )
-        candidates = pts.join(
-            covering.hint("shuffle_hash"), on=["cell", "salt"], how="inner"
-        ).drop("salt")
-    else:
-        candidates = pts.join(F.broadcast(covering), on="cell", how="inner")
+    Same semantics as ``spatial_join`` (``exact`` included: it switches
+    only the J2 refine; J1 always probes the exact covering) but
+    ``polygons`` is a DataFrame with ``(poly_id long, ring_xy
+    array<array<double>>)``.  Phase 1 equi-joins the executor-computed
+    covering; phase 2 joins candidates back to the polygon rings on
+    ``poly_id`` (broadcast when ``broadcast_polygons``, else a keyed shuffle
+    join — the 100 TB path when the polygon side itself is huge) and
+    ray-casts with rings carried in-row, parsed once per distinct polygon
+    per Arrow batch."""
+    covering = polygon_covering_df(polygons, zoom)
+    candidates = _candidates(points, covering, zoom, lon, lat, salt)
     if not exact:
         return candidates
 

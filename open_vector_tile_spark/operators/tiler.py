@@ -25,8 +25,10 @@ Feature row schema (FIXTURES.md §6):
 from __future__ import annotations
 
 import json
+from collections import defaultdict
 from dataclasses import dataclass
-from typing import Iterable, Optional
+from itertools import product
+from typing import Iterable, Optional, Union
 
 import numpy as np
 import pandas as pd
@@ -35,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codec import BaseFeature, BaseLayer, BaseLine, write_ov_tile
+from ..codec.mvt import signed_area
 from ._parallel import fan_out
 
 FEATURE_SCHEMA = (
@@ -510,292 +513,19 @@ def points_to_features_columnar(
     return points.select(*cols), {"layer": layer, "extent": extent, "specs": specs}
 
 
-def polygons_to_features(
-    spark,
-    polygons_pdf,
-    zoom: int,
-    layer: str,
-    extent: int = 4096,
-    drop_degenerate: bool = True,
-) -> DataFrame:
-    """Polygon layer (dim-table pandas, FIXTURES.md §2 shape) -> feature rows.
-
-    Each polygon is assigned to every tile its bbox covers (spec buffer
-    semantics: coordinates outside [0, extent] are legal, reference does not
-    clip — vector-tile-spec README.md:411-413); ring coords are projected to
-    tile-local extent ints with JS half-up rounding (P13).  Zero-area rings
-    are dropped like classifyRings does (src/mapbox/vectorFeature.ts:357-381)
-    unless ``drop_degenerate=False``.
-
-    Runs driver-side (DECLARED dim-table helper — fine below ~10^4 geometries;
-    above that, use the scale twin); the corpus-scale path is
-    :func:`polygons_to_features_dist`, which
-    produces identical rows from a Spark DataFrame with no driver
-    materialization.  Returns a Spark DataFrame ready to union with point
-    feature rows for multi-layer tiles.
-    """
-    import json as _json
-
-    from ..functions.geo import cover_bbox_np, merc_x_np, merc_y_np
-    from ..codec.mvt import signed_area
-
-    n = float(1 << zoom)
-    rows = []
-    for _, poly in polygons_pdf.iterrows():
-        rings = [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in poly["ring_xy"]]
-        rings = [r for r in rings if not drop_degenerate or signed_area([tuple(p) for p in r]) != 0.0]
-        if not rings:
-            continue
-        outer = rings[0]
-        txs, tys = cover_bbox_np(
-            outer[:, 0].min(), outer[:, 1].min(), outer[:, 0].max(), outer[:, 1].max(), zoom
-        )
-        props = _json.dumps(
-            {k: poly[k] for k in ("name", "kind", "rank")
-             if k in poly.index and _prop_present(poly[k])},
-            default=int,
-        )
-        for tx, ty in zip(txs.tolist(), tys.tolist()):
-            geom_xy: list[int] = []
-            ring_lens: list[int] = []
-            for ring in rings:
-                qx = np.floor((merc_x_np(ring[:, 0]) * n - tx) * extent + 0.5).astype(np.int64)
-                qy = np.floor((merc_y_np(ring[:, 1]) * n - ty) * extent + 0.5).astype(np.int64)
-                ring_lens.append(len(ring))
-                geom_xy.extend(int(v) for pair in zip(qx.tolist(), qy.tolist()) for v in pair)
-            rows.append(
-                {
-                    "zoom": zoom,
-                    "tile_x": int(tx),
-                    "tile_y": int(ty),
-                    "layer": layer,
-                    "extent": extent,
-                    "id": int(poly["poly_id"]),
-                    "ftype": 3,
-                    "geom_xy": geom_xy,
-                    "ring_lens": ring_lens,
-                    "poly_lens": [len(ring_lens)],
-                    "props_json": props,
-                }
-            )
-    schema = (
-        "zoom int, tile_x long, tile_y long, layer string, extent int, id long, "
-        "ftype int, geom_xy array<int>, ring_lens array<int>, poly_lens array<int>, "
-        "props_json string"
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def lines_to_features(
-    spark, lines_pdf, zoom: int, layer: str, extent: int = 4096
-) -> DataFrame:
-    """Line layer (pandas with line_id, xy flat lon/lat list, optional offset,
-    optional mvals (per-vertex dict list), props columns) -> type-2 feature
-    rows, tile-assigned by bbox covering.  M-values ride as mvals_json
-    (FIXTURES.md §6).  DECLARED driver-side dim-table helper — fine below
-    ~10^4 geometries; the corpus-scale twin is
-    :func:`lines_to_features_dist`."""
-    import json as _json
-
-    from ..functions.geo import cover_bbox_np, merc_x_np, merc_y_np
-
-    n = float(1 << zoom)
-    rows = []
-    for _, line in lines_pdf.iterrows():
-        arr = np.asarray(line["xy"], dtype=np.float64).reshape(-1, 2)
-        txs, tys = cover_bbox_np(
-            arr[:, 0].min(), arr[:, 1].min(), arr[:, 0].max(), arr[:, 1].max(), zoom
-        )
-        props = _json.dumps(
-            {
-                k: line[k]
-                for k in line.index
-                if k not in ("line_id", "xy", "offset", "mvals")
-                and _prop_present(line[k])
-            },
-            default=int,
-        )
-        offset = float(line["offset"]) if "offset" in line.index else 0.0
-        mvals_json = (
-            _json.dumps(list(line["mvals"])) if "mvals" in line.index and line["mvals"] else None
-        )
-        for tx, ty in zip(txs.tolist(), tys.tolist()):
-            qx = np.floor((merc_x_np(arr[:, 0]) * n - tx) * extent + 0.5).astype(np.int64)
-            qy = np.floor((merc_y_np(arr[:, 1]) * n - ty) * extent + 0.5).astype(np.int64)
-            rows.append(
-                {
-                    "zoom": zoom,
-                    "tile_x": int(tx),
-                    "tile_y": int(ty),
-                    "layer": layer,
-                    "extent": extent,
-                    "id": int(line["line_id"]),
-                    "ftype": 2,
-                    "geom_xy": [int(v) for pair in zip(qx.tolist(), qy.tolist()) for v in pair],
-                    "ring_lens": [len(arr)],
-                    "offsets": [offset] if offset > 0 else None,
-                    "props_json": props,
-                    "mvals_json": mvals_json,
-                }
-            )
-    schema = (
-        "zoom int, tile_x long, tile_y long, layer string, extent int, id long, "
-        "ftype int, geom_xy array<int>, ring_lens array<int>, offsets array<double>, "
-        "props_json string, mvals_json string"
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def lines3d_to_features(
-    spark, lines_pdf, zoom: int, layer: str, extent: int = 4096, z_scale: float = 1.0
-) -> DataFrame:
-    """3D line layer (pandas with line_id, xyz flat [lon,lat,z,...] list,
-    optional offset/mvals/props columns) -> type-5 feature rows, tile-assigned
-    by bbox covering.  x/y quantize like P13; z quantizes by ``z_scale`` with
-    the same JS half-up rounding (reference 3D read/write:
-    src/open/vectorFeature.ts:376-587).  DECLARED driver-side dim-table
-    helper — fine below ~10^4 geometries; scale twin:
-    ``lines_to_features_dist(dims=3)``."""
-    import json as _json
-
-    from ..functions.geo import cover_bbox_np, merc_x_np, merc_y_np
-
-    n = float(1 << zoom)
-    rows = []
-    for _, line in lines_pdf.iterrows():
-        arr = np.asarray(line["xyz"], dtype=np.float64).reshape(-1, 3)
-        txs, tys = cover_bbox_np(
-            arr[:, 0].min(), arr[:, 1].min(), arr[:, 0].max(), arr[:, 1].max(), zoom
-        )
-        props = _json.dumps(
-            {k: line[k] for k in line.index
-             if k not in ("line_id", "xyz", "offset", "mvals") and _prop_present(line[k])},
-            default=int,
-        )
-        offset = float(line["offset"]) if "offset" in line.index else 0.0
-        mvals_json = (
-            _json.dumps(list(line["mvals"])) if "mvals" in line.index and line["mvals"] else None
-        )
-        qz = np.floor(arr[:, 2] * z_scale + 0.5).astype(np.int64)
-        for tx, ty in zip(txs.tolist(), tys.tolist()):
-            qx = np.floor((merc_x_np(arr[:, 0]) * n - tx) * extent + 0.5).astype(np.int64)
-            qy = np.floor((merc_y_np(arr[:, 1]) * n - ty) * extent + 0.5).astype(np.int64)
-            rows.append(
-                {
-                    "zoom": zoom,
-                    "tile_x": int(tx),
-                    "tile_y": int(ty),
-                    "layer": layer,
-                    "extent": extent,
-                    "id": int(line["line_id"]),
-                    "ftype": 5,
-                    "geom_xy": [
-                        int(v)
-                        for trip in zip(qx.tolist(), qy.tolist(), qz.tolist())
-                        for v in trip
-                    ],
-                    "ring_lens": [len(arr)],
-                    "offsets": [offset] if offset > 0 else None,
-                    "props_json": props,
-                    "mvals_json": mvals_json,
-                }
-            )
-    schema = (
-        "zoom int, tile_x long, tile_y long, layer string, extent int, id long, "
-        "ftype int, geom_xy array<int>, ring_lens array<int>, offsets array<double>, "
-        "props_json string, mvals_json string"
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def polygons3d_to_features(
-    spark, polygons_pdf, zoom: int, layer: str, extent: int = 4096, z_scale: float = 1.0
-) -> DataFrame:
-    """3D polygon layer (pandas with poly_id, ring_xyz = list of flat
-    [lon,lat,z,...] rings, optional mvals (flat per-vertex dict list across
-    rings), props columns) -> type-6 feature rows.  Mirrors
-    polygons_to_features for the 3D wire type; M-values ride as mvals_json
-    (the encoder distributes them per ring via ring_lens).  DECLARED
-    driver-side dim-table helper — fine below ~10^4 geometries; scale twin:
-    ``polygons_to_features_dist(dims=3)``."""
-    import json as _json
-
-    from ..functions.geo import cover_bbox_np, merc_x_np, merc_y_np
-
-    n = float(1 << zoom)
-    rows = []
-    for _, poly in polygons_pdf.iterrows():
-        rings = [np.asarray(r, dtype=np.float64).reshape(-1, 3) for r in poly["ring_xyz"]]
-        if not rings:
-            continue
-        outer = rings[0]
-        txs, tys = cover_bbox_np(
-            outer[:, 0].min(), outer[:, 1].min(), outer[:, 0].max(), outer[:, 1].max(), zoom
-        )
-        props = _json.dumps(
-            {
-                k: poly[k]
-                for k in poly.index
-                if k not in ("poly_id", "ring_xyz", "mvals")
-                and _prop_present(poly[k])
-            },
-            default=int,
-        )
-        mvals_json = (
-            _json.dumps(list(poly["mvals"])) if "mvals" in poly.index and poly["mvals"] else None
-        )
-        for tx, ty in zip(txs.tolist(), tys.tolist()):
-            geom_xy: list[int] = []
-            ring_lens: list[int] = []
-            for ring in rings:
-                qx = np.floor((merc_x_np(ring[:, 0]) * n - tx) * extent + 0.5).astype(np.int64)
-                qy = np.floor((merc_y_np(ring[:, 1]) * n - ty) * extent + 0.5).astype(np.int64)
-                qz = np.floor(ring[:, 2] * z_scale + 0.5).astype(np.int64)
-                ring_lens.append(len(ring))
-                geom_xy.extend(
-                    int(v)
-                    for trip in zip(qx.tolist(), qy.tolist(), qz.tolist())
-                    for v in trip
-                )
-            rows.append(
-                {
-                    "zoom": zoom,
-                    "tile_x": int(tx),
-                    "tile_y": int(ty),
-                    "layer": layer,
-                    "extent": extent,
-                    "id": int(poly["poly_id"]),
-                    "ftype": 6,
-                    "geom_xy": geom_xy,
-                    "ring_lens": ring_lens,
-                    "poly_lens": [len(ring_lens)],
-                    "props_json": props,
-                    "mvals_json": mvals_json,
-                }
-            )
-    schema = (
-        "zoom int, tile_x long, tile_y long, layer string, extent int, id long, "
-        "ftype int, geom_xy array<int>, ring_lens array<int>, poly_lens array<int>, "
-        "props_json string, mvals_json string"
-    )
-    return spark.createDataFrame(rows, schema)
-
-
 # ---------------------------------------------------------------------------
 # Executor-side line/polygon featurizers (the 100 TB ingest path)
 # ---------------------------------------------------------------------------
-# The *_to_features helpers above take a driver-side pandas frame — fine for
-# dim-sized layers, a bottleneck for corpus-scale ones (the reference's own
-# OMT corpus is 429 tiles of mostly line/poly layers, benchmarks/
-# ovtVScovt.ts:38-44).  These *_dist twins take a Spark DataFrame of geometry
-# arrays and featurize INSIDE mapInPandas, mirroring polygon_covering_df
-# (spatial_join.py:137): per Arrow batch, the mercator trig runs ONCE over
-# the concatenated vertex array (vectorized), per-geometry work is only the
-# bbox-cover tile expansion.  No createDataFrame(rows), no driver
-# materialization anywhere — the layer can be arbitrarily large and the
-# output unions straight into encode_tiles' single (zoom,tile_x,tile_y)
-# shuffle.  Output rows are exactly the driver twins' rows (pinned by
-# tests/test_vector_layers_spark.py equality tests).
+# These take a Spark DataFrame of geometry arrays and featurize INSIDE
+# mapInPandas, mirroring polygon_covering_df (spatial_join.py): per Arrow
+# batch, the mercator trig runs ONCE over the concatenated vertex array
+# (vectorized) and every zoom level reuses it as a scalar multiple;
+# per-geometry work is only the bbox-cover tile expansion (plus the clip
+# and simplify when asked).  No createDataFrame(rows), no driver
+# materialization anywhere — the layer can be arbitrarily large (the
+# reference's own OMT corpus is 429 tiles of mostly line/poly layers,
+# benchmarks/ovtVScovt.ts:38-44) and the output unions straight into
+# encode_tiles' single (zoom,tile_x,tile_y) shuffle.
 
 _LINES_SCHEMA = (
     "zoom int, tile_x long, tile_y long, layer string, extent int, id long, "
@@ -809,87 +539,101 @@ _POLYS_SCHEMA = (
 )
 
 
-def _emit_quantized(
-    out: dict,
-    mx: np.ndarray,
-    my: np.ndarray,
-    qz: Optional[np.ndarray],
+def _kernel_input(
+    df: DataFrame,
+    zoom,
     dims: int,
-    extent: int,
-    tile_range: tuple,
-    base_row: dict,
-) -> None:
-    """Quantize ONE geometry's mercator*2^zoom vertices into every covered
-    tile and append a feature row per tile — the inner emit shared by
-    lines_to_features_dist and polygons_to_features_dist (quantization is
-    P13 JS half-up in both; a fix here fixes both geometry types at once).
+    clip_buffer: Optional[int],
+    mvals_json_col: Optional[str],
+    props_cols: Optional[Iterable[str]],
+    geom_cols: dict,
+) -> tuple:
+    """Argument checks and the narrow projection shared by the two
+    featurizers -> (zoom list, kernel input DataFrame).
 
-    ``base_row`` carries the per-feature payload columns (id, ring_lens,
-    poly_lens/offsets, props_json, mvals_json) appended verbatim per tile.
-    Per-tx quantized x arrays are computed once and reused across the ty
-    row sweep."""
-    nv = len(mx)
-    tx0, tx1, ty0, ty1 = tile_range
-    qxs = {
-        tx: np.floor((mx - tx) * extent + 0.5).astype(np.int64)
-        for tx in range(tx0, tx1 + 1)
-    }
-    for ty in range(ty0, ty1 + 1):
-        qy = np.floor((my - ty) * extent + 0.5).astype(np.int64)
-        for tx in range(tx0, tx1 + 1):
-            qx = qxs[tx]
-            if dims == 2:
-                g = np.empty(2 * nv, dtype=np.int64)
-                g[0::2], g[1::2] = qx, qy
-            else:
-                g = np.empty(3 * nv, dtype=np.int64)
-                g[0::3], g[1::3], g[2::3] = qx, qy, qz
-            out["tile_x"].append(tx)
-            out["tile_y"].append(ty)
-            out["geom_xy"].append(g.tolist())
-            for k, v in base_row.items():
-                out[k].append(v)
-
-
-def _prop_present(v) -> bool:
-    """Driver-twin null filter matching the distributed path's to_json
-    semantics: to_json OMITS null struct fields (and json.dumps would emit
-    spec-invalid NaN), so absent == null on the wire in BOTH ingest paths."""
-    if v is None:
-        return False
-    if isinstance(v, float) and v != v:  # NaN
-        return False
-    return True
+    ``geom_cols`` maps each source column the kernel reads to its aliased
+    kernel-side Column; those columns and ``mvals_json_col`` are not
+    properties when ``props_cols`` is None.  Props serialize JVM-side:
+    to_json keeps struct-field order and OMITS null fields, so absent ==
+    null on the wire."""
+    if dims not in (2, 3):
+        raise ValueError(f"dims must be 2|3, got {dims}")
+    if clip_buffer is not None and mvals_json_col:
+        raise ValueError("per-vertex M-values cannot be clipped; drop mvals_json_col")
+    zooms = [int(z) for z in zoom] if isinstance(zoom, Iterable) else [int(zoom)]
+    if props_cols is None:
+        props_cols = [c for c in df.columns if c not in geom_cols and c != mvals_json_col]
+    props = [F.col(c) for c in props_cols]
+    src = df.select(
+        *geom_cols.values(),
+        (F.col(mvals_json_col) if mvals_json_col else F.lit(None).cast("string")).alias("_mv"),
+        (F.to_json(F.struct(*props)) if props else F.lit("{}")).alias("_pj"),
+    )
+    # fan a narrow scan out BEFORE the kernel: the per-geometry work is a
+    # python-level clip loop over every covered tile (~ms/row for a
+    # world-spanning line at z3, 1000x the shingle kernels' per-row cost),
+    # so the width heuristic gets a 16 KB/task chunk — a single-file scan
+    # otherwise runs the whole clip serially (measured 12.7 s -> one wave
+    # at sf0.1 clip_pyramid); already-wide inputs are untouched
+    return zooms, fan_out(src, chunk=16 * 1024)
 
 
-def _props_json_col(df: DataFrame, props_cols, exclude: tuple) -> "F.Column":
-    """JVM-side props serialization (to_json keeps struct-field order, so the
-    parsed dict matches the driver twins' key order and the codec's shape
-    inference sees identical layouts)."""
-    cols = list(props_cols) if props_cols is not None else [
-        c for c in df.columns if c not in exclude
-    ]
-    if not cols:
-        return F.lit("{}")
-    # to_json omits null fields, like the driver path omits absent keys
-    return F.to_json(F.struct(*[F.col(c) for c in cols]))
+def _zoom_scaled(arrs: list, zooms: list):
+    """Per zoom: (zoom, vertex arrays of ``arrs`` with x, y as
+    mercator*2^zoom and z unchanged).  The trig runs once over the batch's
+    concatenated vertices; each zoom level is a scalar multiple of it."""
+    from ..functions.geo import merc_x_np, merc_y_np
+
+    flat = np.concatenate(arrs)
+    proj = flat.copy()
+    proj[:, 0] = merc_x_np(flat[:, 0])
+    proj[:, 1] = merc_y_np(flat[:, 1])
+    bounds = np.cumsum([len(a) for a in arrs])[:-1]
+    for zoom in zooms:
+        scaled = proj.copy()
+        scaled[:, :2] *= float(1 << zoom)
+        yield zoom, np.split(scaled, bounds)
 
 
-def _tile_range(mxn: np.ndarray, myn: np.ndarray, zoom: int) -> tuple:
-    """Covered tile index range from per-vertex mercator*2^zoom coords —
-    identical to cover_bbox_np over the lon/lat bbox (mercator is monotone,
-    so min/max commute with the projection bit-exactly)."""
+def _covered_tiles(xy: np.ndarray, zoom: int):
+    """(ty, tx) of every tile the bbox of ``xy`` (mercator*2^zoom rows)
+    covers, rows outer — identical to cover_bbox_np over the lon/lat bbox
+    (mercator is monotone, so min/max commute with the projection
+    bit-exactly)."""
     nmax = (1 << zoom) - 1
-    tx0 = int(np.clip(np.floor(mxn.min()), 0, nmax))
-    tx1 = int(np.clip(np.floor(mxn.max()), 0, nmax))
-    ty0 = int(np.clip(np.floor(myn.min()), 0, nmax))
-    ty1 = int(np.clip(np.floor(myn.max()), 0, nmax))
-    return tx0, tx1, ty0, ty1
+    lo = np.clip(np.floor(xy[:, :2].min(axis=0)), 0, nmax).astype(int)
+    hi = np.clip(np.floor(xy[:, :2].max(axis=0)), 0, nmax).astype(int)
+    return product(range(lo[1], hi[1] + 1), range(lo[0], hi[0] + 1))
+
+
+def _tile_geom(xy: np.ndarray, tx: int, ty: int, extent: int, z_scale: float) -> list:
+    """One tile's vertices (rows of mercator*2^zoom x, y[, z]) -> the flat
+    interleaved ``geom_xy`` ints: x, y in tile-local extent units, z times
+    ``z_scale``, all with the P13 JS half-up rounding."""
+    cols = [
+        np.floor((xy[:, 0] - tx) * extent + 0.5),
+        np.floor((xy[:, 1] - ty) * extent + 0.5),
+    ]
+    if xy.shape[1] == 3:
+        cols.append(np.floor(xy[:, 2] * z_scale + 0.5))
+    return np.column_stack(cols).astype(np.int64).ravel().tolist()
+
+
+def _zero_area(ring: np.ndarray) -> bool:
+    """classifyRings' degenerate-ring test on a ring's x, y rows."""
+    return signed_area([tuple(p[:2]) for p in ring]) == 0.0
+
+
+def _feature_frame(out: dict, layer: str, extent: int, ftype: int) -> pd.DataFrame:
+    m = len(out["id"])
+    return pd.DataFrame(
+        {**out, "layer": [layer] * m, "extent": [extent] * m, "ftype": [ftype] * m}
+    )
 
 
 def lines_to_features_dist(
     lines: DataFrame,
-    zoom: int,
+    zoom: Union[int, Iterable[int]],
     layer: str,
     extent: int = 4096,
     id_col: str = "line_id",
@@ -902,20 +646,20 @@ def lines_to_features_dist(
     clip_buffer: Optional[int] = None,
     simplify_px: Optional[float] = None,
 ) -> DataFrame:
-    """Distributed twin of :func:`lines_to_features` (dims=2 → type 2) /
-    :func:`lines3d_to_features` (dims=3 → type 5).
-
-    ``simplify_px``: Douglas–Peucker tolerance in extent pixels
-    (:func:`~open_vector_tile_spark.operators.simplify.simplify_dp_np`),
-    applied AFTER clipping, before quantization — the per-zoom vertex
-    thinning a pyramid producer runs so low-zoom tiles stay
-    O(visible pixels) instead of O(source vertices).
+    """Line layer -> type-2 (``dims=2``) or type-5 (``dims=3``) feature rows.
 
     ``lines``: Spark DataFrame with ``id_col long``, ``xy_col array<double>``
     (flat interleaved lon,lat[,z]), optional ``offset_col double``, optional
     ``mvals_json_col string`` (pre-serialized per-vertex M-values), plus any
-    property columns.  Each line lands in every tile its bbox covers; vertex
-    quantization is P13 JS half-up, z by ``z_scale``.
+    property columns (``props_cols``; default all the others).  Each line
+    lands in every tile its bbox covers; vertex quantization is P13 JS
+    half-up, z by ``z_scale``.
+
+    ``zoom`` is one zoom level or an iterable of them.  A zoom pyramid
+    costs ONE source scan and one downstream shuffle, not one per level:
+    the Arrow kernel loops the levels over each batch's already-projected
+    geometry, and its rows equal the union of single-zoom calls — the same
+    single-pass shape as ``points_to_features_pyramid``.
 
     ``clip_buffer`` (extent pixels, e.g. 64): when set, each tile's copy is
     CLIPPED to the tile + buffer with vectorized Liang–Barsky
@@ -929,210 +673,86 @@ def lines_to_features_dist(
     geometries; clipping makes per-tile bytes O(vertices-in-tile), the
     shape that matters at planet scale.  Per-vertex M-values cannot be
     carried through a clip (vertices change), so combining
-    ``mvals_json_col`` with ``clip_buffer`` raises."""
-    return _lines_dist_impl(
-        lines, [zoom], layer, extent, id_col, xy_col, offset_col,
-        mvals_json_col, props_cols, dims, z_scale, clip_buffer, simplify_px,
-    )
+    ``mvals_json_col`` with ``clip_buffer`` raises.
 
-
-def lines_to_features_pyramid_dist(
-    lines: DataFrame,
-    zooms: Iterable[int],
-    layer: str,
-    extent: int = 4096,
-    id_col: str = "line_id",
-    xy_col: str = "xy",
-    offset_col: str = "offset",
-    mvals_json_col: Optional[str] = None,
-    props_cols: Optional[Iterable[str]] = None,
-    dims: int = 2,
-    z_scale: float = 1.0,
-    clip_buffer: Optional[int] = None,
-    simplify_px: Optional[float] = None,
-) -> DataFrame:
-    """Whole zoom pyramid of :func:`lines_to_features_dist` in ONE source
-    scan: the Arrow kernel loops the zoom levels over each batch's already-
-    parsed geometry (mercator projection computed once, scaled per zoom),
-    so N levels cost one scan + one downstream shuffle instead of N of
-    each — the same single-pass shape as ``points_to_features_pyramid``.
-    ``clip_buffer``/``simplify_px`` apply per (zoom, tile): the clip window
-    and the Douglas–Peucker tolerance both scale with the zoom's tile
-    size, which is exactly the per-zoom thinning a pyramid needs.  Row-for-
-    row identical to unioning per-zoom ``lines_to_features_dist`` calls
-    (test-pinned)."""
-    return _lines_dist_impl(
-        lines, list(zooms), layer, extent, id_col, xy_col, offset_col,
-        mvals_json_col, props_cols, dims, z_scale, clip_buffer, simplify_px,
-    )
-
-
-def _lines_dist_impl(
-    lines: DataFrame,
-    zooms: list,
-    layer: str,
-    extent: int,
-    id_col: str,
-    xy_col: str,
-    offset_col: str,
-    mvals_json_col: Optional[str],
-    props_cols: Optional[Iterable[str]],
-    dims: int,
-    z_scale: float,
-    clip_buffer: Optional[int],
-    simplify_px: Optional[float],
-) -> DataFrame:
-    if dims not in (2, 3):
-        raise ValueError(f"dims must be 2|3, got {dims}")
-    if clip_buffer is not None and mvals_json_col:
-        raise ValueError("per-vertex M-values cannot be clipped; drop mvals_json_col")
-    ftype = 2 if dims == 2 else 5
-    zooms = [int(z) for z in zooms]
+    ``simplify_px``: Douglas–Peucker tolerance in extent pixels
+    (:func:`~open_vector_tile_spark.operators.simplify.simplify_dp_np`),
+    applied AFTER clipping, before quantization.  Clip window and
+    tolerance both scale with each zoom's tile size, so low-zoom tiles stay
+    O(visible pixels) instead of O(source vertices)."""
     has_off = offset_col in lines.columns
-    pj = _props_json_col(
-        lines, props_cols, (id_col, xy_col, offset_col, mvals_json_col or "")
+    zooms, src = _kernel_input(
+        lines, zoom, dims, clip_buffer, mvals_json_col, props_cols,
+        {
+            id_col: F.col(id_col).cast("long").alias("_id"),
+            xy_col: F.col(xy_col).alias("_xy"),
+            offset_col: (F.col(offset_col).cast("double") if has_off else F.lit(0.0)).alias("_off"),
+        },
     )
-    src = lines.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(xy_col).alias("_xy"),
-        (F.col(offset_col).cast("double") if has_off else F.lit(0.0)).alias("_off"),
-        (F.col(mvals_json_col) if mvals_json_col else F.lit(None).cast("string")).alias("_mv"),
-        pj.alias("_pj"),
-    )
-    # fan a narrow scan out BEFORE the kernel: the per-line work below is a
-    # python-level clip loop over every covered tile (~ms/row for a
-    # world-spanning line at z3, 1000x the shingle kernels' per-row cost),
-    # so the width heuristic gets a 16 KB/task chunk — a single-file scan
-    # otherwise runs the whole clip serially (measured 12.7 s -> one wave
-    # at sf0.1 clip_pyramid); already-wide inputs are untouched
-    src = fan_out(src, chunk=16 * 1024)
+    ftype = 2 if dims == 2 else 5
+    bu = None if clip_buffer is None else clip_buffer / float(extent)
+    tol = None if simplify_px is None else simplify_px / float(extent)
 
     def run(batches: Iterable[pd.DataFrame]):
+        from .clip import clip_polyline_np
+        from .simplify import simplify_dp_np
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = [
-                np.asarray(v, dtype=np.float64).reshape(-1, dims) for v in pdf["_xy"]
-            ]
-            lens = np.array([len(a) for a in arrs], dtype=np.int64)
-            flat = np.concatenate(arrs) if arrs else np.zeros((0, dims))
-            from ..functions.geo import merc_x_np, merc_y_np
-
-            # project ONCE; per-zoom coordinates are a scalar multiple
-            mx1 = merc_x_np(flat[:, 0])
-            my1 = merc_y_np(flat[:, 1])
-            qzf = (
-                np.floor(flat[:, 2] * z_scale + 0.5).astype(np.int64)
-                if dims == 3
-                else None
-            )
-            starts = np.zeros(len(arrs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            out: dict = {k: [] for k in (
-                "zoom", "tile_x", "tile_y", "id", "geom_xy", "ring_lens",
-                "offsets", "props_json", "mvals_json",
-            )}
+            arrs = [np.asarray(v, dtype=np.float64).reshape(-1, dims) for v in pdf["_xy"]]
             ids = pdf["_id"].to_numpy()
             offs = pdf["_off"].to_numpy()
             mvs = pdf["_mv"].tolist()
             pjs = pdf["_pj"].tolist()
-            bu = None if clip_buffer is None else clip_buffer / float(extent)
-            tol = None if simplify_px is None else simplify_px / float(extent)
-            for zoom in zooms:
-                n = float(1 << zoom)
-                mxn = mx1 * n
-                myn = my1 * n
-                for i in range(len(arrs)):
-                    s, ln = int(starts[i]), int(lens[i])
-                    if ln == 0:
+            out: dict = defaultdict(list)
+            for zoom, geoms in _zoom_scaled(arrs, zooms):
+                for i, geom in enumerate(geoms):
+                    if len(geom) == 0:
                         continue
-                    mx, my = mxn[s : s + ln], myn[s : s + ln]
-                    off = float(offs[i])
-                    if bu is None and tol is None:
-                        before = len(out["id"])
-                        _emit_quantized(
-                            out, mx, my,
-                            qzf[s : s + ln] if dims == 3 else None,
-                            dims, extent, _tile_range(mx, my, zoom),
-                            {
-                                "id": int(ids[i]),
-                                "ring_lens": [ln],
-                                "offsets": [off] if off > 0 else None,
-                                "props_json": pjs[i],
-                                "mvals_json": mvs[i],
-                            },
-                        )
-                        out["zoom"].extend([zoom] * (len(out["id"]) - before))
-                        continue
-                    from .clip import clip_polyline_np
-                    from .simplify import simplify_dp_np
-
-                    cols = [mx, my] if dims == 2 else [mx, my, flat[s : s + ln, 2]]
-                    geom = np.column_stack(cols)
+                    tiles = _covered_tiles(geom, zoom)
                     if bu is None and tol is not None:
                         # no clip: simplify once, shared by every covered tile
                         geom = simplify_dp_np(geom, tol)
                         if len(geom) < 2:
                             continue
-                    tx0, tx1, ty0, ty1 = _tile_range(mx, my, zoom)
-                    for ty in range(ty0, ty1 + 1):
-                        for tx in range(tx0, tx1 + 1):
-                            if bu is not None:
-                                parts, poffs = clip_polyline_np(
-                                    geom, tx - bu, ty - bu, tx + 1 + bu, ty + 1 + bu,
-                                    return_offsets=True,
-                                )
-                                if tol is not None:
-                                    parts = [simplify_dp_np(p, tol) for p in parts]
-                            else:
-                                parts, poffs = [geom], [0.0]
-                            parts_offs = [
-                                (p, o) for p, o in zip(parts, poffs) if len(p) >= 2
-                            ]
-                            if not parts_offs:
-                                continue
-                            parts = [p for p, _ in parts_offs]
-                            poffs = [o for _, o in parts_offs]
-                            cat = np.concatenate(parts)
-                            qx = np.floor((cat[:, 0] - tx) * extent + 0.5).astype(np.int64)
-                            qy = np.floor((cat[:, 1] - ty) * extent + 0.5).astype(np.int64)
-                            nv = len(cat)
-                            if dims == 2:
-                                g = np.empty(2 * nv, dtype=np.int64)
-                                g[0::2], g[1::2] = qx, qy
-                            else:
-                                g = np.empty(3 * nv, dtype=np.int64)
-                                g[0::3], g[1::3] = qx, qy
-                                g[2::3] = np.floor(cat[:, 2] * z_scale + 0.5).astype(np.int64)
-                            part_offs = [off + po * extent for po in poffs]
-                            out["zoom"].append(zoom)
-                            out["tile_x"].append(tx)
-                            out["tile_y"].append(ty)
-                            out["geom_xy"].append(g.tolist())
-                            out["id"].append(int(ids[i]))
-                            out["ring_lens"].append([len(p) for p in parts])
-                            out["offsets"].append(
-                                part_offs if any(o > 0 for o in part_offs) else None
+                    for ty, tx in tiles:
+                        if bu is None:
+                            parts, poffs = [geom], [0.0]
+                        else:
+                            parts, poffs = clip_polyline_np(
+                                geom, tx - bu, ty - bu, tx + 1 + bu, ty + 1 + bu,
+                                return_offsets=True,
                             )
-                            out["props_json"].append(pjs[i])
-                            out["mvals_json"].append(mvs[i])
+                            if tol is not None:
+                                parts = [simplify_dp_np(p, tol) for p in parts]
+                            kept = [(p, o) for p, o in zip(parts, poffs) if len(p) >= 2]
+                            if not kept:
+                                continue
+                            parts, poffs = zip(*kept)
+                        part_offs = [float(offs[i]) + po * extent for po in poffs]
+                        out["zoom"].append(zoom)
+                        out["tile_x"].append(tx)
+                        out["tile_y"].append(ty)
+                        out["id"].append(int(ids[i]))
+                        out["geom_xy"].append(
+                            _tile_geom(np.concatenate(parts), tx, ty, extent, z_scale)
+                        )
+                        out["ring_lens"].append([len(p) for p in parts])
+                        out["offsets"].append(
+                            part_offs if any(o > 0 for o in part_offs) else None
+                        )
+                        out["props_json"].append(pjs[i])
+                        out["mvals_json"].append(mvs[i])
             if out["id"]:
-                m = len(out["id"])
-                yield pd.DataFrame(
-                    {
-                        **out,
-                        "layer": [layer] * m,
-                        "extent": [extent] * m,
-                        "ftype": [ftype] * m,
-                    }
-                )
+                yield _feature_frame(out, layer, extent, ftype)
 
     return src.mapInPandas(run, _LINES_SCHEMA)
 
 
 def polygons_to_features_dist(
     polygons: DataFrame,
-    zoom: int,
+    zoom: Union[int, Iterable[int]],
     layer: str,
     extent: int = 4096,
     drop_degenerate: bool = True,
@@ -1145,21 +765,26 @@ def polygons_to_features_dist(
     clip_buffer: Optional[int] = None,
     simplify_px: Optional[float] = None,
 ) -> DataFrame:
-    """Distributed twin of :func:`polygons_to_features` (dims=2 → type 3) /
-    :func:`polygons3d_to_features` (dims=3 → type 6).
+    """Polygon layer (FIXTURES.md §2 shape) -> type-3 (``dims=2``) or
+    type-6 (``dims=3``) feature rows.
+
+    ``polygons``: Spark DataFrame with ``id_col long``, ``rings_col
+    array<array<double>>`` (each ring a flat interleaved vertex list, outer
+    first), optional ``mvals_json_col string``, plus property columns
+    (``props_cols``; default all the others).  Each polygon lands in every
+    tile its OUTER ring's bbox covers (spec buffer semantics: coordinates
+    outside [0, extent] are legal, vector-tile-spec README.md:411-413);
+    ring vertices quantize with P13 JS half-up rounding, z by ``z_scale``.
+    Zero-area rings are dropped like classifyRings
+    (src/mapbox/vectorFeature.ts:357-381) when ``drop_degenerate`` (2D
+    only).  ``zoom`` is one zoom level or an iterable of them, in one scan
+    (see :func:`lines_to_features_dist`).
 
     ``simplify_px``: Douglas–Peucker ring tolerance in extent pixels
     (:func:`~open_vector_tile_spark.operators.simplify.simplify_ring_np`),
     applied BEFORE the per-tile clip (rings shrink once, then clip per
     tile); a ring collapsing below 3 vertices is dropped, and a collapsed
     OUTER ring deletes its polygon.
-
-    ``polygons``: Spark DataFrame with ``id_col long``, ``rings_col
-    array<array<double>>`` (each ring a flat interleaved vertex list), plus
-    property columns.  Tile cover comes from the OUTER ring's bbox;
-    zero-area rings are dropped like classifyRings
-    (src/mapbox/vectorFeature.ts:357-381) when ``drop_degenerate`` (2D only,
-    matching the driver twin).
 
     ``clip_buffer`` (extent pixels): when set, each tile's copy of every
     ring is clipped to the tile + buffer with vectorized Sutherland–Hodgman
@@ -1168,221 +793,84 @@ def polygons_to_features_dist(
     independently (exact against a convex window).  Without it the whole
     polygon lands in every covered tile — correct per spec buffer
     semantics but O(tiles × vertices) bytes for continent-sized rings.
+    Clip window and tolerance both scale with each zoom's tile size.
     Combining ``mvals_json_col`` with ``clip_buffer`` raises (per-vertex
     M-values don't survive a vertex-changing clip)."""
-    return _polygons_dist_impl(
-        polygons, [zoom], layer, extent, drop_degenerate, id_col, rings_col,
-        mvals_json_col, props_cols, dims, z_scale, clip_buffer, simplify_px,
+    zooms, src = _kernel_input(
+        polygons, zoom, dims, clip_buffer, mvals_json_col, props_cols,
+        {
+            id_col: F.col(id_col).cast("long").alias("_id"),
+            rings_col: F.col(rings_col).alias("_rings"),
+        },
     )
-
-
-def polygons_to_features_pyramid_dist(
-    polygons: DataFrame,
-    zooms: Iterable[int],
-    layer: str,
-    extent: int = 4096,
-    drop_degenerate: bool = True,
-    id_col: str = "poly_id",
-    rings_col: str = "ring_xy",
-    mvals_json_col: Optional[str] = None,
-    props_cols: Optional[Iterable[str]] = None,
-    dims: int = 2,
-    z_scale: float = 1.0,
-    clip_buffer: Optional[int] = None,
-    simplify_px: Optional[float] = None,
-) -> DataFrame:
-    """Whole zoom pyramid of :func:`polygons_to_features_dist` in ONE
-    source scan (projection computed once, scaled per zoom inside the
-    Arrow kernel) — the polygon counterpart of
-    :func:`lines_to_features_pyramid_dist`.  Per-zoom ``clip_buffer`` /
-    ``simplify_px`` give each level its own thinning; row-for-row equal to
-    unioning per-zoom calls (test-pinned)."""
-    return _polygons_dist_impl(
-        polygons, list(zooms), layer, extent, drop_degenerate, id_col,
-        rings_col, mvals_json_col, props_cols, dims, z_scale, clip_buffer,
-        simplify_px,
-    )
-
-
-def _polygons_dist_impl(
-    polygons: DataFrame,
-    zooms: list,
-    layer: str,
-    extent: int,
-    drop_degenerate: bool,
-    id_col: str,
-    rings_col: str,
-    mvals_json_col: Optional[str],
-    props_cols: Optional[Iterable[str]],
-    dims: int,
-    z_scale: float,
-    clip_buffer: Optional[int],
-    simplify_px: Optional[float],
-) -> DataFrame:
-    if dims not in (2, 3):
-        raise ValueError(f"dims must be 2|3, got {dims}")
-    if clip_buffer is not None and mvals_json_col:
-        raise ValueError("per-vertex M-values cannot be clipped; drop mvals_json_col")
     ftype = 3 if dims == 2 else 6
-    zooms = [int(z) for z in zooms]
-    pj = _props_json_col(polygons, props_cols, (id_col, rings_col, mvals_json_col or ""))
-    src = polygons.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(rings_col).alias("_rings"),
-        (F.col(mvals_json_col) if mvals_json_col else F.lit(None).cast("string")).alias("_mv"),
-        pj.alias("_pj"),
-    )
-    # same narrow-scan fan-out as _lines_dist_impl: per-ring python
-    # area/clip work is ~ms/row, so a single-file scan must not run the
-    # kernel serially; no-op for already-wide inputs
-    src = fan_out(src, chunk=16 * 1024)
+    bu = None if clip_buffer is None else clip_buffer / float(extent)
+    tol = None if simplify_px is None else simplify_px / float(extent)
+    # a clipped or simplified ring is re-checked for zero area per tile
+    recheck = dims == 2 and drop_degenerate and (bu is not None or tol is not None)
 
     def run(batches: Iterable[pd.DataFrame]):
-        from ..codec.mvt import signed_area
-        from ..functions.geo import merc_x_np, merc_y_np
+        from .clip import clip_rings_np
+        from .simplify import simplify_ring_np
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            # flatten (poly, ring) raggedness once per batch
-            ring_arrs: list[np.ndarray] = []
-            ring_poly: list[int] = []
-            for i, rings_flat in enumerate(pdf["_rings"]):
-                for r in rings_flat:
+            # surviving rings of all polygons, flat; spans[k] = (row, first
+            # ring, end ring) of each polygon that keeps a ring
+            arrs: list = []
+            spans: list = []
+            for i, rings in enumerate(pdf["_rings"]):
+                first = len(arrs)
+                for r in rings:
                     arr = np.asarray(r, dtype=np.float64).reshape(-1, dims)
-                    if (
-                        dims == 2
-                        and drop_degenerate
-                        and signed_area([tuple(p) for p in arr]) == 0.0
-                    ):
-                        continue
-                    ring_arrs.append(arr)
-                    ring_poly.append(i)
-            if not ring_arrs:
+                    if not (dims == 2 and drop_degenerate and _zero_area(arr)):
+                        arrs.append(arr)
+                if len(arrs) > first:
+                    spans.append((i, first, len(arrs)))
+            if not arrs:
                 continue
-            lens = np.array([len(a) for a in ring_arrs], dtype=np.int64)
-            flat = np.concatenate(ring_arrs)
-            # project ONCE; per-zoom coordinates are a scalar multiple
-            mx1 = merc_x_np(flat[:, 0])
-            my1 = merc_y_np(flat[:, 1])
-            qzf = (
-                np.floor(flat[:, 2] * z_scale + 0.5).astype(np.int64)
-                if dims == 3
-                else None
-            )
-            starts = np.zeros(len(ring_arrs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            out: dict = {k: [] for k in (
-                "zoom", "tile_x", "tile_y", "id", "geom_xy", "ring_lens",
-                "poly_lens", "props_json", "mvals_json",
-            )}
             ids = pdf["_id"].to_numpy()
             mvs = pdf["_mv"].tolist()
             pjs = pdf["_pj"].tolist()
-            for zoom in zooms:
-                n = float(1 << zoom)
-                mxn = mx1 * n
-                myn = my1 * n
-                r = 0
-                while r < len(ring_arrs):
-                    i = ring_poly[r]
-                    r_end = r
-                    while r_end < len(ring_arrs) and ring_poly[r_end] == i:
-                        r_end += 1
-                    # outer ring (first surviving ring) drives the tile cover
-                    s0, l0 = int(starts[r]), int(lens[r])
-                    tx0, tx1, ty0, ty1 = _tile_range(
-                        mxn[s0 : s0 + l0], myn[s0 : s0 + l0], zoom
-                    )
-                    s_all, e_all = int(starts[r]), int(starts[r_end - 1] + lens[r_end - 1])
-                    mx, my = mxn[s_all:e_all], myn[s_all:e_all]
-                    rlens = [int(lens[j]) for j in range(r, r_end)]
-                    if clip_buffer is None and simplify_px is None:
-                        before = len(out["id"])
-                        _emit_quantized(
-                            out, mx, my,
-                            qzf[s_all:e_all] if dims == 3 else None,
-                            dims, extent, (tx0, tx1, ty0, ty1),
-                            {
-                                "id": int(ids[i]),
-                                "ring_lens": rlens,
-                                "poly_lens": [len(rlens)],
-                                "props_json": pjs[i],
-                                "mvals_json": mvs[i],
-                            },
-                        )
-                        out["zoom"].extend([zoom] * (len(out["id"]) - before))
-                        r = r_end
-                        continue
-                    from .clip import clip_rings_np
-                    from .simplify import simplify_ring_np
-
-                    rings = []
-                    for j in range(r, r_end):
-                        sj, lj = int(starts[j]), int(lens[j])
-                        cols = [mxn[sj : sj + lj], myn[sj : sj + lj]]
-                        if dims == 3:
-                            cols.append(flat[sj : sj + lj, 2])
-                        rings.append(np.column_stack(cols))
-                    if simplify_px is not None:
-                        tol = simplify_px / float(extent)
-                        outer0 = simplify_ring_np(rings[0], tol)
-                        if len(outer0) < 3:
-                            r = r_end
+            out: dict = defaultdict(list)
+            for zoom, scaled in _zoom_scaled(arrs, zooms):
+                for i, a, b in spans:
+                    rings = scaled[a:b]
+                    tiles = _covered_tiles(rings[0], zoom)
+                    if tol is not None:
+                        outer = simplify_ring_np(rings[0], tol)
+                        if len(outer) < 3:
                             continue
-                        rings = [outer0] + [
+                        rings = [outer] + [
                             c for c in (simplify_ring_np(h, tol) for h in rings[1:])
                             if len(c) >= 3
                         ]
-                    bu = None if clip_buffer is None else clip_buffer / float(extent)
-                    for ty in range(ty0, ty1 + 1):
-                        for tx in range(tx0, tx1 + 1):
-                            if bu is not None:
-                                clipped = clip_rings_np(
-                                    rings, tx - bu, ty - bu, tx + 1 + bu, ty + 1 + bu
-                                )
-                            else:
-                                clipped = rings
-                            if dims == 2 and drop_degenerate and clipped:
-                                if signed_area([tuple(p[:2]) for p in clipped[0]]) == 0.0:
-                                    continue  # degenerate outer: polygon gone here
-                                clipped = [clipped[0]] + [
-                                    c for c in clipped[1:]
-                                    if signed_area([tuple(p[:2]) for p in c]) != 0.0
-                                ]
-                            if not clipped:
-                                continue
-                            cat = np.concatenate(clipped)
-                            qx = np.floor((cat[:, 0] - tx) * extent + 0.5).astype(np.int64)
-                            qy = np.floor((cat[:, 1] - ty) * extent + 0.5).astype(np.int64)
-                            nv = len(cat)
-                            if dims == 2:
-                                g = np.empty(2 * nv, dtype=np.int64)
-                                g[0::2], g[1::2] = qx, qy
-                            else:
-                                g = np.empty(3 * nv, dtype=np.int64)
-                                g[0::3], g[1::3] = qx, qy
-                                g[2::3] = np.floor(cat[:, 2] * z_scale + 0.5).astype(np.int64)
-                            out["zoom"].append(zoom)
-                            out["tile_x"].append(tx)
-                            out["tile_y"].append(ty)
-                            out["geom_xy"].append(g.tolist())
-                            out["id"].append(int(ids[i]))
-                            out["ring_lens"].append([len(c) for c in clipped])
-                            out["poly_lens"].append([len(clipped)])
-                            out["props_json"].append(pjs[i])
-                            out["mvals_json"].append(mvs[i])
-                    r = r_end
+                    for ty, tx in tiles:
+                        clipped = rings if bu is None else clip_rings_np(
+                            rings, tx - bu, ty - bu, tx + 1 + bu, ty + 1 + bu
+                        )
+                        if recheck and clipped:
+                            if _zero_area(clipped[0]):
+                                continue  # degenerate outer: polygon gone here
+                            clipped = [clipped[0]] + [
+                                c for c in clipped[1:] if not _zero_area(c)
+                            ]
+                        if not clipped:
+                            continue
+                        out["zoom"].append(zoom)
+                        out["tile_x"].append(tx)
+                        out["tile_y"].append(ty)
+                        out["id"].append(int(ids[i]))
+                        out["geom_xy"].append(
+                            _tile_geom(np.concatenate(clipped), tx, ty, extent, z_scale)
+                        )
+                        out["ring_lens"].append([len(c) for c in clipped])
+                        out["poly_lens"].append([len(clipped)])
+                        out["props_json"].append(pjs[i])
+                        out["mvals_json"].append(mvs[i])
             if out["id"]:
-                m = len(out["id"])
-                yield pd.DataFrame(
-                    {
-                        **out,
-                        "layer": [layer] * m,
-                        "extent": [extent] * m,
-                        "ftype": [ftype] * m,
-                    }
-                )
+                yield _feature_frame(out, layer, extent, ftype)
 
     return src.mapInPandas(run, _POLYS_SCHEMA)
 

@@ -1,12 +1,20 @@
-"""Executor-side line/polygon featurizers == driver-side twins, byte-for-byte.
+"""The executor-side line/polygon featurizers, pinned row- and byte-exact.
 
-The *_dist featurizers (operators/tiler.py) run inside mapInPandas on a Spark
-DataFrame of geometry arrays — no createDataFrame(rows), no driver
-materialization.  These tests pin (a) feature-row equality with the
-driver-side paths on the repo's standard fixtures and (b) byte-identical
-tiles after encode_tiles, plus assert the plan has no driver-side scan
-(input is a real distributed DataFrame)."""
+``lines_to_features_dist`` and ``polygons_to_features_dist``
+(operators/tiler.py) run inside mapInPandas on a Spark DataFrame of
+geometry arrays — no createDataFrame(rows), no driver materialization.
 
+Up to commit dfb2d5a the tiler also carried driver-side ``iterrows`` twins
+of both (``lines_to_features``, ``lines3d_to_features``,
+``polygons_to_features``, ``polygons3d_to_features``), and these tests
+compared the two paths.  The ``PINNED`` sha256s below were computed from
+those twins at dfb2d5a, where the dist kernels gave the same values: one
+of the sorted :func:`_norm_rows` of each fixture, one of its sorted
+:func:`_tile_bytes` after ``encode_tiles``.  The remaining tests check the
+degenerate-ring drop, that the plan has no driver-side scan, and that a
+zoom list equals the union of single-zoom calls in one scan."""
+
+import hashlib
 import json
 
 import pandas as pd
@@ -14,16 +22,40 @@ import pytest
 
 from open_vector_tile_spark.operators.tiler import (
     encode_tiles,
-    lines3d_to_features,
-    lines_to_features,
     lines_to_features_dist,
-    polygons3d_to_features,
-    polygons_to_features,
     polygons_to_features_dist,
 )
 from open_vector_tile_spark.sources import polygons_pdf
 
 ZOOM = 3
+
+# fixture -> (sha256 of sorted _norm_rows, sha256 of sorted _tile_bytes)
+PINNED = {
+    "polygons_2d": (
+        "e5621bb7b7a441883ac2857a3583201a903ea252765e3f16525aaee48bda59c5",
+        "a8d07ccfe6e1c22b1dc0715db3b7ccd8ac9607acf159736e81f5ed100d0042d2",
+    ),
+    "null_props": (
+        "90f45f7ccc10b0d257f8be21b5d34cdd7a26f6934c712505d1ccd98e7649d913",
+        "b3f4cfee791c176fb7e17384d313547c8af4217e56c9df9cc72cf44dcb62e73d",
+    ),
+    "lines_2d": (
+        "c4bc256f6035a11ba59eb3935a416e4304831c5cf069b5cd41a58a32088e8adc",
+        "43e21befffb24438cf542bc73226e759213ed67e8642b1a46c658402a40a38be",
+    ),
+    "lines_mvalues": (
+        "2fed1a36bdf3a99ea46e94ad0c94d5a9a7b8e4799d1ff6fb2d01238fd12bff6d",
+        "5f5bdd0762dd9b5556ac6356531cd427a2d53aa899fb47eada755b25579761cb",
+    ),
+    "lines_3d": (
+        "b63a4af335629dee48492b12a0ca19755463232db8da908ffde2b723e184937d",
+        "bd96419e75d7d3a4a4b5ff8d13bb61943d66ecff337ed0b3fb43f41a022bc32d",
+    ),
+    "polygons_3d": (
+        "f20e64038259f8058991b96823a99372730ef5fd3ee600beccbc42ec96c03409",
+        "9df7fc7face11b6ee451dda18c9af35d51f64b35f0324a7ab137c911ea3642ab",
+    ),
+}
 
 
 def _norm_rows(df):
@@ -56,16 +88,21 @@ def _tile_bytes(feats):
     )
 
 
+def _sha(obj) -> str:
+    return hashlib.sha256(repr(obj).encode()).hexdigest()
+
+
+def _assert_pinned(feats, fixture):
+    assert (_sha(_norm_rows(feats)), _sha(_tile_bytes(feats))) == PINNED[fixture]
+
+
 def test_polygons_dist_matches_driver_rows_and_bytes(spark):
-    polys = polygons_pdf()
-    driver = polygons_to_features(spark, polys, zoom=ZOOM, layer="admin", extent=4096)
-    sdf = spark.createDataFrame(polys).repartition(4)
+    sdf = spark.createDataFrame(polygons_pdf()).repartition(4)
     dist = polygons_to_features_dist(
         sdf, zoom=ZOOM, layer="admin", extent=4096,
         props_cols=["name", "kind", "rank"],
     )
-    assert _norm_rows(dist) == _norm_rows(driver)
-    assert _tile_bytes(dist) == _tile_bytes(driver)
+    _assert_pinned(dist, "polygons_2d")
 
 
 def test_polygons_dist_drops_degenerate_rings(spark):
@@ -86,24 +123,18 @@ def test_lines_dist_matches_driver_rows_and_bytes(spark):
             {"line_id": 3, "xy": [-120.0, 10.0, 60.0, 40.0], "offset": 0.0, "road": "c"},
         ]
     )
-    driver = lines_to_features(spark, lines, zoom=2, layer="roads", extent=4096)
     dist = lines_to_features_dist(
         spark.createDataFrame(lines).repartition(3),
         zoom=2, layer="roads", extent=4096, props_cols=["road"],
     )
-    assert _norm_rows(dist) == _norm_rows(driver)
-    assert _tile_bytes(dist) == _tile_bytes(driver)
+    _assert_pinned(dist, "lines_2d")
 
 
 def test_lines_dist_mvalues_parity(spark):
     mv = [{"speed": 30}, {"speed": 50}, {"speed": 70}]
-    lines = pd.DataFrame(
-        [{"line_id": 9, "xy": [0.0, 0.0, 5.0, 5.0, 9.0, 2.0], "offset": 0.0, "mvals": mv}]
-    )
-    driver = lines_to_features(spark, lines, zoom=2, layer="m", extent=4096)
     sdf = spark.createDataFrame(
         pd.DataFrame(
-            [{"line_id": 9, "xy": lines["xy"][0], "offset": 0.0,
+            [{"line_id": 9, "xy": [0.0, 0.0, 5.0, 5.0, 9.0, 2.0], "offset": 0.0,
               "mvals_json": json.dumps(mv)}]
         )
     )
@@ -111,8 +142,7 @@ def test_lines_dist_mvalues_parity(spark):
         sdf, zoom=2, layer="m", extent=4096,
         mvals_json_col="mvals_json", props_cols=[],
     )
-    assert _norm_rows(dist) == _norm_rows(driver)
-    assert _tile_bytes(dist) == _tile_bytes(driver)
+    _assert_pinned(dist, "lines_mvalues")
 
 
 def test_lines3d_dist_matches_driver(spark):
@@ -122,14 +152,11 @@ def test_lines3d_dist_matches_driver(spark):
             {"line_id": 2, "xyz": [-30.0, -30.0, 100.0, -10.0, -20.0, 110.0], "kind": "y"},
         ]
     )
-    driver = lines3d_to_features(spark, lines, zoom=ZOOM, layer="l3", extent=4096, z_scale=2.0)
-    sdf = spark.createDataFrame(lines.rename(columns={"xyz": "xy"}))
     dist = lines_to_features_dist(
-        sdf, zoom=ZOOM, layer="l3", extent=4096,
-        props_cols=["kind"], dims=3, z_scale=2.0,
+        spark.createDataFrame(lines), zoom=ZOOM, layer="l3", extent=4096,
+        xy_col="xyz", props_cols=["kind"], dims=3, z_scale=2.0,
     )
-    assert _norm_rows(dist) == _norm_rows(driver)
-    assert _tile_bytes(dist) == _tile_bytes(driver)
+    _assert_pinned(dist, "lines_3d")
 
 
 def test_polygons3d_dist_matches_driver(spark):
@@ -152,14 +179,11 @@ def test_polygons3d_dist_matches_driver(spark):
             },
         ]
     )
-    driver = polygons3d_to_features(spark, polys, zoom=ZOOM, layer="p3", extent=4096, z_scale=2.0)
-    sdf = spark.createDataFrame(polys.rename(columns={"ring_xyz": "ring_xy"}))
     dist = polygons_to_features_dist(
-        sdf, zoom=ZOOM, layer="p3", extent=4096,
-        props_cols=["zone"], dims=3, z_scale=2.0,
+        spark.createDataFrame(polys), zoom=ZOOM, layer="p3", extent=4096,
+        rings_col="ring_xyz", props_cols=["zone"], dims=3, z_scale=2.0,
     )
-    assert _norm_rows(dist) == _norm_rows(driver)
-    assert _tile_bytes(dist) == _tile_bytes(driver)
+    _assert_pinned(dist, "polygons_3d")
 
 
 def test_dist_path_has_no_driver_scan(spark):
@@ -179,34 +203,27 @@ def test_dist_path_has_no_driver_scan(spark):
 
 
 def test_null_props_parity_driver_vs_dist(spark):
-    """A None/NaN property must serialize identically in both ingest paths:
-    to_json omits null struct fields, and the driver twins now filter
-    null/NaN the same way (absent == null on the wire)."""
+    """A None/NaN property is absent from props_json (to_json omits null
+    struct fields, as the driver twins dropped null/NaN keys)."""
     import numpy as np
 
     polys = polygons_pdf().head(3).copy()
     polys.loc[polys.index[0], "kind"] = None
     polys.loc[polys.index[1], "rank"] = np.nan
-    driver = polygons_to_features(spark, polys, zoom=ZOOM, layer="admin", extent=4096)
     sdf = spark.createDataFrame(polys).repartition(2)
     dist = polygons_to_features_dist(
         sdf, zoom=ZOOM, layer="admin", extent=4096,
         props_cols=["name", "kind", "rank"],
     )
-    assert _norm_rows(dist) == _norm_rows(driver)
-    assert _tile_bytes(dist) == _tile_bytes(driver)
+    _assert_pinned(dist, "null_props")
     # and the null key is genuinely absent, not "null"
     some = json.loads(dist.limit(50).collect()[0]["props_json"])
     assert "null" not in json.dumps(some)
 
 
 def test_lines_pyramid_dist_equals_per_zoom_union(spark):
-    """One-scan pyramid == union of single-zoom calls, row for row,
-    with clip+simplify active (the per-zoom thinning path)."""
-    from open_vector_tile_spark.operators.tiler import (
-        lines_to_features_pyramid_dist,
-    )
-
+    """A zoom list == union of single-zoom calls, row for row, with
+    clip+simplify active (the per-zoom thinning path)."""
     lines = pd.DataFrame(
         [
             {"line_id": 1, "xy": [-120.0, -40.0, -60.0, -39.9, 0.0, -40.0,
@@ -216,7 +233,7 @@ def test_lines_pyramid_dist_equals_per_zoom_union(spark):
     )
     sdf = spark.createDataFrame(lines)
     zooms = [1, 3, 5]
-    pyr = lines_to_features_pyramid_dist(
+    pyr = lines_to_features_dist(
         sdf, zooms, layer="r", props_cols=["road"], clip_buffer=64, simplify_px=4.0
     )
     per_zoom = None
@@ -231,14 +248,10 @@ def test_lines_pyramid_dist_equals_per_zoom_union(spark):
 
 
 def test_polygons_pyramid_dist_equals_per_zoom_union(spark):
-    from open_vector_tile_spark.operators.tiler import (
-        polygons_to_features_pyramid_dist,
-    )
-
     polys = polygons_pdf()
     sdf = spark.createDataFrame(polys).repartition(3)
     zooms = [2, 4]
-    pyr = polygons_to_features_pyramid_dist(
+    pyr = polygons_to_features_dist(
         sdf, zooms, layer="admin", props_cols=["name", "kind", "rank"],
         clip_buffer=0, simplify_px=2.0,
     )
@@ -254,18 +267,14 @@ def test_polygons_pyramid_dist_equals_per_zoom_union(spark):
 
 
 def test_pyramid_dist_one_scan(spark):
-    """The pyramid plan reads the source once — a single mapInPandas over
-    one scan, no per-zoom re-read (vs N scans for the union)."""
-    from open_vector_tile_spark.operators.tiler import (
-        lines_to_features_pyramid_dist,
-    )
-
+    """A zoom list reads the source once — a single mapInPandas over one
+    scan, no per-zoom re-read (vs N scans for the union)."""
     sdf = spark.range(0, 50, 1, 4).selectExpr(
         "id AS line_id",
         "array(double(id % 30), double(id % 20), double(id % 30 + 8), "
         "double(id % 20 + 4)) AS xy",
     )
-    pyr = lines_to_features_pyramid_dist(sdf, [2, 3, 4], layer="x", props_cols=[])
+    pyr = lines_to_features_dist(sdf, [2, 3, 4], layer="x", props_cols=[])
     plan = pyr._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
     zs = {r["zoom"] for r in pyr.select("zoom").distinct().collect()}

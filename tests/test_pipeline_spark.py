@@ -298,6 +298,29 @@ def test_spatial_join_distributed_matches_driver_variant(spark, pages):
     assert got_salted == want
 
 
+def test_spatial_join_distributed_covering_only_matches_driver_variant(spark):
+    """exact=False skips only the J2 refine in both joins: each returns the
+    J1 candidates of the exact covering, so the rows match (the bbox
+    covering gave the distributed join 287 candidates against 259 on this
+    input)."""
+    from open_vector_tile_spark.operators.spatial_join import spatial_join_distributed
+
+    polys = polygons_pdf()
+    polys_df = spark.createDataFrame(
+        polys[["poly_id", "ring_xy"]],
+        schema="poly_id long, ring_xy array<array<double>>",
+    )
+    pts = geoparse(spark.createDataFrame(pages_pdf(2000)))
+    cols = ["url", "cell", "poly_id"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    want = rows(spatial_join(pts, polys, zoom=6, exact=False))
+    assert len(want) == 259
+    assert rows(spatial_join_distributed(pts, polys_df, zoom=6, exact=False)) == want
+
+
 def test_spatial_join_distributed_shuffle_polygon_side(spark, pages):
     """broadcast_polygons=False keys the ring join by poly_id (the huge-
     polygon-layer path) — result unchanged."""

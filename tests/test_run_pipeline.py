@@ -6,8 +6,11 @@ stages cannot see:
   key must be unique PER FEATURE ROW, not per url — a page inside two
   overlapping polygons emits two rows);
 - the polygon table's ``layer`` column maps to per-layer OVT layers;
-- nearest-POI attachment lands in props_json WITHOUT dropping other props.
+- nearest-POI attachment lands in props_json WITHOUT dropping other props;
+- the tile bytes of a fixed input stay as pinned.
 """
+
+import hashlib
 
 import pandas as pd
 import pytest
@@ -93,7 +96,7 @@ def test_overlapping_polygons_emit_distinct_feature_ids(spark):
 def test_nearest_poi_attached_without_dropping_props(spark, pages):
     polys = polygons_pdf()
     pois = pois_pdf(20)
-    tiles = _tiles_map(run_pipeline(pages, polys, pois, zoom=ZOOM, k=2))
+    tiles = _tiles_map(run_pipeline(pages, polys, pois, zoom=ZOOM))
     checked = 0
     for blob in tiles.values():
         layers = VectorTile(blob).layers
@@ -107,3 +110,18 @@ def test_nearest_poi_attached_without_dropping_props(spark, pages):
             assert props["url"].startswith("https://")
             checked += 1
     assert checked > 0
+
+
+def test_tile_bytes_pinned(spark, pages):
+    """sha256 of the sorted (zoom, tile_x, tile_y, tile) rows, pinned at
+    commit dfb2d5a (polygon layers from the driver-side featurizer then,
+    from polygons_to_features_dist since): the page layer, the admin and
+    landuse layers split by the ``layer`` column, and the nearest POI."""
+    tiles = run_pipeline(pages, polygons_pdf(), pois_pdf(20), zoom=ZOOM)
+    rows = sorted(
+        (r["zoom"], r["tile_x"], r["tile_y"], bytes(r["tile"])) for r in tiles.collect()
+    )
+    assert len(rows) == 80
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+        "0b34b783a98ff1739808fefb9b3fc7e337bcc89f18c7686bb7d9bfd2764b039c"
+    )

@@ -10,18 +10,26 @@ from open_vector_tile_spark.functions import geo
 from open_vector_tile_spark.functions.text import geoparse
 from open_vector_tile_spark.operators import (
     encode_tiles,
-    lines_to_features,
+    lines_to_features_dist,
     points_to_features,
-    polygons_to_features,
+    polygons_to_features_dist,
 )
 from open_vector_tile_spark.sources import pages_pdf, polygons_pdf
 
 ZOOM = 3
+POLY_PROPS = ["name", "kind", "rank"]
+
+
+def _admin_features(spark, polys, **kw):
+    """The polygon fixture's admin layer through the polygon featurizer."""
+    return polygons_to_features_dist(
+        spark.createDataFrame(polys), zoom=ZOOM, layer="admin", props_cols=POLY_PROPS, **kw
+    )
 
 
 def test_polygon_layer_roundtrip_with_hole(spark):
     polys = polygons_pdf()
-    feats = polygons_to_features(spark, polys, zoom=ZOOM, layer="admin", extent=4096)
+    feats = _admin_features(spark, polys, extent=4096)
     tiles = encode_tiles(feats).toPandas()
     assert len(tiles) > 0
     # pick the polygon with a hole (poly_id 3) and verify ring structure
@@ -50,7 +58,7 @@ def test_polygon_layer_roundtrip_with_hole(spark):
 
 def test_degenerate_rings_dropped(spark):
     polys = polygons_pdf()
-    feats = polygons_to_features(spark, polys, zoom=ZOOM, layer="admin")
+    feats = _admin_features(spark, polys)
     ids = {r["id"] for r in feats.select("id").distinct().collect()}
     assert 48 not in ids and 49 not in ids  # zero-area rings (classifyRings)
 
@@ -64,7 +72,9 @@ def test_lines_layer_roundtrip_with_offsets(spark):
             {"line_id": 2, "xy": [-30.0, -30.0, -10.0, -20.0], "offset": 0.0, "road": "b"},
         ]
     )
-    feats = lines_to_features(spark, lines, zoom=2, layer="roads", extent=4096)
+    feats = lines_to_features_dist(
+        spark.createDataFrame(lines), zoom=2, layer="roads", extent=4096
+    )
     tiles = encode_tiles(feats).toPandas()
     seen = {}
     for _, t in tiles.iterrows():
@@ -84,7 +94,7 @@ def test_multi_layer_tile(spark):
     pts = points_to_features(
         geoparse(pages), zoom=ZOOM, layer="pages", extent=4096, props_cols=["url"]
     )
-    polys = polygons_to_features(spark, polygons_pdf(), zoom=ZOOM, layer="admin", extent=4096)
+    polys = _admin_features(spark, polygons_pdf(), extent=4096)
     both = pts.unionByName(polys, allowMissingColumns=True)
     tiles = encode_tiles(both).toPandas()
     multi = 0
@@ -143,6 +153,8 @@ def test_streaming_available_now(spark, tmp_path):
 def test_mvalues_through_spark_tiler(spark):
     """FIXTURES.md §6: a line feature whose per-vertex M-values carry mShape
     {size: i64} must round-trip through the full Spark encode path."""
+    import json
+
     import pandas as pd
 
     lines = pd.DataFrame(
@@ -151,14 +163,17 @@ def test_mvalues_through_spark_tiler(spark):
                 "line_id": 9,
                 "xy": [1.0, 1.0, 2.0, 2.0, 3.0, 1.5],
                 "offset": 0.0,
-                "mvals": [{"size": 1}, {"size": -7}, {"size": 42}],
+                "mvals_json": json.dumps([{"size": 1}, {"size": -7}, {"size": 42}]),
                 "road": "m",
             }
         ]
     )
     from open_vector_tile_spark.operators import LayerSpec
 
-    feats = lines_to_features(spark, lines, zoom=2, layer="m", extent=4096)
+    feats = lines_to_features_dist(
+        spark.createDataFrame(lines), zoom=2, layer="m", extent=4096,
+        mvals_json_col="mvals_json",
+    )
     # mShape pinned like the reference test does (mirrors
     # tests/open_vector_tile/vectorFeature.test.ts:53-64): inference is
     # last-write-wins (shape.ts:320-322), so mixed-sign ints would infer u64
@@ -263,7 +278,7 @@ def test_decode_tiles_roundtrip_and_layer_pruning(spark):
     pts = points_to_features(
         geoparse(pages), zoom=ZOOM, layer="pages", extent=4096, props_cols=["url"]
     )
-    polys = polygons_to_features(spark, polygons_pdf(), zoom=ZOOM, layer="admin", extent=4096)
+    polys = _admin_features(spark, polygons_pdf(), extent=4096)
     tiles = encode_tiles(pts.unionByName(polys, allowMissingColumns=True)).cache()
     decoded = decode_tiles(tiles).toPandas()
     assert set(decoded["layer"]) == {"pages", "admin"}
@@ -283,13 +298,11 @@ def test_lines3d_and_polygons3d_roundtrip(spark):
     z quantizes with the same JS half-up rule, offsets and M-values survive,
     and decode_tiles returns the exact 3D vertex stream (reference 3D
     read/write src/open/vectorFeature.ts:376-587)."""
+    import json
+
     import pandas as pd
 
-    from open_vector_tile_spark.operators import (
-        decode_tiles,
-        lines3d_to_features,
-        polygons3d_to_features,
-    )
+    from open_vector_tile_spark.operators import decode_tiles
 
     lines_pdf = pd.DataFrame(
         {
@@ -299,11 +312,14 @@ def test_lines3d_and_polygons3d_roundtrip(spark):
                 [-20.0, 5.0, 0.0, -20.3, 5.2, 12.5],
             ],
             "offset": [1.25, 0.0],
-            "mvals": [[{"speed": 3}, {"speed": 4}, {"speed": 5}], None],
+            "mvals_json": [json.dumps([{"speed": 3}, {"speed": 4}, {"speed": 5}]), None],
             "kind": ["trail", "road"],
         }
     )
-    f5 = lines3d_to_features(spark, lines_pdf, zoom=ZOOM, layer="l3", extent=4096)
+    f5 = lines_to_features_dist(
+        spark.createDataFrame(lines_pdf), zoom=ZOOM, layer="l3", extent=4096,
+        xy_col="xyz", mvals_json_col="mvals_json", dims=3,
+    )
     polys_pdf = pd.DataFrame(
         {
             "poly_id": [7],
@@ -313,11 +329,14 @@ def test_lines3d_and_polygons3d_roundtrip(spark):
                     [30.1, 30.1, 5.5, 30.2, 30.1, 5.5, 30.2, 30.2, 5.5],
                 ]
             ],
-            "mvals": [[{"h": i} for i in range(7)]],
+            "mvals_json": [json.dumps([{"h": i} for i in range(7)])],
             "kind": ["roof"],
         }
     )
-    f6 = polygons3d_to_features(spark, polys_pdf, zoom=ZOOM, layer="p3", extent=4096)
+    f6 = polygons_to_features_dist(
+        spark.createDataFrame(polys_pdf), zoom=ZOOM, layer="p3", extent=4096,
+        rings_col="ring_xyz", mvals_json_col="mvals_json", dims=3,
+    )
     tiles = encode_tiles(f5.unionByName(f6, allowMissingColumns=True)).cache()
     d = decode_tiles(tiles).toPandas()
     l1 = d[(d.layer == "l3") & (d.id == 1)].iloc[0]

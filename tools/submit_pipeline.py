@@ -99,12 +99,15 @@ def main() -> None:
             props_cols=props_cols,
         )
         if args.polygons:
-            from open_vector_tile_spark.operators import polygons_to_features, spatial_join
+            from open_vector_tile_spark.operators import polygons_to_features_dist
             from open_vector_tile_spark.sources import polygons_pdf
 
-            polys = polygons_pdf()
+            polys = spark.createDataFrame(polygons_pdf())
             feats = feats.unionByName(
-                polygons_to_features(spark, polys, zoom=args.zoom, layer="admin", extent=args.extent),
+                polygons_to_features_dist(
+                    polys, zoom=args.zoom, layer="admin", extent=args.extent,
+                    props_cols=["name", "kind", "rank"],
+                ),
                 allowMissingColumns=True,
             )
         pending = store.pending(feats)
