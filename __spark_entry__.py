@@ -1536,14 +1536,15 @@ def _q_pq_topk_exact(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_tile_pyramid(spark: SparkSession, sf: str) -> DataFrame:
-    """Whole zoom-pyramid (z2/z3/z4) built in ONE pass — explode-per-zoom
-    featurization, single shuffle on (zoom, tile_x, tile_y) through the full
-    encode path; per-tile feature counts are the oracle surface."""
-    from open_vector_tile_spark.operators import encode_tiles, points_to_features_pyramid
+    """Whole zoom-pyramid (z2/z3/z4) built in ONE pass — ``points_to_features``
+    given a zoom list explodes each point per zoom, single shuffle on (zoom,
+    tile_x, tile_y) through the full encode path; per-tile feature counts
+    are the oracle surface."""
+    from open_vector_tile_spark.operators import encode_tiles, points_to_features
 
     docs = _doc_points(_load(spark, sf, "documents"))
-    feats = points_to_features_pyramid(
-        docs, zooms=(2, 3, 4), layer="docs", extent=4096, id_col="doc_id"
+    feats = points_to_features(
+        docs, zoom=(2, 3, 4), layer="docs", extent=4096, id_col="doc_id"
     )
     tiles = encode_tiles(feats)
     return tiles.select("zoom", "tile_x", "tile_y", "n_features").orderBy(
@@ -2864,15 +2865,10 @@ def _q_quadkey(spark: SparkSession, sf: str) -> DataFrame:
     shift/mask digit per level, MSB first — prefix-nesting makes it a
     range-scan key for tileset layouts.  Pure string/bit column exprs;
     DuckDB twin builds the same digits."""
-    from open_vector_tile_spark.functions.geo import (
-        quadkey_col,
-        tile_x_col,
-        tile_y_col,
-    )
+    from open_vector_tile_spark.functions.geo import quadkey_col, tile_project_col
 
     docs = _doc_points(_load(spark, sf, "documents"))
-    tx = tile_x_col(F.col("lon"), 6)
-    ty = tile_y_col(F.col("lat"), 6)
+    tx, ty, _, _ = tile_project_col(F.col("lon"), F.col("lat"), 6)
     return docs.select(
         "doc_id",
         tx.alias("tile_x"),

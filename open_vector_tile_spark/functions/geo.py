@@ -9,8 +9,9 @@ one shuffle serves both.
 
 Two implementations of each transform:
 - Column-expression (JVM-side, whole-stage-codegen) for the hot path:
-  :func:`tile_x_col` / :func:`tile_y_col` / :func:`cell_col` build pure
-  pyspark.sql Column trees (no Python UDF).
+  :func:`tile_project_col` is THE lon/lat -> tile projection (every
+  featurizer, gridder and cell key builds on it); :func:`cell_col` packs
+  its tile.  Pure pyspark.sql Column trees (no Python UDF).
 - numpy (:func:`tile_xy_np`) for use inside Arrow UDFs (PIP refinement, kNN
   kernels) and for the pytest oracles.
 
@@ -171,22 +172,29 @@ if _HAS_SPARK:
         s = F.sin(F.radians(clamped))
         return F.lit(0.5) - F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)) / F.lit(4.0 * math.pi)
 
-    def tile_x_col(lon: Column, zoom: int) -> Column:
-        n = 1 << zoom
-        return F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor(merc_x_col(lon) * F.lit(float(n)))),
-        ).cast("long")
-
-    def tile_y_col(lat: Column, zoom: int) -> Column:
-        n = 1 << zoom
-        return F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor(merc_y_col(lat) * F.lit(float(n)))),
-        ).cast("long")
+    def tile_project_col(lon: Column, lat: Column, zoom) -> tuple:
+        """-> (tile_x, tile_y, mx, my): the tile of each point and its
+        mercator x/y times 2^zoom (P13 quantizes ``mx - tile_x``).  ``zoom``
+        is an int or an integer Column (then 2^zoom is ``pow``, exact in
+        double).  A null lon (lat) gives a null tile_x (tile_y): the clamp
+        is guarded because ``greatest``/``least`` skip nulls and would
+        clamp one to an edge tile.  ``my`` of a null lat is not null (the
+        lat clamp skips it too), so callers go by the tile."""
+        if isinstance(zoom, Column):
+            n = F.pow(F.lit(2.0), zoom)
+            nmax = (n - F.lit(1.0)).cast("long")
+        else:
+            n, nmax = F.lit(float(1 << zoom)), F.lit((1 << zoom) - 1)
+        mx = merc_x_col(lon) * n
+        my = merc_y_col(lat) * n
+        tx = F.when(lon.isNotNull(), F.greatest(F.lit(0), F.least(nmax, F.floor(mx))))
+        ty = F.when(lat.isNotNull(), F.greatest(F.lit(0), F.least(nmax, F.floor(my))))
+        return tx.cast("long"), ty.cast("long"), mx, my
 
     def cell_col(lon: Column, lat: Column, zoom: int) -> Column:
-        return pack_cell_col(F.lit(zoom), tile_x_col(lon, zoom), tile_y_col(lat, zoom))
+        """Packed cell id at ``zoom``; null when lon or lat is null."""
+        tx, ty, _, _ = tile_project_col(lon, lat, zoom)
+        return pack_cell_col(F.lit(zoom), tx, ty)
 
     def pack_cell_col(zoom: Column, tx: Column, ty: Column) -> Column:
         return (
@@ -217,8 +225,9 @@ if _HAS_SPARK:
         )
 
     def transform_point_col(p: Column, extent: int) -> Column:
-        """P13 extent quantization (src/base/vectorFeature.ts:584-602)."""
-        return F.floor(p * F.lit(float(extent)) + F.lit(0.5)).cast("long")
+        """P13 extent quantization (src/base/vectorFeature.ts:584-602), JS
+        half-up rounding, as an int."""
+        return F.floor(p * F.lit(float(extent)) + F.lit(0.5)).cast("int")
 
     def quadkey_col(tx: Column, ty: Column, zoom: int) -> Column:
         """Bing-maps quadkey of tile (tx, ty) at ``zoom`` — one base-4
@@ -426,26 +435,14 @@ if _HAS_SPARK:
         emits ONE row with NULL tile_x/tile_y and ``oversized=true``
         instead of exploding (the caller decides whether to re-request at
         a lower zoom); every output row carries ``n_tiles`` so the cap is
-        auditable.
+        auditable.  A viewport with a null bound covers no tile: its
+        ``n_tiles`` is null and it emits no row.
         """
         if max_tiles < 1:
             raise ValueError(f"max_tiles must be >= 1, got {max_tiles}")
-        zc = F.col(zoom).cast("double")
-        n = F.pow(F.lit(2.0), zc)
-
-        def _tx(c: Column) -> Column:
-            return F.greatest(
-                F.lit(0.0), F.least(n - F.lit(1.0), F.floor(merc_x_col(c) * n))
-            ).cast("long")
-
-        def _ty(c: Column) -> Column:
-            return F.greatest(
-                F.lit(0.0), F.least(n - F.lit(1.0), F.floor(merc_y_col(c) * n))
-            ).cast("long")
-
-        x0, x1 = _tx(F.col(min_lon)), _tx(F.col(max_lon))
-        y0, y1 = _ty(F.col(max_lat)), _ty(F.col(min_lat))  # north = smaller y
-        last = (n - F.lit(1.0)).cast("long")
+        x0, y1, _, _ = tile_project_col(F.col(min_lon), F.col(min_lat), F.col(zoom))
+        x1, y0, _, _ = tile_project_col(F.col(max_lon), F.col(max_lat), F.col(zoom))
+        last = (F.pow(F.lit(2.0), F.col(zoom)) - F.lit(1.0)).cast("long")
         # crossing box whose two arcs land in overlapping tile ranges
         # (x1 >= x0 — e.g. both edges inside ONE tile at low zoom, or a
         # near-global box): the union is the full x row; emitting both

@@ -53,9 +53,7 @@ from .tiler import (  # noqa: F401
     encode_tiles,
     images_to_tiles,
     lines_to_features_dist,
-    points3d_to_features,
     points_to_features,
-    points_to_features_pyramid,
     points_to_features_columnar,
     polygons_to_features_dist,
     s2json_tiles_to_ovt,

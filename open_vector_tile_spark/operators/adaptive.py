@@ -54,8 +54,9 @@ def adaptive_tiling(
     """-> leaf tiles ``(zoom, tile_x, tile_y, n_points)`` of the adaptive
     quadtree over ``points``.  Every input point lands in exactly one
     leaf; tiles at ``z_max`` may exceed the cap (subdivision exhausted —
-    the no-silent-caps ledger row for a skew cell)."""
-    from open_vector_tile_spark.functions.geo import tile_x_col, tile_y_col
+    the no-silent-caps ledger row for a skew cell).  A point with a null
+    coordinate has no tile and lands in no leaf."""
+    from open_vector_tile_spark.functions.geo import tile_project_col
 
     if not (0 <= z_min <= z_max <= 30):
         raise ValueError(f"need 0 <= z_min <= z_max <= 30, got {z_min}, {z_max}")
@@ -63,21 +64,17 @@ def adaptive_tiling(
         raise ValueError(f"max_per_tile must be >= 1, got {max_per_tile}")
 
     with Pins() as pins:
-        cur = points.select(F.col(lon_col).alias("_lon"), F.col(lat_col).alias("_lat"))
+        cur = points.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()).select(
+            F.col(lon_col).alias("_lon"), F.col(lat_col).alias("_lat")
+        )
         leaves: list[DataFrame] = []
         prev = None
         for z in range(int(z_min), int(z_max) + 1):
             # checkpoint the TILED projection (not the bare points): the
             # counts aggregate and the survivor semi-join both read it, so
             # the mercator/floor math runs once per survivor per round
-            tz = pins.pin(
-                cur.select(
-                    tile_x_col(F.col("_lon"), z).alias("tile_x"),
-                    tile_y_col(F.col("_lat"), z).alias("tile_y"),
-                    "_lon",
-                    "_lat",
-                )
-            )
+            tx, ty, _, _ = tile_project_col(F.col("_lon"), F.col("_lat"), z)
+            tz = pins.pin(cur.select(tx.alias("tile_x"), ty.alias("tile_y"), "_lon", "_lat"))
             if prev is not None:
                 pins.free(prev)
             prev = tz

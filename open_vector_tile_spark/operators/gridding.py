@@ -17,9 +17,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codec import write_grid_data
-from ..functions.geo import merc_x_col, merc_y_col
+from ..functions.geo import tile_project_col
 
 GRID_TILE_SCHEMA = "zoom int, tile_x long, tile_y long, tile binary, n_cells long, n_bytes long"
+
+
+def _grid_cells(points: DataFrame, zoom: int, size: int, lon: str, lat: str) -> tuple:
+    """(points with both coordinates, tile_x, tile_y, px, py): each point's
+    tile and its cell of the tile's size×size grid.  A point with a null
+    lon or lat has no cell, so it is dropped."""
+    lon, lat = F.col(lon), F.col(lat)
+    tx, ty, mx, my = tile_project_col(lon, lat, zoom)
+    # clamp BOTH ends: merc_y at the MAX_LAT clamp can come out a hair
+    # below 0 (-8e-16), making floor() = -1 — a negative index that numpy
+    # would silently wrap to the wrong grid cell downstream
+    px = F.greatest(F.lit(0), F.least(F.lit(size - 1), F.floor((mx - tx) * size))).cast("int")
+    py = F.greatest(F.lit(0), F.least(F.lit(size - 1), F.floor((my - ty) * size))).cast("int")
+    return points.where(lon.isNotNull() & lat.isNotNull()), tx, ty, px, py
 
 
 def grid_aggregate(
@@ -32,22 +46,10 @@ def grid_aggregate(
 ) -> DataFrame:
     """-> (zoom, tile_x, tile_y, px, py, mean_value, n) long-form grid cells.
 
-    One shuffle on the full grid key; avg gets a map-side partial.
+    One shuffle on the full grid key; avg gets a map-side partial.  Points
+    with a null coordinate are not counted.
     """
-    n = float(1 << zoom)
-    mx = merc_x_col(F.col(lon)) * F.lit(n)
-    my = merc_y_col(F.col(lat)) * F.lit(n)
-    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(mx))).cast("long")
-    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(my))).cast("long")
-    # clamp BOTH ends: merc_y at the MAX_LAT clamp can come out a hair
-    # below 0 (-8e-16), making floor() = -1 — a negative index that numpy
-    # would silently wrap to the wrong grid cell downstream
-    px = F.greatest(
-        F.lit(0), F.least(F.lit(size - 1), F.floor((mx - tx) * size))
-    ).cast("int")
-    py = F.greatest(
-        F.lit(0), F.least(F.lit(size - 1), F.floor((my - ty) * size))
-    ).cast("int")
+    points, tx, ty, px, py = _grid_cells(points, zoom, size, lon, lat)
     return (
         points.select(
             F.lit(zoom).alias("zoom"),
@@ -257,20 +259,11 @@ def heatmap_grid(
     kernel (taps are plan constants from :func:`kernel_offsets`, no exp()
     at runtime) and ONE partial-aggregated shuffle on the target cell.
     Out-of-world taps are dropped (no wraparound smear at the
-    antimeridian — the mercator world does not wrap in pixel space)."""
+    antimeridian — the mercator world does not wrap in pixel space), and
+    so are points with a null coordinate."""
     taps = kernel_offsets(radius, sigma, scale)
-    n = 1 << zoom
-    world = n * size
-    mx = merc_x_col(F.col(lon)) * F.lit(float(n))
-    my = merc_y_col(F.col(lat)) * F.lit(float(n))
-    tx = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(mx))).cast("long")
-    ty = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(my))).cast("long")
-    px = F.greatest(F.lit(0), F.least(F.lit(size - 1), F.floor((mx - tx) * size))).cast(
-        "long"
-    )
-    py = F.greatest(F.lit(0), F.least(F.lit(size - 1), F.floor((my - ty) * size))).cast(
-        "long"
-    )
+    world = (1 << zoom) * size
+    points, tx, ty, px, py = _grid_cells(points, zoom, size, lon, lat)
     tap_arr = F.array(
         *[
             F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(w).alias("w"))

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import tile_x_col, tile_y_col
+from ..functions.geo import tile_project_col
 
 
 def changed_tiles(
@@ -53,20 +53,23 @@ def changed_tiles(
     should union those keys in explicitly).  "Moved" means the POSITION
     changed, not just the tile: an in-tile move still rewrites the tile's
     quantized bytes, so it dirties its (possibly single) tile through both
-    the moved-in and moved-out counts."""
-    b = base.select(
+    the moved-in and moved-out counts.  A document with a null lon or lat
+    has no tile, the same as an absent one."""
+    tx, ty, _, _ = tile_project_col(F.col(lon), F.col(lat), zoom)
+    located = F.col(lon).isNotNull() & F.col(lat).isNotNull()
+    b = base.where(located).select(
         F.col(key).alias("_k"),
         F.col(lon).alias("_blon"),
         F.col(lat).alias("_blat"),
-        tile_x_col(F.col(lon), zoom).alias("_bx"),
-        tile_y_col(F.col(lat), zoom).alias("_by"),
+        tx.alias("_bx"),
+        ty.alias("_by"),
     )
-    n = new.select(
+    n = new.where(located).select(
         F.col(key).alias("_k"),
         F.col(lon).alias("_nlon"),
         F.col(lat).alias("_nlat"),
-        tile_x_col(F.col(lon), zoom).alias("_nx"),
-        tile_y_col(F.col(lat), zoom).alias("_ny"),
+        tx.alias("_nx"),
+        ty.alias("_ny"),
     )
     j = b.join(n, "_k", "full_outer")
     ins = F.col("_bx").isNull()

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..codec import BaseFeature, BaseLayer, BaseLine, write_ov_tile
 from ..codec.mvt import signed_area
+from ..functions.geo import tile_project_col, transform_point_col
 from ._parallel import fan_out
 
 FEATURE_SCHEMA = (
@@ -331,135 +332,73 @@ def encode_point_tiles(
     return _encode_sorted_runs(arranged, encode_runs)
 
 
-def _project_points(lon: str, lat: str, zoom: int, extent: int) -> tuple:
-    """(tile_x, tile_y, qx, qy) columns of lon/lat points at a literal zoom.
+def _zoom_list(zoom) -> list:
+    """One zoom or an iterable of zooms -> the sorted distinct levels (the
+    rule of all three featurizers)."""
+    zooms = sorted({int(z) for z in zoom}) if isinstance(zoom, Iterable) else [int(zoom)]
+    if not zooms:
+        raise ValueError("zoom must name at least one level")
+    return zooms
 
-    All math is column-expression (JVM): mercator projection, tile
-    assignment, extent quantization (P13: round(p*extent), JS half-up
-    rounding)."""
-    from ..functions.geo import merc_x_col, merc_y_col
 
-    n = float(1 << zoom)
-    mx = merc_x_col(F.col(lon)) * F.lit(n)
-    my = merc_y_col(F.col(lat)) * F.lit(n)
-    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(mx))).cast("long")
-    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), F.floor(my))).cast("long")
-    qx = F.floor((mx - tx) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    qy = F.floor((my - ty) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    return tx, ty, qx, qy
+def _point_tiles(points: DataFrame, lon: str, lat: str, zoom, extent: int) -> tuple:
+    """(points with both coordinates, tile_x, tile_y, qx, qy): the one
+    projection (functions/geo.py:tile_project_col), then P13 extent
+    quantization (round(p*extent), JS half-up).  A point with a null lon
+    or lat has no tile, so it is dropped."""
+    lon, lat = F.col(lon), F.col(lat)
+    tx, ty, mx, my = tile_project_col(lon, lat, zoom)
+    qx = transform_point_col(mx - tx, extent)
+    qy = transform_point_col(my - ty, extent)
+    return points.where(lon.isNotNull() & lat.isNotNull()), tx, ty, qx, qy
 
 
 def points_to_features(
     points: DataFrame,
-    zoom: int,
+    zoom: Union[int, Iterable[int]],
     layer: str,
     extent: int = 4096,
     lon: str = "lon",
     lat: str = "lat",
     id_col: Optional[str] = None,
     props_cols: Optional[Iterable[str]] = None,
+    z: Optional[str] = None,
+    z_scale: float = 1.0,
 ) -> DataFrame:
-    """Point rows -> feature rows for ``encode_tiles`` (JVM-side projection:
-    :func:`_project_points`)."""
-    tx, ty, qx, qy = _project_points(lon, lat, zoom, extent)
+    """Point rows -> type-1 feature rows for ``encode_tiles``, or type-4
+    (3D) rows when ``z`` names a height column, quantized by ``z_scale``
+    with the same JS half-up rounding as x/y (reference 3D types
+    src/vectorTile.spec.ts:29-35).  All math is JVM column expressions
+    (:func:`_point_tiles`).
+
+    ``zoom`` is one zoom level or an iterable of them (sorted, deduped).
+    One level stays a literal zoom column and 2^zoom a literal.  Two
+    or more explode each point to every level JVM-side (``array`` +
+    ``explode``, no Python), with the tile math parameterized by the zoom
+    column: the whole pyramid costs one scan of the source and one shuffle
+    on (zoom, tile_x, tile_y) in ``encode_tiles``, not one per level, and
+    each level's rows equal a single-zoom call's."""
+    zooms = _zoom_list(zoom)
+    zc = zooms[0]
+    if len(zooms) > 1:
+        points = points.withColumn("zoom", F.explode(F.array(*[F.lit(v) for v in zooms])))
+        zc = F.col("zoom")
+    points, tx, ty, qx, qy = _point_tiles(points, lon, lat, zc, extent)
+    geom = [qx, qy]
+    if z:
+        geom.append(transform_point_col(F.col(z), z_scale))
     cols = [
-        F.lit(zoom).alias("zoom"),
+        F.lit(zc).alias("zoom"),
         tx.alias("tile_x"),
         ty.alias("tile_y"),
         F.lit(layer).alias("layer"),
         F.lit(extent).alias("extent"),
-        F.lit(1).alias("ftype"),
-        F.array(qx, qy).alias("geom_xy"),
+        F.lit(4 if z else 1).alias("ftype"),
+        F.array(*geom).alias("geom_xy"),
     ]
     # optional columns are OMITTED when unused: shipping all-null array<T>
     # columns through Arrow->pandas costs ~16us/row/column (measured 64s of
     # a 70s stage at 4M rows) — the encoder treats absent == null
-    if id_col:
-        cols.append(F.col(id_col).cast("long").alias("id"))
-    if props_cols:
-        cols.append(F.to_json(F.struct(*[F.col(c) for c in props_cols])).alias("props_json"))
-    return points.select(*cols)
-
-
-def points_to_features_pyramid(
-    points: DataFrame,
-    zooms: Iterable[int],
-    layer: str,
-    extent: int = 4096,
-    lon: str = "lon",
-    lat: str = "lat",
-    id_col: Optional[str] = None,
-    props_cols: Optional[Iterable[str]] = None,
-) -> DataFrame:
-    """Whole zoom-pyramid featurization in ONE pass: each point is exploded
-    to every requested zoom level JVM-side (``array``+``explode``, no
-    Python), with tile/quantization math parameterized by the zoom COLUMN —
-    so the full pyramid is built with a single scan of the source and a
-    single downstream shuffle on (zoom, tile_x, tile_y) in
-    ``encode_tiles``.  The per-level alternative scans the source and
-    shuffles once PER zoom — z2..z14 would be 13 scans; this is one.
-
-    Per-zoom output is row-identical to ``points_to_features(zoom=z)``
-    (pinned by tests/test_vector_layers_spark.py::test_pyramid...)."""
-    from ..functions.geo import merc_x_col, merc_y_col
-
-    zs = sorted({int(z) for z in zooms})
-    if not zs:
-        raise ValueError("zooms must be non-empty")
-    pts = points.withColumn("zoom", F.explode(F.array(*[F.lit(z) for z in zs])))
-    # 2^zoom as a column expression (shiftleft needs a literal shift; pow is
-    # exact in double for any real zoom level)
-    n = F.pow(F.lit(2.0), F.col("zoom"))
-    mx = merc_x_col(F.col(lon)) * n
-    my = merc_y_col(F.col(lat)) * n
-    nmax = (n - F.lit(1.0)).cast("long")
-    zero = F.lit(0).cast("long")
-    tx = F.greatest(zero, F.least(nmax, F.floor(mx).cast("long")))
-    ty = F.greatest(zero, F.least(nmax, F.floor(my).cast("long")))
-    qx = F.floor((mx - tx) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    qy = F.floor((my - ty) * F.lit(float(extent)) + F.lit(0.5)).cast("int")
-    cols = [
-        F.col("zoom"),
-        tx.alias("tile_x"),
-        ty.alias("tile_y"),
-        F.lit(layer).alias("layer"),
-        F.lit(extent).alias("extent"),
-        F.lit(1).alias("ftype"),
-        F.array(qx, qy).alias("geom_xy"),
-    ]
-    if id_col:
-        cols.append(F.col(id_col).cast("long").alias("id"))
-    if props_cols:
-        cols.append(F.to_json(F.struct(*[F.col(c) for c in props_cols])).alias("props_json"))
-    return pts.select(*cols)
-
-
-def points3d_to_features(
-    points: DataFrame,
-    zoom: int,
-    layer: str,
-    extent: int = 4096,
-    lon: str = "lon",
-    lat: str = "lat",
-    z: str = "z",
-    z_scale: float = 1.0,
-    id_col: Optional[str] = None,
-    props_cols: Optional[Iterable[str]] = None,
-) -> DataFrame:
-    """3D point rows -> type-4 feature rows (z quantized by ``z_scale`` with
-    the same JS half-up rounding as x/y; reference 3D types
-    src/vectorTile.spec.ts:29-35)."""
-    tx, ty, qx, qy = _project_points(lon, lat, zoom, extent)
-    qz = F.floor(F.col(z) * F.lit(z_scale) + F.lit(0.5)).cast("int")
-    cols = [
-        F.lit(zoom).alias("zoom"),
-        tx.alias("tile_x"),
-        ty.alias("tile_y"),
-        F.lit(layer).alias("layer"),
-        F.lit(extent).alias("extent"),
-        F.lit(4).alias("ftype"),
-        F.array(qx, qy, qz).alias("geom_xy"),
-    ]
     if id_col:
         cols.append(F.col(id_col).cast("long").alias("id"))
     if props_cols:
@@ -492,8 +431,9 @@ def points_to_features_columnar(
     """Fully-columnar point featurization for the bulk encoder: emits
     (qx, qy[, id][, p_<prop>...]) typed columns instead of geom arrays /
     props JSON, plus the derived LayerSpec dict to pass to
-    :func:`encode_point_tiles`.  Shape is pinned from the Spark schema."""
-    tx, ty, qx, qy = _project_points(lon, lat, zoom, extent)
+    :func:`encode_point_tiles`.  Shape is pinned from the Spark schema.
+    Same projection and null rule as :func:`points_to_features`."""
+    points, tx, ty, qx, qy = _point_tiles(points, lon, lat, zoom, extent)
     cols = [
         F.lit(zoom).alias("zoom"),
         tx.alias("tile_x"),
@@ -560,7 +500,7 @@ def _kernel_input(
         raise ValueError(f"dims must be 2|3, got {dims}")
     if clip_buffer is not None and mvals_json_col:
         raise ValueError("per-vertex M-values cannot be clipped; drop mvals_json_col")
-    zooms = [int(z) for z in zoom] if isinstance(zoom, Iterable) else [int(zoom)]
+    zooms = _zoom_list(zoom)
     if props_cols is None:
         props_cols = [c for c in df.columns if c not in geom_cols and c != mvals_json_col]
     props = [F.col(c) for c in props_cols]
@@ -655,11 +595,12 @@ def lines_to_features_dist(
     lands in every tile its bbox covers; vertex quantization is P13 JS
     half-up, z by ``z_scale``.
 
-    ``zoom`` is one zoom level or an iterable of them.  A zoom pyramid
-    costs ONE source scan and one downstream shuffle, not one per level:
-    the Arrow kernel loops the levels over each batch's already-projected
-    geometry, and its rows equal the union of single-zoom calls — the same
-    single-pass shape as ``points_to_features_pyramid``.
+    ``zoom`` is one zoom level or an iterable of them (sorted, deduped:
+    the rule of :func:`points_to_features`).  A zoom pyramid costs ONE
+    source scan and one downstream shuffle, not one per level: the Arrow
+    kernel loops the levels over each batch's already-projected geometry,
+    and its rows equal the union of single-zoom calls — the single-pass
+    shape of ``points_to_features`` given a zoom list.
 
     ``clip_buffer`` (extent pixels, e.g. 64): when set, each tile's copy is
     CLIPPED to the tile + buffer with vectorized Liang–Barsky

@@ -75,6 +75,13 @@ def test_zmax_cap_exceeded(spark):
     assert k[0] == 4 and v == 40
 
 
+def test_null_coordinates_land_in_no_leaf(spark):
+    pts = [(10.0, 50.0), (None, 50.0), (10.0, None), (None, None)]
+    assert _run(spark, pts, z_min=2, z_max=4, max_per_tile=8) == _py_adaptive(
+        pts[:1], 2, 4, 8
+    )
+
+
 def test_no_split_needed(spark):
     pts = [(float(x), 10.0) for x in range(-170, 170, 40)]
     got = _run(spark, pts, z_min=3, z_max=8, max_per_tile=50)

@@ -1,8 +1,10 @@
-"""The executor-side line/polygon featurizers, pinned row- and byte-exact.
+"""The featurizers of operators/tiler.py, pinned row- and byte-exact.
 
-``lines_to_features_dist`` and ``polygons_to_features_dist``
-(operators/tiler.py) run inside mapInPandas on a Spark DataFrame of
-geometry arrays — no createDataFrame(rows), no driver materialization.
+``lines_to_features_dist`` and ``polygons_to_features_dist`` run inside
+mapInPandas on a Spark DataFrame of geometry arrays — no
+createDataFrame(rows), no driver materialization.  ``points_to_features``
+and ``points_to_features_columnar`` are JVM column expressions over one
+projection (functions/geo.py:tile_project_col).
 
 Up to commit dfb2d5a the tiler also carried driver-side ``iterrows`` twins
 of both (``lines_to_features``, ``lines3d_to_features``,
@@ -12,17 +14,27 @@ those twins at dfb2d5a, where the dist kernels gave the same values: one
 of the sorted :func:`_norm_rows` of each fixture, one of its sorted
 :func:`_tile_bytes` after ``encode_tiles``.  The remaining tests check the
 degenerate-ring drop, that the plan has no driver-side scan, and that a
-zoom list equals the union of single-zoom calls in one scan."""
+zoom list equals the union of single-zoom calls in one scan.
+
+Up to commit 48d5f1d points had two more featurizers,
+``points_to_features_pyramid`` (a zoom list) and ``points3d_to_features``
+(``z``/``z_scale``), now arguments of ``points_to_features``; the
+``points_*`` pins were computed from them and from the columnar path at
+48d5f1d."""
 
 import hashlib
 import json
+import math
 
 import pandas as pd
 import pytest
 
 from open_vector_tile_spark.operators.tiler import (
+    encode_point_tiles,
     encode_tiles,
     lines_to_features_dist,
+    points_to_features,
+    points_to_features_columnar,
     polygons_to_features_dist,
 )
 from open_vector_tile_spark.sources import polygons_pdf
@@ -55,6 +67,21 @@ PINNED = {
         "f20e64038259f8058991b96823a99372730ef5fd3ee600beccbc42ec96c03409",
         "9df7fc7face11b6ee451dda18c9af35d51f64b35f0324a7ab137c911ea3642ab",
     ),
+    # points, computed at 48d5f1d: points_to_features_pyramid(zooms=(2, 3, 5)),
+    # points3d_to_features, and points_to_features_columnar's rows and
+    # encode_point_tiles bytes
+    "points_pyramid": (
+        "78db46e71d874a018a7fc03015e51316c6cefe48d76812a46346072c9870ee60",
+        "26a8ffb05f04373a8004b642652c5328ba10cc17536ac2b3063bac3f96465446",
+    ),
+    "points_3d": (
+        "4e4d918459ed0d8d402ecb9d7e0d0dbed2c1ab2b6fb343ccb58c9fe9d00ff778",
+        "2e6e2636b2a15529a3e2a34d54f82500743cea731b0309fe6748eecefeaa1878",
+    ),
+    "points_columnar": (
+        "7ba9c4b163d2ce55ecaff4e254408a9d859a0e1e76ab6ea4072b55d802f4f0bd",
+        "7d9a306fbff547921a82ee513e068bf5a24bd9b7b707116053ada32efaa3b863",
+    ),
 }
 
 
@@ -71,7 +98,7 @@ def _norm_rows(df):
                 d["zoom"], d["tile_x"], d["tile_y"], d["layer"], d["extent"],
                 d["id"], d["ftype"],
                 tuple(d["geom_xy"] or []),
-                tuple(d["ring_lens"] or []),
+                tuple(d.get("ring_lens") or []),
                 tuple(d.get("poly_lens") or []),
                 tuple(d.get("offsets") or []),
                 tuple(sorted(props.items())),
@@ -279,3 +306,116 @@ def test_pyramid_dist_one_scan(spark):
     assert plan.count("MapInPandas") == 1
     zs = {r["zoom"] for r in pyr.select("zoom").distinct().collect()}
     assert zs == {2, 3, 4}
+
+
+# ---------------------------------------------------------------------------
+# points
+# ---------------------------------------------------------------------------
+
+MAX_LAT = 85.05112877980659
+
+
+def _row_lat(y: int, z: int) -> float:
+    """Latitude of the north edge of tile row ``y`` at zoom ``z``."""
+    return math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * y / (1 << z)))))
+
+
+# the clamps (lon ±180, lat ±90 and ±MAX_LAT), the origin, and z5 tile edges
+EDGES = [
+    (-180.0, 0.0), (180.0, 0.0), (0.0, 90.0), (0.0, -90.0),
+    (0.0, MAX_LAT), (0.0, -MAX_LAT), (0.0, 0.0),
+] + [(-180.0 + 11.25 * k, _row_lat(k, 5)) for k in (1, 7, 16, 25, 31)]
+
+
+def _points(spark):
+    """400 points spread over the world, then ``EDGES``; a z value and
+    typed property columns per point."""
+    coords = [
+        ((i * 37 % 3600) / 10.0 - 180.0, (i * 53 % 1600) / 10.0 - 80.0) for i in range(400)
+    ] + EDGES
+    rows = [
+        (i, lon, lat, (i * 13 % 2000) / 10.0 - 100.0, ("en", "de", "fr")[i % 3],
+         i % 7, i / 8.0, i % 2 == 0)
+        for i, (lon, lat) in enumerate(coords)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "doc_id long, lon double, lat double, z double, lang string, rank int, "
+        "score double, flag boolean",
+    ).repartition(3)
+
+
+def test_points_zoom_list_pinned(spark):
+    feats = points_to_features(
+        _points(spark), (5, 2, 3), layer="docs", id_col="doc_id", props_cols=["lang", "rank"]
+    )
+    _assert_pinned(feats, "points_pyramid")
+
+
+def test_points3d_pinned(spark):
+    feats = points_to_features(
+        _points(spark), 4, layer="p3", id_col="doc_id", props_cols=["lang"],
+        z="z", z_scale=2.5,
+    )
+    _assert_pinned(feats, "points_3d")
+
+
+def test_points_columnar_pinned(spark):
+    feats, meta = points_to_features_columnar(
+        _points(spark), zoom=10, layer="pages", id_col="doc_id",
+        props_cols=["lang", "rank", "score", "flag"],
+    )
+    rows = sorted(tuple(r) for r in feats.collect())
+    tiles = sorted(
+        (r["zoom"], r["tile_x"], r["tile_y"], bytes(r["tile"]))
+        for r in encode_point_tiles(feats, meta).collect()
+    )
+    assert (_sha(rows), _sha(tiles)) == PINNED["points_columnar"]
+
+
+def _featurize(spark, family, zoom):
+    if family == "points":
+        return points_to_features(_points(spark), zoom, layer="p", id_col="doc_id")
+    if family == "lines":
+        sdf = spark.createDataFrame(
+            pd.DataFrame([{"line_id": 1, "xy": [-120.0, 10.0, 60.0, 40.0], "road": "c"}])
+        )
+        return lines_to_features_dist(sdf, zoom, layer="r", props_cols=["road"])
+    sdf = spark.createDataFrame(polygons_pdf())
+    return polygons_to_features_dist(sdf, zoom, layer="a", props_cols=["name"])
+
+
+@pytest.mark.parametrize("family", ["points", "lines", "polygons"])
+def test_zoom_list_is_sorted_and_deduped(spark, family):
+    """All three featurizers read a zoom list one way: a repeated zoom
+    emits each feature once per tile, and an empty list raises."""
+    assert _norm_rows(_featurize(spark, family, [3, 3])) == _norm_rows(
+        _featurize(spark, family, 3)
+    )
+    with pytest.raises(ValueError):
+        _featurize(spark, family, [])
+
+
+def _null_points(spark):
+    return spark.createDataFrame(
+        [(1, 10.0, 20.0, "a"), (2, None, 20.0, "b"), (3, 10.0, None, "c"), (4, None, None, "d")],
+        "doc_id long, lon double, lat double, lang string",
+    )
+
+
+@pytest.mark.parametrize("zoom,levels", [(4, 1), ((2, 4), 2)])
+def test_points_with_null_coordinate_dropped(spark, zoom, levels):
+    """A null lon or lat has no tile: the point is dropped, not encoded at
+    a clamped tile edge."""
+    feats = points_to_features(_null_points(spark), zoom, layer="p", id_col="doc_id")
+    assert [r["id"] for r in feats.collect()] == [1] * levels
+    assert sum(r["n_features"] for r in encode_tiles(feats).collect()) == levels
+
+
+def test_columnar_points_with_null_coordinate_dropped(spark):
+    feats, meta = points_to_features_columnar(
+        _null_points(spark), zoom=4, layer="p", id_col="doc_id", props_cols=["lang"]
+    )
+    assert [r["id"] for r in feats.collect()] == [1]
+    tiles = encode_point_tiles(feats, meta).collect()
+    assert [r["n_features"] for r in tiles] == [1]

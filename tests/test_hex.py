@@ -365,6 +365,23 @@ def test_viewport_tiles_antimeridian_split(spark):
     assert all(r["n_tiles"] == 2 * yspan for r in got)
 
 
+def test_viewport_tiles_null_bound_covers_nothing(spark):
+    """A viewport with a null bound emits no tile (no antimeridian split
+    or clamped edge made up from the null); its neighbour is unaffected."""
+    from open_vector_tile_spark.functions.geo import viewport_tiles
+
+    rows = [
+        (1, None, -5.0, 5.0, 5.0, 3),
+        (2, -5.0, None, 5.0, 5.0, 3),
+        (3, -5.0, -5.0, None, 5.0, 3),
+        (4, -5.0, -5.0, 5.0, None, 3),
+        (5, -5.0, -5.0, 5.0, 5.0, 3),
+    ]
+    got = viewport_tiles(_vp_df(spark, rows)).collect()
+    assert {r["vid"] for r in got} == {5}
+    assert len(got) == 4
+
+
 def test_viewport_tiles_oversize_capped_explicitly(spark):
     from open_vector_tile_spark.functions.geo import viewport_tiles
 

@@ -254,6 +254,39 @@ def test_gridding_roundtrip(spark, pages):
             assert abs(got - c.mean_value) <= tol
 
 
+def _null_coord_points(spark, located_only=False):
+    """One located point, then (unless ``located_only``) a null lon, a null
+    lat and both null."""
+    rows = [(10.0, 20.0, 1.0), (None, 20.0, 2.0), (10.0, None, 4.0), (None, None, 8.0)]
+    return spark.createDataFrame(
+        rows[:1] if located_only else rows, "lon double, lat double, value double"
+    )
+
+
+def test_grid_aggregate_drops_null_coordinates(spark):
+    rows = grid_aggregate(_null_coord_points(spark), zoom=3, size=4).collect()
+    assert [(r["n"], r["mean_value"]) for r in rows] == [(1, 1.0)]
+
+
+def test_heatmap_drops_null_coordinates(spark):
+    from open_vector_tile_spark.operators.gridding import heatmap_grid
+
+    got = heatmap_grid(_null_coord_points(spark), zoom=3, size=4, radius=1).collect()
+    want = heatmap_grid(_null_coord_points(spark, True), zoom=3, size=4, radius=1)
+    assert sorted(got) == sorted(want.collect())
+
+
+def test_cell_col_null_coordinate_is_null(spark):
+    cells = [
+        r["c"]
+        for r in _null_coord_points(spark)
+        .select(geo.cell_col(F.col("lon"), F.col("lat"), ZOOM).alias("c"))
+        .collect()
+    ]
+    assert cells[0] == int(geo.cell_id_np([10.0], [20.0], ZOOM)[0])
+    assert cells[1:] == [None, None, None]
+
+
 def test_spatial_join_distributed_matches_driver_variant(spark, pages):
     """The fully-distributed join (executor-side covering + in-row ring PIP)
     returns exactly the same (url, poly_id) rows as the driver-covering path,

@@ -94,6 +94,21 @@ def test_tile_encode_single_shuffle(spark, tmp_path_factory):
     assert m and "tile_x" in m.group(1) and "tile_y" in m.group(1)
 
 
+@pytest.mark.parametrize("zoom,generates", [(4, 0), ((2, 4), 1)])
+def test_point_featurizer_zoom_plan(spark, tmp_path_factory, zoom, generates):
+    """One zoom stays a literal: 2^zoom constant-folds and nothing is
+    exploded.  A zoom list explodes once, and the encode still shuffles
+    once on (zoom, tile_x, tile_y)."""
+    pages = _parquet_pages(spark, tmp_path_factory)
+    feats = points_to_features(geoparse(pages), zoom=zoom, layer="pages", extent=4096)
+    optimized = feats._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bGenerate\b", optimized)) == generates, optimized
+    assert generates or not re.search(r"\bpow", optimized, re.IGNORECASE), optimized
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan_of(encode_tiles(feats)), re.MULTILINE)
+    assert nodes.count("Generate") == generates
+    assert nodes.count("Exchange") == 1
+
+
 def test_geoparse_single_arrow_eval(spark, tmp_path_factory):
     """r6: geoparse extraction is ONE whole-batch Arrow (RE2) kernel — the
     plan must contain exactly one ArrowEvalPython node (the non-determinism

@@ -329,6 +329,21 @@ def test_changed_tiles_counts(spark):
     assert out["n_moved_in"].sum() == out["n_moved_out"].sum()
 
 
+def test_changed_tiles_null_coordinate_has_no_tile(spark):
+    """A document with a null lon or lat has no tile: losing a position
+    deletes it from its old tile, gaining one inserts it, and a document
+    null on both sides dirties nothing."""
+    from open_vector_tile_spark.functions.geo import tile_xy_np
+    from open_vector_tile_spark.operators.incremental import changed_tiles
+
+    schema = "doc_id long, lon double, lat double"
+    base = spark.createDataFrame([(1, 10.0, 20.0), (2, None, 20.0), (3, None, None)], schema)
+    new = spark.createDataFrame([(1, 10.0, None), (2, 10.0, 20.0), (3, 5.0, None)], schema)
+    tx, ty = tile_xy_np([10.0], [20.0], 4)
+    rows = [tuple(r) for r in changed_tiles(base, new, zoom=4).collect()]
+    assert rows == [(int(tx[0]), int(ty[0]), 1, 1, 0, 0)]
+
+
 def test_retile_incremental_byte_parity(spark):
     from open_vector_tile_spark.operators.incremental import (
         changed_tiles,

@@ -223,9 +223,7 @@ def test_points3d_through_spark_tiler(spark):
         [(1, 10.0, 20.0, 150.7), (2, 10.1, 20.1, -3.2)],
         "pid long, lon double, lat double, z double",
     )
-    from open_vector_tile_spark.operators.tiler import points3d_to_features
-
-    feats = points3d_to_features(df, zoom=4, layer="p3", extent=4096, z="z", id_col="pid")
+    feats = points_to_features(df, zoom=4, layer="p3", extent=4096, z="z", id_col="pid")
     tiles = encode_tiles(feats).toPandas()
     seen = {}
     for _, t in tiles.iterrows():
@@ -241,8 +239,13 @@ def test_points3d_through_spark_tiler(spark):
 
 def test_exact_covering_subset_of_bbox_and_join_unchanged(spark):
     """Slab covering must be a subset of the bbox covering, never lose a
-    tile that contains polygon area, and leave join results identical."""
-    from open_vector_tile_spark.functions.geo import cover_bbox_np, cover_polygon_np
+    tile that contains polygon area, and leave join results identical to a
+    brute-force point-in-polygon test of every (point, polygon) pair."""
+    from open_vector_tile_spark.functions.geo import (
+        cover_bbox_np,
+        cover_polygon_np,
+        points_in_polygon_np,
+    )
     from open_vector_tile_spark.operators import spatial_join
 
     polys = polygons_pdf()
@@ -264,6 +267,19 @@ def test_exact_covering_subset_of_bbox_and_join_unchanged(spark):
     pages = spark.createDataFrame(pages_pdf(400))
     pts = geoparse(pages).cache()
     a = spatial_join(pts, polys, zoom=4).select("url", "poly_id").toPandas()
+    p = pts.select("url", "lon", "lat").toPandas()
+    brute = {
+        (url, pid)
+        for pid, rings in zip(polys["poly_id"], polys["ring_xy"])
+        for url, hit in zip(
+            p["url"],
+            points_in_polygon_np(
+                p["lon"], p["lat"], [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings]
+            ),
+        )
+        if hit
+    }
+    assert brute and set(map(tuple, a.itertuples(index=False))) == brute
     from open_vector_tile_spark.operators.spatial_join import polygon_covering
 
     cov_bbox = polygon_covering(spark, polys, zoom=4, exact=False)
@@ -365,15 +381,9 @@ def test_lines3d_and_polygons3d_roundtrip(spark):
 
 
 def test_pyramid_matches_per_level_featurization(spark):
-    """points_to_features_pyramid == points_to_features per zoom, and the
-    whole pyramid encodes in one pass with byte-identical tiles."""
+    """points_to_features over a zoom list == points_to_features per zoom,
+    and the whole pyramid encodes in one pass with byte-identical tiles."""
     from pyspark.sql import functions as F
-
-    from open_vector_tile_spark.operators import (
-        encode_tiles,
-        points_to_features,
-        points_to_features_pyramid,
-    )
 
     pts = spark.range(400).select(
         F.col("id").alias("doc_id"),
@@ -381,7 +391,7 @@ def test_pyramid_matches_per_level_featurization(spark):
         ((F.col("id") * 53 % 1600) / 10.0 - 80.0).alias("lat"),
     )
     zooms = (2, 3, 5)
-    pyr = points_to_features_pyramid(pts, zooms, layer="docs", extent=4096, id_col="doc_id")
+    pyr = points_to_features(pts, zooms, layer="docs", extent=4096, id_col="doc_id")
     for z in zooms:
         want = sorted(
             map(
