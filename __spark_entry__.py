@@ -13,13 +13,25 @@ compute bit-identical doubles (verified: 0 mismatches over sf0.01).
 from __future__ import annotations
 
 import json
-import math
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_vector_tile_spark.functions.geo import (
+    EARTH_RADIUS_M,
+    encode_offset_col,
+    haversine_col,
+    merc_x_col,
+    merc_y_col,
+    pack_cell_col,
+    quantize_lat_col,
+    quantize_lon_col,
+    remap_value_col,
+    tile_project_col,
+    transform_point_col,
+)
 from open_vector_tile_spark.operators._parallel import fan_out
 
 ZOOM = 4
@@ -48,37 +60,16 @@ def _event_points(events: DataFrame) -> DataFrame:
     return events.withColumn("lon", lon).withColumn("lat", lat)
 
 
-def _merc_y(lat):
-    s = F.sin(F.radians(lat))
-    return F.lit(0.5) - F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)) / F.lit(4.0 * math.pi)
-
-
-def _merc_x(lon):
-    return (lon + F.lit(180.0)) / F.lit(360.0)
-
-
-def _tile_cols(df: DataFrame) -> DataFrame:
-    tx = F.floor(_merc_x(F.col("lon")) * N_TILES).cast("long")
-    ty = F.floor(_merc_y(F.col("lat")) * N_TILES).cast("long")
-    return df.withColumn("tile_x", tx).withColumn("tile_y", ty)
-
-
-def _tile_cell_cols(df: DataFrame) -> DataFrame:
-    """_tile_cols variant for queries that ALSO need in-tile cell coords:
-    materializes the scaled mercator projections (_mx, _my) once and
-    derives tile_x/tile_y from them, so the caller's cell expressions
-    reference _mx/_my instead of re-spelling _merc_y.  Writing the
-    projection as a fresh expression in both the tile and the cell
-    computation made codegen evaluate sin/ln TWICE per row (whole-stage
-    CSE is per-Project; CollapseProject declines to inline a non-cheap
-    expression referenced twice, which is exactly what keeps this
-    materialization in the plan).  Same ops in the same order as
-    _tile_cols — bit-identical tile/cell values, oracle-hash-verified."""
-    df = df.withColumn("_mx", _merc_x(F.col("lon")) * N_TILES).withColumn(
-        "_my", _merc_y(F.col("lat")) * N_TILES
-    )
-    return df.withColumn("tile_x", F.floor(F.col("_mx")).cast("long")).withColumn(
-        "tile_y", F.floor(F.col("_my")).cast("long")
+def _with_tile(df: DataFrame) -> DataFrame:
+    """df + the z4 tile (tile_x, tile_y) of its (lon, lat) and the scaled
+    mercator coordinates (_mx, _my) in-tile cell expressions read.  All
+    four come from one tile_project_col in ONE projection: whole-stage
+    CSE is per-Project, so spelling the projection again in a later
+    cell expression would make codegen evaluate sin/ln twice per row;
+    reading _mx/_my keeps it at once."""
+    tx, ty, mx, my = tile_project_col(F.col("lon"), F.col("lat"), ZOOM)
+    return df.select(
+        "*", tx.alias("tile_x"), ty.alias("tile_y"), mx.alias("_mx"), my.alias("_my")
     )
 
 
@@ -192,12 +183,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_cell_assign(spark: SparkSession, sf: str) -> DataFrame:
     """F19 cell encode + packed cell id (column-expression path)."""
-    pts = _tile_cols(_event_points(_load(spark, sf, "events")))
-    cell = (
-        F.shiftleft(F.lit(ZOOM).cast("long"), 58)
-        .bitwiseOR(F.shiftleft(F.col("tile_x"), 29))
-        .bitwiseOR(F.col("tile_y"))
-    )
+    pts = _with_tile(_event_points(_load(spark, sf, "events")))
+    cell = pack_cell_col(F.lit(ZOOM), F.col("tile_x"), F.col("tile_y"))
     return pts.select(
         "event_id", "tile_x", "tile_y", cell.alias("cell")
     ).orderBy("event_id")
@@ -295,9 +282,9 @@ def _q_quantize(spark: SparkSession, sf: str) -> DataFrame:
     """F8 (24-bit lon/lat quantization) + F11 (offset x1000 floor) as pure
     column exprs (src/util.ts:322-335, src/base/vectorFeature.ts:609-611)."""
     ev = _event_points(_load(spark, sf, "events"))
-    qlon = F.floor((F.col("lon") + 180.0) * 16777215.0 / 360.0 + 0.5).cast("long")
-    qlat = F.floor((F.col("lat") + 90.0) * 16777215.0 / 180.0 + 0.5).cast("long")
-    off = F.floor(F.col("value") * 1000.0).cast("long")
+    qlon = quantize_lon_col(F.col("lon"))
+    qlat = quantize_lat_col(F.col("lat"))
+    off = encode_offset_col(F.col("value"))
     return ev.select(
         "event_id", qlon.alias("qlon"), qlat.alias("qlat"), off.alias("enc_offset")
     ).orderBy("event_id")
@@ -317,7 +304,7 @@ def _q_gridding(spark: SparkSession, sf: str) -> DataFrame:
     identical IEEE sequence; only the grouping key representation
     changes."""
     size = 32
-    pts = _tile_cell_cols(_event_points(_load(spark, sf, "events")))
+    pts = _with_tile(_event_points(_load(spark, sf, "events")))
     mx = F.col("_mx")
     my = F.col("_my")
     px = F.greatest(F.lit(0), F.least(F.lit(size - 1), F.floor((mx - F.col("tile_x")) * size))).cast("long")
@@ -352,9 +339,7 @@ def _q_grid_remap(spark: SparkSession, sf: str) -> DataFrame:
         F.greatest(F.max("value"), F.lit(0.0)).alias("vmax"),
     )
     joined = ev.crossJoin(F.broadcast(agg))
-    remapped = F.floor(
-        (F.col("value") - F.col("vmin")) * extent / (F.col("vmax") - F.col("vmin")) + 0.5
-    ).cast("long")
+    remapped = remap_value_col(F.col("value"), F.col("vmin"), F.col("vmax"), extent)
     return joined.select("event_id", remapped.alias("remapped")).orderBy("event_id")
 
 
@@ -449,14 +434,7 @@ def _q_knn_haversine(spark: SparkSession, sf: str) -> DataFrame:
     )
     anchors = _supplier_anchors(_load(spark, sf, "supplier"))
     j = docs.crossJoin(F.broadcast(anchors))
-    r = 6371008.8
-    dlat = F.radians(F.col("plat") - F.col("lat"))
-    dlon = F.radians(F.col("plon") - F.col("lon"))
-    a = (
-        F.sin(dlat / 2) ** 2
-        + F.cos(F.radians(F.col("lat"))) * F.cos(F.radians(F.col("plat"))) * F.sin(dlon / 2) ** 2
-    )
-    dist = F.lit(2.0 * r) * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
+    dist = haversine_col(F.col("lon"), F.col("lat"), F.col("plon"), F.col("plat"))
     w = Window.partitionBy("doc_id").orderBy(F.asc("dist_m"), F.asc("poi_id"))
     return (
         j.select("doc_id", "poi_id", dist.alias("dist_m"))
@@ -618,7 +596,7 @@ def _q_tile_roundtrip_full(spark: SparkSession, sf: str) -> DataFrame:
     376-587)."""
     from open_vector_tile_spark.operators import decode_tiles, encode_tiles
 
-    docs = _tile_cols(_doc_points(_load(spark, sf, "documents")))
+    docs = _with_tile(_doc_points(_load(spark, sf, "documents")))
     d = F.col("doc_id")
     base = [
         F.lit(ZOOM).alias("zoom"),
@@ -2224,12 +2202,10 @@ def _q_clip_lines(spark: SparkSession, sf: str) -> DataFrame:
     lat1 = ((F.col("doc_id") * 53) % 1600) / 10.0 - 80.0
     lon2 = ((F.col("doc_id") * 91) % 3600) / 10.0 - 180.0
     lat2 = ((F.col("doc_id") * 29) % 1600) / 10.0 - 80.0
+    _, _, x1, y1 = tile_project_col(lon1, lat1, 3)
+    _, _, x2, y2 = tile_project_col(lon2, lat2, 3)
     seg = docs.select(
-        "doc_id",
-        (_merc_x(lon1) * n).alias("x1"),
-        (_merc_y(lat1) * n).alias("y1"),
-        (_merc_x(lon2) * n).alias("x2"),
-        (_merc_y(lat2) * n).alias("y2"),
+        "doc_id", x1.alias("x1"), y1.alias("y1"), x2.alias("x2"), y2.alias("y2")
     )
     clamp = lambda c: F.greatest(F.lit(0), F.least(F.lit(n - 1), c.cast("long")))  # noqa: E731
     rng = seg.select(
@@ -2376,7 +2352,7 @@ def _q_hex_assign(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.functions.hex import hex_cell_cols
 
     docs = _doc_points(_load(spark, sf, "documents"))
-    c = hex_cell_cols(_merc_x(F.col("lon")), _merc_y(F.col("lat")), 5)
+    c = hex_cell_cols(merc_x_col(F.col("lon")), merc_y_col(F.col("lat")), 5)
     assigned = docs.select(
         "doc_id", c["hq"].alias("hq"), c["hr"].alias("hr")
     )
@@ -2645,7 +2621,7 @@ def _quadkey_oracle_sql() -> str:
 
 
 def _geodesic_area_oracle_sql() -> str:
-    r2_half = repr(6_371_008.8 * 6_371_008.8 / 2.0)
+    r2_half = repr(EARTH_RADIUS_M * EARTH_RADIUS_M / 2.0)
     return f"""
         WITH base AS (
           SELECT doc_id,
@@ -2806,7 +2782,7 @@ def _q_hex_smooth(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.functions.hex import hex_cell_cols, hex_smooth
 
     docs = _doc_points(_load(spark, sf, "documents"))
-    c = hex_cell_cols(_merc_x(F.col("lon")), _merc_y(F.col("lat")), 5)
+    c = hex_cell_cols(merc_x_col(F.col("lon")), merc_y_col(F.col("lat")), 5)
     density = (
         docs.select(c["hq"].alias("hq"), c["hr"].alias("hr"))
         .groupBy("hq", "hr")
@@ -2825,26 +2801,13 @@ def _q_hex_knn(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.functions.hex import hex_cell_cols, hex_disk_join
 
     docs = _doc_points(_load(spark, sf, "documents"))
-    cd = hex_cell_cols(_merc_x(F.col("lon")), _merc_y(F.col("lat")), 5)
+    cd = hex_cell_cols(merc_x_col(F.col("lon")), merc_y_col(F.col("lat")), 5)
     q = docs.select("doc_id", "lon", "lat", cd["hq"].alias("hq"), cd["hr"].alias("hr"))
-    sup = _load(spark, sf, "supplier").select(
-        F.col("s_suppkey").alias("poi_id"),
-        (((F.col("s_suppkey") * 91) % 3600) / 10.0 - 180.0).alias("plon"),
-        (((F.col("s_suppkey") * 57) % 1600) / 10.0 - 80.0).alias("plat"),
-    )
-    ca = hex_cell_cols(_merc_x(F.col("plon")), _merc_y(F.col("plat")), 5)
+    sup = _supplier_anchors(_load(spark, sf, "supplier"))
+    ca = hex_cell_cols(merc_x_col(F.col("plon")), merc_y_col(F.col("plat")), 5)
     a = sup.select("poi_id", "plon", "plat", ca["hq"].alias("hq"), ca["hr"].alias("hr"))
     cand = hex_disk_join(q, a, k_disk=2)
-    r = 6371008.8
-    dlat = F.radians(F.col("plat_r") - F.col("lat"))
-    dlon = F.radians(F.col("plon_r") - F.col("lon"))
-    h = (
-        F.sin(dlat / 2) ** 2
-        + F.cos(F.radians(F.col("lat")))
-        * F.cos(F.radians(F.col("plat_r")))
-        * F.sin(dlon / 2) ** 2
-    )
-    dist = F.lit(2.0 * r) * F.asin(F.least(F.lit(1.0), F.sqrt(h)))
+    dist = haversine_col(F.col("lon"), F.col("lat"), F.col("plon_r"), F.col("plat_r"))
     w = Window.partitionBy("doc_id").orderBy(F.asc("dist_m"), F.asc("poi_id_r"))
     return (
         cand.select("doc_id", F.col("poi_id_r").alias("poi_id_r"), dist.alias("dist_m"))
@@ -2865,7 +2828,7 @@ def _q_quadkey(spark: SparkSession, sf: str) -> DataFrame:
     shift/mask digit per level, MSB first — prefix-nesting makes it a
     range-scan key for tileset layouts.  Pure string/bit column exprs;
     DuckDB twin builds the same digits."""
-    from open_vector_tile_spark.functions.geo import quadkey_col, tile_project_col
+    from open_vector_tile_spark.functions.geo import quadkey_col
 
     docs = _doc_points(_load(spark, sf, "documents"))
     tx, ty, _, _ = tile_project_col(F.col("lon"), F.col("lat"), 6)
@@ -3196,13 +3159,13 @@ def _q_geocode(spark: SparkSession, sf: str) -> DataFrame:
 def _q_geocode_tile(spark: SparkSession, sf: str) -> DataFrame:
     """Geocode winners lifted onto the zoom-4 tile grid — the literal
     north-star sentence (pages geolocated, then assigned tile cells) as one
-    composed plan: geocode's window output feeds _tile_cols with no extra
+    composed plan: geocode's window output feeds _with_tile with no extra
     scan of the corpus."""
     from open_vector_tile_spark.operators.geocode import geocode_toponyms
 
     docs = _load(spark, sf, "documents")
     won = geocode_toponyms(docs, _gazetteer(spark, sf), k=1)
-    tiled = _tile_cols(won)
+    tiled = _with_tile(won)
     return (
         tiled.groupBy("tile_x", "tile_y")
         .agg(
@@ -3220,7 +3183,7 @@ def _q_label_cull(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.operators.labels import cull_labels
 
     extent = 4096
-    pts = _tile_cell_cols(_doc_points(_load(spark, sf, "documents")))
+    pts = _with_tile(_doc_points(_load(spark, sf, "documents")))
     mx = F.col("_mx")
     my = F.col("_my")
     x = F.greatest(
@@ -3335,7 +3298,7 @@ def _q_geo_fallback(spark: SparkSession, sf: str) -> DataFrame:
         # than silently dropped — coverage accounting needs the denominator
     )
     return (
-        _tile_cols(located)
+        _with_tile(located)
         .groupBy("tile_x", "tile_y", "src")
         .agg(F.count("*").alias("n_pages"))
         .orderBy("tile_x", "tile_y", "src")
@@ -4076,13 +4039,9 @@ def _q_overzoom(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.operators.overzoom import overzoom_points
 
     docs = _doc_points(_load(spark, sf, "documents"))
-    n = F.lit(16.0)
-    mx = (F.col("lon") + 180.0) / 360.0
-    my = _merc_y(F.col("lat"))
-    tx = F.floor(mx * n).cast("long")
-    ty = F.floor(my * n).cast("long")
-    qx = F.floor((mx * n - tx) * 4096.0 + 0.5).cast("int")
-    qy = F.floor((my * n - ty) * 4096.0 + 0.5).cast("int")
+    tx, ty, mx, my = tile_project_col(F.col("lon"), F.col("lat"), ZOOM)
+    qx = transform_point_col(mx - tx, 4096)
+    qy = transform_point_col(my - ty, 4096)
     feats = docs.select(
         F.lit(4).alias("zoom"),
         tx.alias("tile_x"),
@@ -4402,7 +4361,7 @@ def _q_grid_pyramid(spark: SparkSession, sf: str) -> DataFrame:
     from open_vector_tile_spark.operators.gridding import grid_pyramid
 
     size = 8
-    pts = _tile_cell_cols(_event_points(_load(spark, sf, "events")))
+    pts = _with_tile(_event_points(_load(spark, sf, "events")))
     mx = F.col("_mx")
     my = F.col("_my")
     px = F.greatest(
@@ -4583,7 +4542,7 @@ def _q_tile_budget(spark: SparkSession, sf: str) -> DataFrame:
     cost sum, and keep rule exactly."""
     from open_vector_tile_spark.operators.budget import enforce_tile_budget
 
-    docs = _tile_cols(_doc_points(_load(spark, sf, "documents")))
+    docs = _with_tile(_doc_points(_load(spark, sf, "documents")))
     d = F.col("doc_id")
     feats = docs.select(
         F.lit(ZOOM).alias("zoom"),

@@ -85,10 +85,13 @@ def build_pipeline_chain(
     assign + two-phase polygon join -> nearest-POI enrichment column ->
     columnar featurize -> bulk OVT point encode.
 
-    bench.py's ``pipeline`` scaling path, tools/submit_pipeline.py, and
-    ``python3 perfbench/run.py --trace 1`` all time THIS chain — the
-    definition lives here so the traced stage deltas can never drift from
-    the job bench.py publishes.  ``upto`` truncates the chain at a stage
+    bench.py's ``pipeline`` scaling path, tools/submit_scaling.py
+    ``--path pipeline`` and ``python3 perfbench/run.py --trace 1`` all
+    time THIS chain — the definition lives here so the traced stage
+    deltas can never drift from the job bench.py publishes.
+    (tools/submit_pipeline.py is a demo CLI that runs a different
+    composition: it enriches every geoparsed page, not the join's
+    survivors.)  ``upto`` truncates the chain at a stage
     boundary (PIPELINE_STAGES) so the trace can time cumulative
     sub-chains; the default is the full tiles frame (callers add the
     tileset write, which is a sink choice, not chain logic).

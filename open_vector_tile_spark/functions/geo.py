@@ -10,10 +10,13 @@ one shuffle serves both.
 Two implementations of each transform:
 - Column-expression (JVM-side, whole-stage-codegen) for the hot path:
   :func:`tile_project_col` is THE lon/lat -> tile projection (every
-  featurizer, gridder and cell key builds on it); :func:`cell_col` packs
-  its tile.  Pure pyspark.sql Column trees (no Python UDF).
-- numpy (:func:`tile_xy_np`) for use inside Arrow UDFs (PIP refinement, kNN
-  kernels) and for the pytest oracles.
+  featurizer, gridder, cell key and driver query builds on it);
+  :func:`cell_col` packs its tile.  The haversine, F8/F11/F13 and P13
+  column kernels below are likewise the only JVM spelling of each
+  formula.  Pure pyspark.sql Column trees (no Python UDF).
+- numpy (:func:`tile_xy_np`, with :func:`tile_floor_np` the one numpy tile
+  clamp) for use inside Arrow UDFs (PIP refinement, kNN kernels) and for
+  the pytest oracles.
 
 The exact point-in-polygon test re-expresses the reference's ring-orientation
 semantics (signed area / classifyRings, reference src/mapbox/vectorFeature.ts:
@@ -57,10 +60,17 @@ def merc_y_np(lat) -> np.ndarray:
     return 0.5 - np.log((1.0 + s) / (1.0 - s)) / (4.0 * math.pi)
 
 
+def tile_floor_np(v, zoom: int):
+    """Mercator coordinate(s) times 2^zoom -> tile index, clamped to
+    [0, 2^zoom - 1], still as float (a NaN stays NaN until the caller's
+    integer cast)."""
+    return np.clip(np.floor(v), 0, (1 << zoom) - 1)
+
+
 def tile_xy_np(lon, lat, zoom: int) -> tuple[np.ndarray, np.ndarray]:
     n = 1 << zoom
-    tx = np.clip(np.floor(merc_x_np(lon) * n), 0, n - 1).astype(np.int64)
-    ty = np.clip(np.floor(merc_y_np(lat) * n), 0, n - 1).astype(np.int64)
+    tx = tile_floor_np(merc_x_np(lon) * n, zoom).astype(np.int64)
+    ty = tile_floor_np(merc_y_np(lat) * n, zoom).astype(np.int64)
     return tx, ty
 
 
@@ -117,8 +127,8 @@ def cover_polygon_np(rings: list, zoom: int):
         px, py = px[:-1], py[:-1]
     x1, y1 = px, py
     x2, y2 = np.roll(px, -1), np.roll(py, -1)
-    row_lo = int(np.clip(np.floor(py.min()), 0, n - 1))
-    row_hi = int(np.clip(np.floor(py.max()), 0, n - 1))
+    row_lo = int(tile_floor_np(py.min(), zoom))
+    row_hi = int(tile_floor_np(py.max(), zoom))
     txs_out, tys_out = [], []
     for row in range(row_lo, row_hi + 1):
         lo, hi = float(row), float(row + 1)
@@ -138,8 +148,8 @@ def cover_polygon_np(rings: list, zoom: int):
         xb = ax + (bx - ax) * t_hi
         xmin = min(xa.min(), xb.min())
         xmax = max(xa.max(), xb.max())
-        c0 = int(np.clip(np.floor(xmin), 0, n - 1))
-        c1 = int(np.clip(np.floor(xmax), 0, n - 1))
+        c0 = int(tile_floor_np(xmin, zoom))
+        c1 = int(tile_floor_np(xmax, zoom))
         cols = np.arange(c0, c1 + 1, dtype=np.int64)
         txs_out.append(cols)
         tys_out.append(np.full(len(cols), row, dtype=np.int64))
@@ -168,18 +178,30 @@ if _HAS_SPARK:
         return (lon + F.lit(180.0)) / F.lit(360.0)
 
     def merc_y_col(lat: Column) -> Column:
-        clamped = F.greatest(F.lit(-MAX_LAT), F.least(F.lit(MAX_LAT), lat))
+        """lat -> [0,1) web-mercator y (clamped); null for a null lat.  The
+        clamp is sign(lat) * min(MAX_LAT, |lat|), exact for every finite
+        lat: ``least`` skips a null but ``signum`` carries it, and no
+        conditional hides the chain from codegen's common-subexpression
+        elimination (sin/ln run once per row)."""
+        clamped = F.signum(lat) * F.least(F.lit(MAX_LAT), F.abs(lat))
         s = F.sin(F.radians(clamped))
         return F.lit(0.5) - F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)) / F.lit(4.0 * math.pi)
+
+    def _tile_index_col(m: Column, nmax) -> Column:
+        """floor(m) clamped to [0, nmax] as a long; null for a null m.
+        ``greatest``/``least`` skip nulls, so the clamp alone would put one
+        on an edge tile; adding 0 * floor(m) (exact long arithmetic)
+        carries the null through without a conditional."""
+        t = F.floor(m)
+        return F.greatest(F.lit(0), F.least(nmax, t)) + t * F.lit(0)
 
     def tile_project_col(lon: Column, lat: Column, zoom) -> tuple:
         """-> (tile_x, tile_y, mx, my): the tile of each point and its
         mercator x/y times 2^zoom (P13 quantizes ``mx - tile_x``).  ``zoom``
         is an int or an integer Column (then 2^zoom is ``pow``, exact in
-        double).  A null lon (lat) gives a null tile_x (tile_y): the clamp
-        is guarded because ``greatest``/``least`` skip nulls and would
-        clamp one to an edge tile.  ``my`` of a null lat is not null (the
-        lat clamp skips it too), so callers go by the tile."""
+        double).  A null lon (lat) gives a null tile_x and mx (tile_y and
+        my).  Every output is unconditional, so a projection selecting
+        several of them evaluates the mercator chain once per row."""
         if isinstance(zoom, Column):
             n = F.pow(F.lit(2.0), zoom)
             nmax = (n - F.lit(1.0)).cast("long")
@@ -187,9 +209,7 @@ if _HAS_SPARK:
             n, nmax = F.lit(float(1 << zoom)), F.lit((1 << zoom) - 1)
         mx = merc_x_col(lon) * n
         my = merc_y_col(lat) * n
-        tx = F.when(lon.isNotNull(), F.greatest(F.lit(0), F.least(nmax, F.floor(mx))))
-        ty = F.when(lat.isNotNull(), F.greatest(F.lit(0), F.least(nmax, F.floor(my))))
-        return tx.cast("long"), ty.cast("long"), mx, my
+        return _tile_index_col(mx, nmax), _tile_index_col(my, nmax), mx, my
 
     def cell_col(lon: Column, lat: Column, zoom: int) -> Column:
         """Packed cell id at ``zoom``; null when lon or lat is null."""
@@ -410,6 +430,25 @@ def _ring_area(ring) -> float:
 
 if _HAS_SPARK:
 
+    def _haversine_sin_half(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
+        """sin(w/2) of the central angle w between two points, capped at 1
+        (the haversine chain :func:`haversine_col` and
+        :func:`geodesic_densify` share)."""
+        dlat = F.radians(lat2 - lat1)
+        dlon = F.radians(lon2 - lon1)
+        h = (
+            F.sin(dlat / 2) ** 2
+            + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
+        )
+        return F.least(F.lit(1.0), F.sqrt(h))
+
+    def haversine_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
+        """Great-circle meters as a pure column expression: the JVM twin of
+        :func:`haversine_np`.  It takes radians of each coordinate
+        difference where numpy differences the radians, so the two can
+        differ by a few ulps (the driver's SQL twins follow this order)."""
+        return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(_haversine_sin_half(lon1, lat1, lon2, lat2))
+
     def viewport_tiles(
         viewports: "DataFrame",
         min_lon: str = "min_lon",
@@ -531,13 +570,7 @@ if _HAS_SPARK:
             raise ValueError(f"n_segments must be >= 1, got {n_segments}")
         lon1, lat1 = F.col(lon1_col), F.col(lat1_col)
         lon2, lat2 = F.col(lon2_col), F.col(lat2_col)
-        dlat = F.radians(lat2 - lat1)
-        dlon = F.radians(lon2 - lon1)
-        h = (
-            F.sin(dlat / 2) ** 2
-            + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
-        )
-        sh = F.least(F.lit(1.0), F.sqrt(h))
+        sh = _haversine_sin_half(lon1, lat1, lon2, lat2)
         omega = F.lit(2.0) * F.asin(sh)
         ax = F.cos(F.radians(lat1)) * F.cos(F.radians(lon1))
         ay = F.cos(F.radians(lat1)) * F.sin(F.radians(lon1))

@@ -292,13 +292,13 @@ def track_speed(
     runs per partition (state = one row).  All arithmetic is column math
     — time deltas in exact integer microseconds (timezone-free: a
     same-column difference cancels any session-tz rendering), haversine
-    via the shared `_haversine_col` chain, so every derived double
-    replays bit-for-bit in a SQL twin.  First ping of a track: null
-    delta/speed, implausible = false.
+    via the shared `functions/geo.py:haversine_col` chain, so every
+    derived double replays bit-for-bit in a SQL twin.  First ping of a
+    track: null delta/speed, implausible = false.
     """
     if max_speed_mps <= 0:
         raise ValueError(f"max_speed_mps must be > 0, got {max_speed_mps}")
-    from open_vector_tile_spark.operators.knn import _haversine_col
+    from open_vector_tile_spark.functions.geo import haversine_col
 
     w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
         F.col(ts_col), *[F.col(c) for c in order_cols]
@@ -323,7 +323,7 @@ def track_speed(
                 & prev_lat.isNotNull()
                 & F.col(lon_col).isNotNull()
                 & F.col(lat_col).isNotNull(),
-                _haversine_col(
+                haversine_col(
                     prev_lon, prev_lat, F.col(lon_col), F.col(lat_col)
                 ),
             ),

@@ -23,7 +23,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import cell_col, haversine_np, pack_cell_np, tile_xy_np
+from ..functions.geo import (
+    EARTH_RADIUS_M,
+    cell_col,
+    cell_id_np,
+    haversine_col,
+    haversine_np,
+    pack_cell_np,
+    tile_xy_np,
+    unpack_cell_np,
+)
 from ._parallel import fan_out
 from ._pins import Pins
 
@@ -174,10 +183,9 @@ def nearest_poi_col(pois_pdf: pd.DataFrame):
 
 
 def poi_cells(spark, pois_pdf: pd.DataFrame, zoom: int) -> DataFrame:
-    tx, ty = tile_xy_np(pois_pdf["lon"].to_numpy(), pois_pdf["lat"].to_numpy(), zoom)
     out = pd.DataFrame(
         {
-            "cell": pack_cell_np(zoom, tx, ty),
+            "cell": cell_id_np(pois_pdf["lon"].to_numpy(), pois_pdf["lat"].to_numpy(), zoom),
             "poi_id": pois_pdf["poi_id"].to_numpy(dtype=np.int64),
             "poi_lon": pois_pdf["lon"].to_numpy(dtype=np.float64),
             "poi_lat": pois_pdf["lat"].to_numpy(dtype=np.float64),
@@ -237,7 +245,7 @@ def knn_cell_ring(
             disk = _disk_cells_df(pending, zoom, r)
             cand = disk.join(F.broadcast(pcells), on="cell", how="inner")
             scored = cand.withColumn(
-                "dist_m", _haversine_col(F.col(lon), F.col(lat), F.col("poi_lon"), F.col("poi_lat"))
+                "dist_m", haversine_col(F.col(lon), F.col(lat), F.col("poi_lon"), F.col("poi_lat"))
             ).withColumn("rank", F.row_number().over(w))
             kth = (
                 scored.filter(F.col("rank") <= k)
@@ -280,8 +288,6 @@ def _disk_cells_df(pending: DataFrame, zoom: int, r: int) -> DataFrame:
     """Explode pages to all cells of the Chebyshev disk of radius r
     (vectorized: one (batch × (2r+1)^2) broadcast per Arrow batch; x wraps,
     y clamps)."""
-    from ..functions.geo import unpack_cell_np
-
     n = 1 << zoom
     offs = np.arange(-r, r + 1, dtype=np.int64)
     dx, dy = np.meshgrid(offs, offs)
@@ -316,7 +322,7 @@ def _disk_boundary_bound_col(lon, lat, home_tx, home_ty, r: int, zoom: int, n: i
     the searched disk: min over the 4 bounding planes —
     parallels (exact meridian-arc distance) and meridians
     (angular distance asin(|sin dlon| * cos lat))."""
-    R = 6_371_008.8
+    R = F.lit(EARTH_RADIUS_M)
     big = F.lit(4.0e7)  # > earth circumference: plane not crossable
     # disk tile bounds
     y_lo = home_ty - r          # north edge tile row
@@ -324,19 +330,19 @@ def _disk_boundary_bound_col(lon, lat, home_tx, home_ty, r: int, zoom: int, n: i
     lat_n = _tile_lat_col(y_lo, n)
     lat_s = _tile_lat_col(y_hi, n)
     d_north = F.when(F.lit(r) >= home_ty, big).otherwise(
-        F.lit(R) * F.radians(lat_n - lat)
+        R * F.radians(lat_n - lat)
     )
-    d_south = F.when(y_hi >= F.lit(n), big).otherwise(F.lit(R) * F.radians(lat - lat_s))
+    d_south = F.when(y_hi >= F.lit(n), big).otherwise(R * F.radians(lat - lat_s))
     # meridians (skip when the disk wraps the full globe)
     lon_w = (home_tx - r).cast("double") / F.lit(float(n)) * 360.0 - 180.0
     lon_e = (home_tx + r + 1).cast("double") / F.lit(float(n)) * 360.0 - 180.0
     wraps = F.lit(2 * r + 1 >= n)
     coslat = F.cos(F.radians(lat))
     d_west = F.when(wraps, big).otherwise(
-        F.lit(R) * F.asin(F.abs(F.sin(F.radians(lon - lon_w))) * coslat)
+        R * F.asin(F.abs(F.sin(F.radians(lon - lon_w))) * coslat)
     )
     d_east = F.when(wraps, big).otherwise(
-        F.lit(R) * F.asin(F.abs(F.sin(F.radians(lon_e - lon))) * coslat)
+        R * F.asin(F.abs(F.sin(F.radians(lon_e - lon))) * coslat)
     )
     return F.least(d_north, d_south, d_west, d_east)
 
@@ -349,20 +355,9 @@ def _tile_lat_col(ty, n: int):
     return F.degrees(F.atan(F.sinh(F.lit(_m.pi) * (F.lit(1.0) - F.lit(2.0) * yy))))
 
 
-def _haversine_col(lon1, lat1, lon2, lat2):
-    """Haversine meters as a pure column expression (JVM-side)."""
-    r = 6_371_008.8
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = F.sin(dlat / 2) ** 2 + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
-    return F.lit(2.0 * r) * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
-
-
 # ---------------------------------------------------------------------------
 # distance-band join (all pairs within R meters)
 # ---------------------------------------------------------------------------
-
-_R_EARTH_M = 6_371_008.8
 
 
 def _disk_cover_cells(lon0: float, lat0: float, radius_m: float, zoom: int) -> np.ndarray:
@@ -377,7 +372,7 @@ def _disk_cover_cells(lon0: float, lat0: float, radius_m: float, zoom: int) -> n
     import math as _m
 
     n = 1 << zoom
-    r_ang = radius_m / _R_EARTH_M  # angular radius, radians
+    r_ang = radius_m / EARTH_RADIUS_M  # angular radius, radians
     lat_r = _m.radians(lat0)
     lat_lo = _m.degrees(lat_r - r_ang)
     lat_hi = _m.degrees(lat_r + r_ang)
@@ -447,7 +442,7 @@ def distance_join(
         "_cell", F.explode(disk_cells(F.col(f"{alon}{suffix}"), F.col(f"{alat}{suffix}")))
     )
     pts = points.withColumn("_cell", cell_col(F.col(lon), F.col(lat), zm))
-    dist = _haversine_col(
+    dist = haversine_col(
         F.col(lon), F.col(lat), F.col(f"{alon}{suffix}"), F.col(f"{alat}{suffix}")
     )
     return (

@@ -37,8 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codec import BaseFeature, BaseLayer, BaseLine, write_ov_tile
+from ..codec.kernels import transform_point
 from ..codec.mvt import signed_area
-from ..functions.geo import tile_project_col, transform_point_col
+from ..functions.geo import tile_floor_np, tile_project_col, transform_point_col
 from ._parallel import fan_out
 
 FEATURE_SCHEMA = (
@@ -540,9 +541,8 @@ def _covered_tiles(xy: np.ndarray, zoom: int):
     covers, rows outer — identical to cover_bbox_np over the lon/lat bbox
     (mercator is monotone, so min/max commute with the projection
     bit-exactly)."""
-    nmax = (1 << zoom) - 1
-    lo = np.clip(np.floor(xy[:, :2].min(axis=0)), 0, nmax).astype(int)
-    hi = np.clip(np.floor(xy[:, :2].max(axis=0)), 0, nmax).astype(int)
+    lo = tile_floor_np(xy[:, :2].min(axis=0), zoom).astype(int)
+    hi = tile_floor_np(xy[:, :2].max(axis=0), zoom).astype(int)
     return product(range(lo[1], hi[1] + 1), range(lo[0], hi[0] + 1))
 
 
@@ -550,13 +550,10 @@ def _tile_geom(xy: np.ndarray, tx: int, ty: int, extent: int, z_scale: float) ->
     """One tile's vertices (rows of mercator*2^zoom x, y[, z]) -> the flat
     interleaved ``geom_xy`` ints: x, y in tile-local extent units, z times
     ``z_scale``, all with the P13 JS half-up rounding."""
-    cols = [
-        np.floor((xy[:, 0] - tx) * extent + 0.5),
-        np.floor((xy[:, 1] - ty) * extent + 0.5),
-    ]
+    cols = [transform_point(xy[:, 0] - tx, extent), transform_point(xy[:, 1] - ty, extent)]
     if xy.shape[1] == 3:
-        cols.append(np.floor(xy[:, 2] * z_scale + 0.5))
-    return np.column_stack(cols).astype(np.int64).ravel().tolist()
+        cols.append(transform_point(xy[:, 2], z_scale))
+    return np.column_stack(cols).ravel().tolist()
 
 
 def _zero_area(ring: np.ndarray) -> bool:

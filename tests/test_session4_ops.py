@@ -86,7 +86,8 @@ def test_semantic_dedup_hot_cluster_cap(spark):
 # ---------------------------------------------------------------------------
 
 def test_distance_join_matches_bruteforce(spark):
-    from open_vector_tile_spark.operators.knn import _haversine_col, distance_join
+    from open_vector_tile_spark.functions.geo import haversine_col
+    from open_vector_tile_spark.operators.knn import distance_join
 
     docs = (
         spark.read.parquet(f"{SF}/documents.parquet")
@@ -113,7 +114,7 @@ def test_distance_join_matches_bruteforce(spark):
             )
         )
         .withColumn(
-            "d", _haversine_col(F.col("lon"), F.col("lat"), F.col("alon"), F.col("alat"))
+            "d", haversine_col(F.col("lon"), F.col("lat"), F.col("alon"), F.col("alat"))
         )
         .where(F.col("d") <= R)
         .toPandas()

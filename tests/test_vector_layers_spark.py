@@ -411,16 +411,15 @@ def test_pyramid_matches_per_level_featurization(spark):
         )
         assert got == want
 
-    tiles_pyr = {
-        (r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"])
-        for r in encode_tiles(pyr).collect()
-    }
+    pyr_rows = encode_tiles(pyr).collect()
+    tiles_pyr = {(r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"]) for r in pyr_rows}
+    assert len(tiles_pyr) == len(pyr_rows)  # no duplicate keys across zooms
+    level_keys = set()
     for z in zooms:
         per_level = encode_tiles(
             points_to_features(pts, zoom=z, layer="docs", extent=4096, id_col="doc_id")
         )
         for r in per_level.collect():
+            level_keys.add((z, r["tile_x"], r["tile_y"]))
             assert tiles_pyr[(z, r["tile_x"], r["tile_y"])] == bytes(r["tile"])
-    assert len(tiles_pyr) == sum(
-        1 for k in tiles_pyr
-    )  # no duplicate keys across zooms
+    assert set(tiles_pyr) == level_keys
