@@ -60,6 +60,20 @@ def _event_points(events: DataFrame) -> DataFrame:
     return events.withColumn("lon", lon).withColumn("lat", lat)
 
 
+def _event_grid(events: DataFrame, k: int, count_col: str) -> DataFrame:
+    """events -> (gx, gy, count_col): event counts per cell of a k x k
+    lon/lat grid over the _event_points positions."""
+    pts = _event_points(events)
+    return (
+        pts.select(
+            F.floor((F.col("lon") + 180.0) / 360.0 * k).cast("long").alias("gx"),
+            F.floor((F.col("lat") + 90.0) / 180.0 * k).cast("long").alias("gy"),
+        )
+        .groupBy("gx", "gy")
+        .agg(F.count("*").cast("long").alias(count_col))
+    )
+
+
 def _with_tile(df: DataFrame) -> DataFrame:
     """df + the z4 tile (tile_x, tile_y) of its (lon, lat) and the scaled
     mercator coordinates (_mx, _my) in-tile cell expressions read.  All
@@ -2145,8 +2159,8 @@ def _q_epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_zorder_layout(spark: SparkSession, sf: str) -> DataFrame:
     """Z-order layout key (operators/layout.py): the Morton interleave as a
-    pure JVM bit-expression chain (whole-stage codegen), the clustering key
-    behind zorder_cluster's range-partitioned writes.  Integer inputs so
+    pure JVM bit-expression chain (whole-stage codegen), a clustering key
+    for range-partitioned writes.  Integer inputs so
     the SQL twin reproduces the key bit-for-bit."""
     from open_vector_tile_spark.operators.layout import zorder_key
 
@@ -2163,7 +2177,7 @@ def _q_zorder_layout(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_hilbert_layout(spark: SparkSession, sf: str) -> DataFrame:
     """Hilbert-curve layout key (operators/layout.py with_hilbert_key):
-    the continuous space-filling curve behind hilbert_cluster's writes —
+    the continuous space-filling curve as a clustering key —
     strictly fewer key-range seams per bbox than Z-order, so parquet
     min/max skipping prunes more row groups for the same single shuffle.
     Each curve level is a staged projection (CollapseProject keeps the
@@ -2450,10 +2464,8 @@ def _q_marching_squares(spark: SparkSession, sf: str) -> DataFrame:
     """Raster→vector (operators/vectorize.py): per-tile marching-squares
     class histogram — each above-threshold pixel contributes its bit to
     the 4 touching cells (one explode + one partial-agg shuffle, no UDF),
-    n_segments per class from the fixed lookup.  The geometry half
-    (contours_np ring chaining) is pytest-pinned to this histogram by the
-    exact Green's-theorem area invariant; the DuckDB twin reproduces the
-    histogram relationally."""
+    n_segments per class from the fixed lookup.  The DuckDB twin
+    reproduces the histogram relationally."""
     from open_vector_tile_spark.operators.vectorize import class_histogram
 
     docs = _load(spark, sf, "documents").where(F.col("doc_id") % 3 == 0)
@@ -3088,9 +3100,8 @@ def _q_hist_quantile(spark: SparkSession, sf: str) -> DataFrame:
 def _q_tile_diff(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental-tiling dirty-set: full-outer snapshot diff (deletes %23,
     moves %17 three degrees east, inserts %29 re-keyed +10^6) -> per-tile
-    insert/delete/move counts.  The companion retile_incremental is pinned
-    byte-identical to a full retile in pytest; this oracle checks the diff
-    relation itself."""
+    insert/delete/move counts; this oracle checks the diff relation
+    itself."""
     from open_vector_tile_spark.operators.incremental import changed_tiles
 
     base = _doc_points(_load(spark, sf, "documents")).select("doc_id", "lon", "lat")
@@ -6251,15 +6262,7 @@ def _q_hillshade(spark: SparkSession, sf: str) -> DataFrame:
     bit-for-bit by the oracle."""
     from open_vector_tile_spark.operators.gridding import terrain_derivatives
 
-    pts = _event_points(_load(spark, sf, "events"))
-    cells = (
-        pts.select(
-            F.floor((F.col("lon") + 180.0) / 360.0 * 64).cast("long").alias("gx"),
-            F.floor((F.col("lat") + 90.0) / 180.0 * 64).cast("long").alias("gy"),
-        )
-        .groupBy("gx", "gy")
-        .agg(F.count("*").cast("long").alias("elev"))
-    )
+    cells = _event_grid(_load(spark, sf, "events"), 64, "elev")
     return terrain_derivatives(cells, z_col="elev").orderBy("x", "y")
 
 
@@ -6274,15 +6277,7 @@ def _q_morans_i(spark: SparkSession, sf: str) -> DataFrame:
         spatial_autocorrelation,
     )
 
-    pts = _event_points(_load(spark, sf, "events"))
-    cells = (
-        pts.select(
-            F.floor((F.col("lon") + 180.0) / 360.0 * 128).cast("long").alias("gx"),
-            F.floor((F.col("lat") + 90.0) / 180.0 * 128).cast("long").alias("gy"),
-        )
-        .groupBy("gx", "gy")
-        .agg(F.count("*").cast("long").alias("v"))
-    )
+    cells = _event_grid(_load(spark, sf, "events"), 128, "v")
     return spatial_autocorrelation(cells).orderBy("n_cells")
 
 
@@ -6293,15 +6288,7 @@ def _q_hotspot_gi(spark: SparkSession, sf: str) -> DataFrame:
     replayed bit-for-bit by the oracle."""
     from open_vector_tile_spark.operators.spatial_stats import getis_ord_gi
 
-    pts = _event_points(_load(spark, sf, "events"))
-    cells = (
-        pts.select(
-            F.floor((F.col("lon") + 180.0) / 360.0 * 128).cast("long").alias("gx"),
-            F.floor((F.col("lat") + 90.0) / 180.0 * 128).cast("long").alias("gy"),
-        )
-        .groupBy("gx", "gy")
-        .agg(F.count("*").cast("long").alias("v"))
-    )
+    cells = _event_grid(_load(spark, sf, "events"), 128, "v")
     return getis_ord_gi(cells).orderBy("gx", "gy")
 
 

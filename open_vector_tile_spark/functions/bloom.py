@@ -25,7 +25,7 @@ m/64·8 bytes regardless of dimension cardinality.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MAX_K = 4  # md5 yields 32 hex chars -> four independent 8-char slices
@@ -70,23 +70,6 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 16, k: int = 3
             F.sort_array(F.collect_list(F.struct("_word", "_bits")))
         ).alias("bloom")
     )
-
-
-def bloom_might_contain(
-    key_col: str, m_bits: int, k: int, filter_col: str = "bloom"
-) -> Column:
-    """Membership predicate against a ``filter_col`` map column in scope
-    (attach the 1-row build output with a broadcast crossJoin first).
-    ``key_col`` is a column NAME; the whole probe is bit-arithmetic SQL —
-    codegen, no UDF."""
-    conds = []
-    for i in range(k):
-        p = _probe_pos_sql(key_col, m_bits, i)
-        conds.append(
-            f"(coalesce(element_at({filter_col}, {p} DIV 64), CAST(0 AS BIGINT))"
-            f" & shiftleft(CAST(1 AS BIGINT), CAST({p} % 64 AS INT))) != 0"
-        )
-    return F.expr(" AND ".join(conds))
 
 
 def bloom_prune_join(

@@ -93,26 +93,6 @@ def unpack_cell_np(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return c >> np.int64(_Z_SHIFT), (c >> np.int64(_X_SHIFT)) & mask, c & mask
 
 
-def cell_ring_np(zoom: int, tx: int, ty: int, r: int) -> np.ndarray:
-    """Cells of the square ring at Chebyshev distance exactly r (r=0 -> the
-    cell itself). X wraps around the antimeridian; Y is clamped."""
-    n = 1 << zoom
-    if r == 0:
-        return pack_cell_np(zoom, np.array([tx]), np.array([ty]))
-    xs, ys = [], []
-    for dx in range(-r, r + 1):
-        for dy in range(-r, r + 1):
-            if max(abs(dx), abs(dy)) != r:
-                continue
-            y = ty + dy
-            if 0 <= y < n:
-                xs.append((tx + dx) % n)
-                ys.append(y)
-    if not xs:
-        return np.empty(0, dtype=np.int64)
-    return pack_cell_np(zoom, np.array(xs), np.array(ys))
-
-
 def cover_polygon_np(rings: list, zoom: int):
     """Tiles intersecting a polygon (outer ring), by per-tile-row slab spans:
     for each tile row, x-extent of the outer ring clipped to the row's slab.
@@ -433,14 +413,17 @@ if _HAS_SPARK:
     def _haversine_sin_half(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
         """sin(w/2) of the central angle w between two points, capped at 1
         (the haversine chain :func:`haversine_col` and
-        :func:`geodesic_densify` share)."""
+        :func:`geodesic_densify` share).  A null or NaN coordinate passes
+        through as null or NaN: Spark's ``least`` skips a null and orders
+        NaN above 1.0, so it would turn either into the antipodal cap."""
         dlat = F.radians(lat2 - lat1)
         dlon = F.radians(lon2 - lon1)
         h = (
             F.sin(dlat / 2) ** 2
             + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
         )
-        return F.least(F.lit(1.0), F.sqrt(h))
+        s = F.sqrt(h)
+        return F.when((s > 1.0) & ~F.isnan(s), F.lit(1.0)).otherwise(s)
 
     def haversine_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
         """Great-circle meters as a pure column expression: the JVM twin of

@@ -124,8 +124,7 @@ _HEX_DIRS = np.array(
 def hex_ring_np(hq: int, hr: int, k: int) -> np.ndarray:
     """Axial coordinates of the radius-``k`` ring around (hq, hr) — 6k
     cells (k=0 → the cell itself).  The expansion schedule for hex-grid
-    kNN: ring 0, 1, 2, … until enough anchors are found, mirroring
-    geo.cell_ring_np for squares."""
+    kNN: ring 0, 1, 2, … until enough anchors are found."""
     if k == 0:
         return np.array([[hq, hr]], dtype=np.int64)
     out = np.empty((6 * k, 2), dtype=np.int64)

@@ -77,8 +77,8 @@ def dataset_split(
 ) -> Column:
     """Split label column from cumulative hash-threshold bands.
 
-    ``key`` should be the leakage boundary: pass the url host (see
-    ``url_host``) rather than the url so all pages of a site share a split;
+    ``key`` should be the leakage boundary: pass the url host
+    rather than the url so all pages of a site share a split;
     pass a dedup-cluster id so near-duplicates never straddle train/test."""
     if len(weights) != len(labels):
         raise ValueError("weights and labels must align")
@@ -99,12 +99,6 @@ def dataset_split(
         else:
             out = F.when(h < F.lit(thr), F.lit(lab)).otherwise(out)
     return out
-
-
-def url_host(url: Column) -> Column:
-    """Host part of a url (scheme-tolerant, port kept) via one JVM regexp —
-    the standard no-leakage group key for web corpora."""
-    return F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)
 
 
 def weighted_sample(

@@ -154,7 +154,7 @@ def hll_registers(
 ) -> DataFrame:
     """Per-group HLL register table ``(*group_cols, _j, _r)`` — at most
     2^p rows per group (bounded state), one partial-agg shuffle.  Mergeable
-    with :func:`hll_merge` (register-wise max)."""
+    by register-wise max."""
     if not 4 <= p <= 14:
         raise ValueError(f"p must be in [4, 14], got {p}")
     wbits = HLL_BITS - p
@@ -210,18 +210,6 @@ def hll_distinct(
     error).  Register build + estimate; both halves reproducible verbatim
     in DuckDB (driver oracle `hll_distinct`)."""
     return hll_estimate(hll_registers(df, group_cols, item_col, p=p), group_cols, p=p)
-
-
-def hll_merge(
-    regs_a: DataFrame, regs_b: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """Union two register tables by register-wise max — HLL's lossless
-    merge (the property that makes shard-level sketches a partial
-    aggregate).  Output is again a register table."""
-    both = regs_a.select(*group_cols, "_j", "_r").unionByName(
-        regs_b.select(*group_cols, "_j", "_r")
-    )
-    return both.groupBy(*group_cols, "_j").agg(F.max("_r").alias("_r"))
 
 
 def kmv_set_ops(
@@ -361,16 +349,6 @@ def cms_estimate(
     )
 
 
-def cms_merge(counters_a: DataFrame, counters_b: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Counter-wise sum — CMS's lossless shard merge (a partial aggregate,
-    like kmv_merge/hll_merge)."""
-    group_cols = list(group_cols or [])
-    both = counters_a.unionByName(counters_b)
-    return both.groupBy(*group_cols, "_row", "_bucket").agg(
-        F.sum("_cnt").alias("_cnt")
-    )
-
-
 def kmv_merge(sketch_a: DataFrame, sketch_b: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
     """Merge two ``kmv_min_hashes`` sketch tables (union of hash sets,
     re-take the k smallest) — the multiset-union property that makes the
@@ -397,7 +375,7 @@ def kmv_merge(sketch_a: DataFrame, sketch_b: DataFrame, group_cols: list[str], k
 # linear interpolation inside the crossing bin) is deterministic IEEE math.
 # Error bound: an estimate is off by at most one bin width (hi-lo)/n_bins —
 # chosen a priori, unlike GK's rank-relative bound, but mergeable across
-# shards/micro-batches by plain counter addition (hist_merge) and exactly
+# shards/micro-batches by plain counter addition and exactly
 # reproducible anywhere.
 
 
@@ -424,12 +402,6 @@ def hist_bin_counts(
         .groupBy(*group_cols, "_bin")
         .agg(F.count(F.lit(1)).alias("_cnt"))
     )
-
-
-def hist_merge(counts_a: DataFrame, counts_b: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Counter-wise sum — the lossless shard merge (partial aggregate)."""
-    both = counts_a.unionByName(counts_b)
-    return both.groupBy(*group_cols, "_bin").agg(F.sum("_cnt").alias("_cnt"))
 
 
 def hist_quantiles(

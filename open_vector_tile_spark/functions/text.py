@@ -183,15 +183,6 @@ def token_count(text: Column) -> Column:
     return F.size(F.filter(toks, lambda t: t != ""))
 
 
-def word_chars(text: Column) -> Column:
-    return F.length(F.regexp_replace(text, r"[^\p{L}\p{N}]", ""))
-
-
-def punct_ratio(text: Column) -> Column:
-    punct = F.length(F.regexp_replace(text, r"[^.,;:!?'\"()\[\]{}-]", ""))
-    return punct / F.greatest(F.length(text), F.lit(1))
-
-
 def dup_line_frac(text: Column) -> Column:
     """Fraction of a document's newline-split lines that are duplicates of an
     earlier line (the Gopher/C4 boilerplate-repetition signal) — pure JVM
@@ -367,16 +358,6 @@ def blocklist_filter(
     return df.withColumn("n_hits", hits.cast("int")).withColumn(
         "kept", (F.col("n_hits") <= max_hits).cast("int")
     )
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality: length band + alpha ratio − punct excess."""
-    n = F.length(text)
-    length_term = F.least(n / F.lit(500.0), F.lit(1.0))
-    alpha_term = word_chars(text) / F.greatest(n, F.lit(1))
-    penalty = F.greatest(punct_ratio(text) - F.lit(0.2), F.lit(0.0))
-    score = F.lit(0.4) * length_term + F.lit(0.6) * alpha_term - penalty
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), score))
 
 
 # ---------------------------------------------------------------------------

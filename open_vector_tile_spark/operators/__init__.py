@@ -15,13 +15,11 @@ from .graph import connected_components, dedup_components  # noqa: F401
 from .gridding import grid_aggregate, grid_tiles  # noqa: F401
 from .knn import knn_broadcast, knn_cell_ring  # noqa: F401
 from .layout import (  # noqa: F401
-    hilbert_cluster,
     hilbert_d_py,
     with_hilbert_key,
-    zorder_cluster,
     zorder_key,
 )
-from .merge import extract_layers, merge_tilesets  # noqa: F401
+from .merge import merge_tilesets  # noqa: F401
 from .packing import distributed_cumsum, pack_sequences  # noqa: F401
 from .pipeline import run_pipeline  # noqa: F401
 from .redirects import resolve_redirects  # noqa: F401
@@ -34,12 +32,10 @@ from .similarity import (  # noqa: F401
     ivf_assign,
     ivf_topk,
     ivf_train_centroids,
-    pq_encode,
     pq_topk,
     pq_train_codebooks,
 )
 from .spatial_join import (  # noqa: F401
-    bbox_prejoin,
     polygon_covering,
     polygon_covering_df,
     spatial_join,

@@ -401,10 +401,9 @@ def _batch_gram_hashes(
     No per-gram OR per-word Python anywhere: word hashes come from the
     byte-level segmented kernel (:func:`_batch_word_hashes`), and n-gram
     hashes are a rolling order-sensitive FNV polynomial over the
-    concatenated word-hash array with doc-boundary masking (the
-    segmented-batch pattern of multimodal.py's bincount).  Duplicate grams
-    are not deduped — min() is multiset-invariant, so the minhash signature
-    is unchanged.  Docs with < n words produce one gram folding all their
+    concatenated word-hash array with doc-boundary masking.  Duplicate
+    grams are not deduped — min() is multiset-invariant, so the minhash
+    signature is unchanged.  Docs with < n words produce one gram folding all their
     words (the old single-" ".join shingle semantics); empty docs hash
     to 0."""
     wh, wc = _batch_word_hashes(texts, lower=lower)

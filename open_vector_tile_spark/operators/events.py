@@ -314,15 +314,8 @@ def track_speed(
         )
         .withColumn(
             "dist_m",
-            # explicit null at track start: Spark's least() SKIPS nulls, so
-            # the haversine chain would otherwise collapse to asin(1)·2R
-            # (antipodal distance) instead of null for a null prev point
             F.when(
-                prev_ts.isNotNull()
-                & prev_lon.isNotNull()
-                & prev_lat.isNotNull()
-                & F.col(lon_col).isNotNull()
-                & F.col(lat_col).isNotNull(),
+                prev_ts.isNotNull(),
                 haversine_col(
                     prev_lon, prev_lat, F.col(lon_col), F.col(lat_col)
                 ),

@@ -117,8 +117,7 @@ def zonal_stats(
     the final per-zone partial agg, ≤ n_zones rows after map-side
     combine).  Overlapping zones are fine: a cell contributes to every
     zone containing it.  The range predicate makes this a broadcast
-    nested-loop join with a bounded build side — the same deliberate
-    pattern as spatial_join.bbox_prejoin; at larger zone counts switch to
+    nested-loop join with a bounded build side; at larger zone counts switch to
     the chunked ``bbox_join`` (degenerate left boxes) which trades the BNL
     for one grid-keyed shuffle per side."""
     cond = (

@@ -1,6 +1,6 @@
-"""Incremental tiling: diff two snapshots of a point corpus, find the dirty
-tiles, and re-encode ONLY those — unioning the untouched tile blobs from the
-previous tileset.
+"""Incremental tiling: diff two snapshots of a point corpus and find the
+dirty tiles — the only ones a retile has to re-encode; every other blob of
+the previous tileset stays valid.
 
 Why: a 10^12-page corpus re-crawls a small fraction per cycle; re-encoding
 the whole zoom pyramid per crawl is the single most wasteful job in a naive
@@ -17,16 +17,9 @@ this module consumes materialized before/after snapshots):
                          move    (position moved) → dirties BOTH cells (may coincide)
                          touch   (payload equal)  → dirties nothing
 
-``retile_incremental`` then = encode(points ⋉ dirty) ∪ (old_tiles ▷ dirty):
-one semi join, one anti join, and an encode whose input is the dirty slice
-only.  Byte-determinism of the encoder (sorted feature runs, pinned in
-tiler.encode_tiles) guarantees the incremental result is BYTE-IDENTICAL to
-a full retile of the new snapshot — asserted in pytest, and the dirty-set
-itself is SQL-checkable (driver oracle `tile_diff`).
-
-Scale notes: the join shuffles on the document key (hash-balanced); the
-dirty set is tiny relative to the corpus (broadcast semi/anti joins); the
-encode inherits tiler's single (zoom,x,y) Exchange.
+The dirty set is SQL-checkable (driver oracle `tile_diff`).  The join
+shuffles on the document key (hash-balanced); the dirty set is tiny
+relative to the corpus.
 """
 
 from __future__ import annotations
@@ -105,40 +98,3 @@ def changed_tiles(
         F.sum(F.when(F.col("_e") == "mout", 1).otherwise(0)).alias("n_moved_out"),
     )
 
-
-def retile_incremental(
-    old_tiles: DataFrame,
-    new_points: DataFrame,
-    dirty: DataFrame,
-    zoom: int,
-    layer: str,
-    extent: int = 4096,
-    key: str = "doc_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    specs: dict | None = None,
-) -> DataFrame:
-    """-> TILE_SCHEMA rows: ``old_tiles`` with every dirty tile replaced by
-    a fresh encode of the new snapshot's points (tiles whose documents all
-    vanished drop out; brand-new tiles appear).
-
-    ``dirty`` is a (tile_x, tile_y) table (``changed_tiles`` output or any
-    superset).  Byte parity with a full retile is pinned in pytest — the
-    encoder's output depends only on the tile's own sorted features.
-    ``old_tiles`` rows at OTHER zoom levels (a pyramid tileset) pass
-    through untouched; the diff applies to the ``zoom`` slice only."""
-    from .tiler import encode_tiles, points_to_features
-
-    d = dirty.select("tile_x", "tile_y").distinct()
-    feats = points_to_features(
-        new_points, zoom, layer, extent=extent, lon=lon, lat=lat, id_col=key
-    )
-    dirty_feats = feats.join(F.broadcast(d), ["tile_x", "tile_y"], "semi")
-    fresh = encode_tiles(dirty_feats, specs=specs)
-    other_zooms = old_tiles.where(F.col("zoom") != zoom)
-    kept = (
-        old_tiles.where(F.col("zoom") == zoom)
-        .join(F.broadcast(d), ["tile_x", "tile_y"], "anti")
-        .unionByName(other_zooms)
-    )
-    return kept.unionByName(fresh)

@@ -47,44 +47,6 @@ def zorder_key(x: Column, y: Column) -> Column:
     return spread_bits16(x).bitwiseOR(F.shiftleft(spread_bits16(y), 1)).cast("long")
 
 
-def quantize16(v: Column, lo: float, hi: float) -> Column:
-    """Clamp+quantize a double to the [0, 65535] grid over [lo, hi)."""
-    cell = (v - F.lit(float(lo))) / F.lit((float(hi) - float(lo)) / 65536.0)
-    return F.least(
-        F.greatest(F.floor(cell).cast("long"), F.lit(0)), F.lit(65535)
-    )
-
-
-def zorder_cluster(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    num_partitions: int,
-    lon_range: tuple[float, float] = (-180.0, 180.0),
-    lat_range: tuple[float, float] = (-90.0, 90.0),
-    key_col: str = "_zkey",
-) -> DataFrame:
-    """Return ``df`` re-laid-out in Z-order on (x_col, y_col): globally
-    range-partitioned and locally sorted on the Morton key, ready for a
-    parquet/tileset write whose row-group stats enable bbox skipping.
-
-    One shuffle (the range exchange, with Spark's sampled range bounds —
-    balanced even under skew); the local sort replaces the shuffle-side
-    sort Spark would do anyway for a sorted write.  The key column is kept
-    (queryable for range pruning: a bbox maps to O(1) Z-ranges) — drop it
-    after write if unwanted."""
-    keyed = df.withColumn(
-        key_col,
-        zorder_key(
-            quantize16(F.col(x_col), *lon_range),
-            quantize16(F.col(y_col), *lat_range),
-        ),
-    )
-    return keyed.repartitionByRange(int(num_partitions), key_col).sortWithinPartitions(
-        key_col
-    )
-
-
 # ---------------------------------------------------------------------------
 # bucketed tables: shuffle-free co-located joins
 # ---------------------------------------------------------------------------
@@ -215,9 +177,9 @@ def str_pack(
     -> every rectangle assigned to a spatially coherent leaf page:
     ``(*, slice, leaf_id, leaf_xmin..leaf_ymax, n_in_leaf)``.
 
-    The third member of the layout-lever family (zorder_cluster skips
-    scan ranges, write_bucketed kills the join shuffle, str_pack builds
-    the R-tree leaves a spatial index stores): sort by center-x into
+    The third member of the layout-lever family (the Z-order and Hilbert
+    keys cluster scan ranges, write_bucketed kills the join shuffle,
+    str_pack builds the R-tree leaves a spatial index stores): sort by center-x into
     vertical slices of ~sqrt(N/cap) columns, sort each slice by center-y,
     cut runs of ``leaf_capacity`` — leaves come out near-square with
     minimal MBR overlap, the property bulk loading is for.
@@ -390,25 +352,3 @@ def hilbert_sql_ctes(
     parts.append(f"hfin AS (SELECT {id_cols}, {key} FROM {prev})")
     return ",\n".join(parts)
 
-
-def hilbert_cluster(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    num_partitions: int,
-    lon_range: tuple[float, float] = (-180.0, 180.0),
-    lat_range: tuple[float, float] = (-90.0, 90.0),
-    key_col: str = "_hkey",
-) -> DataFrame:
-    """Hilbert twin of :func:`zorder_cluster`: range-partition + local sort
-    on the Hilbert key of the quantized (lon, lat) grid cell.  Same single
-    shuffle; strictly fewer key-range seams per bbox than Z-order."""
-    keyed = df.withColumn(
-        "_qx", quantize16(F.col(x_col), *lon_range)
-    ).withColumn("_qy", quantize16(F.col(y_col), *lat_range))
-    keyed = with_hilbert_key(keyed, "_qx", "_qy", order=16, key_col=key_col)
-    return (
-        keyed.drop("_qx", "_qy")
-        .repartitionByRange(int(num_partitions), key_col)
-        .sortWithinPartitions(key_col)
-    )

@@ -12,8 +12,7 @@ byte-for-byte, the same portability contract as functions/url.py.
 
 Scope (documented, deliberate): href values in double quotes, anchor text
 without nested markup (``[^<]*``) — the regex-level contract a synthetic
-corpus exercises; real-world soup needs an HTML parser (environment-gated
-like the multimodal codecs).  Dot-segment (``../``) resolution is not
+corpus exercises; real-world soup needs an HTML parser (environment-gated).  Dot-segment (``../``) resolution is not
 performed; relative hrefs resolve against the base directory as-is.
 """
 

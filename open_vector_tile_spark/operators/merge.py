@@ -20,12 +20,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..codec.tile import VectorTile, grid_to_dict, image_to_dict, merge_tile_bytes
+from ..codec.tile import VectorTile, merge_tile_bytes
 
 TILE_KEY = ["zoom", "tile_x", "tile_y"]
 
-# Same shape as tiler.TILE_SCHEMA so merged/extracted tilesets compose with
-# freshly encoded ones (unionByName, retile_incremental) without surgery.
+# Same shape as tiler.TILE_SCHEMA so merged tilesets compose with freshly
+# encoded ones (unionByName) without surgery.
 MERGED_SCHEMA = (
     "zoom int, tile_x long, tile_y long, tile binary, n_features long, n_bytes long"
 )
@@ -64,54 +64,3 @@ def merge_tilesets(a: DataFrame, b: DataFrame, prefer: str = "b") -> DataFrame:
 
     return joined.mapInPandas(run, MERGED_SCHEMA)
 
-
-def extract_layers(
-    tiles: DataFrame,
-    keep: list[str],
-    keep_grids: bool = False,
-    keep_images: bool = False,
-) -> DataFrame:
-    """Project a tileset down to a subset of its vector layers — the serving
-    op for "ship only the roads layer to this consumer".  Tiles that end up
-    empty are dropped.  Because the OVT→IR conversion is lossless (decoded
-    shape carried through), extracting layer L from a tile that was built
-    from L alone reproduces the original bytes.
-
-    Like ``merge_tile_bytes``, output is always the OVT wire family: an MVT
-    input layer is value-losslessly re-encoded as OVT (not MVT bytes), so
-    byte-identity holds only for layers that were already OVT."""
-    from ..codec.tile import VectorTile, tile_to_base_layers, write_ov_tile
-
-    want = set(keep)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, tx, ty, blob in zip(
-                pdf["zoom"], pdf["tile_x"], pdf["tile_y"], pdf["tile"]
-            ):
-                t = VectorTile(bytes(blob))
-                layers = [l for l in tile_to_base_layers(t) if l.name in want]
-                grids = (
-                    [grid_to_dict(g) for g in t.grids.values()]
-                    if keep_grids and t.grids
-                    else None
-                )
-                images = (
-                    [image_to_dict(im) for im in t.images.values()]
-                    if keep_images and t.images
-                    else None
-                )
-                if not layers and grids is None and images is None:
-                    continue
-                out = write_ov_tile(layers=layers, images=images, grids=grids)
-                nf = sum(len(l.features) for l in layers)
-                rows.append((int(z), int(tx), int(ty), out, nf, len(out)))
-            yield pd.DataFrame(
-                rows,
-                columns=["zoom", "tile_x", "tile_y", "tile", "n_features", "n_bytes"],
-            )
-
-    return tiles.select("zoom", "tile_x", "tile_y", "tile").mapInPandas(
-        run, MERGED_SCHEMA
-    )

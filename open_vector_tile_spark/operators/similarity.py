@@ -23,9 +23,9 @@ Training and encoding:
 - :func:`ivf_train_centroids` / :func:`pq_train_codebooks` — one
   distributed Lloyd trainer (:func:`_lloyd`), cosine assignment over the
   whole vector for IVF and L2 assignment per subspace for PQ;
-  :func:`ivf_assign` and :func:`pq_encode` tag rows with the same
-  assigners.  :func:`pq_exact_codebooks` builds lossless codebooks for
-  grid-quantized columns.
+  :func:`ivf_assign` tags rows with the same assigner.
+  :func:`pq_exact_codebooks` builds lossless codebooks for grid-quantized
+  columns.
 - :func:`sq8_train` / :func:`sq8_encode` — per-dimension min-max int8
   codes as column expressions.
 - :func:`bq_code_cols` / :func:`bq_topk` — sign-bit codes, a popcount
@@ -676,26 +676,6 @@ def pq_exact_codebooks(
         vals = np.asarray(row.vals, dtype=np.float64)
         C[int(row.pos), : len(vals), 0] = vals
     return C
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Tag each vector with its m-byte PQ code (array<int>, one code id per
-    subspace).  This is the column you MATERIALIZE at fleet scale — downstream
-    ADC scans read only ids + codes, never the raw vectors."""
-    from pyspark.sql.functions import pandas_udf
-
-    Cm = np.asarray(codebooks, dtype=np.float64)
-
-    @pandas_udf("array<int>")
-    def encode(vecs: pd.Series) -> pd.Series:
-        return pd.Series(list(_pq_codes(_to_matrix(vecs), Cm).astype(np.int32)))
-
-    return vectors.withColumn(out_col, encode(F.col(vec_col)))
 
 
 def pq_topk(

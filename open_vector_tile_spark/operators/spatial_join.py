@@ -238,40 +238,6 @@ def spatial_join_distributed(
     return cand.mapInPandas(refine, out_schema)
 
 
-def bbox_prejoin(points: DataFrame, polygons_pdf: pd.DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """J6 range/interval join variant: 1-D interval conditions on the
-    polygon bboxes (no cell index).  Broadcast NL-join with range predicates;
-    useful when no covering is precomputed."""
-    spark = points.sparkSession
-    rows = []
-    for _, row in polygons_pdf.iterrows():
-        rings = _parse_rings(row["ring_xy"])
-        if not rings:
-            continue
-        outer = rings[0]
-        rows.append(
-            (
-                int(row["poly_id"]),
-                float(outer[:, 0].min()),
-                float(outer[:, 1].min()),
-                float(outer[:, 0].max()),
-                float(outer[:, 1].max()),
-            )
-        )
-    boxes = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["poly_id", "lon_min", "lat_min", "lon_max", "lat_max"])
-    )
-    cond = (
-        (F.col(lon) >= F.col("lon_min"))
-        & (F.col(lon) <= F.col("lon_max"))
-        & (F.col(lat) >= F.col("lat_min"))
-        & (F.col(lat) <= F.col("lat_max"))
-    )
-    return points.join(F.broadcast(boxes), on=cond, how="inner").drop(
-        "lon_min", "lat_min", "lon_max", "lat_max"
-    )
-
-
 def bbox_join(
     left: DataFrame,
     right: DataFrame,

@@ -1,25 +1,15 @@
-"""Raster → vector: marching-squares contouring of grid layers.
+"""Raster → vector: marching-squares classes of grid layers.
 
-The north-star pipeline wants rasters "gridded/vectorized per tile";
-:mod:`.gridding` builds the grids (A8/S9) and this module turns them back
-into vector features — iso-contours of ``value >= threshold`` as closed
-rings in tile pixel space, encodable by the ordinary line/polygon tile
-sink.
+:mod:`.gridding` builds the grids (A8/S9); this module classifies each
+2×2 cell of the ``value >= threshold`` mask, the first step of binary
+(midpoint) marching squares.  The mask is padded with one ring of zeros,
+so every contour would close; each cell gets a 4-bit class from its
+corners and contributes 0–2 boundary segments.  Saddles (classes 5/10)
+use the fixed "separated" rule — deterministic, no center sampling.
 
-Algorithm: binary (midpoint) marching squares.  The mask is padded with
-one ring of zeros, so every contour CLOSES (no open chains at tile edges);
-each 2×2 cell gets a 4-bit class from its corners and contributes 0–2
-oriented segments with endpoints at edge midpoints, inside-on-the-left
-orientation.  Saddles (classes 5/10) use the fixed "separated" rule —
-deterministic, no center sampling.  Midpoint (rather than
-value-interpolated) vertices keep every coordinate an exact multiple of
-0.5 px: bit-stable across engines and directly quantizable.
-
-Scale shape: contouring is per-tile map work inside ``applyInPandas``
-after the one grid-building shuffle (``grid_aggregate``); the class
-HISTOGRAM per tile is also pure relational algebra (neighbor self-join),
-which is what the driver oracle `marching_squares` checks against DuckDB —
-the geometry chaining is pytest-pinned against a scalar reference.
+The class HISTOGRAM per tile is pure relational algebra (neighbor
+self-join), which is what the driver oracle `marching_squares` checks
+against DuckDB.
 
 Cell class → segment count (the oracle's lookup):
 0,15 → 0;  5,10 → 2;  everything else → 1.
@@ -27,41 +17,12 @@ Cell class → segment count (the oracle's lookup):
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import points_in_ring_np
-
-# per-class oriented segments, as (start_edge, end_edge) with edges
-# T(op)/R(ight)/B(ottom)/L(eft); bit order: 1=TL, 2=TR, 4=BR, 8=BL.
-# Orientation: walking start->end keeps the inside (set bits) on the LEFT.
-_SEGS: dict[int, list[tuple[str, str]]] = {
-    0: [],
-    1: [("L", "T")],
-    2: [("T", "R")],
-    3: [("L", "R")],
-    4: [("R", "B")],
-    5: [("L", "T"), ("R", "B")],  # saddle: separated
-    6: [("T", "B")],
-    7: [("L", "B")],
-    8: [("B", "L")],
-    9: [("B", "T")],
-    10: [("T", "R"), ("B", "L")],  # saddle: separated
-    11: [("B", "R")],
-    12: [("R", "L")],
-    13: [("R", "T")],
-    14: [("T", "L")],
-    15: [],
-}
-
-SEG_COUNT = {c: len(s) for c, s in _SEGS.items()}
-
-# edge midpoint offsets within cell (x, y), in half-pixel units (×2)
-_EDGE_OFF = {"T": (1, 0), "R": (2, 1), "B": (1, 2), "L": (0, 1)}
+# corner bit order: 1=TL, 2=TR, 4=BR, 8=BL
+SEG_COUNT = {c: 0 if c in (0, 15) else 2 if c in (5, 10) else 1 for c in range(16)}
 
 
 def cell_classes_np(mask: np.ndarray) -> np.ndarray:
@@ -72,93 +33,6 @@ def cell_classes_np(mask: np.ndarray) -> np.ndarray:
     return (
         b[:-1, :-1] | (b[:-1, 1:] << 1) | (b[1:, 1:] << 2) | (b[1:, :-1] << 3)
     )
-
-
-def contours_np(mask: np.ndarray) -> list[np.ndarray]:
-    """Closed contour rings of ``mask`` (h, w boolean), coordinates in
-    PIXEL units (floats, multiples of 0.5) with the padded origin removed:
-    vertex (x, y) sits on the boundary between mask pixels.  Inside is on
-    the left of the walk direction; rings are returned open (no repeated
-    first vertex), starting from their lexicographically smallest vertex —
-    fully deterministic."""
-    classes = cell_classes_np(mask)
-    ys, xs = np.nonzero((classes != 0) & (classes != 15))
-    # build segment map: start-point -> end-point (half-pixel int coords)
-    nxt: dict[tuple[int, int], tuple[int, int]] = {}
-    for y, x in zip(ys.tolist(), xs.tolist()):
-        for e0, e1 in _SEGS[classes[y, x]]:
-            o0, o1 = _EDGE_OFF[e0], _EDGE_OFF[e1]
-            p0 = (2 * x + o0[0], 2 * y + o0[1])
-            p1 = (2 * x + o1[0], 2 * y + o1[1])
-            nxt[p0] = p1
-    rings: list[np.ndarray] = []
-    # deterministic chain order: start each ring at its smallest live key
-    while nxt:
-        start = min(nxt)
-        chain = [start]
-        cur = nxt.pop(start)
-        while cur != start:
-            chain.append(cur)
-            cur = nxt.pop(cur)
-        ring = np.array(chain, dtype=np.float64) / 2.0
-        # remove the zero-pad offset: pad shifted everything by +1 pixel
-        ring -= 1.0
-        # rotate so the ring starts at its lexicographic minimum
-        k = int(np.lexsort((ring[:, 1], ring[:, 0]))[0])
-        rings.append(np.roll(ring, -k, axis=0))
-    return rings
-
-
-def _ring_area_yup(ring: np.ndarray) -> float:
-    x, y = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x, -1), np.roll(y, -1)
-    return float(np.sum(x * y2 - x2 * y)) / 2.0
-
-
-def group_rings(rings: list) -> tuple[list, list[int]]:
-    """Group marching-squares rings into polygons: each OUTER ring (filled
-    region boundary) followed by ITS holes, with ``poly_lens`` counting
-    rings per polygon — the multipolygon structure ``tiler._encode_rows``
-    expects.  Packing every ring into one polygon would make disjoint
-    blobs structural holes of the first blob.
-
-    Classification: inside-on-the-left walking in y-down pixel coords makes
-    outer rings NEGATIVE by the y-up shoelace and holes positive.  A hole
-    is assigned to the innermost outer containing a sample point just
-    inside the hole's empty region (edge midpoint + quarter-pixel along
-    the right normal — quarter offsets can't align with the half-integer
-    ring grid, so the ray cast is unambiguous)."""
-    if not rings:
-        return [], []
-    areas = [_ring_area_yup(r) for r in rings]
-    outers = [i for i, a in enumerate(areas) if a <= 0]
-    holes = [i for i, a in enumerate(areas) if a > 0]
-    if not outers:
-        return rings, [len(rings)]
-    hole_of: dict[int, list[int]] = {i: [] for i in outers}
-    for h in holes:
-        v0, v1 = rings[h][0], rings[h][1]
-        d = v1 - v0
-        nr = np.array([-d[1], d[0]])  # right normal in y-down coords
-        p = (v0 + v1) / 2.0 + 0.25 * nr / np.hypot(*nr)
-        cands = [
-            i
-            for i in outers
-            if points_in_ring_np([p[0]], [p[1]], rings[i])[0]
-        ]
-        if cands:
-            best = max(cands, key=lambda i: areas[i])  # least-negative = innermost
-            hole_of[best].append(h)
-        else:  # geometrically impossible for marching-squares output; keep
-            outers.append(h)  # the ring visible rather than dropping it
-            hole_of[h] = []
-    ordered: list = []
-    poly_lens: list[int] = []
-    for i in outers:
-        group = [i] + hole_of[i]
-        poly_lens.append(len(group))
-        ordered.extend(rings[j] for j in group)
-    return ordered, poly_lens
 
 
 def class_histogram(
@@ -175,13 +49,10 @@ def class_histogram(
     construction.  Output: (zoom, tile_x, tile_y, cls, n_cells,
     n_segments); cells of class 0 (nothing set) are not emitted — a sparse
     histogram, matching what a SQL twin can compute without materializing
-    size² rows per tile.
-
-    This is the oracle-facing half of the vectorizer: SEG_COUNT per class
-    ties it to the geometry the kernel emits."""
+    size² rows per tile."""
     # validate against the declared grid size up front: an out-of-range
-    # pixel would contribute phantom corner bits the geometry kernel (which
-    # indexes a (size, size) mask) can never see
+    # pixel would contribute phantom corner bits outside the (size, size)
+    # mask
     on = cells.where(
         (F.col(value) >= threshold)
         & F.col("px").between(0, size - 1)
@@ -221,56 +92,3 @@ def class_histogram(
         .withColumn("n_segments", (seg_expr * F.col("n_cells")).cast("long"))
     )
 
-
-def vectorize_grid_tiles(
-    cells: DataFrame,
-    size: int,
-    threshold: float,
-    layer: str = "contours",
-    extent: int = 4096,
-    value: str = "mean_value",
-) -> DataFrame:
-    """Long-form grid cells → per-tile closed contour POLYGON features
-    (quantized to ``extent``), ready for ``encode_tiles``.  One groupBy
-    (zoom, tile_x, tile_y) shuffle, then per-tile marching squares inside
-    applyInPandas; ring vertices are exact half-pixel multiples so the
-    extent scaling is deterministic."""
-    sel = cells.where(F.col(value) >= threshold).select(
-        "zoom", "tile_x", "tile_y", "px", "py"
-    )
-    scale = extent / float(size)
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        zoom, tx, ty = int(key[0]), int(key[1]), int(key[2])
-        mask = np.zeros((size, size), dtype=bool)
-        mask[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = True
-        rings, poly_lens = group_rings(contours_np(mask))
-        if not rings:
-            return pd.DataFrame(
-                columns=["zoom", "tile_x", "tile_y", "layer", "extent", "id",
-                         "ftype", "geom_xy", "ring_lens", "poly_lens",
-                         "props_json", "mvals_json"]
-            )
-        geom: list[int] = []
-        ring_lens: list[int] = []
-        for ring in rings:
-            q = np.floor(ring * scale + 0.5).astype(np.int64)
-            geom.extend(q.ravel().tolist())
-            ring_lens.append(len(ring))
-        return pd.DataFrame(
-            {
-                "zoom": [zoom], "tile_x": [tx], "tile_y": [ty],
-                "layer": [layer], "extent": [extent], "id": [0],
-                "ftype": [3], "geom_xy": [geom], "ring_lens": [ring_lens],
-                "poly_lens": [poly_lens],
-                "props_json": ['{"threshold": %r}' % threshold],
-                "mvals_json": [None],
-            }
-        )
-
-    schema = (
-        "zoom int, tile_x long, tile_y long, layer string, extent int, "
-        "id long, ftype int, geom_xy array<int>, ring_lens array<int>, "
-        "poly_lens array<int>, props_json string, mvals_json string"
-    )
-    return sel.groupBy("zoom", "tile_x", "tile_y").applyInPandas(run, schema)

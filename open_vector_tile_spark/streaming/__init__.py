@@ -1,2 +1,1 @@
 from .ingest import incremental_tile_run, stream_pages_to_tiles  # noqa: F401
-from .stateful import first_seen, windowed_tile_counts  # noqa: F401

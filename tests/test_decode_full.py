@@ -429,41 +429,6 @@ def test_merge_tilesets_prefer_resolves_collisions(spark):
             assert len(VectorTile(got[k]).layers["docs"]) == n, (prefer, k)
 
 
-def test_extract_layers_roundtrip(spark):
-    """Extracting 'base' from a merged two-layer tileset reproduces the
-    original single-layer tiles byte-for-byte (lossless IR + carried shape);
-    tiles without the layer are dropped."""
-    from pyspark.sql import functions as F
-
-    from open_vector_tile_spark.operators import (
-        encode_tiles,
-        extract_layers,
-        merge_tilesets,
-        points_to_features,
-    )
-
-    def tiles_for(ids, layer):
-        pts = spark.createDataFrame(
-            [(int(i), (i * 37 % 3600) / 10.0 - 180.0, (i * 53 % 1600) / 10.0 - 80.0) for i in ids],
-            "doc_id long, lon double, lat double",
-        )
-        return encode_tiles(
-            points_to_features(pts, zoom=2, layer=layer, extent=4096, id_col="doc_id")
-        ).select("zoom", "tile_x", "tile_y", "tile")
-
-    a = tiles_for(range(0, 60), "base").cache()
-    b = tiles_for(range(30, 90), "overlay").cache()
-    merged = merge_tilesets(a, b)
-    back = {
-        (r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"])
-        for r in extract_layers(merged, ["base"]).collect()
-    }
-    am = {(r["zoom"], r["tile_x"], r["tile_y"]): bytes(r["tile"]) for r in a.collect()}
-    assert set(back) == set(am)
-    for k in am:
-        assert back[k] == am[k], k
-
-
 def test_decode_grids_images_skip_corrupt(spark):
     """on_error='skip' on the grid/image scans drops a corrupt blob and
     keeps the job alive, matching decode_tiles' operational contract;
@@ -494,12 +459,10 @@ def test_decode_grids_images_skip_corrupt(spark):
 
 
 def test_merge_output_composes_with_encoded_tiles(spark):
-    """Merged/extracted tilesets carry TILE_SCHEMA (incl. n_features) so
-    they union with freshly encoded tiles — the retile_incremental input
-    contract."""
+    """Merged tilesets carry TILE_SCHEMA (incl. n_features) so they union
+    with freshly encoded tiles."""
     from open_vector_tile_spark.operators import (
         encode_tiles,
-        extract_layers,
         merge_tilesets,
         points_to_features,
     )
@@ -524,6 +487,3 @@ def test_merge_output_composes_with_encoded_tiles(spark):
         for r in enc.unionByName(enc_b).collect()
     }
     assert got == want and sum(got.values()) == 80
-    ext = extract_layers(merged, keep=["a"]).collect()
-    assert all(r["n_features"] > 0 for r in ext)
-    assert sum(r["n_features"] for r in ext) == 40

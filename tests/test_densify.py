@@ -87,6 +87,19 @@ def test_degenerate_cases(spark):
         assert (lon, lat, deg) == (None, None, True)  # antipodal: flagged
 
 
+def test_null_and_nan_endpoints(spark):
+    """A null endpoint gives null waypoints and a NaN one NaN waypoints;
+    neither is flagged as an antipodal pair."""
+    rows = [(1, 5.0, None, 10.0, 10.0), (2, 5.0, float("nan"), 10.0, 10.0)]
+    got = {}
+    for r in geodesic_densify(_df(spark, rows), id_cols=["rid"], n_segments=2).collect():
+        got.setdefault(r["rid"], []).append((r["lon"], r["lat"], r["degenerate"]))
+    assert got[1] == [(None, None, None)] * 3
+    assert len(got[2]) == 3
+    for lon, lat, deg in got[2]:
+        assert math.isnan(lon) and math.isnan(lat) and deg is False
+
+
 def test_randomized_parity_and_waypoint_geometry(spark):
     rng = random.Random(47)
     rows = [

@@ -156,6 +156,29 @@ def test_haversine_col_near_numpy_on_random_pairs(spark):
     np.testing.assert_allclose(got, haversine_np(*pts.T), rtol=1e-14, atol=0)
 
 
+def test_haversine_col_passes_null_and_nan_through(spark):
+    """A null coordinate gives a null distance and a NaN one a NaN distance,
+    as in haversine_np, not the antipodal cap."""
+    rows = [
+        (0, None, 10.0, 20.0, 30.0),
+        (1, 10.0, 20.0, 30.0, None),
+        (2, 10.0, float("nan"), 30.0, 40.0),
+        (3, float("nan"), 20.0, 30.0, 40.0),
+        (4, 10.0, 20.0, 30.0, 40.0),
+    ]
+    df = spark.createDataFrame(rows, "i int, lon1 double, lat1 double, lon2 double, lat2 double")
+    got = [
+        r[0]
+        for r in df.orderBy("i")
+        .select(haversine_col(F.col("lon1"), F.col("lat1"), F.col("lon2"), F.col("lat2")))
+        .collect()
+    ]
+    assert got[:2] == [None, None]
+    assert math.isnan(got[2]) and math.isnan(got[3])
+    assert np.isnan(haversine_np(10.0, float("nan"), 30.0, 40.0))
+    assert got[4] == haversine_np(10.0, 20.0, 30.0, 40.0)
+
+
 @pytest.mark.parametrize("zoom", [0, 3, 12])
 def test_numpy_tile_clamp_matches_tile_project_col(spark, zoom):
     """tile_xy_np (the numpy clamp ``tile_floor_np``) and tile_project_col

@@ -1,17 +1,13 @@
-"""Z-order layout: JVM key == numpy weave2d, and written row-group stats
-actually enable bbox skipping (the point of the operator)."""
+"""Layout keys and levers: the JVM Z-order key == numpy weave2d, the
+Hilbert key == its Python reference, bucketing, global rank and STR
+packing."""
 
 import numpy as np
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from open_vector_tile_spark.codec.kernels import weave2d
-from open_vector_tile_spark.operators.layout import (
-    quantize16,
-    zorder_cluster,
-    zorder_key,
-)
+from open_vector_tile_spark.operators.layout import zorder_key
 
 
 def test_zorder_key_matches_numpy_weave2d(spark):
@@ -28,86 +24,6 @@ def test_zorder_key_matches_numpy_weave2d(spark):
     ]
     want = weave2d(xs, ys).astype(np.int64).tolist()
     assert got == want
-
-
-def test_quantize16_clamps_and_grids(spark):
-    df = spark.createDataFrame(
-        [(-180.0,), (-179.999,), (0.0,), (179.999,), (180.0,), (999.0,), (-999.0,)],
-        ["lon"],
-    )
-    got = [
-        r["q"]
-        for r in df.select(quantize16(F.col("lon"), -180.0, 180.0).alias("q")).collect()
-    ]
-    assert got[0] == 0 and got[2] == 32768
-    assert got[4] == 65535 and got[5] == 65535 and got[6] == 0
-    assert 0 <= got[1] <= 1 and got[3] == 65535
-
-
-def _files_hit(path: str, lo_x, hi_x, lo_y, hi_y) -> tuple[int, int]:
-    """(#row groups whose lon/lat stats intersect the bbox, #row groups)."""
-    hit = total = 0
-    import glob
-
-    for f in glob.glob(f"{path}/*.parquet"):
-        meta = pq.ParquetFile(f).metadata
-        cols = {meta.schema.column(i).name: i for i in range(len(meta.schema))}
-        for rg in range(meta.num_row_groups):
-            g = meta.row_group(rg)
-            sx = g.column(cols["lon"]).statistics
-            sy = g.column(cols["lat"]).statistics
-            total += 1
-            if sx.min <= hi_x and sx.max >= lo_x and sy.min <= hi_y and sy.max >= lo_y:
-                hit += 1
-    return hit, total
-
-
-def test_zorder_write_skips_row_groups(spark, tmp_path):
-    n = 40000
-    df = (
-        spark.range(n)
-        .select(
-            ((F.col("id") * 7919) % 36000 / 100.0 - 180.0).alias("lon"),
-            ((F.col("id") * 104729) % 18000 / 100.0 - 90.0).alias("lat"),
-        )
-    )
-    plain = str(tmp_path / "plain")
-    zo = str(tmp_path / "zorder")
-    df.repartition(16).write.parquet(plain)
-    zorder_cluster(df, "lon", "lat", num_partitions=16).write.parquet(zo)
-
-    bbox = (10.0, 30.0, 10.0, 30.0)  # ~0.3% of the globe's area
-    hit_plain, total_plain = _files_hit(plain, *bbox)
-    hit_z, total_z = _files_hit(zo, *bbox)
-    assert total_plain >= 16 and total_z >= 16
-    assert hit_plain == total_plain  # random layout: every group intersects
-    assert hit_z <= total_z // 4  # clustered: most groups skipped
-
-    # layout is a permutation, not a transformation
-    a = sorted(map(tuple, spark.read.parquet(plain).collect()))
-    b = sorted(
-        map(tuple, spark.read.parquet(zo).drop("_zkey").collect())
-    )
-    assert a == b
-
-
-def test_zorder_sorted_and_range_partitioned(spark):
-    df = spark.range(5000).select(
-        ((F.col("id") * 37) % 3600 / 10.0 - 180.0).alias("lon"),
-        ((F.col("id") * 53) % 1600 / 10.0 - 80.0).alias("lat"),
-    )
-    out = zorder_cluster(df, "lon", "lat", num_partitions=4)
-    per_part = out.select("_zkey").rdd.mapPartitions(
-        lambda it: [[r["_zkey"] for r in it]]
-    ).collect()
-    ranges = []
-    for keys in per_part:
-        assert keys == sorted(keys)  # sortWithinPartitions
-        if keys:
-            ranges.append((keys[0], keys[-1]))
-    ranges.sort()
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo  # repartitionByRange: disjoint global key ranges
 
 
 def test_bucketed_join_has_no_exchange(spark):
@@ -332,32 +248,9 @@ def test_hilbert_order_validation(spark):
         with_hilbert_key(df, "x", "y", order=32)
 
 
-def test_hilbert_cluster_skips_row_groups_and_fewer_runs_than_zorder(
-    spark, tmp_path
-):
-    from open_vector_tile_spark.operators.layout import hilbert_cluster
-
-    n = 40000
-    df = spark.range(n).select(
-        ((F.col("id") * 7919) % 36000 / 100.0 - 180.0).alias("lon"),
-        ((F.col("id") * 104729) % 18000 / 100.0 - 90.0).alias("lat"),
-    )
-    hz = str(tmp_path / "hilbert")
-    hilbert_cluster(df, "lon", "lat", num_partitions=16).write.parquet(hz)
-    bbox = (10.0, 30.0, 10.0, 30.0)
-    hit_h, total_h = _files_hit(hz, *bbox)
-    assert total_h >= 16
-    assert hit_h <= total_h // 4  # clustered: most row groups skipped
-    # permutation, not transformation
-    a = sorted(map(tuple, df.collect()))
-    b = sorted(map(tuple, spark.read.parquet(hz).drop("_hkey").collect()))
-    assert a == b
-
-    # locality: a bbox covers no more key-runs on the Hilbert curve than on
-    # the Z curve (the continuity advantage), measured exactly at order 6
-    from open_vector_tile_spark.codec.kernels import weave2d
-    import numpy as np
-
+def test_hilbert_fewer_runs_than_zorder():
+    """A bbox covers no more key-runs on the Hilbert curve than on the Z
+    curve (the continuity advantage), measured exactly at order 6."""
     from open_vector_tile_spark.operators.layout import hilbert_d_py
 
     def runs(keys):

@@ -167,10 +167,10 @@ def test_geoparse_matches_jvm_regex_formulation(spark):
 
 
 def test_quality_and_lang_are_jvm_side(spark):
-    from open_vector_tile_spark.functions.text import lang_id, quality_score
+    from open_vector_tile_spark.functions.text import dup_line_frac, lang_id
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = docs.select(quality_score(F.col("text")), lang_id(F.col("text")))
+    q = docs.select(dup_line_frac(F.col("text")), lang_id(F.col("text")))
     plan = plan_of(q)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from open_vector_tile_spark.functions.sampling import (
     dataset_split,
     deterministic_sample,
-    url_host,
 )
 
 
@@ -66,18 +65,6 @@ def test_split_banding_is_exact(spark):
         pref = hashlib.md5(r["text"].encode()).hexdigest()[:8]
         want = "a" if pref < format(1 << 31, "08x") else "b"
         assert r["split"] == want
-
-
-def test_url_host(spark):
-    cases = [
-        ("https://example7.org/p/1", "example7.org"),
-        ("http://a.b.c:8080/x?y=1", "a.b.c:8080"),
-        ("ftp://files.net", "files.net"),
-        ("not a url", ""),
-    ]
-    df = spark.createDataFrame(cases, "url string, want string")
-    for r in df.select(url_host(F.col("url")).alias("got"), "want").collect():
-        assert r["got"] == r["want"]
 
 
 def test_sample_rate_one_keeps_everything(spark):

@@ -137,6 +137,23 @@ def test_distance_join_antimeridian_wrap(spark):
     assert out["dist_m"].iloc[0] < 25_000
 
 
+def test_distance_join_drops_nan_points(spark):
+    """A radius past half the globe reaches every located point, but a NaN
+    coordinate has no distance and never pairs.  A NaN-longitude anchor
+    covers every cell, so only the distance can drop it."""
+    from open_vector_tile_spark.operators.knn import distance_join
+
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": [1, 2, 3], "lon": [10.0, 10.0, nan], "lat": [20.0, nan, 20.0]})
+    )
+    anc = spark.createDataFrame(
+        pd.DataFrame({"aid": [7, 8, 9], "lon": [-100.0, -100.0, nan], "lat": [-20.0, nan, -20.0]})
+    )
+    out = distance_join(pts, anc, radius_m=3e7, zoom=2, suffix="_a").toPandas()
+    assert list(zip(out["pid"], out["aid_a"])) == [(1, 7)]
+
+
 def test_disk_cover_contains_disk_samples():
     """Every sampled point within R of the center must land in a covered
     cell (covering completeness, incl. high latitude)."""
@@ -268,27 +285,6 @@ def test_hist_quantiles_exact_when_bins_resolve(spark):
             assert abs(est - exact) <= 1.0 + 1e-9, (g, q, est, exact)
 
 
-def test_hist_merge_equals_whole(spark):
-    from open_vector_tile_spark.functions.sketch import (
-        hist_bin_counts,
-        hist_merge,
-        hist_quantiles,
-    )
-
-    pdf = pd.DataFrame({"g": ["x"] * 400, "v": np.arange(400, dtype=float)})
-    df = spark.createDataFrame(pdf)
-    a = hist_bin_counts(df.where(F.col("v") < 150), ["g"], "v", 0.0, 400.0, 40)
-    b = hist_bin_counts(df.where(F.col("v") >= 150), ["g"], "v", 0.0, 400.0, 40)
-    whole = hist_bin_counts(df, ["g"], "v", 0.0, 400.0, 40)
-    merged = hist_merge(a, b, ["g"])
-    qm = hist_quantiles(merged, ["g"], [0.25, 0.75], 0.0, 400.0, 40).toPandas()
-    qw = hist_quantiles(whole, ["g"], [0.25, 0.75], 0.0, 400.0, 40).toPandas()
-    pd.testing.assert_frame_equal(
-        qm.sort_values("q").reset_index(drop=True),
-        qw.sort_values("q").reset_index(drop=True),
-    )
-
-
 # ---------------------------------------------------------------------------
 # incremental retiling
 # ---------------------------------------------------------------------------
@@ -345,28 +341,23 @@ def test_changed_tiles_null_coordinate_has_no_tile(spark):
     assert rows == [(int(tx[0]), int(ty[0]), 1, 1, 0, 0)]
 
 
-def test_retile_incremental_byte_parity(spark):
-    from open_vector_tile_spark.operators.incremental import (
-        changed_tiles,
-        retile_incremental,
-    )
+def test_changed_tiles_cover_every_rewritten_tile(spark):
+    """Re-encoding only the dirty tiles reproduces a full retile: every tile
+    whose bytes differ between the two snapshots' full encodes is dirty."""
+    from open_vector_tile_spark.operators.incremental import changed_tiles
     from open_vector_tile_spark.operators.tiler import encode_tiles, points_to_features
 
     base, new = _snapshots(spark)
     zoom = 4
-    full_base = encode_tiles(
-        points_to_features(base, zoom, "pages", id_col="doc_id")
-    )
-    dirty = changed_tiles(base, new, zoom=zoom)
-    inc = retile_incremental(full_base, new, dirty, zoom, "pages").toPandas()
-    full_new = encode_tiles(
-        points_to_features(new, zoom, "pages", id_col="doc_id")
-    ).toPandas()
-    gi = inc.sort_values(["tile_x", "tile_y"]).reset_index(drop=True)
-    gf = full_new.sort_values(["tile_x", "tile_y"]).reset_index(drop=True)
-    assert len(gi) == len(gf)
-    assert (gi["tile_x"] == gf["tile_x"]).all() and (gi["tile_y"] == gf["tile_y"]).all()
-    assert all(bytes(a) == bytes(b) for a, b in zip(gi["tile"], gf["tile"]))
+
+    def tiles(points):
+        enc = encode_tiles(points_to_features(points, zoom, "pages", id_col="doc_id"))
+        return {(r["tile_x"], r["tile_y"]): bytes(r["tile"]) for r in enc.collect()}
+
+    old, full = tiles(base), tiles(new)
+    rewritten = {t for t in old.keys() | full.keys() if old.get(t) != full.get(t)}
+    dirty = {(r["tile_x"], r["tile_y"]) for r in changed_tiles(base, new, zoom=zoom).collect()}
+    assert rewritten and rewritten <= dirty
 
 
 # ---------------------------------------------------------------------------
@@ -449,30 +440,3 @@ def test_polygon_metrics_degenerate_small_rings(spark):
     assert out.loc[2, "degenerate"] == 1 and abs(out.loc[2, "perimeter"] - 10.0) < 1e-12
     assert out.loc[3, "degenerate"] == 0
 
-
-def test_retile_incremental_passes_through_other_zooms(spark):
-    from open_vector_tile_spark.operators.incremental import (
-        changed_tiles,
-        retile_incremental,
-    )
-    from open_vector_tile_spark.operators.tiler import encode_tiles, points_to_features
-
-    base, new = _snapshots(spark)
-    z = 4
-    pyramid = encode_tiles(points_to_features(base, z, "pages", id_col="doc_id")).unionByName(
-        encode_tiles(points_to_features(base, 2, "pages", id_col="doc_id"))
-    )
-    dirty = changed_tiles(base, new, zoom=z)
-    inc = retile_incremental(pyramid, new, dirty, z, "pages").toPandas()
-    # zoom-2 tiles must pass through byte-identical
-    z2_in = encode_tiles(points_to_features(base, 2, "pages", id_col="doc_id")).toPandas()
-    z2_out = inc[inc["zoom"] == 2].sort_values(["tile_x", "tile_y"]).reset_index(drop=True)
-    z2_in = z2_in.sort_values(["tile_x", "tile_y"]).reset_index(drop=True)
-    assert len(z2_out) == len(z2_in) > 0
-    assert all(bytes(a) == bytes(b) for a, b in zip(z2_out["tile"], z2_in["tile"]))
-    # zoom-4 slice still byte-matches the full retile
-    z4_full = encode_tiles(points_to_features(new, z, "pages", id_col="doc_id")).toPandas()
-    z4_out = inc[inc["zoom"] == z].sort_values(["tile_x", "tile_y"]).reset_index(drop=True)
-    z4_full = z4_full.sort_values(["tile_x", "tile_y"]).reset_index(drop=True)
-    assert len(z4_out) == len(z4_full)
-    assert all(bytes(a) == bytes(b) for a, b in zip(z4_out["tile"], z4_full["tile"]))

@@ -156,8 +156,6 @@ def test_postings_shapes(spark):
 from open_vector_tile_spark.functions.sketch import (  # noqa: E402
     HLL_BITS,
     hll_distinct,
-    hll_estimate,
-    hll_merge,
     hll_registers,
 )
 
@@ -205,19 +203,6 @@ def test_hll_small_range_linear_counting(spark):
     row = hll_distinct(sdf, ["g"], "item", p=12).collect()[0]
     # far below 2.5m -> linear counting; with 50 distinct buckets ~ all hit
     assert abs(row["est_distinct"] - 50) < 3
-
-
-def test_hll_merge_equals_whole(spark):
-    df = spark.range(0, 12000).selectExpr(
-        "concat('k', id % 5000) AS item", "CAST(id % 2 AS INT) AS shard"
-    ).withColumn("g", F.lit(1))
-    whole = hll_distinct(df, ["g"], "item", p=11).collect()[0]
-    ra = hll_registers(df.filter("shard = 0"), ["g"], "item", p=11)
-    rb = hll_registers(df.filter("shard = 1"), ["g"], "item", p=11)
-    merged = hll_estimate(hll_merge(ra, rb, ["g"]), ["g"], p=11).collect()[0]
-    assert merged["harmonic_sum"] == whole["harmonic_sum"]
-    assert merged["est_distinct"] == whole["est_distinct"]
-    assert merged["n_buckets"] == whole["n_buckets"]
 
 
 def test_hll_p_bound(spark):
@@ -316,7 +301,6 @@ def test_tfidf_feeds_cosine_topk(spark):
 from open_vector_tile_spark.functions.sketch import (  # noqa: E402
     cms_counters,
     cms_estimate,
-    cms_merge,
 )
 
 
@@ -361,19 +345,6 @@ def test_cms_estimate_overcounts_never_under(spark):
     # heavy hitters near-exact at this width/load
     for k in ["h0", "h1", "h4"]:
         assert est[k] - true[k] <= 5
-
-
-def test_cms_merge_equals_whole(spark):
-    rows = [(f"x{i % 97}", i % 2) for i in range(4000)]
-    sdf = spark.createDataFrame(rows, "item string, shard int")
-    whole = cms_counters(sdf, "item", width=512, depth=2)
-    a = cms_counters(sdf.filter("shard = 0"), "item", width=512, depth=2)
-    b = cms_counters(sdf.filter("shard = 1"), "item", width=512, depth=2)
-    merged = cms_merge(a, b)
-    key = lambda df: sorted(  # noqa: E731
-        (r["_row"], r["_bucket"], r["_cnt"]) for r in df.collect()
-    )
-    assert key(merged) == key(whole)
 
 
 def test_cms_depth_bound(spark):

@@ -1,91 +1,15 @@
-"""Marching-squares raster→vector (operators/vectorize.py)."""
+"""Marching-squares class histogram (operators/vectorize.py)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from open_vector_tile_spark.operators.vectorize import (
     SEG_COUNT,
     cell_classes_np,
     class_histogram,
-    contours_np,
-    vectorize_grid_tiles,
 )
-
-
-def _signed_area(ring: np.ndarray) -> float:
-    x, y = ring[:, 0], ring[:, 1]
-    return float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)) / 2.0
-
-
-def test_single_pixel_diamond():
-    mask = np.zeros((4, 4), dtype=bool)
-    mask[1, 2] = True
-    rings = contours_np(mask)
-    assert len(rings) == 1
-    assert {tuple(v) for v in rings[0]} == {
-        (1.5, 1.0), (2.0, 0.5), (2.5, 1.0), (2.0, 1.5)
-    }
-
-
-# exact area a marching-squares cell of each class encloses (midpoint
-# vertices cut 1/8-area corners off single-set/single-clear corners)
-_CLASS_AREA = {
-    0: 0.0, 15: 1.0,
-    1: 1 / 8, 2: 1 / 8, 4: 1 / 8, 8: 1 / 8,
-    7: 7 / 8, 11: 7 / 8, 13: 7 / 8, 14: 7 / 8,
-    3: 1 / 2, 6: 1 / 2, 9: 1 / 2, 12: 1 / 2,
-    5: 1 / 4, 10: 1 / 4,  # separated saddle: two corner diamonds
-}
-
-
-def test_all_rings_close_and_area_matches_class_table():
-    """Green's-theorem invariant: the signed ring areas (holes negative)
-    must sum to exactly the per-cell class areas — ties the emitted
-    geometry to the class histogram the driver oracle checks."""
-    rng = np.random.default_rng(23)
-    for _ in range(60):
-        mask = rng.random((12, 12)) < 0.45
-        rings = contours_np(mask)
-        total = sum(_signed_area(r) for r in rings)
-        classes = cell_classes_np(mask)
-        want = sum(_CLASS_AREA[c] for c in classes.ravel().tolist())
-        assert abs(abs(total) - want) < 1e-9
-        # vertex count == segment count from the class table
-        n_seg = sum(SEG_COUNT[c] for c in classes.ravel().tolist())
-        assert sum(len(r) for r in rings) == n_seg
-
-
-def test_hole_has_opposite_orientation():
-    mask = np.ones((7, 7), dtype=bool)
-    mask[3, 3] = False
-    rings = contours_np(mask)
-    assert len(rings) == 2
-    areas = sorted(_signed_area(r) for r in rings)
-    # one ring of each sign; net == the class-table area
-    assert areas[0] * areas[1] < 0
-    classes = cell_classes_np(mask)
-    want = sum(_CLASS_AREA[c] for c in classes.ravel().tolist())
-    assert abs(abs(areas[0] + areas[1]) - want) < 1e-9
-
-
-def test_two_blobs_two_rings():
-    mask = np.zeros((8, 8), dtype=bool)
-    mask[1:3, 1:3] = True
-    mask[5:7, 5:7] = True
-    assert len(contours_np(mask)) == 2
-
-
-def test_determinism():
-    rng = np.random.default_rng(9)
-    mask = rng.random((10, 10)) < 0.5
-    a = contours_np(mask)
-    b = contours_np(mask)
-    assert len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert np.array_equal(ra, rb)
 
 
 def test_class_histogram_matches_kernel(spark):
@@ -114,50 +38,3 @@ def test_class_histogram_matches_kernel(spark):
         for c, n in want.items():
             assert sub.loc[c, "n_segments"] == SEG_COUNT[c] * n
 
-
-def test_vectorize_grid_tiles_end_to_end(spark):
-    size = 8
-    rows = []
-    mask = np.zeros((size, size), dtype=bool)
-    mask[2:5, 2:6] = True  # one 3x4 blob
-    ys, xs = np.nonzero(mask)
-    for y, x in zip(ys, xs):
-        rows.append({"zoom": 2, "tile_x": 1, "tile_y": 1,
-                     "px": int(x), "py": int(y), "mean_value": 2.0})
-    cells = spark.createDataFrame(pd.DataFrame(rows))
-    feats = vectorize_grid_tiles(cells, size, 1.0, extent=4096)
-    out = feats.toPandas()
-    assert len(out) == 1
-    row = out.iloc[0]
-    assert row["ftype"] == 3 and list(row["poly_lens"]) == [1]
-    # encodable by the ordinary tile sink
-    from open_vector_tile_spark.operators.tiler import encode_tiles
-
-    tiles = encode_tiles(feats).collect()
-    assert len(tiles) == 1 and tiles[0]["n_features"] == 1
-
-
-def test_group_rings_structure():
-    """Disjoint blobs become separate polygons; holes attach to their own
-    outer; nested island inside a hole is its own polygon."""
-    import numpy as np
-    from open_vector_tile_spark.operators.vectorize import contours_np, group_rings
-
-    mask = np.zeros((10, 10), dtype=bool)
-    mask[1:3, 1:3] = True
-    mask[6:9, 6:9] = True
-    _, pl = group_rings(contours_np(mask))
-    assert pl == [1, 1]
-
-    holed = np.zeros((10, 10), dtype=bool)
-    holed[1:8, 1:8] = True
-    holed[3:5, 3:5] = False
-    _, pl2 = group_rings(contours_np(holed))
-    assert pl2 == [2]
-
-    nested = np.zeros((14, 14), dtype=bool)
-    nested[1:12, 1:12] = True
-    nested[3:10, 3:10] = False
-    nested[5:8, 5:8] = True
-    _, pl3 = group_rings(contours_np(nested))
-    assert sorted(pl3) == [1, 2]

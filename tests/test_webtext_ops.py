@@ -1,6 +1,6 @@
 """Correctness oracles for the web-text operators whose semantics DuckDB
-can't express (hash-based dedup, LSH similarity, language ID) plus the
-multimodal plumbing.  Brute-force numpy/pandas oracles at smoke scale."""
+can't express (hash-based dedup, LSH similarity, language ID).
+Brute-force numpy/pandas oracles at smoke scale."""
 
 import numpy as np
 import pandas as pd
@@ -287,37 +287,13 @@ def test_lang_id_on_marker_text(spark):
 
 
 def test_quality_and_tokens_columns(spark, docs):
-    from open_vector_tile_spark.functions.text import quality_score, token_count
+    from open_vector_tile_spark.functions.text import dup_line_frac, token_count
 
     out = docs.select(
-        token_count(F.col("text")).alias("nt"), quality_score(F.col("text")).alias("q")
+        token_count(F.col("text")).alias("nt"), dup_line_frac(F.col("text")).alias("q")
     ).toPandas()
     assert (out["nt"] > 0).all()
     assert out["q"].between(0, 1).all()
-
-
-def test_multimodal_plumbing(spark):
-    from open_vector_tile_spark.functions.multimodal import (
-        extract_features,
-        media_table,
-        resize_stub,
-    )
-
-    media = media_table(spark, 16)
-    feats = extract_features(media).toPandas()
-    assert len(feats) == 16
-    assert all(len(f) == 16 for f in feats["feat"])
-    assert all(abs(sum(f) - 1.0) < 1e-5 for f in feats["feat"])
-    resized = resize_stub(media, 8, 8).toPandas()
-    assert (resized["width"] == 8).all()
-    assert all(len(bytes(p)) == 64 for p in resized["payload"])
-
-
-def test_multimodal_unknown_codec_raises(spark):
-    from open_vector_tile_spark.functions.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG", "image/png", 4, 4)
 
 
 def _clustered_vectors(n=240, dim=8, n_clusters=8):
@@ -357,7 +333,7 @@ def test_pq_encode_and_adc_recall(spark):
     import numpy as np
 
     from open_vector_tile_spark.operators.similarity import (
-        pq_encode,
+        _pq_codes,
         pq_topk,
         pq_train_codebooks,
     )
@@ -366,8 +342,9 @@ def test_pq_encode_and_adc_recall(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
     C = pq_train_codebooks(df, m=2, n_codes=16, n_iters=3)
 
-    codes = pq_encode(df, C).select("vec_id", "pq_code").toPandas()
-    assert all(len(c) == 2 and all(0 <= int(x) < 16 for x in c) for c in codes["pq_code"])
+    codes = _pq_codes(np.array([v for _, v in rows]), C)
+    assert codes.shape == (len(rows), 2)
+    assert ((codes >= 0) & (codes < 16)).all()
 
     queries = df.filter("vec_id < 4").withColumnRenamed("vec_id", "query_id")
     k = 10

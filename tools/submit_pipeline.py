@@ -15,9 +15,9 @@ Resumable: re-running with the same --store anti-joins completed tiles.
 Note on --pois + --polygons: this demo CLI attaches the nearest-POI
 enrichment to ALL geoparsed points and emits the page layer unjoined (the
 polygon layer is emitted alongside, not used as a filter).  The flagship
-benchmark chain (`bench.benchjobs.build_pipeline_chain`, used by bench.py
-and tools/submit_scaling.py --path pipeline) instead enriches only the
-spatial-join SURVIVORS — different row sets by design: this tool publishes
+benchmark chain (`open_vector_tile_spark.benchjobs.build_pipeline_chain`,
+used by bench.py and tools/submit_scaling.py --path pipeline) instead
+enriches only the spatial-join SURVIVORS — different row sets by design: this tool publishes
 every located page; the flagship measures the joined product.
 """
 
@@ -36,7 +36,7 @@ def main() -> None:
     ap.add_argument("--zoom", type=int, default=10)
     ap.add_argument("--extent", type=int, default=4096)
     ap.add_argument("--layer", default="pages")
-    ap.add_argument("--polygons", action="store_true", help="join + emit the demo polygon layer")
+    ap.add_argument("--polygons", action="store_true", help="emit the demo polygon layer beside the page layer (no join)")
     ap.add_argument("--pois", action="store_true", help="attach nearest-POI ids")
     ap.add_argument("--incremental", action="store_true", help="AvailableNow streaming mode")
     ap.add_argument("--checkpoint", default=None, help="streaming checkpoint dir")
