@@ -16,7 +16,7 @@ import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from open_vector_tile_spark.functions.geo import (
@@ -52,6 +52,16 @@ def _doc_points(docs: DataFrame) -> DataFrame:
     lon = ((F.col("doc_id") * 37) % 3600) / 10.0 - 180.0
     lat = ((F.col("doc_id") * 53) % 1600) / 10.0 - 80.0
     return docs.withColumn("lon", lon).withColumn("lat", lat)
+
+
+def _ascii_quality(t: Column) -> Column:
+    """ASCII quality score of a text column: 0.4 * min(length / 500, 1)
+    + 0.6 * the share of [a-zA-Z0-9] characters."""
+    n = F.length(t)
+    alpha = F.length(F.regexp_replace(t, "[^a-zA-Z0-9]", ""))
+    length_term = F.least(n / F.lit(500.0), F.lit(1.0))
+    alpha_term = alpha / F.greatest(n, F.lit(1))
+    return F.lit(0.4) * length_term + F.lit(0.6) * alpha_term
 
 
 def _event_points(events: DataFrame) -> DataFrame:
@@ -385,14 +395,8 @@ def _q_token_count(spark: SparkSession, sf: str) -> DataFrame:
 def _q_quality(spark: SparkSession, sf: str) -> DataFrame:
     """Text analysis: quality scoring (ASCII-safe variant for oracle parity)."""
     docs = _load(spark, sf, "documents")
-    t = F.col("text")
-    n = F.length(t)
-    alpha = F.length(F.regexp_replace(t, "[^a-zA-Z0-9]", ""))
-    length_term = F.least(n / F.lit(500.0), F.lit(1.0))
-    alpha_term = alpha / F.greatest(n, F.lit(1))
-    score = F.lit(0.4) * length_term + F.lit(0.6) * alpha_term
     return docs.select(
-        "doc_id", F.round(score, 6).alias("quality")
+        "doc_id", F.round(_ascii_quality(F.col("text")), 6).alias("quality")
     ).orderBy("doc_id")
 
 
@@ -943,15 +947,10 @@ def _q_corpus_filter(spark: SparkSession, sf: str) -> DataFrame:
     # partitioning-proof)
     docs = fan_out(_load(spark, sf, "documents"))
     t = F.col("text")
-    n = F.length(t)
-    alpha = F.length(F.regexp_replace(t, "[^a-zA-Z0-9]", ""))
-    quality = F.lit(0.4) * F.least(n / F.lit(500.0), F.lit(1.0)) + F.lit(0.6) * (
-        alpha / F.greatest(n, F.lit(1))
-    )
     tokens = F.size(F.split(F.trim(t), r"\s+"))
     out = docs.select(
         "doc_id",
-        F.round(quality, 6).alias("quality"),
+        F.round(_ascii_quality(t), 6).alias("quality"),
         tokens.alias("n_tokens"),
         lang_id(t).alias("lang_pred"),
     ).filter(

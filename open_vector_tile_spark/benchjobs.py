@@ -89,9 +89,10 @@ def build_pipeline_chain(
     ``--path pipeline`` and ``python3 perfbench/run.py --trace 1`` all
     time THIS chain — the definition lives here so the traced stage
     deltas can never drift from the job bench.py publishes.
-    (tools/submit_pipeline.py is a demo CLI that runs a different
-    composition: it enriches every geoparsed page, not the join's
-    survivors.)  ``upto`` truncates the chain at a stage
+    The resumable composition, ``operators.pipeline.run_pipeline``, is
+    what the spark-submit CLI tools/submit_pipeline.py runs: the same map
+    pass, then an id-sorted generic encode with polygon layers and a
+    ``TileStore`` commit.  ``upto`` truncates the chain at a stage
     boundary (PIPELINE_STAGES) so the trace can time cumulative
     sub-chains; the default is the full tiles frame (callers add the
     tileset write, which is a sink choice, not chain logic).

@@ -427,10 +427,12 @@ def distance_join(
     @pandas_udf("array<long>")
     def disk_cells(lons: pd.Series, lats: pd.Series) -> pd.Series:
         # per-ANCHOR loop (dim-table side, documented); each iteration is
-        # numpy over the covering grid
+        # numpy over the covering grid; an anchor without a finite position
+        # (a null arrives as NaN) covers no cell, so it never pairs
         return pd.Series(
             [
-                _disk_cover_cells(float(lo), float(la), rm, zm).tolist()
+                _disk_cover_cells(lo, la, rm, zm).tolist()
+                if np.isfinite(lo) and np.isfinite(la) else []
                 for lo, la in zip(lons, lats)
             ]
         )

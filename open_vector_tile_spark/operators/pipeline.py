@@ -9,10 +9,12 @@ pages -> one fused map pass per Arrow batch (:func:`_map_side`):
       -> shuffle on (zoom, tile_x, tile_y) -> OVT encode (S7)
       -> tiles table + lineage/metrics (A7), resumable (J5).
 
-``run_pipeline`` and ``benchjobs.build_pipeline_chain`` share the map pass.
-It calls the kernels the standalone operators use (``geoparse``'s Arrow
-regex, ``spatial_join``'s covering and refine, ``nearest_poi_col``'s
-haversine pick), so each step keeps one implementation.
+``run_pipeline`` is the one resumable page -> tile composition; the CLI
+``tools/submit_pipeline.py`` runs it.  It shares the map pass with the
+measured ``benchjobs.build_pipeline_chain``.  The pass calls the kernels the
+standalone operators use (``geoparse``'s Arrow regex, ``spatial_join``'s
+covering and refine, ``nearest_poi_col``'s haversine pick), so each step
+keeps one implementation.
 """
 
 from __future__ import annotations
@@ -134,8 +136,9 @@ def run_pipeline(
     extent: int = 4096,
     store: Optional[TileStore] = None,
 ) -> DataFrame:
-    """-> tiles DataFrame (TILE_SCHEMA). When ``store`` is given, commits a
-    snapshot and skips already-materialized tiles (resume).
+    """-> tiles DataFrame (TILE_SCHEMA). When ``store`` is given, skips
+    already-committed tiles (resume) and commits the rest as one snapshot;
+    with nothing pending it commits no snapshot.
 
     Only the NEAREST POI is attached to the page features; callers that
     need the full top-k result set should run :func:`knn_broadcast` /

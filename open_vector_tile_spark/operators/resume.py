@@ -143,13 +143,15 @@ class TileStore:
         return out
 
     # -- write (snapshot commit) ----------------------------------------
-    def commit(self, tiles: DataFrame, run_id: str | None = None) -> str:
+    def commit(self, tiles: DataFrame, run_id: str | None = None) -> str | None:
         """Write one snapshot atomically (stage dir + rename) and record
         per-partition lineage/metrics rows (A7).  Single-writer protocol
         (like an Iceberg catalog's optimistic lock): the next snapshot id is
         max(existing)+1 (collision-free across retention gaps — len() would
         collide after any snapshot cleanup), and stale ``_stage_*`` dirs
-        left by a crashed previous commit are swept before staging."""
+        left by a crashed previous commit are swept before staging.  A frame
+        with no rows commits nothing (no snapshot, no metrics rows) and
+        returns None; the check reads the staged files, not ``tiles`` again."""
         run_id = run_id or uuid.uuid4().hex[:12]
         snaps = self.snapshots()
         nxt = max((int(s.split("=", 1)[1]) for s in snaps), default=-1) + 1
@@ -161,8 +163,11 @@ class TileStore:
         stage = os.path.join(self.tiles_dir, f"_stage_{run_id}")
         final = os.path.join(self.tiles_dir, snap)
         tiles.write.mode("overwrite").parquet(stage)
-        os.rename(stage, final)
         spark = tiles.sparkSession
+        if spark.read.schema(tiles.schema).parquet(stage).isEmpty():
+            shutil.rmtree(stage)
+            return None
+        os.rename(stage, final)
         metrics = (
             spark.read.parquet(final)
             .groupBy(*TILE_KEY)
@@ -177,7 +182,7 @@ class TileStore:
         metrics.write.mode("append").parquet(self.metrics_dir)
         return snap
 
-    def delete_tiles(self, keys: DataFrame, run_id: str | None = None) -> str:
+    def delete_tiles(self, keys: DataFrame, run_id: str | None = None) -> str | None:
         """Commit a tombstone snapshot for the given tile keys: each key
         gets a row with ``tile IS NULL`` that shadows every older version in
         latest-wins reads — the delete half of Iceberg-style row-level

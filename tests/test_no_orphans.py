@@ -35,7 +35,6 @@ ALLOWED = {
     "convert_terrarium_elevation": _GRID_IMAGE,
     "convert_mapbox_elevation": _GRID_IMAGE,
     "compact_tileset": "user-facing tileset maintenance",
-    "run_pipeline": "resume-capable pipeline, to be merged with the measured chain",
     "hex_cell_np": _NUMPY_TWIN,
     "hex_center_np": _NUMPY_TWIN,
     "hilbert_d_py": _NUMPY_TWIN,

@@ -8,6 +8,8 @@
 - text byte-identity per url at every stage (north_rule invariant)
 """
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -497,6 +499,22 @@ def test_snapshot_id_survives_retention_gap(spark, tmp_path):
     os.makedirs(store.tiles_dir + "/_stage_dead", exist_ok=True)
     store.commit(df)
     assert not os.path.isdir(store.tiles_dir + "/_stage_dead")
+
+
+def test_commit_of_empty_tiles_writes_nothing(spark, tmp_path):
+    """A tiles frame with no rows commits no snapshot and no metrics rows,
+    and commit returns None; the next non-empty commit takes the next id."""
+    store = TileStore(str(tmp_path / "empty_store"))
+    schema = "zoom int, tile_x long, tile_y long, tile binary, n_features long, n_bytes long"
+    df = spark.createDataFrame([(4, 1, 1, bytes([1]), 1, 1)], schema)
+    assert store.commit(df) == "snapshot=0"
+    n_metrics = store.metrics(spark).count()
+    assert store.commit(spark.createDataFrame([], schema)) is None
+    assert store.commit(df.where("tile_x < 0")) is None
+    assert store.snapshots() == ["snapshot=0"]
+    assert store.metrics(spark).count() == n_metrics
+    assert [d for d in os.listdir(store.tiles_dir) if d.startswith("_stage_")] == []
+    assert store.commit(df) == "snapshot=1"
 
 
 def test_feature_log_uniform_layout_and_bucket_pruning(spark, tmp_path):

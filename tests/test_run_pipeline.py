@@ -7,6 +7,7 @@ stages cannot see:
   overlapping polygons emits two rows);
 - the polygon table's ``layer`` column maps to per-layer OVT layers;
 - nearest-POI attachment lands in props_json WITHOUT dropping other props;
+- a resumed run with nothing pending commits no snapshot;
 - the tile bytes of a fixed input stay as pinned.
 """
 
@@ -16,7 +17,7 @@ import pandas as pd
 import pytest
 
 from open_vector_tile_spark.codec import VectorTile
-from open_vector_tile_spark.operators import run_pipeline
+from open_vector_tile_spark.operators import TileStore, run_pipeline
 from open_vector_tile_spark.sources import pages_pdf, pois_pdf, polygons_pdf
 
 ZOOM = 4
@@ -110,6 +111,16 @@ def test_nearest_poi_attached_without_dropping_props(spark, pages):
             assert props["url"].startswith("https://")
             checked += 1
     assert checked > 0
+
+
+def test_resumed_run_commits_no_empty_snapshot(spark, pages, tmp_path):
+    """A second identical run finds every tile committed: it writes no
+    snapshot, so reads do not union an empty one."""
+    store = TileStore(str(tmp_path / "store"))
+    for _ in range(2):
+        run_pipeline(pages, polygons_pdf(), pois_pdf(20), zoom=ZOOM, store=store)
+    assert store.snapshots() == ["snapshot=0"]
+    assert store.read_tiles(spark).count() == 80
 
 
 def test_tile_bytes_pinned(spark, pages):

@@ -139,8 +139,7 @@ def test_distance_join_antimeridian_wrap(spark):
 
 def test_distance_join_drops_nan_points(spark):
     """A radius past half the globe reaches every located point, but a NaN
-    coordinate has no distance and never pairs.  A NaN-longitude anchor
-    covers every cell, so only the distance can drop it."""
+    coordinate has no distance and never pairs."""
     from open_vector_tile_spark.operators.knn import distance_join
 
     nan = float("nan")
@@ -152,6 +151,33 @@ def test_distance_join_drops_nan_points(spark):
     )
     out = distance_join(pts, anc, radius_m=3e7, zoom=2, suffix="_a").toPandas()
     assert list(zip(out["pid"], out["aid_a"])) == [(1, 7)]
+
+
+def test_distance_join_anchor_without_position_has_no_cells(spark):
+    """An anchor with a null or NaN coordinate covers no cell: the join
+    neither fails on it nor explodes it, and equals the join with the
+    located anchor alone."""
+    from open_vector_tile_spark.operators.knn import distance_join
+
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        [(i, -30.0 + 6.0 * i, 10.0 + (i % 3)) for i in range(12)],
+        "pid long, lon double, lat double",
+    )
+    anc = spark.createDataFrame(
+        [(1, None, 10.0), (2, nan, 10.0), (3, 0.0, nan), (4, 0.0, 11.0)],
+        "aid long, lon double, lat double",
+    )
+    for radius, zoom in [(1_500_000.0, 4), (3e7, 2)]:
+        got = distance_join(pts, anc, radius_m=radius, zoom=zoom, suffix="_a")
+        want = distance_join(
+            pts, anc.where(F.col("aid") == 4), radius_m=radius, zoom=zoom, suffix="_a"
+        )
+        key = ["pid", "aid_a"]
+        g = got.toPandas().sort_values(key).reset_index(drop=True)
+        w = want.toPandas().sort_values(key).reset_index(drop=True)
+        assert len(w) > 0
+        pd.testing.assert_frame_equal(g, w)
 
 
 def test_disk_cover_contains_disk_samples():
