@@ -5061,24 +5061,24 @@ def _hits_iters_sql(n_iter: int = 4) -> str:
     its = ["h0 AS (SELECT id, 1.0 AS hub FROM ids)"]
     for k in range(1, n_iter + 1):
         its.append(f"""
-        ar{k} AS (
+        ar{k} AS MATERIALIZED (
           SELECT e.t AS id, sum(h.hub ORDER BY h.hub) AS raw
           FROM e JOIN h{k - 1} h ON h.id = e.s GROUP BY e.t
         ), an{k} AS (
           SELECT sqrt(coalesce(sum(raw*raw ORDER BY raw*raw), 0.0)) AS nrm
           FROM ar{k}
-        ), a{k} AS (
+        ), a{k} AS MATERIALIZED (
           SELECT ids.id,
                  CASE WHEN n.nrm > 0.0
                       THEN coalesce(r.raw, 0.0) / n.nrm ELSE 0.0 END AS auth
           FROM ids LEFT JOIN ar{k} r USING (id) CROSS JOIN an{k} n
-        ), hr{k} AS (
+        ), hr{k} AS MATERIALIZED (
           SELECT e.s AS id, sum(a.auth ORDER BY a.auth) AS raw
           FROM e JOIN a{k} a ON a.id = e.t GROUP BY e.s
         ), hn{k} AS (
           SELECT sqrt(coalesce(sum(raw*raw ORDER BY raw*raw), 0.0)) AS nrm
           FROM hr{k}
-        ), h{k} AS (
+        ), h{k} AS MATERIALIZED (
           SELECT ids.id,
                  CASE WHEN n.nrm > 0.0
                       THEN coalesce(r.raw, 0.0) / n.nrm ELSE 0.0 END AS hub
@@ -5097,7 +5097,7 @@ def _hits_oracle_sql(n_iter: int = 4) -> str:
           SELECT id, id - id % 50 FROM ids WHERE id % 50 <> 0
           UNION ALL
           SELECT id, id + 13 FROM ids WHERE id % 11 = 0
-        ), e AS (
+        ), e AS MATERIALIZED (
           SELECT DISTINCT s, t FROM e0 JOIN ids n ON n.id = e0.t WHERE s <> t
         ), {_hits_iters_sql(n_iter)}
         SELECT h.id AS doc_id, h.hub, a.auth

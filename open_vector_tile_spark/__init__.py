@@ -8,3 +8,7 @@ per-tile OVT encode, plus web-scale text ops (dedup, similarity, quality).
 """
 
 __version__ = "0.1.0"
+
+from ._spark_archives import freeze_spark_archives
+
+freeze_spark_archives()

@@ -195,12 +195,14 @@ def _arrange_for_encode(features, partitions, sort_cols):
     their payload.
 
     Widths follow rows, not a multiple of the cores: every task starts a
-    Python runner, and on a 4-core VM (Python 3.11) each start costs
-    ~0.14 s of CPU before the first batch — pyspark's worker calls
-    ``importlib.invalidate_caches()``, and each zipimporter over
-    ``pyspark.zip`` then re-reads its directory.  That is ~15k features of
-    bulk point encoding, so a stage whose payload fits one wave gets
-    nothing from more tasks."""
+    Python runner.  On a 4-core VM (Python 3.11) a one-row ``mapInArrow``
+    job takes ~0.14 s of wall time, and the worker's per-task
+    ``importlib.invalidate_caches()`` ~0.1 ms.  Before
+    ``_spark_archives.freeze_spark_archives`` that call re-read every
+    Spark zip archive the worker had imported from, ~0.12 s of each task
+    (~15k features of bulk point encoding), and the one-row job took
+    ~0.31 s.  The one-wave default was sized against that older cost;
+    whether narrower tasks now pay is not yet measured."""
     if not partitions:
         partitions = features.sparkSession.sparkContext.defaultParallelism
     return features.repartition(partitions, *_TILE_KEY).sortWithinPartitions(*sort_cols)

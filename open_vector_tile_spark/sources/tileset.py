@@ -178,12 +178,14 @@ def read_width(n_bytes: int) -> int:
     """Read tasks for ``n_bytes`` of matched tiles: ``min(cluster width,
     ceil(n_bytes / _TASK_BYTES))``, at least 1.
 
-    Every task starts a Python runner, ~0.14 s of CPU on a 4-core VM
-    (``tiler._arrange_for_encode`` records why).  Reading and decoding
-    512 KB of one-point OVT tiles (~5.7k tiles, the shape perfbench's
-    ``tile_read`` scans) takes ~0.29 s there, twice a runner start, so a
-    task holds at least that much: a 16x16-tile window gets one task and
-    the 3.5 MB ``tile_read`` scan one wave of 4.
+    Every task starts a Python runner (``tiler._arrange_for_encode``
+    gives its cost).  ``_TASK_BYTES`` was sized when each start spent
+    ~0.12 s re-reading Spark's zip archives, before
+    ``_spark_archives.freeze_spark_archives``: reading and decoding 512 KB
+    of one-point OVT tiles (~5.7k tiles, the shape perfbench's
+    ``tile_read`` scans) takes ~0.29 s on a 4-core VM, about twice that
+    start, so a task holds at least that much: a 16x16-tile window gets one
+    task and the 3.5 MB ``tile_read`` scan one wave of 4.
 
     The cluster width is ``defaultParallelism`` where a SparkContext lives
     in this process (the driver).  A data source's ``partitions()`` runs in
